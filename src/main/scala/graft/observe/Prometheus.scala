@@ -73,6 +73,13 @@ object Prometheus {
     family("graft_batch_failures_total", "counter",
       "Failed batch actions (bounded window).")(
       Seq("" -> batch.count(_.failed).toDouble))
+    // JVM-wide Janino compiles; a count that keeps rising under a
+    // repeating workload means the generated-class cache is thrashing
+    // (see Sessions.CodegenCacheMaxEntries)
+    family("graft_codegen_compiles_total", "counter",
+      "Generated classes compiled by this JVM (codegen cache misses).")(
+      Seq("" -> org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount.toDouble))
     sb.result()
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming incremental exact dedup — d10's streaming twin, and the
   * 100 TB answer to the obvious-but-wrong alternative. Spark's own
@@ -46,6 +47,10 @@ object StreamDedup {
   private val DeltaRe = "delta_b(\\d+)".r
   private val FoldRe = "fold_0_(\\d+)".r
   private val QueryIdMarker = "_QUERY_ID"
+
+  /** Every delta and fold holds (h, doc_id) rows. */
+  private val StoreSchema = StructType(Seq(
+    StructField("h", StringType), StructField("doc_id", LongType)))
 
   /** The streaming query id Spark persisted into the checkpoint's
     * `metadata` file — stable across restarts FROM THAT CHECKPOINT, and
@@ -121,12 +126,11 @@ object StreamDedup {
     val dirs = listParts(spark, storeDir).collect {
       case (p, id) if id < boundExclusive => p.toString
     }
+    // the store's own schema, not a per-read footer inference (one
+    // Spark job per call)
     if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("h", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(dirs: _*)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StoreSchema)
+    else spark.read.schema(StoreSchema).parquet(dirs: _*)
   }
 
   /** The deduped id set the store currently endorses (for readers). */
@@ -274,13 +278,14 @@ object StreamDedup {
     // delete (the fold is committed before its inputs go, so a
     // fresh listing always sees a superset) — retry with a fresh
     // snapshot instead of letting the FileNotFound kill the stream
-    withStoreRetry {
+    val written = withStoreRetry {
       val seen = storeBefore(spark, storeDir, boundExclusive = batchId)
-      first.join(seen.select("h").distinct(), Seq("h"), "left_anti")
+      val admitted = first.join(seen.select("h").distinct(), Seq("h"), "left_anti")
         .select("h", "doc_id")
-        .write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
+      admitted.write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
+      admitted.schema
     }
-    spark.read.parquet(s"$storeDir/delta_b$batchId").select("doc_id")
+    spark.read.schema(written).parquet(s"$storeDir/delta_b$batchId").select("doc_id")
   }
 
   /** Fold deltas (and the previous fold) into one `fold_0_<hi>` range

@@ -76,10 +76,13 @@ object StreamNearDup {
     }
   }
 
+  /** `dirs` read under the family's own schema — no footer inference
+    * job, and a column an older dir lacks reads as NULL.
+    */
   private def readParts(spark: SparkSession, dirs: Seq[String], schema: StructType): DataFrame =
     if (dirs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.parquet(dirs: _*)
+    else spark.read.schema(schema).parquet(dirs: _*)
 
   /** The admitted signature store visible to batch `boundExclusive`
     * (deltas + folds; a fold's id is the highest batch it covers).
@@ -186,7 +189,7 @@ object StreamNearDup {
     // input delete — retry with a fresh listing (sound: the fold
     // commits the same signature set before deleting its inputs,
     // and every write below is mode(overwrite)-idempotent)
-    StreamDedup.withStoreRetry {
+    val written = StreamDedup.withStoreRetry {
       val seen = sigStore(spark, storeDir, boundExclusive = batchId)
       val storeMatches = MinHash.crossMatches(seen, survivors, threshold)
         .withColumn("stage", lit("store"))
@@ -194,9 +197,11 @@ object StreamNearDup {
       batchMatches.unionByName(storeMatches)
         .withColumn("b", lit(batchId)) // fold-overlap vs re-send marker
         .write.mode("overwrite").parquet(s"$storeDir/matches_b$batchId")
-      survivors.join(storeMatches.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
+      val admitted =
+        survivors.join(storeMatches.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
+      admitted.write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
+      admitted.schema
     }
-    spark.read.parquet(s"$storeDir/delta_b$batchId").select("doc_id")
+    spark.read.schema(written).parquet(s"$storeDir/delta_b$batchId").select("doc_id")
   }
 }

@@ -166,8 +166,9 @@ object StreamPrep {
         // dir, not the in-flight plan — so the two artifacts can never
         // disagree if the verdict computation were nondeterministic or
         // the job retried mid-write. Do not "optimize" this into a
-        // reuse of `verd`.
-        val contaminated = spark.read
+        // reuse of `verd` (its schema is reused only to skip the
+        // footer-inference job).
+        val contaminated = spark.read.schema(verd.schema)
           .parquet(s"$storeDir/decontam/verdicts_b$batchId")
           .select("doc_id").distinct()
         // the manifest: exactly one exit stage per incoming doc

@@ -3,11 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite (lazy), reference-parity configs. */
+/** One shared local session per suite (lazy), reference-parity configs.
+  * The generated-class cache is JVM-wide and sized by the first session
+  * that compiles, so the suite sets the engine's bound too — otherwise
+  * the forked test JVM would run with Spark's default of 100.
+  */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheMaxEntries.toLong)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.ansi.enabled", "false")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -76,6 +76,10 @@ class StreamingSpec extends SparkSpec {
     assert(text.contains("""graft_stream_batches_total{query="prom_probe"}"""))
     assert(text.contains("# TYPE graft_batch_actions_total counter"))
     assert(text.contains("graft_batch_failures_total 0"))
+    // JVM-wide codegen compile counter: this JVM compiled the stream above
+    val compiles = "(?m)^graft_codegen_compiles_total (\\d+)$".r
+      .findFirstMatchIn(text).map(_.group(1).toLong)
+    assert(compiles.exists(_ > 0), s"no codegen compile count in:\n$text")
     // every non-comment line parses as `name{labels} value`
     text.linesIterator.filterNot(l => l.startsWith("#") || l.isEmpty).foreach { l =>
       assert(l.matches("""[a-z_]+(\{[^}]*\})? (-?[0-9.E+-]+|NaN)"""), s"bad line: $l")
