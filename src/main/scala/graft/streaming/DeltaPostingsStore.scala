@@ -1,15 +1,17 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** The ONE read path for batchId-keyed posting delta stores — shared by
   * the BM25 (StreamPostings) and positional (StreamPosPostings) ingests
   * so the replay/reissue/tombstone contract cannot drift between them:
   *
-  *  - only COMPLETE `delta_b<id>` / `fold_0_<hi>` dirs (`_SUCCESS`) are
-  *    visible — an uncommitted delta never leaks into serving;
+  *  - only committed `delta_b<id>` / `fold_0_<hi>` dirs are visible
+  *    ([[StoreSink.read]]) — an uncommitted delta never leaks into
+  *    serving;
   *  - byte-identical replay overlap collapses under distinct() (delta
   *    content is a pure function of the batch);
   *  - a doc reissued in a later batch serves ONLY its newest batch's
@@ -21,8 +23,6 @@ import org.apache.spark.sql.types.StructType
   * which is exactly the `schema` parameter.
   */
 private[streaming] object DeltaPostingsStore {
-
-  private val DeltaRe = "delta_b(\\d+)".r
 
   /** Last-writer shrink for the posting stores' content-aware fold
     * (`StreamDedup.foldDeltasWith`): keep only each doc's max-b rows
@@ -36,37 +36,12 @@ private[streaming] object DeltaPostingsStore {
     * (the newest delta) always carries a strictly higher b than every
     * input row.
     */
-  def lastWriterShrink(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
+  def lastWriterShrink(df: DataFrame): DataFrame =
     df.withColumn("__bmax", max("b").over(Window.partitionBy("doc_id")))
       .filter(col("b") === col("__bmax"))
       .drop("__bmax")
-  }
 
-  def read(spark: SparkSession, storeDir: String, schema: StructType): DataFrame = {
-    val base = new Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs =
-      if (!fs.exists(base)) Seq.empty[String]
-      else fs.listStatus(base).toSeq.collect {
-        case st if st.isDirectory &&
-          fs.exists(new Path(st.getPath, "_SUCCESS")) &&
-          (DeltaRe.pattern.matcher(st.getPath.getName).matches() ||
-            st.getPath.getName.startsWith("fold_0_")) =>
-          st.getPath.toString
-      }
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      spark.read.parquet(dirs: _*).distinct()
-        .withColumn("bmax", max("b").over(Window.partitionBy("doc_id")))
-        .filter(col("b") === col("bmax"))
-        .drop("bmax")
-        .filter(col("term") =!= "")
-    }
-  }
+  def read(spark: SparkSession, storeDir: String, schema: StructType): DataFrame =
+    lastWriterShrink(StoreSink.read(spark, storeDir, StoreSink.Delta, schema).distinct())
+      .filter(col("term") =!= "")
 }

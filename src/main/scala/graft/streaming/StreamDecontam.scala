@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.TextOps
 
 /** d7b's threshold-overlap decontamination run AT INGEST: every
@@ -20,11 +20,8 @@ import graft.operators.TextOps
   * holds the served store equal to the batch query's verdicts on the
   * same corpus.
   *
-  * Store discipline is StreamRollup's: per-batch verdicts are written
-  * to a batchId-keyed dir (`verdicts_b<id>`, mode overwrite) — a
-  * replayed batch rewrites the SAME dir with the SAME deterministic
-  * content, so at-least-once foreachBatch converges to exactly-once
-  * store contents. Store rows are flagged pairs only (contamination is
+  * Per-batch verdicts land in `verdicts_b<id>` (store contract:
+  * [[StoreSink]]). Store rows are flagged pairs only (contamination is
   * rare by construction), orders of magnitude smaller than the stream.
   */
 object StreamDecontam {
@@ -36,24 +33,14 @@ object StreamDecontam {
     */
   def start(source: DataFrame, benchWindows: DataFrame, storeDir: String,
       checkpointDir: String, foldEvery: Int = 0): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.select(col("doc_id"), split(col("text"), " ").as("ws"))
-        TextOps.d7bVerdicts(sp, benchWindows)
-          // b rides every verdict row so a fold's distinct collapses
-          // ONLY replay/crash overlap (same batch, byte-identical),
-          // never a genuine re-send verdict from a later batch
-          .withColumn("b", lit(batchId))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$storeDir/verdicts_b$batchId")
-        // in-trigger cadence maintenance (StreamDedup.foldDue)
-        if (StreamDedup.foldDue(foldEvery, batchId)) {
-          fold(batch.sparkSession, storeDir); ()
-        }
-      }
-      .start()
+    StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
+      fold = fold(_, storeDir)) { (_, batch, batchId) =>
+      val sp = batch.select(col("doc_id"), split(col("text"), " ").as("ws"))
+      TextOps.d7bVerdicts(sp, benchWindows)
+        .withColumn("b", lit(batchId))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$storeDir/verdicts_b$batchId")
+    }
 
   /** Compact per-batch verdict dirs into one `verdicts_fold_0_<hi>`
     * range dir (the dirs otherwise accumulate one per micro-batch
@@ -68,21 +55,7 @@ object StreamDecontam {
     * plus [[fold]] compactions; overlap collapsed by distinct on the
     * internal batch-id column, which is dropped from the served rows).
     */
-  def serve(spark: SparkSession, storeDir: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vRe = "verdicts_b(\\d+)".r
-    val fRe = "verdicts_fold_0_(\\d+)".r
-    val dirs =
-      if (!fs.exists(base)) Seq.empty[String]
-      else fs.listStatus(base).toSeq.collect {
-        case st if st.isDirectory &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) &&
-          (vRe.pattern.matcher(st.getPath.getName).matches() ||
-            fRe.pattern.matcher(st.getPath.getName).matches()) =>
-          st.getPath.toString
-      }
-    require(dirs.nonEmpty, s"no committed verdicts under $storeDir")
-    spark.read.parquet(dirs: _*).distinct().drop("b")
-  }
+  def serve(spark: SparkSession, storeDir: String): DataFrame =
+    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("verdicts"))
+      .distinct().drop("b")
 }

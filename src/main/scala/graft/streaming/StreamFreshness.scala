@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming twin of qa5's freshness/completeness audit — the SLA
   * gate run AT INGEST instead of in tomorrow's batch audit: every
@@ -17,13 +17,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * instead of calendar days), and the freshness lag of its high-water
   * mark behind the stream's global one.
   *
-  * Store discipline is StreamProfile's: one `fresh_b<id>` dir per
-  * batch, mode overwrite — a replayed batch rewrites the SAME dir
-  * with the SAME deterministic content, so at-least-once foreachBatch
-  * converges to exactly-once history. Rows per batch = |sources|; the
-  * store grows with batches, never with data volume, and the
-  * per-batch cost is one map-side-combined rollup of rows already in
-  * memory for the sink.
+  * One `fresh_b<id>` dir per batch (store contract: [[StoreSink]]).
+  * Rows per batch = |sources|; the store grows with batches, never
+  * with data volume, and the per-batch cost is one map-side-combined
+  * rollup of rows already in memory for the sink.
   */
 object StreamFreshness {
 
@@ -34,20 +31,16 @@ object StreamFreshness {
         (unix_millis(max(col("ts")))).as("max_ts_ms"))
 
   def start(source: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batchMarks(batch)
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$storeDir/fresh_b$batchId")
-        ()
-      }
-      .start()
+    StoreSink.start(source, checkpointDir, Seq(storeDir)) { (_, batch, batchId) =>
+      batchMarks(batch)
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$storeDir/fresh_b$batchId")
+    }
 
+  /** The committed per-batch freshness rows. */
   def history(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/fresh_b*")
+    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("fresh"))
 
   /** The qa5-shaped verdict over the stored history: per source,
     * batches present/missing, longest silent RUN of batch ids, and

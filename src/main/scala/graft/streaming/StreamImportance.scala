@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.CorpusPrep
 
 /** s10's DSIR importance dial AT INGEST — the last admission gate
@@ -25,12 +25,8 @@ import graft.operators.CorpusPrep
   * construction, and StreamingSpec holds the served store equal to the
   * batch s10 query on the same corpus.
   *
-  * Store discipline is StreamDecontam's verbatim: per-doc verdicts land
-  * in a batchId-keyed dir (`verdicts_b<id>`, mode overwrite) — a
-  * replayed batch rewrites the SAME dir with the SAME deterministic
-  * content, so at-least-once foreachBatch converges to exactly-once
-  * store contents; folds compact under the maintenance lease and their
-  * crash overlap is absorbed by [[serve]]'s distinct. Unlike the
+  * Per-doc verdicts land in `verdicts_b<id>` (store contract:
+  * [[StoreSink]]). Unlike the
   * decontam screen the verdict row set is the DOCUMENT set (every doc
   * gets a row, not just flagged ones) — the store is the corpus's
   * importance ledger, so [[importanceLog]] can report the per-cohort
@@ -52,23 +48,13 @@ object StreamImportance {
   def start(source: DataFrame, liftArr: Array[Long], storeDir: String,
       checkpointDir: String, foldEvery: Int = 0): StreamingQuery = {
     require(liftArr.length == 4096, s"lift array has ${liftArr.length} buckets, want 4096")
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        CorpusPrep.dsirScore(batch, liftArr)
-          // b rides every verdict row so a fold's distinct collapses
-          // ONLY replay/crash overlap (same batch, byte-identical),
-          // never a genuine re-send verdict from a later batch
-          .withColumn("b", lit(batchId))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$storeDir/verdicts_b$batchId")
-        // in-trigger cadence maintenance (StreamDedup.foldDue)
-        if (StreamDedup.foldDue(foldEvery, batchId)) {
-          fold(batch.sparkSession, storeDir); ()
-        }
-      }
-      .start()
+    StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
+      fold = fold(_, storeDir)) { (_, batch, batchId) =>
+      CorpusPrep.dsirScore(batch, liftArr)
+        .withColumn("b", lit(batchId))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$storeDir/verdicts_b$batchId")
+    }
   }
 
   /** Compact per-batch verdict dirs into one `verdicts_fold_0_<hi>`
@@ -78,21 +64,6 @@ object StreamImportance {
     */
   def fold(spark: SparkSession, storeDir: String): Int =
     StreamDedup.foldSidecars(spark, storeDir, "verdicts")
-
-  private def verdictDirs(spark: SparkSession, storeDir: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vRe = "verdicts_b(\\d+)".r
-    val fRe = "verdicts_fold_0_(\\d+)".r
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq.collect {
-      case st if st.isDirectory &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) &&
-        (vRe.pattern.matcher(st.getPath.getName).matches() ||
-          fRe.pattern.matcher(st.getPath.getName).matches()) =>
-        st.getPath.toString
-    }
-  }
 
   /** The stored per-doc verdicts across all ingested batches —
     * (doc_id, source, n_bigrams, mean_lift_ppm, selected), the same
@@ -105,11 +76,11 @@ object StreamImportance {
     * where each doc_id was ingested once, the precondition the
     * equality spec states and pins.
     */
-  def serve(spark: SparkSession, storeDir: String): DataFrame = {
-    val dirs = verdictDirs(spark, storeDir)
-    require(dirs.nonEmpty, s"no committed verdicts under $storeDir")
-    spark.read.parquet(dirs: _*).distinct().drop("b")
-  }
+  def serve(spark: SparkSession, storeDir: String): DataFrame =
+    verdicts(spark, storeDir).drop("b")
+
+  private def verdicts(spark: SparkSession, storeDir: String): DataFrame =
+    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("verdicts")).distinct()
 
   /** The per-cohort admission dial: one row per micro-batch with the
     * cohort's document count, accepted count, and acceptance rate in
@@ -117,14 +88,11 @@ object StreamImportance {
     * (a feed whose sel_ppm decays is drifting off-target; the signal
     * to re-weight or re-source, watched the same way).
     */
-  def importanceLog(spark: SparkSession, storeDir: String): DataFrame = {
-    val dirs = verdictDirs(spark, storeDir)
-    require(dirs.nonEmpty, s"no committed verdicts under $storeDir")
-    spark.read.parquet(dirs: _*).distinct()
+  def importanceLog(spark: SparkSession, storeDir: String): DataFrame =
+    verdicts(spark, storeDir)
       .groupBy("b")
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum("selected").cast("long").as("n_selected"))
       .withColumn("sel_ppm", expr("CAST((1000000 * n_selected) div n_docs AS BIGINT)"))
       .orderBy("b")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -14,11 +13,7 @@ import graft.operators.MinHash
   * deduped within itself, then band-joined against the store of
   * ADMITTED signatures; survivors' signatures append to the store.
   *
-  * Two outputs per batch, both batchId-keyed `mode(overwrite)` dirs
-  * (StreamDedup's idempotence discipline — a replayed batch rewrites
-  * the SAME dirs with the SAME deterministic content, and the screen
-  * reads only parts with id < the current batchId, so a half-written
-  * attempt of THIS batch can never mask its own rows):
+  * Two outputs per batch (store contract: [[StoreSink]]):
   *
   *  - `delta_b<id>`: the admitted (doc_id, m0..m31) signature rows —
   *    the seen-set, ~33 longs per admitted doc, ~independent of doc
@@ -38,17 +33,9 @@ import graft.operators.MinHash
   * StreamDedup's hash set; a production deployment materializes the
   * store band-keyed/bucketed so the screen prunes to colliding buckets
   * instead of re-banding the store (the same bucketing upgrade path as
-  * d10's fingerprint store). Ownership: the store is claimed by its
-  * checkpoint's query id before the first delta (StreamDedup's
-  * epoch-guard machinery, shared) — a NEW checkpoint pointed at an OLD
-  * store is refused, since its batch ids restart at 0.
+  * d10's fingerprint store).
   */
 object StreamNearDup {
-
-  private val DeltaRe = "delta_b(\\d+)".r
-  private val FoldRe = "fold_0_(\\d+)".r
-  private val MatchesRe = "matches_b(\\d+)".r
-  private val MatchesFoldRe = "matches_fold_0_(\\d+)".r
 
   private def sigSchema: StructType = StructType(
     StructField("doc_id", LongType) +:
@@ -59,38 +46,12 @@ object StreamNearDup {
     StructField("est_jaccard", DoubleType), StructField("stage", StringType),
     StructField("b", LongType)))
 
-  /** COMPLETE (_SUCCESS) parts matching any of `res`, id < boundExclusive. */
-  private def partsBefore(spark: SparkSession, storeDir: String,
-      res: Seq[scala.util.matching.Regex], boundExclusive: Long): Seq[String] = {
-    val base = new Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return Seq.empty
-    fs.listStatus(base).toSeq.flatMap { st =>
-      val complete = st.isDirectory && fs.exists(new Path(st.getPath, "_SUCCESS"))
-      if (!complete) None
-      else res.view.flatMap(_.findFirstMatchIn(st.getPath.getName))
-        .collectFirst {
-          case m if m.matched == st.getPath.getName && m.group(1).toLong < boundExclusive =>
-            st.getPath.toString
-        }
-    }
-  }
-
-  /** `dirs` read under the family's own schema — no footer inference
-    * job, and a column an older dir lacks reads as NULL.
-    */
-  private def readParts(spark: SparkSession, dirs: Seq[String], schema: StructType): DataFrame =
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(dirs: _*)
-
   /** The admitted signature store visible to batch `boundExclusive`
     * (deltas + folds; a fold's id is the highest batch it covers).
     */
   def sigStore(spark: SparkSession, storeDir: String,
       boundExclusive: Long = Long.MaxValue): DataFrame =
-    readParts(spark,
-      partsBefore(spark, storeDir, Seq(DeltaRe, FoldRe), boundExclusive), sigSchema)
+    StoreSink.read(spark, storeDir, StoreSink.Delta, sigSchema, boundExclusive)
 
   /** Ids the screen has admitted so far. */
   def keptIds(spark: SparkSession, storeDir: String): DataFrame =
@@ -114,9 +75,7 @@ object StreamNearDup {
     * fold-vs-leftover-delta overlap still cancels within its cohort.
     */
   def matches(spark: SparkSession, storeDir: String): DataFrame = {
-    val raw = readParts(spark,
-      partsBefore(spark, storeDir, Seq(MatchesRe, MatchesFoldRe), Long.MaxValue),
-      matchesSchema)
+    val raw = StoreSink.read(spark, storeDir, StoreSink.sidecar("matches"), matchesSchema)
     raw.filter(col("b").isNotNull).distinct().drop("b")
       .unionByName(raw.filter(col("b").isNull).drop("b").distinct())
   }
@@ -144,28 +103,12 @@ object StreamNearDup {
   def start(docs: DataFrame, storeDir: String, checkpointDir: String,
       threshold: Double = 0.5,
       trigger: Trigger = Trigger.ProcessingTime(0),
-      foldEvery: Int = 0): StreamingQuery = {
-    var ownershipVerified = false
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointDir/neardup")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!ownershipVerified) {
-          StreamDedup.verifyStoreOwnership(spark, storeDir,
-            s"$checkpointDir/neardup", batchId)
-          ownershipVerified = true
-        }
-        ingestBatch(spark, batch, batchId, storeDir, threshold)
-        // in-trigger cadence maintenance (see StreamDedup.foldDue):
-        // both the signature deltas and the matches provenance compact
-        if (StreamDedup.foldDue(foldEvery, batchId)) {
-          foldDeltas(spark, storeDir); foldMatches(spark, storeDir); ()
-        }
-      }
-      .start()
-  }
+      foldEvery: Int = 0): StreamingQuery =
+    // the fold compacts both the signature deltas and the provenance
+    StoreSink.start(docs, s"$checkpointDir/neardup", Seq(storeDir), trigger, foldEvery,
+      s => foldDeltas(s, storeDir) + foldMatches(s, storeDir)) { (spark, batch, batchId) =>
+      ingestBatch(spark, batch, batchId, storeDir, threshold); ()
+    }
 
   /** One micro-batch of the near-dup screen — the foreachBatch body as
     * a reusable primitive (StreamPrep composes it into the chained

@@ -16,30 +16,24 @@ import graft.operators.TextOps
   *    hash, computed IN the projection — document text never reaches a
   *    shuffle or the store);
   *  - anti-joins them against the store of ALL previously seen window
-  *    hashes (strictly earlier batches — replay-safe bound, exactly
-  *    StreamDedup's screen shape);
+  *    hashes (strictly earlier batches — StreamDedup's screen shape);
   *  - lands the genuinely NEW hashes as a batchId-keyed `delta_b<id>`
   *    dir (the seen-set grows by exactly the novel mass — each hash
   *    lives in the delta of its FIRST batch, the streaming form of
   *    d21's min-doc_id first-occurrence convention);
   *  - lands the verdict as a `novelty_b<id>` sidecar row
-  *    `(b, n_docs, n_windows, n_novel, novelty_ppm)` — deterministic
-  *    per (batch content, store state before the batch), so replays
-  *    rewrite both dirs byte-identically. A batch with no ≥ 8-token
-  *    document reports 0 windows / 0 ppm (it adds nothing, same
-  *    convention as d21 omitting short docs).
+  *    `(b, n_docs, n_windows, n_novel, novelty_ppm)`. A batch with no
+  *    ≥ 8-token document reports 0 windows / 0 ppm (it adds nothing,
+  *    same convention as d21 omitting short docs).
   *
   * The operational use is the NOVELTY-COLLAPSE alarm: a crawl feed
   * whose cohorts decay toward 0 ppm is re-crawling what the corpus
   * already holds — the signal to rotate seeds/frontiers, watched from
   * [[noveltyLog]] exactly like StreamVec's drift log.
   *
-  * Ownership, idempotence, folds, and the crash contract are
-  * StreamDedup's verbatim: the store is claimed by its checkpoint's
-  * query id, deltas fold under the maintenance lease (union+distinct —
-  * the store is a SET, so fold/crash overlap is absorbed by the
-  * anti-join and by readers' distinct()), sidecars fold under the
-  * `novelty` prefix, and `foldEvery` runs both in-trigger.
+  * Store contract: [[StoreSink]]. The seen-set is a SET, so fold/crash
+  * overlap is absorbed by the anti-join and by readers' distinct(); the
+  * sidecars fold under the `novelty` prefix.
   *
   * Store bytes at 100 TB: one long per DISTINCT window hash ever seen —
   * the corpus's window vocabulary, not its window stream; the per-batch
@@ -73,35 +67,13 @@ object StreamNovelty {
     * semantics — fold/crash overlap collapsed). The corpus's window
     * vocabulary; [[noveltyLog]] is the per-cohort view.
     */
-  def seenHashes(spark: SparkSession, storeDir: String): DataFrame = {
-    val dirs = partsOf(spark, storeDir,
-      Seq("delta_b(\\d+)".r, "fold_0_(\\d+)".r))
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], winSchema)
-    else spark.read.parquet(dirs: _*).distinct()
-  }
+  def seenHashes(spark: SparkSession, storeDir: String): DataFrame =
+    StoreSink.read(spark, storeDir, StoreSink.Delta, winSchema).distinct()
 
   /** The per-batch novelty audit trail, ordered by batch. */
-  def noveltyLog(spark: SparkSession, storeDir: String): DataFrame = {
-    val dirs = partsOf(spark, storeDir,
-      Seq("novelty_b(\\d+)".r, "novelty_fold_0_(\\d+)".r))
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logSchema)
-    else spark.read.parquet(dirs: _*).distinct().orderBy("b")
-  }
-
-  private def partsOf(spark: SparkSession, storeDir: String,
-      res: Seq[scala.util.matching.Regex]): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq.collect {
-      case st if st.isDirectory &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) &&
-        res.exists(r => r.pattern.matcher(st.getPath.getName).matches()) =>
-        st.getPath.toString
-    }
-  }
+  def noveltyLog(spark: SparkSession, storeDir: String): DataFrame =
+    StoreSink.read(spark, storeDir, StoreSink.sidecar("novelty"), logSchema)
+      .distinct().orderBy("b")
 
   /** Compact the seen-hash deltas and the novelty sidecars — one
     * maintenance pass, StreamDedup's machinery for both families.
@@ -116,68 +88,28 @@ object StreamNovelty {
     */
   def start(docs: DataFrame, storeDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime(0),
-      foldEvery: Int = 0): StreamingQuery = {
-    var ownershipVerified = false
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointDir/novelty")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!ownershipVerified) {
-          StreamDedup.verifyStoreOwnership(
-            spark, storeDir, s"$checkpointDir/novelty", batchId)
-          ownershipVerified = true
-        }
-        // one window pass feeds the anti-join and both counters
-        val bh = batchWindowHashes(batch).localCheckpoint()
-        val nDocs = batch.select("doc_id").distinct().count()
-        val nWindows = bh.count()
-        // the screen READ races a concurrent fold's post-commit input
-        // delete — retry with a fresh listing (the fold commits the
-        // same hash set first, so the retried screen sees a superset)
-        StreamDedup.withStoreRetry {
-          val seen = seenBefore(spark, storeDir, boundExclusive = batchId)
-          val novel = bh.join(seen, Seq("h"), "left_anti").localCheckpoint()
-          val nNovel = novel.count()
-          val ppm = if (nWindows == 0) 0L else 1000000L * nNovel / nWindows
-          novel.write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
-          import spark.implicits._
-          Seq((batchId, nDocs, nWindows, nNovel, ppm))
-            .toDF("b", "n_docs", "n_windows", "n_novel", "novelty_ppm")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$storeDir/novelty_b$batchId")
-        }
-        if (StreamDedup.foldDue(foldEvery, batchId)) { foldSeen(spark, storeDir); () }
+      foldEvery: Int = 0): StreamingQuery =
+    StoreSink.start(docs, s"$checkpointDir/novelty", Seq(storeDir), trigger, foldEvery,
+      foldSeen(_, storeDir)) { (spark, batch, batchId) =>
+      // one window pass feeds the anti-join and both counters
+      val bh = batchWindowHashes(batch).localCheckpoint()
+      val nDocs = batch.select("doc_id").distinct().count()
+      val nWindows = bh.count()
+      // the screen READ races a concurrent fold's post-commit input
+      // delete — retry with a fresh listing (the fold commits the
+      // same hash set first, so the retried screen sees a superset)
+      StreamDedup.withStoreRetry {
+        // the seen set visible to this batch: strictly earlier parts
+        val seen = StoreSink.read(spark, storeDir, StoreSink.Delta, winSchema, batchId)
+        val novel = bh.join(seen, Seq("h"), "left_anti").localCheckpoint()
+        val nNovel = novel.count()
+        val ppm = if (nWindows == 0) 0L else 1000000L * nNovel / nWindows
+        novel.write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
+        import spark.implicits._
+        Seq((batchId, nDocs, nWindows, nNovel, ppm))
+          .toDF("b", "n_docs", "n_windows", "n_novel", "novelty_ppm")
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$storeDir/novelty_b$batchId")
       }
-      .start()
-  }
-
-  /** Seen set visible to batch `boundExclusive` — strictly earlier
-    * deltas/folds only, so a half-written attempt of THIS batch can
-    * never screen out its own replay's rows.
-    */
-  private def seenBefore(spark: SparkSession, storeDir: String,
-      boundExclusive: Long): DataFrame = {
-    val DeltaRe = "delta_b(\\d+)".r
-    val FoldRe = "fold_0_(\\d+)".r
-    val base = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs =
-      if (!fs.exists(base)) Seq.empty[String]
-      else fs.listStatus(base).toSeq.flatMap { st =>
-        val complete = st.isDirectory &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))
-        st.getPath.getName match {
-          case DeltaRe(id) if complete && id.toLong < boundExclusive =>
-            Some(st.getPath.toString)
-          case FoldRe(hi) if complete && hi.toLong < boundExclusive =>
-            Some(st.getPath.toString)
-          case _ => None
-        }
-      }
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], winSchema)
-    else spark.read.parquet(dirs: _*).select("h")
-  }
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.CorpusPrep
 
 /** tok11's best-fit packing manifest AT INGEST — the dataloader-shape
@@ -25,15 +25,11 @@ import graft.operators.CorpusPrep
   * argument that makes it reproducible across engines makes it
   * reproducible across ingest schedules.
   *
-  * Store discipline is StreamImportance's verbatim: per-doc token
-  * counts land in a batchId-keyed dir (`toks_b<id>`, mode overwrite) —
-  * a replayed batch rewrites the SAME dir with the SAME deterministic
-  * content, so at-least-once foreachBatch converges to exactly-once
-  * ledger contents; folds compact under the maintenance lease and
-  * crash overlap is absorbed by the ledger's distinct. The distinct
-  * runs WITH the batch column, so a doc genuinely re-sent in a later
-  * batch keeps one ledger row per cohort (the admission HISTORY;
-  * [[packingLog]] recounts each cohort from exactly its own rows) —
+  * Per-doc token counts land in `toks_b<id>` (store contract:
+  * [[StoreSink]]). The ledger's distinct runs WITH the batch column, so
+  * a doc genuinely re-sent in a later batch keeps one ledger row per
+  * cohort (the admission HISTORY; [[packingLog]] recounts each cohort
+  * from exactly its own rows) —
   * the serve-equals-batch-tok11 claim therefore carries the same
   * once-ingested precondition StreamImportance's does, and the spec
   * states it.
@@ -51,26 +47,17 @@ object StreamPacking {
     * convention — they contribute nothing to any packing).
     */
   def start(source: DataFrame, storeDir: String, checkpointDir: String,
-      foldEvery: Int = 0): StreamingQuery = {
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.select(col("doc_id"),
-            size(expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
-              .cast("long").as("n_tokens"))
-          .filter(col("n_tokens") > 0)
-          // b rides every row so a fold's distinct collapses ONLY
-          // replay/crash overlap (same batch, byte-identical), never a
-          // genuine re-send from a later cohort
-          .withColumn("b", lit(batchId))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$storeDir/toks_b$batchId")
-        // in-trigger cadence maintenance (StreamDedup.foldDue)
-        if (StreamDedup.foldDue(foldEvery, batchId)) { fold(batch.sparkSession, storeDir); () }
-      }
-      .start()
-  }
+      foldEvery: Int = 0): StreamingQuery =
+    StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
+      fold = fold(_, storeDir)) { (_, batch, batchId) =>
+      batch.select(col("doc_id"),
+          size(expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
+            .cast("long").as("n_tokens"))
+        .filter(col("n_tokens") > 0)
+        .withColumn("b", lit(batchId))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$storeDir/toks_b$batchId")
+    }
 
   /** Compact per-batch ledger dirs into one `toks_fold_0_<hi>` range
     * dir — StreamDedup's fold machinery under the store's maintenance
@@ -79,30 +66,12 @@ object StreamPacking {
   def fold(spark: SparkSession, storeDir: String): Int =
     StreamDedup.foldSidecars(spark, storeDir, "toks")
 
-  private def tokDirs(spark: SparkSession, storeDir: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dRe = "toks_b(\\d+)".r
-    val fRe = "toks_fold_0_(\\d+)".r
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq.collect {
-      case st if st.isDirectory &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) &&
-        (dRe.pattern.matcher(st.getPath.getName).matches() ||
-          fRe.pattern.matcher(st.getPath.getName).matches()) =>
-        st.getPath.toString
-    }
-  }
-
   /** The accumulated (doc_id, n_tokens, b) ledger across all ingested
     * batches — replay overlap collapsed, genuine re-sends kept per
     * cohort (see the object scaladoc).
     */
-  private def ledger(spark: SparkSession, storeDir: String): DataFrame = {
-    val dirs = tokDirs(spark, storeDir)
-    require(dirs.nonEmpty, s"no committed token ledgers under $storeDir")
-    spark.read.parquet(dirs: _*).distinct()
-  }
+  private def ledger(spark: SparkSession, storeDir: String): DataFrame =
+    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("toks")).distinct()
 
   /** The packing manifest over every ingested doc — on a once-ingested
     * corpus, the same 32 rows as batch tok11.

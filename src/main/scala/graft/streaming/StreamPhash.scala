@@ -19,9 +19,9 @@ import graft.operators.Multimodal
   *  - resolves the IN-BATCH winner per hash (min doc_id — m5's canonical
   *    convention, deterministic on replay);
   *  - anti-joins the winners against the store of all previously seen
-  *    hashes (strictly earlier batches — the replay-safe bound, exactly
-  *    StreamDedup's screen shape) and lands the genuinely new
-  *    `(h_hi, h_lo, doc_id)` keepers as the batch's `delta_b<id>` dir:
+  *    hashes (strictly earlier batches — StreamDedup's screen shape)
+  *    and lands the genuinely new `(h_hi, h_lo, doc_id)` keepers as the
+  *    batch's `delta_b<id>` dir:
   *    each distinct image lives in the delta of its FIRST batch, owned
   *    by that batch's smallest doc_id;
   *  - lands the dedup verdict as a `media_b<id>` sidecar row
@@ -30,13 +30,9 @@ import graft.operators.Multimodal
   *    images the corpus already holds), watched from [[mediaLog]] like
   *    StreamVec's drift log.
   *
-  * Both dirs are deterministic per (batch content, prior store state),
-  * so replays rewrite them byte-identically. Ownership, idempotence,
-  * folds, and the crash contract are StreamDedup's verbatim: checkpoint
-  * claims the store, deltas and sidecars fold under the maintenance
-  * lease (the keeper store is a SET keyed by hash — fold/crash overlap
-  * is absorbed by the anti-join and readers' distinct()), and
-  * `foldEvery` runs both in-trigger.
+  * Store contract: [[StoreSink]]. The keeper store is a SET keyed by
+  * hash, so fold/crash overlap is absorbed by the anti-join and readers'
+  * distinct(); the sidecars fold under the `media` prefix.
   *
   * Store bytes at 100 TB: three longs per DISTINCT image ever seen —
   * the corpus's image vocabulary, never its image stream; per-batch
@@ -76,35 +72,13 @@ object StreamPhash {
     * the canonical representative of each distinct image seen so far
     * (deltas + folds, set semantics).
     */
-  def keepers(spark: SparkSession, storeDir: String): DataFrame = {
-    val dirs = partsOf(spark, storeDir,
-      Seq("delta_b(\\d+)".r, "fold_0_(\\d+)".r))
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], keeperSchema)
-    else spark.read.parquet(dirs: _*).distinct()
-  }
+  def keepers(spark: SparkSession, storeDir: String): DataFrame =
+    StoreSink.read(spark, storeDir, StoreSink.Delta, keeperSchema).distinct()
 
   /** The per-batch dedup audit trail, ordered by batch. */
-  def mediaLog(spark: SparkSession, storeDir: String): DataFrame = {
-    val dirs = partsOf(spark, storeDir,
-      Seq("media_b(\\d+)".r, "media_fold_0_(\\d+)".r))
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logSchema)
-    else spark.read.parquet(dirs: _*).distinct().orderBy("b")
-  }
-
-  private def partsOf(spark: SparkSession, storeDir: String,
-      res: Seq[scala.util.matching.Regex]): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq.collect {
-      case st if st.isDirectory &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) &&
-        res.exists(r => r.pattern.matcher(st.getPath.getName).matches()) =>
-        st.getPath.toString
-    }
-  }
+  def mediaLog(spark: SparkSession, storeDir: String): DataFrame =
+    StoreSink.read(spark, storeDir, StoreSink.sidecar("media"), logSchema)
+      .distinct().orderBy("b")
 
   /** Compact the keeper deltas and the media sidecars — one maintenance
     * pass, StreamDedup's machinery for both families.
@@ -119,76 +93,36 @@ object StreamPhash {
     */
   def start(media: DataFrame, storeDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime(0),
-      foldEvery: Int = 0): StreamingQuery = {
-    var ownershipVerified = false
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointDir/phash")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!ownershipVerified) {
-          StreamDedup.verifyStoreOwnership(
-            spark, storeDir, s"$checkpointDir/phash", batchId)
-          ownershipVerified = true
-        }
-        // one decode pass feeds the winner window, the screen, and
-        // both counters
-        val hashes = batchHashes(batch).localCheckpoint()
-        val nDocs = hashes.count()
-        // in-batch winner: min doc_id per hash (m5's canonical rule)
-        val winners = hashes
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy("h_hi", "h_lo").orderBy("doc_id")))
-          .filter(col("__rn") === 1).drop("__rn")
-          .localCheckpoint()
-        val nUnique = winners.count()
-        // the screen READ races a concurrent fold's post-commit input
-        // delete — retry with a fresh listing (the fold commits the
-        // same keeper set first, so the retried screen sees a superset)
-        StreamDedup.withStoreRetry {
-          val seen = seenBefore(spark, storeDir, boundExclusive = batchId)
-          val admitted = winners.join(seen, Seq("h_hi", "h_lo"), "left_anti")
-            .select("h_hi", "h_lo", "doc_id").localCheckpoint()
-          val nAdmitted = admitted.count()
-          val ppm = if (nDocs == 0) 0L else 1000000L * (nDocs - nAdmitted) / nDocs
-          admitted.write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
-          import spark.implicits._
-          Seq((batchId, nDocs, nUnique, nAdmitted, ppm))
-            .toDF("b", "n_docs", "n_unique", "n_admitted", "dup_ppm")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$storeDir/media_b$batchId")
-        }
-        if (StreamDedup.foldDue(foldEvery, batchId)) { foldKeepers(spark, storeDir); () }
+      foldEvery: Int = 0): StreamingQuery =
+    StoreSink.start(media, s"$checkpointDir/phash", Seq(storeDir), trigger, foldEvery,
+      foldKeepers(_, storeDir)) { (spark, batch, batchId) =>
+      // one decode pass feeds the winner window, the screen, and
+      // both counters
+      val hashes = batchHashes(batch).localCheckpoint()
+      val nDocs = hashes.count()
+      // in-batch winner: min doc_id per hash (m5's canonical rule)
+      val winners = hashes
+        .withColumn("__rn", row_number().over(
+          Window.partitionBy("h_hi", "h_lo").orderBy("doc_id")))
+        .filter(col("__rn") === 1).drop("__rn")
+        .localCheckpoint()
+      val nUnique = winners.count()
+      // the screen READ races a concurrent fold's post-commit input
+      // delete — retry with a fresh listing (the fold commits the
+      // same keeper set first, so the retried screen sees a superset)
+      StreamDedup.withStoreRetry {
+        // the keeper set visible to this batch: strictly earlier parts
+        val seen = StoreSink.read(spark, storeDir, StoreSink.Delta, keeperSchema, batchId)
+        val admitted = winners.join(seen, Seq("h_hi", "h_lo"), "left_anti")
+          .select("h_hi", "h_lo", "doc_id").localCheckpoint()
+        val nAdmitted = admitted.count()
+        val ppm = if (nDocs == 0) 0L else 1000000L * (nDocs - nAdmitted) / nDocs
+        admitted.write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
+        import spark.implicits._
+        Seq((batchId, nDocs, nUnique, nAdmitted, ppm))
+          .toDF("b", "n_docs", "n_unique", "n_admitted", "dup_ppm")
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$storeDir/media_b$batchId")
       }
-      .start()
-  }
-
-  /** Keeper set visible to batch `boundExclusive` — strictly earlier
-    * deltas/folds only, so a half-written attempt of THIS batch can
-    * never screen out its own replay's rows.
-    */
-  private def seenBefore(spark: SparkSession, storeDir: String,
-      boundExclusive: Long): DataFrame = {
-    val DeltaRe = "delta_b(\\d+)".r
-    val FoldRe = "fold_0_(\\d+)".r
-    val base = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs =
-      if (!fs.exists(base)) Seq.empty[String]
-      else fs.listStatus(base).toSeq.flatMap { st =>
-        val complete = st.isDirectory &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))
-        st.getPath.getName match {
-          case DeltaRe(id) if complete && id.toLong < boundExclusive =>
-            Some(st.getPath.toString)
-          case FoldRe(hi) if complete && hi.toLong < boundExclusive =>
-            Some(st.getPath.toString)
-          case _ => None
-        }
-      }
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], keeperSchema)
-    else spark.read.parquet(dirs: _*).select("h_hi", "h_lo", "doc_id")
-  }
+    }
 }

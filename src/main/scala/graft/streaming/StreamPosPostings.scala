@@ -16,11 +16,8 @@ import graft.operators.Retrieval
   *  - each micro-batch of `(doc_id, text)` tokenizes ALONE into
   *    positional postings (term, doc_id, ps) — positions are pure
   *    per-document state, a deterministic function of the text — and
-  *    lands as a batchId-keyed `delta_b<id>` dir, so an at-least-once
-  *    replay rewrites the SAME dir with the SAME bytes;
-  *  - the store is claimed by its checkpoint's query id
-  *    (StreamDedup.verifyStoreOwnership) — a fresh checkpoint pointed
-  *    at an existing store is refused before it can write;
+  *    lands as the batch's `delta_b<id>` dir (store contract:
+  *    [[StoreSink]]);
   *  - read-time absorption: replay overlap by distinct() (rows are
   *    deterministic per doc), doc reissue by last-writer-wins on the
   *    batch id, and the per-doc MARKER row (term = '', ps = []) keeps
@@ -71,20 +68,10 @@ object StreamPosPostings {
     */
   def start(docs: DataFrame, storeDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime(0),
-      analyzer: String = Retrieval.RawAnalyzerSql): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    var ownershipVerified = false
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointDir/pospostings")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!ownershipVerified) {
-          StreamDedup.verifyStoreOwnership(
-            spark, storeDir, s"$checkpointDir/pospostings", batchId)
-          ownershipVerified = true
-        }
+      analyzer: String = Retrieval.RawAnalyzerSql): StreamingQuery =
+    StoreSink.start(docs, s"$checkpointDir/pospostings", Seq(storeDir), trigger) {
+      (_, batch, batchId) =>
+        import org.apache.spark.sql.functions._
         val raw = Retrieval.rawPosPostings(batch.select(col("doc_id"),
           expr(analyzer).as("toks")))
         val markers = batch.select(col("doc_id")).distinct()
@@ -93,8 +80,5 @@ object StreamPosPostings {
         raw.unionByName(markers)
           .withColumn("b", lit(batchId))
           .write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
-        ()
-      }
-      .start()
-  }
+    }
 }

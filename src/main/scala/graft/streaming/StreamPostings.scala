@@ -9,9 +9,9 @@ import graft.operators.Retrieval
   * `Retrieval.appendPostings`, built on StreamVec's discipline: each
   * micro-batch of `(doc_id, text)` rows tokenizes ALONE into raw
   * postings (term, doc_id, tf, dl — per-document state, a pure
-  * function of the document) and lands as a batchId-keyed `delta_b<id>`
-  * dir, so an at-least-once replay rewrites the SAME dir with the SAME
-  * bytes and a document can never be double-indexed.
+  * function of the document) and lands as the batch's `delta_b<id>`
+  * dir, so a document can never be double-indexed (store contract:
+  * [[StoreSink]]).
   *
   * The design decision vs the batch append: df — the one GLOBAL
   * statistic — is deliberately NOT stored. Raw deltas hold only
@@ -22,10 +22,8 @@ import graft.operators.Retrieval
   * every micro-batch — the property OpsSpec pins for the batch append
   * and StreamingSpec pins here.
   *
-  * Ownership, folds, and the crash contract are StreamDedup's:
-  * the store is claimed by its checkpoint's query id, fold compaction
-  * is content-agnostic, and "overlap, never loss" is absorbed in two
-  * layers at read time: byte-identical replay overlap by distinct()
+  * Fold/crash overlap is absorbed in two layers at read time:
+  * byte-identical replay overlap by distinct()
   * (postings are deterministic per doc, so a replayed delta is
   * row-identical), and a doc_id REissued in a later micro-batch with
   * different text (document update, upstream reprocessing) by
@@ -103,20 +101,10 @@ object StreamPostings {
     */
   def start(docs: DataFrame, storeDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime(0),
-      analyzer: String = RawAnalyzer): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    var ownershipVerified = false
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointDir/postings")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!ownershipVerified) {
-          StreamDedup.verifyStoreOwnership(
-            spark, storeDir, s"$checkpointDir/postings", batchId)
-          ownershipVerified = true
-        }
+      analyzer: String = RawAnalyzer): StreamingQuery =
+    StoreSink.start(docs, s"$checkpointDir/postings", Seq(storeDir), trigger) {
+      (_, batch, batchId) =>
+        import org.apache.spark.sql.functions._
         val raw = Retrieval.rawPostings(batch.select(col("doc_id"),
           expr(analyzer).as("toks")))
         // one marker per incoming doc_id — see the object scaladoc
@@ -126,8 +114,5 @@ object StreamPostings {
         raw.unionByName(markers)
           .withColumn("b", lit(batchId))
           .write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
-        ()
-      }
-      .start()
-  }
+    }
 }

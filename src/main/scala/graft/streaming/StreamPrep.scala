@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -34,13 +33,10 @@ import graft.operators.TextOps
   * replayed corpus (the StreamScd2-vs-cdc3 parity pattern).
   *
   * Store layout under `storeDir`: `exact/` and `sigs/` are the two
-  * screens' ordinary delta stores (foldable, ownership-guarded,
-  * batchId-bounded screens — replay-safe exactly as standalone);
-  * `decontam/verdicts_b<id>` and `manifest_b<id>` are pure per-batch
-  * verdicts (each doc's row depends only on the doc, the bench
-  * fixture, and store state strictly BEFORE its batch), so a replayed
-  * batch rewrites the same dirs with the same bytes — at-least-once
-  * foreachBatch converges to exactly-once contents, chain-wide.
+  * screens' ordinary delta stores, both claimed by the chain's
+  * checkpoint; `decontam/verdicts_b<id>` and `manifest_b<id>` are pure
+  * per-batch verdicts. The store contract ([[StoreSink]]) holds
+  * chain-wide.
   *
   * 100 TB shape: unchanged from the standalone twins — the chain
   * ORDER is the cost order (cheap doc-level gate first, hash screen
@@ -49,9 +45,6 @@ import graft.operators.TextOps
   * stage, and the stores hold hashes/signatures/verdicts, never text.
   */
 object StreamPrep {
-
-  private val ManifestRe = "manifest_b(\\d+)".r
-  private val ManifestFoldRe = "manifest_fold_0_(\\d+)".r
 
   private def manifestSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("stage", StringType),
@@ -70,24 +63,9 @@ object StreamPrep {
     * re-send verdict (same doc, same stage, different batch) keeps its
     * multiplicity through the fold's own distinct.
     */
-  def manifest(spark: SparkSession, storeDir: String): DataFrame = {
-    val base = new Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs =
-      if (!fs.exists(base)) Seq.empty[String]
-      else fs.listStatus(base).toSeq.collect {
-        case st if st.isDirectory &&
-          fs.exists(new Path(st.getPath, "_SUCCESS")) &&
-          (ManifestRe.pattern.matcher(st.getPath.getName).matches() ||
-            ManifestFoldRe.pattern.matcher(st.getPath.getName).matches()) =>
-          st.getPath.toString
-      }
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], manifestSchema)
-        .drop("b")
-    else spark.read.parquet(dirs: _*).distinct().drop("b")
-  }
+  def manifest(spark: SparkSession, storeDir: String): DataFrame =
+    StoreSink.read(spark, storeDir, StoreSink.sidecar("manifest"), manifestSchema)
+      .distinct().drop("b")
 
   /** Compact the chain's per-batch output dirs — the maintenance pass a
     * 30 s-trigger deployment schedules (one dir per family per batch is
@@ -121,82 +99,62 @@ object StreamPrep {
   def start(docs: DataFrame, benchWindows: DataFrame, storeDir: String,
       checkpointDir: String, threshold: Double = 0.5,
       trigger: Trigger = Trigger.ProcessingTime(0),
-      foldEvery: Int = 0): StreamingQuery = {
-    var ownershipVerified = false
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointDir/prep")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!ownershipVerified) {
-          // both screen stores are claimed by THIS checkpoint's query
-          // id — a fresh checkpoint restarting batch ids at 0 is
-          // refused before any write, exactly as standalone
-          StreamDedup.verifyStoreOwnership(
-            spark, s"$storeDir/exact", s"$checkpointDir/prep", batchId)
-          StreamDedup.verifyStoreOwnership(
-            spark, s"$storeDir/sigs", s"$checkpointDir/prep", batchId)
-          ownershipVerified = true
-        }
-        // stage 1: quality gate — frozen once (localCheckpoint): four
-        // downstream consumers must see ONE evaluation of the batch
-        val scored = TextOps.qualityScored(batch.select("doc_id", "text"))
-          .localCheckpoint()
-        val passed = scored.filter(col("quality") >= 0.5)
-        // stage 2: exact screen (writes exact/delta_b<id>)
-        val exactAdmitted = StreamDedup.ingestBatch(
-          spark, passed, batchId, s"$storeDir/exact")
-        val exactSurvivors = passed.join(exactAdmitted, Seq("doc_id"), "left_semi")
-        // stage 3: near-dup screen (writes sigs/{delta,matches}_b<id>)
-        val nearAdmitted = StreamNearDup.ingestBatch(
-          spark, exactSurvivors, batchId, s"$storeDir/sigs", threshold)
-        val nearSurvivors = exactSurvivors.join(nearAdmitted, Seq("doc_id"), "left_semi")
-        // stage 4: decontamination over the final survivors only
-        val verd = TextOps.d7bVerdicts(
-          nearSurvivors.select(col("doc_id"), split(col("text"), " ").as("ws")),
-          benchWindows)
-          // b rides every sidecar row (fold-overlap vs re-send
-          // disambiguation — see manifest()'s scaladoc)
-          .withColumn("b", lit(batchId))
-        verd.coalesce(1)
-          .write.mode("overwrite").parquet(s"$storeDir/decontam/verdicts_b$batchId")
-        // deliberate read-back-after-write: the contaminated set (and
-        // through it the manifest) derives from the COMMITTED verdicts
-        // dir, not the in-flight plan — so the two artifacts can never
-        // disagree if the verdict computation were nondeterministic or
-        // the job retried mid-write. Do not "optimize" this into a
-        // reuse of `verd` (its schema is reused only to skip the
-        // footer-inference job).
-        val contaminated = spark.read.schema(verd.schema)
-          .parquet(s"$storeDir/decontam/verdicts_b$batchId")
-          .select("doc_id").distinct()
-        // the manifest: exactly one exit stage per incoming doc
-        def staged(ids: DataFrame, stage: String): DataFrame =
-          scored.join(ids, Seq("doc_id"), "left_semi")
-            .select(col("doc_id"), lit(stage).as("stage"),
-              round(col("quality"), 6).as("quality"), lit(batchId).as("b"))
-        val mQuality = scored.filter(col("quality") < 0.5 || col("quality").isNull)
-          .select(col("doc_id"), lit("quality").as("stage"),
+      foldEvery: Int = 0): StreamingQuery =
+    StoreSink.start(docs, s"$checkpointDir/prep", Seq(s"$storeDir/exact", s"$storeDir/sigs"),
+      trigger, foldEvery, fold(_, storeDir)) { (spark, batch, batchId) =>
+      // stage 1: quality gate — frozen once (localCheckpoint): four
+      // downstream consumers must see ONE evaluation of the batch
+      val scored = TextOps.qualityScored(batch.select("doc_id", "text"))
+        .localCheckpoint()
+      val passed = scored.filter(col("quality") >= 0.5)
+      // stage 2: exact screen (writes exact/delta_b<id>)
+      val exactAdmitted = StreamDedup.ingestBatch(
+        spark, passed, batchId, s"$storeDir/exact")
+      val exactSurvivors = passed.join(exactAdmitted, Seq("doc_id"), "left_semi")
+      // stage 3: near-dup screen (writes sigs/{delta,matches}_b<id>)
+      val nearAdmitted = StreamNearDup.ingestBatch(
+        spark, exactSurvivors, batchId, s"$storeDir/sigs", threshold)
+      val nearSurvivors = exactSurvivors.join(nearAdmitted, Seq("doc_id"), "left_semi")
+      // stage 4: decontamination over the final survivors only
+      val verd = TextOps.d7bVerdicts(
+        nearSurvivors.select(col("doc_id"), split(col("text"), " ").as("ws")),
+        benchWindows)
+        // b rides every sidecar row (fold-overlap vs re-send
+        // disambiguation — see manifest()'s scaladoc)
+        .withColumn("b", lit(batchId))
+      verd.coalesce(1)
+        .write.mode("overwrite").parquet(s"$storeDir/decontam/verdicts_b$batchId")
+      // deliberate read-back-after-write: the contaminated set (and
+      // through it the manifest) derives from the COMMITTED verdicts
+      // dir, not the in-flight plan — so the two artifacts can never
+      // disagree if the verdict computation were nondeterministic or
+      // the job retried mid-write. Do not "optimize" this into a
+      // reuse of `verd` (its schema is reused only to skip the
+      // footer-inference job).
+      val contaminated = spark.read.schema(verd.schema)
+        .parquet(s"$storeDir/decontam/verdicts_b$batchId")
+        .select("doc_id").distinct()
+      // the manifest: exactly one exit stage per incoming doc
+      def staged(ids: DataFrame, stage: String): DataFrame =
+        scored.join(ids, Seq("doc_id"), "left_semi")
+          .select(col("doc_id"), lit(stage).as("stage"),
             round(col("quality"), 6).as("quality"), lit(batchId).as("b"))
-        val mExact = staged(
-          passed.select("doc_id").join(exactAdmitted, Seq("doc_id"), "left_anti"),
-          "exact")
-        val mNear = staged(
-          exactSurvivors.select("doc_id").join(nearAdmitted, Seq("doc_id"), "left_anti"),
-          "neardup")
-        val mCont = staged(contaminated, "contaminated")
-        val mKept = staged(
-          nearSurvivors.select("doc_id").join(contaminated, Seq("doc_id"), "left_anti"),
-          "kept")
-        mQuality.unionByName(mExact).unionByName(mNear)
-          .unionByName(mCont).unionByName(mKept)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$storeDir/manifest_b$batchId")
-        // in-trigger cadence maintenance (StreamDedup.foldDue): all
-        // four accumulating families compact after the batch commits
-        if (StreamDedup.foldDue(foldEvery, batchId)) { fold(spark, storeDir); () }
-      }
-      .start()
-  }
+      val mQuality = scored.filter(col("quality") < 0.5 || col("quality").isNull)
+        .select(col("doc_id"), lit("quality").as("stage"),
+          round(col("quality"), 6).as("quality"), lit(batchId).as("b"))
+      val mExact = staged(
+        passed.select("doc_id").join(exactAdmitted, Seq("doc_id"), "left_anti"),
+        "exact")
+      val mNear = staged(
+        exactSurvivors.select("doc_id").join(nearAdmitted, Seq("doc_id"), "left_anti"),
+        "neardup")
+      val mCont = staged(contaminated, "contaminated")
+      val mKept = staged(
+        nearSurvivors.select("doc_id").join(contaminated, Seq("doc_id"), "left_anti"),
+        "kept")
+      mQuality.unionByName(mExact).unionByName(mNear)
+        .unionByName(mCont).unionByName(mKept)
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$storeDir/manifest_b$batchId")
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming data-quality profiling — qa2/qa3 run AT INGEST: every
   * micro-batch is profiled (per column: row count, null count, exact
@@ -13,14 +13,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * batch audit. [[drift]] then classifies batch-over-batch movement —
   * the qa3 verdict over the stored history.
   *
-  * Store discipline is StreamDedup's: each batch writes its profile
-  * rows to a batchId-keyed dir (`profile_b<id>`, mode overwrite) — a
-  * replayed batch rewrites the SAME dir with the SAME deterministic
-  * content, so at-least-once foreachBatch converges to exactly-once
-  * profile history. Profile rows are a handful of numbers per column
-  * per batch — the store grows with batches, never with data volume,
-  * and the per-batch cost is one wide aggregate over rows already in
-  * memory for the sink.
+  * Each batch writes its profile rows to `profile_b<id>` (store
+  * contract: [[StoreSink]]). Profile rows are a handful of numbers per
+  * column per batch — the store grows with batches, never with data
+  * volume, and the per-batch cost is one wide aggregate over rows
+  * already in memory for the sink.
   */
 object StreamProfile {
 
@@ -49,21 +46,16 @@ object StreamProfile {
     */
   def start(source: DataFrame, columns: Seq[String], storeDir: String,
       checkpointDir: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        profile(batch, columns)
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$storeDir/profile_b$batchId")
-        ()
-      }
-      .start()
+    StoreSink.start(source, checkpointDir, Seq(storeDir)) { (_, batch, batchId) =>
+      profile(batch, columns)
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$storeDir/profile_b$batchId")
+    }
 
-  /** The stored profile history (all batches, all columns). */
+  /** The stored profile history (all committed batches, all columns). */
   def history(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/profile_b*")
+    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("profile"))
 
   /** Batch-over-batch drift — qa3's verdict over the stored history:
     * per (column, batch), the deltas against the PREVIOUS batch's

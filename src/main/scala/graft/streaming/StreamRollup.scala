@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Rollup
 
 /** mv1's rollup maintenance run AT INGEST: every micro-batch folds its
@@ -11,11 +11,8 @@ import graft.operators.Rollup
   * in the SAME trigger that ingested the events, and the event history
   * is never rescanned.
   *
-  * Store discipline is StreamProfile's: each batch writes its partials
-  * to a batchId-keyed dir (`states_b<id>`, mode overwrite) — a replayed
-  * batch rewrites the SAME dir with the SAME deterministic content, so
-  * at-least-once foreachBatch converges to exactly-once state history.
-  * A day split across micro-batches yields several partial rows for the
+  * Each batch writes its partials to `states_b<id>` (store contract:
+  * [[StoreSink]]). A day split across micro-batches yields several partial rows for the
   * same (day, event_type); [[Rollup.merge]]'s algebra is insensitive to
   * how the partials were cut (OpsSpec pins split-independence), so the
   * served result is identical to the batch chain's.
@@ -32,20 +29,15 @@ object StreamRollup {
     */
   def start(source: DataFrame, storeDir: String,
       checkpointDir: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Rollup.states(batch)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$storeDir/states_b$batchId")
-        ()
-      }
-      .start()
+    StoreSink.start(source, checkpointDir, Seq(storeDir)) { (_, batch, batchId) =>
+      Rollup.states(batch)
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$storeDir/states_b$batchId")
+    }
 
-  /** The stored state history (all batches' partials). */
+  /** The stored state history (all committed batches' partials). */
   def history(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(s"$storeDir/states_b*")
+    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("states"))
 
   /** Serve the rollup from the store: the same merge the batch chain
     * runs — aggregates (batches × days × groups) state rows, never

@@ -15,8 +15,7 @@ import graft.operators.VectorOps
   *    the FROZEN codebook (v7's encoder verbatim — map-only over
   *    centroid literals, no shuffle of embeddings) and lands as a
   *    batchId-keyed `delta_b<id>` dir. Encoding is a pure deterministic
-  *    function of (vector, codebook), so an at-least-once replay
-  *    rewrites the SAME dir with the SAME bytes — a vector can never be
+  *    function of (vector, codebook), so a vector can never be
   *    double-inserted.
   *  - a vec_id REISSUED in a later batch (re-embedded doc, upstream
   *    reprocessing) serves only its NEWEST batch's code row: every
@@ -34,23 +33,17 @@ import graft.operators.VectorOps
   *  - v16's codebook-drift gate runs IN the trigger: each batch's mean
   *    integer squared residual is compared against the pinned training
   *    baseline, and the verdict (n_vecs, mean_err, drift_ppm, retrain
-  *    at v16's 1.5× threshold) lands as a `drift_b<id>` sidecar row —
-  *    batchId-keyed and deterministic, so replays rewrite it
-  *    idempotently — plus a stderr warning when it fires. Drift flags
+  *    at v16's 1.5× threshold) lands as a `drift_b<id>` sidecar row,
+  *    plus a stderr warning when it fires. Drift flags
   *    LOUDLY instead of letting recall decay silently; data still
   *    lands (retraining invalidates every stored code, so the retrain
   *    decision is the operator's, not the ingest's). Sidecars are
   *    invisible to [[codes]] and to the fold machinery (neither
   *    matches the `drift_` prefix); [[driftLog]] reads them.
   *
-  * Ownership, folds, and the crash contract are StreamDedup's: the
-  * store is claimed by its checkpoint's query id (a fresh checkpoint
-  * whose batch ids restart at 0 is refused), fold compaction is
-  * content-agnostic union+distinct under the maintenance lease (the
-  * `b`/`del` columns ride through folds, so last-writer-wins survives
-  * compaction), and "overlap, never loss" is absorbed at read time:
-  * replay overlap is byte-identical (distinct removes exactly it) and
-  * fold overlap keeps max-b intact.
+  * Store contract: [[StoreSink]]. The `b`/`del` columns ride through
+  * folds, so last-writer-wins survives compaction, and fold overlap
+  * keeps max-b intact.
   *
   * Codebook discipline at 100 TB: the codebook is trained once and
   * FROZEN for the life of the store (pass the same `books` and
@@ -60,8 +53,6 @@ import graft.operators.VectorOps
   * text side already mirrors.
   */
 object StreamVec {
-
-  private val DeltaRe = "delta_b(\\d+)".r
 
   /** storeDir → the ingest query [[start]] launched against it — the
     * in-process half of the rotation/ingest exclusion. [[rotate]]
@@ -97,8 +88,8 @@ object StreamVec {
     * trigger-touched marker went stale under an idle-but-RUNNING remote
     * ingest and a rotate then proceeded against it; the idle event
     * fires regardless of data. A bare file, never a `_SUCCESS`'d
-    * directory — invisible to [[completeDirs]], to the fold machinery,
-    * and to every reader.
+    * directory — invisible to [[StoreSink.parts]], to the fold
+    * machinery, and to every reader.
     *
     * Content: `<runId> <writerEpochMs> <tag>` — the writing run's id
     * (so a rotate can tell "the stopped query I watched" from "some
@@ -203,19 +194,6 @@ object StreamVec {
       (0 until VectorOps.PqM).map(m => StructField(s"c$m", LongType))) ++
       Seq(StructField("b", LongType), StructField("del", BooleanType)))
 
-  private def completeDirs(spark: SparkSession, storeDir: String,
-      accept: String => Boolean): Seq[String] = {
-    val base = new Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) Seq.empty[String]
-    else fs.listStatus(base).toSeq.collect {
-      case st if st.isDirectory &&
-        fs.exists(new Path(st.getPath, "_SUCCESS")) &&
-        accept(st.getPath.getName) =>
-        st.getPath.toString
-    }
-  }
-
   /** The index the store currently serves: all COMPLETE (_SUCCESS)
     * delta and fold dirs, replay overlap collapsed by distinct(), each
     * vec_id served from its NEWEST batch only (max-b last-writer
@@ -223,23 +201,15 @@ object StreamVec {
     * first commit. Plugs into `adcSearch`/`ivfServe` as their `codes0`.
     */
   def codes(spark: SparkSession, storeDir: String): DataFrame = {
-    val dirs = completeDirs(spark, storeDir, n =>
-      DeltaRe.pattern.matcher(n).matches() || n.startsWith("fold_0_"))
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], codesSchema)
-        .drop("b", "del")
-    else {
-      import org.apache.spark.sql.expressions.Window
-      // distinct is load-bearing: the fold crash contract is "overlap,
-      // never loss" — the same deterministic row can sit in two dirs,
-      // and a duplicated vec_id would occupy two top-k slots.
-      spark.read.parquet(dirs: _*).distinct()
-        .withColumn("bmax", max("b").over(Window.partitionBy("vec_id")))
-        .filter(col("b") === col("bmax"))
-        .filter(!col("del"))
-        .drop("bmax", "b", "del")
-    }
+    import org.apache.spark.sql.expressions.Window
+    // distinct is load-bearing: the fold crash contract is "overlap,
+    // never loss" — the same deterministic row can sit in two dirs,
+    // and a duplicated vec_id would occupy two top-k slots.
+    StoreSink.read(spark, storeDir, StoreSink.Delta, codesSchema).distinct()
+      .withColumn("bmax", max("b").over(Window.partitionBy("vec_id")))
+      .filter(col("b") === col("bmax"))
+      .filter(!col("del"))
+      .drop("bmax", "b", "del")
   }
 
   /** Last-writer-aware compaction: StreamDedup's fold machinery with a
@@ -440,19 +410,12 @@ object StreamVec {
     * a frozen-codebook deployment watches — v16's audit, continuous.
     */
   def driftLog(spark: SparkSession, storeDir: String): DataFrame = {
-    val DriftRe = "drift_b(\\d+)".r
-    val DriftFoldRe = "drift_fold_0_(\\d+)".r
-    val dirs = completeDirs(spark, storeDir, n =>
-      DriftRe.pattern.matcher(n).matches() ||
-        DriftFoldRe.pattern.matcher(n).matches())
     val schema = StructType(Seq(
       StructField("b", LongType), StructField("n_vecs", LongType),
       StructField("mean_err", LongType), StructField("drift_ppm", LongType),
       StructField("retrain", BooleanType)))
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.parquet(dirs: _*).distinct().orderBy("b")
+    StoreSink.read(spark, storeDir, StoreSink.sidecar("drift"), schema)
+      .distinct().orderBy("b")
   }
 
   /** Start the ingest over a `(vec_id, embedding)` source (NULL
@@ -478,81 +441,67 @@ object StreamVec {
       storeDir: String, checkpointDir: String, baselineMeanErr: Long,
       trigger: Trigger = Trigger.ProcessingTime(0),
       foldEvery: Int = 0): StreamingQuery = {
-    var ownershipVerified = false
-    val q = vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointDir/index")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!ownershipVerified) {
-          StreamDedup.verifyStoreOwnership(
-            spark, storeDir, s"$checkpointDir/index", batchId)
-          ownershipVerified = true
-        }
-        graft.functions.NativeFunctions.register(spark)
-        // one encode pass feeds both the delta and the drift verdict;
-        // persist so the two actions don't re-run the argmin
-        val ups = VectorOps.encodeCodesWithErr(
-          batch.filter(col("embedding").isNotNull), books).persist()
-        try {
-          val live = ups.drop("sq_err")
-            .withColumn("b", lit(batchId)).withColumn("del", lit(false))
-          val tombs = batch.filter(col("embedding").isNull)
-            .select(col("vec_id") +:
-              (0 until VectorOps.PqM).map(m => lit(0L).as(s"c$m")): _*)
-            .withColumn("b", lit(batchId)).withColumn("del", lit(true))
-          // IN-BATCH winner: a vec_id arriving twice in one micro-batch
-          // (re-embedded twice between triggers, or a write racing its
-          // own delete) shares one b, so the read-time max-b filter
-          // alone would serve BOTH rows — a duplicated id in two top-k
-          // slots. Resolve here, deterministically on replay: a
-          // tombstone beats any live row (delete-wins, matching the
-          // cross-batch rule where the tombstone is always the later
-          // intent), and live duplicates order by their code columns
-          // (codes are a pure function of the embedding, so the
-          // ordering is replay-stable; distinct code rows tie only if
-          // the rows are byte-identical, where the pick is immaterial).
-          import org.apache.spark.sql.expressions.Window
-          val inBatchOrder = col("del").desc +:
-            (0 until VectorOps.PqM).map(m => col(s"c$m").desc)
-          live.unionByName(tombs)
-            .withColumn("__rn", row_number().over(
-              Window.partitionBy("vec_id").orderBy(inBatchOrder: _*)))
-            .filter(col("__rn") === 1).drop("__rn")
-            .write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
+    val q = StoreSink.start(vecs, s"$checkpointDir/index", Seq(storeDir), trigger,
+      foldEvery, foldCodes(_, storeDir)) { (spark, batch, batchId) =>
+      graft.functions.NativeFunctions.register(spark)
+      // one encode pass feeds both the delta and the drift verdict;
+      // persist so the two actions don't re-run the argmin
+      val ups = VectorOps.encodeCodesWithErr(
+        batch.filter(col("embedding").isNotNull), books).persist()
+      try {
+        val live = ups.drop("sq_err")
+          .withColumn("b", lit(batchId)).withColumn("del", lit(false))
+        val tombs = batch.filter(col("embedding").isNull)
+          .select(col("vec_id") +:
+            (0 until VectorOps.PqM).map(m => lit(0L).as(s"c$m")): _*)
+          .withColumn("b", lit(batchId)).withColumn("del", lit(true))
+        // IN-BATCH winner: a vec_id arriving twice in one micro-batch
+        // (re-embedded twice between triggers, or a write racing its
+        // own delete) shares one b, so the read-time max-b filter
+        // alone would serve BOTH rows — a duplicated id in two top-k
+        // slots. Resolve here, deterministically on replay: a
+        // tombstone beats any live row (delete-wins, matching the
+        // cross-batch rule where the tombstone is always the later
+        // intent), and live duplicates order by their code columns
+        // (codes are a pure function of the embedding, so the
+        // ordering is replay-stable; distinct code rows tie only if
+        // the rows are byte-identical, where the pick is immaterial).
+        import org.apache.spark.sql.expressions.Window
+        val inBatchOrder = col("del").desc +:
+          (0 until VectorOps.PqM).map(m => col(s"c$m").desc)
+        live.unionByName(tombs)
+          .withColumn("__rn", row_number().over(
+            Window.partitionBy("vec_id").orderBy(inBatchOrder: _*)))
+          .filter(col("__rn") === 1).drop("__rn")
+          .write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
 
-          // v16's gate, per batch: deterministic (integer sums, one
-          // IEEE divide+round — v16's exact ppm arithmetic), so the
-          // sidecar is replay-idempotent like the delta itself.
-          val st = ups.agg(sum("sq_err").cast("long").as("s"),
-            count(lit(1)).as("n")).first()
-          val (n, meanErr) =
-            if (st.getLong(1) == 0L) (0L, 0L)
-            else (st.getLong(1), st.getLong(0) / st.getLong(1))
-          val ppm = math.round(
-            1000000.0 * meanErr.toDouble / math.max(baselineMeanErr, 1L).toDouble)
-          val retrain = n > 0 && ppm >= RetrainPpm
-          import spark.implicits._
-          Seq((batchId, n, meanErr, ppm, retrain))
-            .toDF("b", "n_vecs", "mean_err", "drift_ppm", "retrain")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$storeDir/drift_b$batchId")
-          if (retrain) Console.err.println(
-            s"[StreamVec] CODEBOOK DRIFT at batch $batchId: mean residual " +
-              s"$meanErr is ${ppm}ppm of baseline $baselineMeanErr " +
-              s"(threshold $RetrainPpm) — stored codes for this cohort " +
-              "carry degraded recall; schedule a codebook retrain/rebuild")
-          // (the liveness heartbeat is written by the lifecycle
-          // listener below — onQueryProgress fires after this trigger
-          // COMMITS, so a heartbeat still never outruns its data, and
-          // onQueryIdle keeps it fresh when no data arrives at all)
-          // in-trigger cadence maintenance (StreamDedup.foldDue):
-          // last-writer-aware code compaction + the drift sidecars
-          if (StreamDedup.foldDue(foldEvery, batchId)) { foldCodes(spark, storeDir); () }
-        } finally { ups.unpersist(); () }
-      }
-      .start()
+        // v16's gate, per batch: deterministic (integer sums, one
+        // IEEE divide+round — v16's exact ppm arithmetic), so the
+        // sidecar is replay-idempotent like the delta itself.
+        val st = ups.agg(sum("sq_err").cast("long").as("s"),
+          count(lit(1)).as("n")).first()
+        val (n, meanErr) =
+          if (st.getLong(1) == 0L) (0L, 0L)
+          else (st.getLong(1), st.getLong(0) / st.getLong(1))
+        val ppm = math.round(
+          1000000.0 * meanErr.toDouble / math.max(baselineMeanErr, 1L).toDouble)
+        val retrain = n > 0 && ppm >= RetrainPpm
+        import spark.implicits._
+        Seq((batchId, n, meanErr, ppm, retrain))
+          .toDF("b", "n_vecs", "mean_err", "drift_ppm", "retrain")
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$storeDir/drift_b$batchId")
+        if (retrain) Console.err.println(
+          s"[StreamVec] CODEBOOK DRIFT at batch $batchId: mean residual " +
+            s"$meanErr is ${ppm}ppm of baseline $baselineMeanErr " +
+            s"(threshold $RetrainPpm) — stored codes for this cohort " +
+            "carry degraded recall; schedule a codebook retrain/rebuild")
+        // (the liveness heartbeat is written by the lifecycle
+        // listener below — onQueryProgress fires after this trigger
+        // COMMITS, so a heartbeat still never outruns its data, and
+        // onQueryIdle keeps it fresh when no data arrives at all)
+      } finally { ups.unpersist(); () }
+    }
     // Liveness heartbeat, written from the query's LIFECYCLE events
     // rather than the data path: started (liveness before the first
     // commit), every completed batch (progress — post-commit, so the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.CorpusPrep
 
 /** tok12's unigram-LM tokenizer report AT INGEST — the vocabulary kept
@@ -25,16 +25,11 @@ import graft.operators.CorpusPrep
   * holds served == batch tok12 row-for-row across batch cuts, restart,
   * and fold.
   *
-  * Store discipline is StreamImportance/StreamPacking's verbatim:
-  * per-batch word counts land in a batchId-keyed dir (`wc_b<id>`, mode
-  * overwrite) — a replayed batch rewrites the SAME dir with the SAME
-  * deterministic content, so at-least-once foreachBatch converges to
-  * exactly-once ledger contents; folds compact under the maintenance
-  * lease and crash overlap is absorbed by the ledger's distinct. The
-  * distinct runs WITH the batch column, so a doc genuinely re-sent in
-  * a later batch adds its words again — the serve-equals-batch claim
-  * carries the same once-ingested precondition StreamImportance's
-  * does, and the spec states it.
+  * Per-batch word counts land in `wc_b<id>` (store contract:
+  * [[StoreSink]]). The ledger's distinct runs WITH the batch column, so
+  * a doc genuinely re-sent in a later batch adds its words again — the
+  * serve-equals-batch claim carries the same once-ingested precondition
+  * StreamImportance's does, and the spec states it.
   *
   * 100 TB shape: the per-batch cost is one map-side-combined groupBy
   * onto the BATCH's vocabulary (bounded by the cohort, not the
@@ -50,22 +45,14 @@ object StreamVocab {
     * (doc_id, text) columns.
     */
   def start(source: DataFrame, storeDir: String, checkpointDir: String,
-      foldEvery: Int = 0): StreamingQuery = {
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(0))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        CorpusPrep.unigramWordCounts(batch)
-          // b rides every row so a fold's distinct collapses ONLY
-          // replay/crash overlap (same batch, byte-identical), never
-          // a genuine re-send from a later cohort
-          .withColumn("b", lit(batchId))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$storeDir/wc_b$batchId")
-        if (StreamDedup.foldDue(foldEvery, batchId)) { fold(batch.sparkSession, storeDir); () }
-      }
-      .start()
-  }
+      foldEvery: Int = 0): StreamingQuery =
+    StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
+      fold = fold(_, storeDir)) { (_, batch, batchId) =>
+      CorpusPrep.unigramWordCounts(batch)
+        .withColumn("b", lit(batchId))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$storeDir/wc_b$batchId")
+    }
 
   /** Compact per-batch ledger dirs into one `wc_fold_0_<hi>` range dir
     * — StreamDedup's fold machinery under the store's maintenance
@@ -74,30 +61,12 @@ object StreamVocab {
   def fold(spark: SparkSession, storeDir: String): Int =
     StreamDedup.foldSidecars(spark, storeDir, "wc")
 
-  private def wcDirs(spark: SparkSession, storeDir: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dRe = "wc_b(\\d+)".r
-    val fRe = "wc_fold_0_(\\d+)".r
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq.collect {
-      case st if st.isDirectory &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) &&
-        (dRe.pattern.matcher(st.getPath.getName).matches() ||
-          fRe.pattern.matcher(st.getPath.getName).matches()) =>
-        st.getPath.toString
-    }
-  }
-
   /** The accumulated (word, freq, b) delta ledger across all ingested
     * batches — replay overlap collapsed, genuine re-sends kept per
     * cohort (see the object scaladoc).
     */
-  private def ledger(spark: SparkSession, storeDir: String): DataFrame = {
-    val dirs = wcDirs(spark, storeDir)
-    require(dirs.nonEmpty, s"no committed word-count ledgers under $storeDir")
-    spark.read.parquet(dirs: _*).distinct()
-  }
+  private def ledger(spark: SparkSession, storeDir: String): DataFrame =
+    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("wc")).distinct()
 
   /** The unigram-LM tokenizer report over every ingested doc — on a
     * once-ingested corpus, the same 50 rows as batch tok12.

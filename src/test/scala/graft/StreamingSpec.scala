@@ -2621,4 +2621,143 @@ class StreamingSpec extends SparkSpec {
       s"fresh checkpoint not refused: ${ex2.getMessage}")
     q4.stop()
   }
+
+  /** A fresh checkpoint restarts batch ids at 0, so any run against a
+    * store another checkpoint already wrote must be refused before its
+    * first write. One case per store-backed `start`: ingest one batch
+    * under cp1, then point a fresh cp2 at the same store.
+    */
+  test("every store-backed start refuses a fresh checkpoint over a used store, leaving its b0 dir intact") {
+    import graft.operators.{Multimodal, TextOps, VectorOps}
+    import graft.streaming._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
+    implicit val sc = spark.sqlContext
+    val d = "/root/testdata/sf0.001"
+    val text = (1 to 12).map(i => s"word$i of").mkString(" ")
+    val docs = Seq(1L -> text, 2L -> s"$text tail", 3L -> "a short doc")
+    val bench = TextOps.d7bBenchWindows(
+      Seq((1L, text.split(" ").toSeq)).toDF("bench_id", "bws")).localCheckpoint()
+    val emb = graft.sources.Tables.embeddings(spark, d).select("vec_id", "embedding")
+    val books = VectorOps.pqTrainCached(spark, d)
+    val vecs = emb.as[(Long, Seq[Float])].take(20).toSeq.map { case (id, v) => (id, Option(v)) }
+    val media = Multimodal.encodePngBatch(Seq((1L, 11L), (2L, 22L))).map(r => (r.doc_id, r.media))
+
+    def docStream(start: DataFrame => StreamingQuery): StreamingQuery = {
+      val in = MemoryStream[(Long, String)]
+      val q = start(in.toDF().toDF("doc_id", "text"))
+      in.addData(docs: _*); q
+    }
+    def eventStream(start: DataFrame => StreamingQuery): StreamingQuery = {
+      val in = MemoryStream[(Long, String, Double)]
+      val q = start(in.toDF().toDF("ms", "event_type", "value")
+        .select(timestamp_millis(col("ms")).as("ts"), col("event_type"), col("value")))
+      in.addData((1000L, "a", 1.5), (2000L, "b", 2.5)); q
+    }
+    // (module, the batch-0 dir its first batch writes, one-batch run)
+    val cases: Seq[(String, String, (String, String) => StreamingQuery)] = Seq(
+      ("StreamDedup", "delta_b0", (s, c) => docStream(StreamDedup.start(_, s, c))),
+      ("StreamNearDup", "delta_b0", (s, c) => docStream(StreamNearDup.start(_, s, c))),
+      ("StreamNovelty", "delta_b0", (s, c) => docStream(StreamNovelty.start(_, s, c))),
+      ("StreamPhash", "delta_b0", (s, c) => {
+        val in = MemoryStream[(Long, Array[Byte])]
+        val q = StreamPhash.start(in.toDF().toDF("doc_id", "media"), s, c)
+        in.addData(media: _*); q
+      }),
+      ("StreamPostings", "delta_b0", (s, c) => docStream(StreamPostings.start(_, s, c))),
+      ("StreamPosPostings", "delta_b0", (s, c) => docStream(StreamPosPostings.start(_, s, c))),
+      ("StreamPrep", "manifest_b0", (s, c) => docStream(StreamPrep.start(_, bench, s, c))),
+      ("StreamVec", "delta_b0", (s, c) => {
+        val in = MemoryStream[(Long, Option[Seq[Float]])]
+        val q = StreamVec.start(in.toDF().toDF("vec_id", "embedding"), books, s, c, 1L)
+        in.addData(vecs: _*); q
+      }),
+      ("StreamVocab", "wc_b0", (s, c) => docStream(StreamVocab.start(_, s, c))),
+      ("StreamPacking", "toks_b0", (s, c) => docStream(StreamPacking.start(_, s, c))),
+      ("StreamImportance", "verdicts_b0", (s, c) => {
+        val in = MemoryStream[(Long, String, String)]
+        val q = StreamImportance.start(in.toDF().toDF("doc_id", "source", "text"),
+          Array.fill(4096)(1L), s, c)
+        in.addData(docs.map { case (id, t) => (id, "web", t) }: _*); q
+      }),
+      ("StreamDecontam", "verdicts_b0", (s, c) => docStream(StreamDecontam.start(_, bench, s, c))),
+      ("StreamFreshness", "fresh_b0", (s, c) => eventStream(StreamFreshness.start(_, s, c))),
+      ("StreamProfile", "profile_b0",
+        (s, c) => eventStream(StreamProfile.start(_, Seq("event_type", "value"), s, c))),
+      ("StreamRollup", "states_b0", (s, c) => eventStream(StreamRollup.start(_, s, c))))
+    assert(cases.size == 15)
+
+    for ((module, b0, run) <- cases) {
+      val store = tmpDir(s"graft-own-$module") + "/store"
+      val q1 = run(store, tmpDir(s"graft-own-$module-cp1"))
+      q1.processAllAvailable()
+      q1.stop()
+      def b0Rows = spark.read.parquet(s"$store/$b0").collect().map(_.toString).sorted.toSeq
+      val before = b0Rows
+      assert(before.nonEmpty, s"$module: batch 0 wrote no rows to $b0")
+
+      val q2 = run(store, tmpDir(s"graft-own-$module-cp2"))
+      val ex = intercept[StreamingQueryException](q2.processAllAvailable())
+      q2.stop()
+      assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null).take(10)
+        .exists(c => Option(c.getMessage).exists(_.contains("belongs to streaming query"))),
+        s"$module: fresh checkpoint not refused: $ex")
+      assert(b0Rows == before, s"$module: the refused run changed $b0")
+    }
+  }
+
+  test("ownership fallback: a marker-less store holding only a sidecar family refuses a fresh checkpoint") {
+    import graft.streaming.{StreamNovelty, StreamVocab}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
+    implicit val sc = spark.sqlContext
+    val text = (1 to 12).map(i => s"word$i").mkString(" ")
+    // a store written before ownership markers existed: committed parts
+    // up to batch 3 of one family, and no `_QUERY_ID`
+    val cases: Seq[(String, (DataFrame, String, String) => StreamingQuery)] = Seq(
+      ("novelty", StreamNovelty.start(_, _, _)),
+      ("wc", StreamVocab.start(_, _, _)))
+    for ((prefix, start) <- cases) {
+      val store = tmpDir(s"graft-own-fallback-$prefix") + "/store"
+      Seq((3L, 1L)).toDF("b", "n").write.parquet(s"$store/${prefix}_b3")
+      val in = MemoryStream[(Long, String)]
+      val q = start(in.toDF().toDF("doc_id", "text"), store, tmpDir(s"graft-own-fallback-$prefix-cp"))
+      in.addData(1L -> text)
+      val ex = intercept[StreamingQueryException](q.processAllAvailable())
+      q.stop()
+      assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null).take(10)
+        .exists(c => Option(c.getMessage).exists(_.contains("no ownership marker"))),
+        s"$prefix: a fresh checkpoint over ${prefix}_b3 was not refused: $ex")
+      val fs = new org.apache.hadoop.fs.Path(store)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$store/${prefix}_b0")),
+        s"$prefix: the refused run wrote ${prefix}_b0")
+    }
+  }
+
+  test("store readers skip uncommitted parts: a states_b9 dir without _SUCCESS leaves StreamRollup.serve unchanged") {
+    import graft.operators.Rollup
+    import graft.streaming.StreamRollup
+    implicit val sc = spark.sqlContext
+    val store = tmpDir("graft-sroll-uncommitted") + "/store"
+    val in = MemoryStream[(Long, String, Double)]
+    def events(df: org.apache.spark.sql.DataFrame) =
+      df.toDF("ms", "event_type", "value")
+        .select(timestamp_millis(col("ms")).as("ts"), col("event_type"), col("value"))
+    val q = StreamRollup.start(events(in.toDF()), store, tmpDir("graft-sroll-uncommitted-cp"))
+    in.addData((1000L, "click", 1.25), (2000L, "view", 10.0)); q.processAllAvailable()
+    in.addData((3000L, "click", 2.75)); q.processAllAvailable()
+    q.stop()
+    def served = StreamRollup.serve(spark, store).orderBy("event_type").collect().toSeq
+    val before = served
+
+    // a write that crashed during job commit: a parquet part, no _SUCCESS
+    Rollup.states(events(Seq((4000L, "click", 100.0), (5000L, "planted", 7.0)).toDF()))
+      .coalesce(1).write.parquet(s"$store/states_b9")
+    val fs = new org.apache.hadoop.fs.Path(store)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$store/states_b9/_SUCCESS"), false))
+    assert(served == before, "StreamRollup.serve read an uncommitted states dir")
+    assert(StreamRollup.history(spark, store).count() == 3)
+  }
 }
