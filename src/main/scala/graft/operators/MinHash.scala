@@ -46,7 +46,7 @@ object MinHash {
     val hashed = sh
       .select(col("doc_id"), (TextOps.phash(col("shingle")) % P).as("hp"))
     val minExprs = perms.zipWithIndex.map { case ((a, b), i) =>
-      min((lit(a) * col("hp") + lit(b)) % P).as(s"m$i")
+      min(permuted(lit(a), lit(b), col("hp"))).as(s"m$i")
     }
     hashed.groupBy("doc_id").agg(minExprs.head, minExprs.tail: _*)
   }
@@ -82,6 +82,56 @@ object MinHash {
     sig.select(col("doc_id"), posexplode(array(bandCols: _*)).as(Seq("b", "band_val")))
   }
 
+  /** Permutation (a, b) of a shingle hash: (a·hp + b) mod P. */
+  private def permuted(a: Column, b: Column, hp: Column): Column = (a * hp + b) % P
+
+  /** Signature-estimated Jaccard of the (a0..a31) and (b0..b31)
+    * signature columns: the share of the K values that agree.
+    */
+  private def estimate: Column =
+    (0 until K).map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0)).reduce(_ + _)
+      .cast("double") / K
+
+  // ---- streaming screen: per-doc array signatures ---------------------
+  //
+  // The at-ingest near-dup screen signs each doc IN PLACE (array
+  // functions over its own shingles) instead of grouping a shingle frame
+  // by doc, so the screen stays one row per doc. Each function below
+  // yields, per doc or pair, exactly the value of its column-wise twin
+  // above (same shingles, hash, permutations, bands and estimate), so a
+  // pair matches at ingest iff it would match in the batch detector;
+  // StreamingSpec holds the two pair-for-pair. They are written as a few
+  // higher-order functions rather than K unrolled columns so that a
+  // micro-batch's plan stays small to analyze and optimize.
+
+  /** The (a, b) permutations as an array literal. */
+  private lazy val permsLit: Column = typedLit(perms)
+
+  /** The hashes of a `shingles` array, as [[signaturesFrom]] hashes each
+    * shingle row.
+    */
+  private[graft] def shingleHashes(shingles: Column): Column =
+    transform(shingles, s => TextOps.phash(s) % P)
+
+  /** A doc's signature from its [[shingleHashes]]: the K permutation
+    * minima as an array, NULL when it has no shingle (such a doc gets no
+    * row from [[signatures]]).
+    */
+  private[graft] def signatureOf(hps: Column): Column =
+    when(size(hps) > 0, transform(permsLit, p =>
+      array_min(transform(hps, h => permuted(p("_1"), p("_2"), h)))))
+
+  /** The [[Bands]] band values of an array signature, as [[bandFrame]]
+    * builds them.
+    */
+  private[graft] def bandValuesOf(sig: Column): Column =
+    transform(sequence(lit(0), lit(Bands - 1)), b =>
+      array_join(slice(sig, b * 4 + 1, lit(4)).cast("array<string>"), ","))
+
+  /** The estimated Jaccard of two array signatures, as [[estimate]]. */
+  private[graft] def estimateOf(x: Column, y: Column): Column =
+    size(filter(zip_with(x, y, (a, b) => a === b), same => same)).cast("double") / K
+
   /** Screen `newSig` docs against `storeSig` docs (both (doc_id,
     * m0..m31) signature frames): every (incoming, stored) pair sharing
     * an LSH band with estimated Jaccard ≥ threshold, as
@@ -102,11 +152,8 @@ object MinHash {
       (0 until K).map(i => col(s"m$i").as(s"a$i")): _*)
     val s2 = storeSig.select(col("doc_id").as("matched_id") +:
       (0 until K).map(i => col(s"m$i").as(s"b$i")): _*)
-    val agree = (0 until K)
-      .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
-      .reduce(_ + _)
     cand.join(s1, "doc_id").join(s2, "matched_id")
-      .withColumn("est_jaccard", agree.cast("double") / K)
+      .withColumn("est_jaccard", estimate)
       .filter(col("est_jaccard") >= threshold)
       .select("doc_id", "matched_id", "est_jaccard")
   }
@@ -130,11 +177,8 @@ object MinHash {
       (0 until K).map(i => col(s"m$i").as(s"a$i")): _*)
     val s2 = sig.select(col("doc_id").as("doc2") +:
       (0 until K).map(i => col(s"m$i").as(s"b$i")): _*)
-    val matches = (0 until K)
-      .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
-      .reduce(_ + _)
     cand.join(s1, "doc1").join(s2, "doc2")
-      .withColumn("est_jaccard", matches.cast("double") / K)
+      .withColumn("est_jaccard", estimate)
       .filter(col("est_jaccard") >= threshold)
       .select("doc1", "doc2", "est_jaccard")
       .orderBy("doc1", "doc2")

@@ -308,12 +308,18 @@ object TextOps {
   def shingles(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"),
-        explode(when(size(col("toks")) >= 3,
-          expr("transform(sequence(0, size(toks) - 3), " +
-            "i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))"))
-          .otherwise(array().cast("array<string>"))).as("shingle"))
+      .select(col("doc_id"), explode(shingleArray).as("shingle"))
       .distinct()
+
+  /** A doc's word-3-gram shingles as an array over its `toks` token
+    * column (empty below 3 tokens, may repeat) — [[shingles]]' per-doc
+    * body, and the streaming screen's, which signs each doc in place.
+    */
+  private[graft] def shingleArray: Column =
+    when(size(col("toks")) >= 3,
+      expr("transform(sequence(0, size(toks) - 3), " +
+        "i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))"))
+      .otherwise(array().cast("array<string>"))
 
   // NOTE: single-line body — fragments embedded in other stripMargin
   // strings must not contain lines starting with '|' (concat operator).
@@ -575,13 +581,54 @@ object TextOps {
     * makes the streaming twin's replay convergence trivial.
     */
   private[graft] def d7bVerdicts(sp: DataFrame, bw: DataFrame): DataFrame =
-    d7bVerdictsFromWindows(
-      sp.filter(size(col("ws")) >= 8)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(ws) - 8), " +
-            "i -> concat_ws(' ', slice(ws, i + 1, 8)))")).as("w"))
-        .select(col("doc_id"), phash(col("w")).as("h")),
-      bw)
+    d7bVerdictsFromWindows(d7bDocWindows(sp), bw)
+
+  /** Per bench item, its number of distinct windows (`bench_id`,
+    * `n_item_windows`) — the denominator of every verdict. Fixture-sized.
+    */
+  private[graft] def d7bBenchTotals(bw: DataFrame): DataFrame =
+    bw.groupBy("bench_id").agg(count(lit(1)).cast("long").as("n_item_windows"))
+
+  /** [[d7bVerdicts]] in place, the streaming entry: `docs` (doc_id, ws,
+    * ...) with `verdicts` added — for each row where `on` holds, its
+    * flagged (bench_id, n_item_windows, n_present, overlap_ppm) rows as
+    * an array, NULL when it has none. `bench` is the (bench_id, h,
+    * n_item_windows) fixture — [[d7bBenchWindows]] with its
+    * [[d7bBenchTotals]] — built once up front, so a micro-batch does not
+    * recount it. A row's window hashes meet the broadcast fixture and
+    * fold back into that row (no join back to `docs`); the hits,
+    * threshold and ppm are [[d7bVerdicts]]'.
+    */
+  private[graft] def d7bVerdictsInPlace(docs: DataFrame, on: Column,
+      bench: DataFrame): DataFrame = {
+    val keys = docs.columns.map(col).toSeq
+    docs.select(col("*"), explode_outer(when(on && size(col("ws")) >= 8,
+        docWindows)).as("__w"))
+      .select(col("*"), phash(col("__w")).as("__wh"))
+      .join(broadcast(bench.withColumnRenamed("h", "__wh")), Seq("__wh"), "left")
+      .groupBy(keys :+ col("bench_id") :+ col("n_item_windows"): _*)
+      .agg(countDistinct("__wh").cast("long").as("n_present"))
+      .groupBy(keys: _*)
+      .agg(collect_list(when(d7bFlagged, struct(col("bench_id"), col("n_item_windows"),
+        col("n_present"), d7bPpm.as("overlap_ppm")))).as("verdicts"))
+      .withColumn("verdicts", when(size(col("verdicts")) > 0, col("verdicts")))
+  }
+
+  /** A doc's 8-gram windows over its `ws` token array (≥ 8 tokens). */
+  private def docWindows: Column =
+    expr("transform(sequence(0, size(ws) - 8), i -> concat_ws(' ', slice(ws, i + 1, 8)))")
+
+  /** The verdict threshold: at least half of the item's windows present. */
+  private def d7bFlagged: Column = col("n_present") * 2 >= col("n_item_windows")
+
+  private def d7bPpm: Column =
+    expr("CAST((1000000 * n_present) div n_item_windows AS BIGINT)")
+
+  /** A doc frame's (`doc_id`, `h`) 8-gram window hashes. */
+  private def d7bDocWindows(sp: DataFrame): DataFrame =
+    sp.filter(size(col("ws")) >= 8)
+      .select(col("doc_id"), explode(docWindows).as("w"))
+      .select(col("doc_id"), phash(col("w")).as("h"))
 
   /** [[d7bVerdicts]] over a PREBUILT (doc_id, h) window-hash stream —
     * the d7b query serves the stored [[docWindowHashes]] artifact
@@ -591,16 +638,14 @@ object TextOps {
     * overload.
     */
   private[graft] def d7bVerdictsFromWindows(dw: DataFrame, bw: DataFrame): DataFrame = {
-    val bt = bw.groupBy("bench_id")
-      .agg(count(lit(1)).cast("long").as("n_item_windows"))
+    val bt = d7bBenchTotals(bw)
     val hit = dw.join(broadcast(bw), Seq("h"))
       .groupBy("doc_id", "bench_id")
       .agg(countDistinct("h").cast("long").as("n_present"))
     hit.join(broadcast(bt), Seq("bench_id"))
-      .filter(col("n_present") * 2 >= col("n_item_windows"))
+      .filter(d7bFlagged)
       .select(col("doc_id"), col("bench_id"), col("n_item_windows"),
-        col("n_present"),
-        expr("CAST((1000000 * n_present) div n_item_windows AS BIGINT)").as("overlap_ppm"))
+        col("n_present"), d7bPpm.as("overlap_ppm"))
   }
 
   val defs: Seq[QueryDef] = Seq(

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import scala.util.matching.Regex
@@ -44,6 +45,12 @@ import scala.util.matching.Regex
   *    replay) into `<prefix>_fold_0_<hi>` under the store's maintenance
   *    lease, and writes it before deleting its inputs: a crash leaves
   *    overlap, never loss, and readers absorb the overlap.
+  *  - ONE EVALUATION PER BATCH, where a batch freezes. A store that
+  *    writes several parts per batch from a `localCheckpoint`ed frame
+  *    (StreamPrep, NearDup, Novelty, Phash) derives them all from that
+  *    one evaluation, so they agree with each other even if a job of the
+  *    batch is retried. StreamVec's `persist()`ed batch frame does not
+  *    freeze: Spark may recompute it after an eviction.
   */
 private[streaming] object StoreSink {
 
@@ -59,6 +66,16 @@ private[streaming] object StoreSink {
 
   def sidecar(prefix: String): Family = Family(
     s"${prefix}_b(\\d+)".r, s"${prefix}_fold_0_(\\d+)".r, hi => s"${prefix}_fold_0_$hi")
+
+  /** The batch id as a column for the `b`/`batch_id` rows every family
+    * carries: a non-nullable long, as `lit(batchId)` was. It is a
+    * deterministic zero-argument UDF rather than a literal because a
+    * literal is inlined into the generated code as a Java constant, so
+    * every micro-batch would compile its classes anew; the UDF is not
+    * foldable, so the generated code is the same from batch to batch and
+    * comes from the codegen cache.
+    */
+  def batchIdCol(batchId: Long): Column = udf(() => batchId).asNonNullable()()
 
   /** Every family at once — what the ownership fallback must see. */
   private val AnyFamily =

@@ -37,7 +37,7 @@ object StreamDecontam {
       fold = fold(_, storeDir)) { (_, batch, batchId) =>
       val sp = batch.select(col("doc_id"), split(col("text"), " ").as("ws"))
       TextOps.d7bVerdicts(sp, benchWindows)
-        .withColumn("b", lit(batchId))
+        .withColumn("b", StoreSink.batchIdCol(batchId))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$storeDir/verdicts_b$batchId")
     }

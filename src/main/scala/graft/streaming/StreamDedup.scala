@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -15,12 +15,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * Here the seen-set lives in a STORE on disk instead:
   *
   *  - each micro-batch is hashed, deduped within itself (min doc_id per
-  *    hash — deterministic on replay), and screened against the store
-  *    with a left-anti join;
+  *    hash — deterministic on replay), and screened against the store:
+  *    a hash the store holds is not admitted ([[screen]]);
   *  - the surviving (h, doc_id) rows land as the batch's `delta_b<id>`
   *    dir; deltas fold periodically ([[foldDeltas]]) into a range dir
-  *    (`fold_0_<hi>`) — the store is a SET and the screen an anti-join,
-  *    so fold/crash overlap is benign.
+  *    (`fold_0_<hi>`) — the store is a SET and the screen a membership
+  *    test, so fold/crash overlap is benign.
   *
   * Idempotence, ownership, committed-only reads and the fold cadence are
   * the store contract of [[StoreSink]]. This object also holds the fold
@@ -28,13 +28,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * [[foldSidecars]], [[foldDue]]) and the screen-read retry.
   *
   * Store bytes are hashes + ids (tens of bytes per doc), ~1000× smaller
-  * than the corpus; the per-batch cost is one anti-join of a small batch
-  * against the hash set, never a rescan of corpus text.
+  * than the corpus; the per-batch cost is one probe of the hash set
+  * with the batch's hashes, never a rescan of corpus text.
   */
 object StreamDedup {
 
   /** Every delta and fold holds (h, doc_id) rows. */
-  private val StoreSchema = StructType(Seq(
+  private[streaming] val StoreSchema = StructType(Seq(
     StructField("h", StringType), StructField("doc_id", LongType)))
 
   /** Hash set visible to the screen of batch `boundExclusive`: all
@@ -113,35 +113,49 @@ object StreamDedup {
       foldEvery: Int = 0): StreamingQuery =
     StoreSink.start(docs, s"$checkpointDir/dedup", Seq(storeDir), trigger, foldEvery,
       foldDeltas(_, storeDir)) { (spark, batch, batchId) =>
-      ingestBatch(spark, batch, batchId, storeDir); ()
+      // the screen READ races a concurrent fold's post-commit input
+      // delete (the fold is committed before its inputs go, so a
+      // fresh listing always sees a superset) — retry with a fresh
+      // snapshot instead of letting the FileNotFound kill the stream
+      withStoreRetry(writeDelta(screen(spark, batch, batchId, storeDir), batchId, storeDir))
     }
 
-  /** One micro-batch of the exact screen — the foreachBatch body as a
-    * reusable primitive (StreamPrep composes it into the chained
-    * pipeline), returning the batch's ADMITTED doc_ids (read back from
-    * the just-committed delta, so caller and store can never disagree).
+  /** One micro-batch of the exact screen, pure (no writes): `docs`
+    * (doc_id, text, ...) with two columns added — `h`, the text's md5,
+    * and `exact_ok`, true on the rows the store admits: the in-batch
+    * winner of each hash (min doc_id, replay-deterministic) whose hash no
+    * part below the batch holds. Only rows where `on` holds are screened;
+    * the others get a NULL `h` and `exact_ok` false.
+    *
+    * The store is probed in its own scan tasks against the batch's
+    * hashes (broadcast: the batch is the small side), so only the store
+    * rows holding a batch hash leave the scan; they meet the batch in one
+    * window per hash over ONE partition, a few rows more than the batch,
+    * and the result stays in that partition, so what follows needs no
+    * shuffle. StreamPrep composes the screen into its one per-batch plan.
     */
-  private[streaming] def ingestBatch(spark: SparkSession, batch: DataFrame,
-      batchId: Long, storeDir: String): DataFrame = {
-    val hashed = batch.select(col("doc_id"), md5(col("text")).as("h"))
-    // in-batch winner: min doc_id per hash — replay-deterministic
-    val first = hashed
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("h").orderBy(col("doc_id").asc)))
-      .filter(col("__rn") === 1).drop("__rn")
-    // the screen READ races a concurrent fold's post-commit input
-    // delete (the fold is committed before its inputs go, so a
-    // fresh listing always sees a superset) — retry with a fresh
-    // snapshot instead of letting the FileNotFound kill the stream
-    val written = withStoreRetry {
-      val seen = storeBefore(spark, storeDir, boundExclusive = batchId)
-      val admitted = first.join(seen.select("h").distinct(), Seq("h"), "left_anti")
-        .select("h", "doc_id")
-      admitted.write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
-      admitted.schema
-    }
-    spark.read.schema(written).parquet(s"$storeDir/delta_b$batchId").select("doc_id")
+  private[streaming] def screen(spark: SparkSession, docs: DataFrame, batchId: Long,
+      storeDir: String, on: Column = lit(true)): DataFrame = {
+    val hashed = docs.withColumn("h", when(on, md5(col("text"))))
+    val hits = storeBefore(spark, storeDir, boundExclusive = batchId).select("h")
+      .join(broadcast(hashed.select("h").filter(col("h").isNotNull)), Seq("h"), "left_semi")
+      .repartition(1)
+    val perHash = Window.partitionBy("h")
+    hashed.withColumn("__seen", lit(false))
+      .unionByName(hits.withColumn("__seen", lit(true)), allowMissingColumns = true)
+      .coalesce(1)
+      .withColumn("exact_ok", col("h").isNotNull && !max("__seen").over(perHash) &&
+        col("doc_id") === min(when(!col("__seen"), col("doc_id"))).over(perHash))
+      .filter(!col("__seen")).drop("__seen")
   }
+
+  /** The write step: the admitted (h, doc_id) rows of a [[screen]]ed
+    * frame as the batch's `delta_b<id>`.
+    */
+  private[streaming] def writeDelta(screened: DataFrame, batchId: Long,
+      storeDir: String): Unit =
+    screened.filter(col("exact_ok")).select("h", "doc_id")
+      .write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
 
   /** Fold deltas (and the previous fold) into one `fold_0_<hi>` range
     * dir — the small-files maintenance pass. Write-then-delete order
@@ -176,10 +190,15 @@ object StreamDedup {
     * StoreConcurrencySpec drives ingest and folds concurrently and
     * pins that neither loses a write, and pins the retry path on a
     * deterministically staged delete.
+    *
+    * `schema`: the family's declared schema, read under it without a
+    * footer-inference job; `None` (a family that declares none) infers
+    * it from the inputs' footers.
     */
-  def foldDeltas(spark: SparkSession, storeDir: String): Int =
+  def foldDeltas(spark: SparkSession, storeDir: String,
+      schema: Option[StructType] = None): Int =
     graft.sinks.VersionedStore.withMaintenanceLease(spark, storeDir) {
-      foldDeltasExclusive(spark, storeDir)
+      foldDeltasExclusive(spark, storeDir, schema = schema)
     }
 
   /** [[foldDeltas]] with a per-fold SHRINK step applied to the folded
@@ -217,14 +236,16 @@ object StreamDedup {
     * deletes it (`id <= hi`), and readers' distinct() collapses the
     * interim double-serve.
     */
-  def foldSidecars(spark: SparkSession, storeDir: String, prefix: String): Int =
+  def foldSidecars(spark: SparkSession, storeDir: String, prefix: String,
+      schema: Option[StructType] = None): Int =
     graft.sinks.VersionedStore.withMaintenanceLease(spark, storeDir) {
-      foldDeltasExclusive(spark, storeDir, family = StoreSink.sidecar(prefix))
+      foldDeltasExclusive(spark, storeDir, family = StoreSink.sidecar(prefix), schema = schema)
     }
 
   private def foldDeltasExclusive(spark: SparkSession, storeDir: String,
       shrink: DataFrame => DataFrame = identity,
-      family: StoreSink.Family = StoreSink.Delta): Int = {
+      family: StoreSink.Family = StoreSink.Delta,
+      schema: Option[StructType] = None): Int = {
     val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (folds, deltas) = StoreSink.parts(spark, storeDir, family).partition(_.isFold)
     // resume a crashed delete first: anything the newest fold already
@@ -245,7 +266,8 @@ object StreamDedup {
     // and the inputs are still in place — at worst overlap, never loss.
     // Deletes run only after the fold (incl. _SUCCESS) is fully committed.
     val dst = new Path(storeDir, family.foldName(foldable.map(_.id).max))
-    shrink(spark.read.parquet(inputs.map(_.path.toString): _*).distinct())
+    val reader = schema.fold(spark.read)(spark.read.schema(_))
+    shrink(reader.parquet(inputs.map(_.path.toString): _*).distinct())
       .coalesce(1) // hash rows are tiny; one file per fold
       .write.mode("overwrite").parquet(dst.toString)
     inputs.foreach(p => fs.delete(p.path, true))

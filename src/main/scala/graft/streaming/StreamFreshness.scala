@@ -33,7 +33,7 @@ object StreamFreshness {
   def start(source: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
     StoreSink.start(source, checkpointDir, Seq(storeDir)) { (_, batch, batchId) =>
       batchMarks(batch)
-        .withColumn("batch_id", lit(batchId))
+        .withColumn("batch_id", StoreSink.batchIdCol(batchId))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$storeDir/fresh_b$batchId")
     }

@@ -51,7 +51,7 @@ object StreamImportance {
     StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
       fold = fold(_, storeDir)) { (_, batch, batchId) =>
       CorpusPrep.dsirScore(batch, liftArr)
-        .withColumn("b", lit(batchId))
+        .withColumn("b", StoreSink.batchIdCol(batchId))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$storeDir/verdicts_b$batchId")
     }

@@ -1,16 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-import graft.operators.MinHash
+import graft.operators.{MinHash, TextOps}
 
 /** Streaming NEAR-duplicate screen — StreamDedup's MinHash sibling, and
   * the streaming half of the d15 batch twin: every micro-batch is
   * signatured (MinHash.K permutations, the exact constants of the batch
   * detector, so a pair matches at ingest iff it would match in d2/d15),
-  * deduped within itself, then band-joined against the store of
+  * deduped within itself, then band-matched against the store of
   * ADMITTED signatures; survivors' signatures append to the store.
   *
   * Two outputs per batch (store contract: [[StoreSink]]):
@@ -26,9 +26,10 @@ import graft.operators.MinHash
   *    a production dedup auditable ("why was this page dropped, and
   *    against what") and is exactly what the recall gate grades.
   *
-  * Scale shape: the per-batch cost is the batch's signature pass (one
-  * hash-aggregate) plus a banded join of batch bands against store
-  * bands — cost ∝ bucket collisions, never |store|·|batch|. The store
+  * Scale shape: the per-batch cost is the batch's signature pass (per
+  * doc, in place), one banding scan of the store probed against the
+  * batch's buckets, and one group per touched bucket — cost ∝ bucket
+  * collisions, never |store|·|batch|. The store
   * is signatures only (hashes, not text), read per batch like
   * StreamDedup's hash set; a production deployment materializes the
   * store band-keyed/bucketed so the screen prunes to colliding buckets
@@ -37,11 +38,11 @@ import graft.operators.MinHash
   */
 object StreamNearDup {
 
-  private def sigSchema: StructType = StructType(
+  private[streaming] def sigSchema: StructType = StructType(
     StructField("doc_id", LongType) +:
       (0 until MinHash.K).map(i => StructField(s"m$i", LongType)))
 
-  private def matchesSchema: StructType = StructType(Seq(
+  private[streaming] def matchesSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("matched_id", LongType),
     StructField("est_jaccard", DoubleType), StructField("stage", StringType),
     StructField("b", LongType)))
@@ -87,14 +88,14 @@ object StreamNearDup {
     * separately.
     */
   def foldDeltas(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldDeltas(spark, storeDir)
+    StreamDedup.foldDeltas(spark, storeDir, Some(sigSchema))
 
   /** Compact the `matches_b*` provenance dirs (one per micro-batch
     * forever otherwise — the small-file problem at ingest) into
     * `matches_fold_0_<hi>` under the store's maintenance lease.
     */
   def foldMatches(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldSidecars(spark, storeDir, "matches")
+    StreamDedup.foldSidecars(spark, storeDir, "matches", Some(matchesSchema))
 
   /** Start the near-dup screen over a `(doc_id, text)` source. The
     * STORE is the output: [[keptIds]] is the deduped id set,
@@ -107,44 +108,99 @@ object StreamNearDup {
     // the fold compacts both the signature deltas and the provenance
     StoreSink.start(docs, s"$checkpointDir/neardup", Seq(storeDir), trigger, foldEvery,
       s => foldDeltas(s, storeDir) + foldMatches(s, storeDir)) { (spark, batch, batchId) =>
-      ingestBatch(spark, batch, batchId, storeDir, threshold); ()
+      // like StreamDedup's screen, the store READ races a concurrent
+      // fold's post-commit input delete — retry with a fresh listing
+      // (sound: the fold commits the same signature set before deleting
+      // its inputs, and both writes are mode(overwrite)-idempotent).
+      // Both writes derive from one frozen evaluation of the screen.
+      StreamDedup.withStoreRetry {
+        val screened = screen(spark, batch, batchId, storeDir, threshold).localCheckpoint()
+        writeMatches(screened, batchId, storeDir)
+        writeDelta(screened, batchId, storeDir)
+      }
     }
 
-  /** One micro-batch of the near-dup screen — the foreachBatch body as
-    * a reusable primitive (StreamPrep composes it into the chained
-    * pipeline), returning the batch's ADMITTED doc_ids (read back from
-    * the just-committed delta).
+  /** One micro-batch of the near-dup screen, pure (no writes): `docs`
+    * (doc_id, text, ...) with three columns added — `sig`, the doc's
+    * MinHash signature as an array (NULL when it is not screened or has
+    * no shingle); `near_ok`, true on the rows the store admits; and
+    * `matches`, the rejection provenance (matched_id, est_jaccard, stage)
+    * of a rejected row, NULL otherwise. Only rows where `on` holds are
+    * screened. Stage 'batch': the doc near-dups a smaller-id batch-mate
+    * (deterministic on replay); stage 'store': a survivor of that
+    * near-dups admitted docs of strictly earlier batches (replay-safe).
+    *
+    * Each doc is signed in place. The store is banded and probed in its
+    * own scan tasks against the batch's band buckets (broadcast: the
+    * batch is the small side), so only store signatures that share a
+    * bucket with a batch doc leave the scan. Those and the batch's band
+    * rows meet in one group per bucket over one partition (no shuffle, as
+    * in StreamDedup's screen); each batch doc of a bucket is paired with
+    * the bucket's signed docs, batch and store — batch × (batch + store)
+    * collisions per bucket — and its pairs fold back into the doc's row.
+    * Same signatures, bands and estimate as the batch detector (MinHash).
     */
-  private[streaming] def ingestBatch(spark: SparkSession, batch: DataFrame,
-      batchId: Long, storeDir: String, threshold: Double): DataFrame = {
-    val sig = MinHash.signatures(batch.select("doc_id", "text")).localCheckpoint()
-    // stage 1: within-batch — drop any doc that near-dups a
-    // smaller-id batch-mate (deterministic on replay)
-    val inPairs = MinHash.nearDupPairsFromSignatures(sig, threshold)
-      .localCheckpoint()
-    val batchMatches = inPairs.select(col("doc2").as("doc_id"),
-      col("doc1").as("matched_id"), col("est_jaccard"), lit("batch").as("stage"))
-    val survivors = sig.join(
-      inPairs.select(col("doc2").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-    // stage 2: band-screen survivors against the admitted store
-    // (strictly earlier batches — replay-safe). Like StreamDedup's
-    // screen, this READ races a concurrent fold's post-commit
-    // input delete — retry with a fresh listing (sound: the fold
-    // commits the same signature set before deleting its inputs,
-    // and every write below is mode(overwrite)-idempotent)
-    val written = StreamDedup.withStoreRetry {
-      val seen = sigStore(spark, storeDir, boundExclusive = batchId)
-      val storeMatches = MinHash.crossMatches(seen, survivors, threshold)
-        .withColumn("stage", lit("store"))
-        .localCheckpoint()
-      batchMatches.unionByName(storeMatches)
-        .withColumn("b", lit(batchId)) // fold-overlap vs re-send marker
-        .write.mode("overwrite").parquet(s"$storeDir/matches_b$batchId")
-      val admitted =
-        survivors.join(storeMatches.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      admitted.write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
-      admitted.schema
-    }
-    spark.read.schema(written).parquet(s"$storeDir/delta_b$batchId").select("doc_id")
+  private[streaming] def screen(spark: SparkSession, docs: DataFrame, batchId: Long,
+      storeDir: String, threshold: Double, on: Column = lit(true)): DataFrame = {
+    val signed = docs.withColumn("toks", split(col("text"), " "))
+      .withColumn("hps", when(on, MinHash.shingleHashes(TextOps.shingleArray)))
+      .withColumn("sig", MinHash.signatureOf(col("hps")))
+      .drop("toks", "hps")
+    // a signed doc's band rows; an unsigned one keeps one NULL-band row
+    def banded(df: DataFrame): DataFrame = df.select(col("*"),
+      posexplode_outer(MinHash.bandValuesOf(col("sig"))).as(Seq("band", "band_val")))
+    val buckets = banded(signed.filter(col("sig").isNotNull)).select("band", "band_val")
+    val stored = banded(sigStore(spark, storeDir, boundExclusive = batchId)
+        .select(col("doc_id"),
+          array((0 until MinHash.K).map(i => col(s"m$i")): _*).as("sig")))
+      .join(broadcast(buckets), Seq("band", "band_val"), "left_semi")
+      .withColumn("stored", lit(true))
+      .repartition(1)
+    // the mates of a doc meeting `mate`, with their estimates
+    def found(mate: Column => Column): Column = filter(
+      transform(filter(col("mates"), mate), m => struct(m("doc_id").as("matched_id"),
+        MinHash.estimateOf(col("sig"), m("sig")).as("est_jaccard"))),
+      m => m("est_jaccard") >= threshold)
+    def staged(ms: String, stage: String): Column = transform(col(ms), m =>
+      struct(m("matched_id").as("matched_id"), m("est_jaccard").as("est_jaccard"),
+        lit(stage).as("stage")))
+    val docCols = signed.columns.map(col).toSeq
+    banded(signed).withColumn("stored", lit(false))
+      .unionByName(stored, allowMissingColumns = true)
+      .coalesce(1)
+      .groupBy("band", "band_val")
+      .agg(collect_list(when(!col("stored"), struct(docCols: _*))).as("docs"),
+        collect_list(when(col("sig").isNotNull, struct("doc_id", "sig", "stored"))).as("mates"))
+      .select(explode(col("docs")).as("d"), col("mates"))
+      .select("d.*", "mates")
+      .groupBy(docCols: _*)
+      .agg(
+        array_distinct(flatten(collect_list(
+          found(m => !m("stored") && m("doc_id") < col("doc_id"))))).as("in_batch"),
+        array_distinct(flatten(collect_list(found(m => m("stored"))))).as("in_store"))
+      .withColumn("matches", when(size(col("in_batch")) > 0, staged("in_batch", "batch"))
+        .when(size(col("in_store")) > 0, staged("in_store", "store")))
+      .withColumn("near_ok", col("sig").isNotNull && col("matches").isNull)
+      .drop("in_batch", "in_store")
   }
+
+  /** The write step for the seen-set: the admitted signatures of a
+    * [[screen]]ed frame as the batch's `delta_b<id>` (doc_id, m0..m31).
+    */
+  private[streaming] def writeDelta(screened: DataFrame, batchId: Long,
+      storeDir: String): Unit =
+    screened.filter(col("near_ok"))
+      .select(col("doc_id") +: (0 until MinHash.K).map(i => col("sig").getItem(i).as(s"m$i")): _*)
+      .write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
+
+  /** The write step for the provenance: the match rows of a [[screen]]ed
+    * frame as `matches_b<id>`, every row carrying the batch id `b` (the
+    * fold-overlap vs re-send marker).
+    */
+  private[streaming] def writeMatches(screened: DataFrame, batchId: Long,
+      storeDir: String): Unit =
+    screened.select(col("doc_id"), explode(col("matches")).as("r"))
+      .select(col("doc_id"), col("r.matched_id"), col("r.est_jaccard"), col("r.stage"),
+        StoreSink.batchIdCol(batchId).as("b"))
+      .write.mode("overwrite").parquet(s"$storeDir/matches_b$batchId")
 }

@@ -54,7 +54,7 @@ object StreamPacking {
           size(expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
             .cast("long").as("n_tokens"))
         .filter(col("n_tokens") > 0)
-        .withColumn("b", lit(batchId))
+        .withColumn("b", StoreSink.batchIdCol(batchId))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$storeDir/toks_b$batchId")
     }

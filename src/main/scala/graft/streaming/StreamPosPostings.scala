@@ -78,7 +78,7 @@ object StreamPosPostings {
           .select(lit("").as("term"), col("doc_id"),
             expr("CAST(array() AS ARRAY<INT>)").as("ps"))
         raw.unionByName(markers)
-          .withColumn("b", lit(batchId))
+          .withColumn("b", StoreSink.batchIdCol(batchId))
           .write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
     }
 }

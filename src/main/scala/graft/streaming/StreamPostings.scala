@@ -112,7 +112,7 @@ object StreamPostings {
           .select(lit("").as("term"), col("doc_id"),
             lit(0L).as("tf"), lit(0).as("dl"))
         raw.unionByName(markers)
-          .withColumn("b", lit(batchId))
+          .withColumn("b", StoreSink.batchIdCol(batchId))
           .write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
     }
 }

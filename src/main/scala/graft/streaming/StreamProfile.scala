@@ -48,7 +48,7 @@ object StreamProfile {
       checkpointDir: String): StreamingQuery =
     StoreSink.start(source, checkpointDir, Seq(storeDir)) { (_, batch, batchId) =>
       profile(batch, columns)
-        .withColumn("batch_id", lit(batchId))
+        .withColumn("batch_id", StoreSink.batchIdCol(batchId))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$storeDir/profile_b$batchId")
     }

@@ -450,11 +450,11 @@ object StreamVec {
         batch.filter(col("embedding").isNotNull), books).persist()
       try {
         val live = ups.drop("sq_err")
-          .withColumn("b", lit(batchId)).withColumn("del", lit(false))
+          .withColumn("b", StoreSink.batchIdCol(batchId)).withColumn("del", lit(false))
         val tombs = batch.filter(col("embedding").isNull)
           .select(col("vec_id") +:
             (0 until VectorOps.PqM).map(m => lit(0L).as(s"c$m")): _*)
-          .withColumn("b", lit(batchId)).withColumn("del", lit(true))
+          .withColumn("b", StoreSink.batchIdCol(batchId)).withColumn("del", lit(true))
         // IN-BATCH winner: a vec_id arriving twice in one micro-batch
         // (re-embedded twice between triggers, or a write racing its
         // own delete) shares one b, so the read-time max-b filter

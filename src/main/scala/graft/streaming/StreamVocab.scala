@@ -49,7 +49,7 @@ object StreamVocab {
     StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
       fold = fold(_, storeDir)) { (_, batch, batchId) =>
       CorpusPrep.unigramWordCounts(batch)
-        .withColumn("b", lit(batchId))
+        .withColumn("b", StoreSink.batchIdCol(batchId))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$storeDir/wc_b$batchId")
     }
