@@ -488,7 +488,7 @@ object FuncOps2 {
         |e AS (
         |  SELECT doc_id,
         |         unnest(CASE WHEN len(l) = 0 THEN [CAST(NULL AS INT)]
-        |                     ELSE list_transform(generate_series(0, len(l) - 1), x -> CAST(x AS INT)) END) AS pos,
+        |                     ELSE list_transform(range(len(l)), x -> CAST(x AS INT)) END) AS pos,
         |         unnest(CASE WHEN len(l) = 0 THEN [CAST(NULL AS VARCHAR)] ELSE l END) AS word
         |  FROM w)
         |SELECT doc_id, pos, word FROM e

@@ -284,12 +284,10 @@ object Audit {
          |        UNION ALL
          |        SELECT doc_id + 50000000 AS doc_id, 'train' AS split, ws
          |        FROM lab WHERE split = 'test' AND doc_id % 2 = 0),
-         |trw AS (SELECT DISTINCT ${TextOps.phashSql("array_to_string(ws[i + 1 : i + 8], ' ')")} AS h
-         |        FROM (SELECT ws, unnest(generate_series(0, len(ws) - 8)) AS i
-         |              FROM aug WHERE split = 'train' AND len(ws) >= 8)),
-         |tew AS (SELECT DISTINCT doc_id, ${TextOps.phashSql("array_to_string(ws[i + 1 : i + 8], ' ')")} AS h
-         |        FROM (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 8)) AS i
-         |              FROM aug WHERE split = 'test' AND len(ws) >= 8))
+         |trw AS (SELECT DISTINCT h
+         |        FROM (${TextOps.windowHashSql("(SELECT ws FROM aug WHERE split = 'train')", Nil)})),
+         |tew AS (SELECT DISTINCT *
+         |        FROM (${TextOps.windowHashSql("(SELECT doc_id, ws FROM aug WHERE split = 'test')", Seq("doc_id"))}))
          |SELECT tew.doc_id, CAST(COUNT(*) AS BIGINT) AS n_windows,
          |       CAST(SUM(CASE WHEN t.h IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_in_train,
          |       CAST((1000000 * SUM(CASE WHEN t.h IS NULL THEN 0 ELSE 1 END)) // COUNT(*) AS BIGINT) AS leak_ppm,
@@ -306,15 +304,9 @@ object Audit {
         lab.filter(col("split") === "test" && col("doc_id") % 2 === 0)
           .select((col("doc_id") + 50000000L).as("doc_id"), col("ws"),
             lit("train").as("split")))
-      def windows(df: org.apache.spark.sql.DataFrame) =
-        df.filter(size(col("ws")) >= 8)
-          .select(col("doc_id"), explode(expr(
-            "transform(sequence(0, size(ws) - 8), " +
-              "i -> concat_ws(' ', slice(ws, i + 1, 8)))")).as("w"))
-          .select(col("doc_id"), TextOps.phash(col("w")).as("h"))
-      val trw = windows(aug.filter(col("split") === "train"))
+      val trw = TextOps.windowHashes(aug.filter(col("split") === "train"), Seq("doc_id"))
         .select("h").distinct().withColumn("hit", lit(1))
-      val tew = windows(aug.filter(col("split") === "test")).distinct()
+      val tew = TextOps.windowHashes(aug.filter(col("split") === "test"), Seq("doc_id")).distinct()
       tew.join(trw, Seq("h"), "left")
         .groupBy("doc_id")
         .agg(count(lit(1)).cast("long").as("n_windows"),

@@ -1712,7 +1712,7 @@ object CorpusPrep {
       .filter(size(col("tk")) >= 2)
       .select(col("doc_id"), col("source"),
         explode(expr(
-          "transform(sequence(0, size(tk) - 2), i -> concat(tk[i], ' ', tk[i + 1]))")).as("b"))
+          s"transform(${TextOps.windowStarts("tk", 2)}, i -> concat(tk[i], ' ', tk[i + 1]))")).as("b"))
       .select(col("doc_id"), col("source"),
         (TextOps.phash(col("b")) % 4096).as("bkt"))
 
@@ -1807,7 +1807,7 @@ object CorpusPrep {
       .select(col("doc_id"), col("source"),
         (size(col("tk")) - 1).cast("long").as("n_bigrams"),
         aggregate(
-          transform(expr("sequence(0, size(tk) - 2)"),
+          transform(expr(TextOps.windowStarts("tk", 2)),
             i => element_at(lift,
               (TextOps.phash(concat(
                 element_at(col("tk"), i + 1), lit(" "),

@@ -191,6 +191,81 @@ object TextOps {
       .select(col("doc_id"), phash(col("block")).as("h"))
       .distinct()
 
+  // ---- the 8-word window signature and d18's shifted-copy plant, one
+  // definition per dialect: every window-hash store, query, oracle CTE
+  // and streaming twin derives from these, so their hashes and planted
+  // rows stay bit-identical -----------------------------------------
+
+  /** The start of every n-word window of the token array `arr`, as a
+    * Spark SQL array expression (empty below n tokens).
+    */
+  private[operators] def windowStarts(arr: String, n: Int): String =
+    s"sequence(0, size($arr) - $n)"
+
+  /** The 8-word windows of the token array `arr` (≥ 8 tokens), each its
+    * words joined by ' ' — or, `positional`, a struct of its start `i`
+    * and those words `w`.
+    */
+  private def windows8(arr: String, positional: Boolean = false): Column = {
+    val w = s"concat_ws(' ', slice($arr, i + 1, 8))"
+    expr(s"transform(${windowStarts(arr, 8)}, i -> " +
+      (if (positional) s"struct(i AS i, $w AS w))" else s"$w)"))
+  }
+
+  /** The `phash` of every 8-word window of each row's `arr` token
+    * array: `(keys…, h)`, or `(keys…, i, h)` with the window's start
+    * `i` (long) when `positional`. Rows under 8 tokens have no windows;
+    * a window repeated within a row repeats — callers that want a set
+    * add `distinct()`. SQL twin: [[windowHashSql]].
+    */
+  private[graft] def windowHashes(df: DataFrame, keys: Seq[String], arr: String = "ws",
+      positional: Boolean = false): DataFrame = {
+    val ks = keys.map(col)
+    val long = df.filter(size(col(arr)) >= 8)
+    if (positional)
+      long.select(ks :+ explode(windows8(arr, positional = true)).as("s"): _*)
+        .select(ks ++ Seq(col("s.i").cast("long").as("i"), phash(col("s.w")).as("h")): _*)
+    else
+      long.select(ks :+ explode(windows8(arr)).as("w"): _*)
+        .select(ks :+ phash(col("w")).as("h"): _*)
+  }
+
+  /** [[windowHashes]] as a DuckDB query over `src` (a table, CTE name
+    * or parenthesized subquery with the `keys` and `arr` columns).
+    */
+  private[operators] def windowHashSql(src: String, keys: Seq[String], arr: String = "ws",
+      positional: Boolean = false): String = {
+    val k = keys.map(_ + ", ").mkString
+    val i = if (positional) "i, " else ""
+    s"SELECT $k$i${phashSql(s"array_to_string($arr[i + 1 : i + 8], ' ')")} AS h " +
+      s"FROM (SELECT $k$arr, unnest(generate_series(0, len($arr) - 8)) AS i " +
+      s"FROM $src WHERE len($arr) >= 8)"
+  }
+
+  /** d18's planted shifted partial copies of a `(doc_id, ws)` corpus:
+    * every doc with doc_id % 5 = 0 and ≥ 48 tokens re-appears at
+    * doc_id + 3e7 as its first 12 tokens, 8 doc-unique fillers
+    * (`x<doc_id>f<k>`) and its tokens 31–42 — passage reuse at a
+    * shifted alignment, with two copied islands. Planted by the span
+    * (d18/d19, [[spanWindowHashes]]), novelty (d21,
+    * [[noveltyWindowHashes]]) and e2e2 fixtures. SQL twin:
+    * [[shiftedCopiesSql]].
+    */
+  private[operators] def shiftedCopies(sp0: DataFrame): DataFrame =
+    sp0.filter(col("doc_id") % 5 === 0 && size(col("ws")) >= 48)
+      .select(col("doc_id"), col("ws"),
+        expr("transform(sequence(0, 7), " +
+          "i -> concat('x', CAST(doc_id AS STRING), 'f', CAST(i AS STRING)))").as("fill"))
+      .select((col("doc_id") + 30000000L).as("doc_id"),
+        expr("concat(slice(ws, 1, 12), fill, slice(ws, 31, 12))").as("ws"))
+
+  /** [[shiftedCopies]] as a DuckDB query over `src` (doc_id, ws). */
+  private[operators] def shiftedCopiesSql(src: String): String =
+    "SELECT doc_id + 30000000 AS doc_id, ws[1:12] || fill || ws[31:42] AS ws " +
+      "FROM (SELECT doc_id, ws, list_transform(generate_series(0, 7), " +
+      "i -> 'x' || CAST(doc_id AS VARCHAR) || 'f' || CAST(i AS VARCHAR)) AS fill " +
+      s"FROM $src WHERE doc_id % 5 = 0 AND len(ws) >= 48)"
+
   /** Single-sourced substring-span-removal core (d19's algorithm over
     * an arbitrary (doc_id, ws) corpus CTE): duplicate evidence = 8-word
     * windows in ≥ 2 distinct docs; the lexicographically-first
@@ -203,9 +278,7 @@ object TextOps {
     * two can never drift.
     */
   private[operators] def spanCutSql(src: String): String =
-    s"""win AS (SELECT doc_id, i, ${phashSql("array_to_string(ws[i + 1 : i + 8], ' ')")} AS h
-       |        FROM (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 8)) AS i
-       |              FROM $src WHERE len(ws) >= 8)),
+    s"""win AS (${windowHashSql(src, Seq("doc_id"), positional = true)}),
        |dup AS (SELECT h FROM (SELECT DISTINCT h, doc_id FROM win)
        |        GROUP BY h HAVING COUNT(*) >= 2),
        |cutw AS (SELECT doc_id, i FROM (
@@ -213,7 +286,7 @@ object TextOps {
        |         FROM win JOIN dup USING (h)) WHERE rn > 1),
        |covp AS (SELECT DISTINCT doc_id, p
        |         FROM (SELECT doc_id, unnest(generate_series(i, i + 7)) AS p FROM cutw)),
-       |tokp AS (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 1)) AS p FROM $src),
+       |tokp AS (SELECT doc_id, ws, unnest(range(len(ws))) AS p FROM $src),
        |surv AS (SELECT t.doc_id, t.p, t.ws[t.p + 1] AS tok
        |         FROM tokp t LEFT JOIN covp v ON t.doc_id = v.doc_id AND t.p = v.p
        |         WHERE v.doc_id IS NULL),
@@ -233,12 +306,7 @@ object TextOps {
     */
   private[operators] def spanCleaned(c: DataFrame,
       win0: Option[DataFrame] = None): DataFrame = {
-    val win = win0.getOrElse(c.filter(size(col("ws")) >= 8)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(ws) - 8), " +
-          "i -> struct(i AS i, concat_ws(' ', slice(ws, i + 1, 8)) AS w))")).as("s"))
-      .select(col("doc_id"), col("s.i").cast("long").as("i"),
-        phash(col("s.w")).as("h"))
+    val win = win0.getOrElse(windowHashes(c, Seq("doc_id"), positional = true)
       .localCheckpoint()) // feeds the dup-evidence agg and the ranking
     // "window in >= 2 distinct docs" ⟺ min(doc_id) != max(doc_id):
     // one h-keyed exchange with map-side partial min/max, where the
@@ -317,7 +385,7 @@ object TextOps {
     */
   private[graft] def shingleArray: Column =
     when(size(col("toks")) >= 3,
-      expr("transform(sequence(0, size(toks) - 3), " +
+      expr(s"transform(${windowStarts("toks", 3)}, " +
         "i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))"))
       .otherwise(array().cast("array<string>"))
 
@@ -391,9 +459,9 @@ object TextOps {
         .write.parquet(out)
     }
 
-  /** DISTINCT (doc_id, h) 8-word sliding-window hashes of the PLAIN
-    * corpus, as a build-once fingerprint-keyed artifact (r18) — the
-    * decontamination screens' shared signature store, the same stored
+  /** DISTINCT [[windowHashes]] (doc_id, h) of the PLAIN corpus, as a
+    * build-once fingerprint-keyed artifact (r18) — the decontamination
+    * screens' shared signature store, the same stored
     * dedup-signature class as [[shingleIndex]] and the MinHash
     * signature store. d7b (threshold-overlap) and d22 (Bloom screen)
     * previously re-derived this stream (corpus-wide explode + hash +
@@ -406,22 +474,17 @@ object TextOps {
   def docWindowHashes(s: SparkSession, d: String): DataFrame =
     graft.sinks.VersionedStore.corpusArtifact(s, d, "doc_window_hashes",
         logicKey = "w8 phash distinct v1") { out =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), split(col("text"), " ").as("ws"))
-        .filter(size(col("ws")) >= 8)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(ws) - 8), " +
-            "i -> concat_ws(' ', slice(ws, i + 1, 8)))")).as("w"))
-        .select(col("doc_id"), phash(col("w")).as("h"))
+      windowHashes(Tables.documents(s, d)
+          .select(col("doc_id"), split(col("text"), " ").as("ws")), Seq("doc_id"))
         .distinct()
         .write.parquet(out)
     }
 
-  /** The d18/d19 POSITIONAL window-hash store: (doc_id, i, h) sliding
-    * 8-word windows over the span-dedup fixture corpus (documents +
-    * d18's shifted partial copies at +3e7 for doc_id%5, len≥48) — the
-    * positional fingerprint table the Lee et al. substring pipeline
-    * keeps, [[graft.operators.Retrieval.posIndexArtifact]]'s analogue
+  /** The d18/d19 POSITIONAL window-hash store: [[windowHashes]]'
+    * (doc_id, i, h) over the span-dedup fixture corpus (documents +
+    * [[shiftedCopies]]) — the positional fingerprint table the Lee et
+    * al. substring pipeline keeps,
+    * [[graft.operators.Retrieval.posIndexArtifact]]'s analogue
     * for span dedup. Both span queries previously re-derived it from
     * text behind a localCheckpoint on every execution (their dominant
     * profiled stage); same build-once fingerprint discipline as
@@ -432,26 +495,14 @@ object TextOps {
         logicKey = "w8 phash positional shift%5+3e7 v1") { out =>
       val sp0 = Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      val planted = sp0.filter(col("doc_id") % 5 === 0 && size(col("ws")) >= 48)
-        .select(col("doc_id"), col("ws"),
-          expr("transform(sequence(0, 7), " +
-            "i -> concat('x', CAST(doc_id AS STRING), 'f', CAST(i AS STRING)))").as("fill"))
-        .select((col("doc_id") + 30000000L).as("doc_id"),
-          expr("concat(slice(ws, 1, 12), fill, slice(ws, 31, 12))").as("ws"))
-      sp0.unionByName(planted)
-        .filter(size(col("ws")) >= 8)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(ws) - 8), " +
-            "i -> struct(i AS i, concat_ws(' ', slice(ws, i + 1, 8)) AS w))")).as("s"))
-        .select(col("doc_id"), col("s.i").cast("long").as("i"),
-          phash(col("s.w")).as("h"))
+      windowHashes(sp0.unionByName(shiftedCopies(sp0)), Seq("doc_id"), positional = true)
         .write.parquet(out)
     }
 
-  /** d21's window-hash store: DISTINCT (doc_id, h) over the NOVELTY
-    * fixture corpus (documents + exact copies at +1e6 for doc_id%10 +
-    * d18's shifted partial copies at +3e7 for doc_id%5) — the arrival
-    * index a growing corpus maintains incrementally in production.
+  /** d21's window-hash store: DISTINCT [[windowHashes]] (doc_id, h)
+    * over the NOVELTY fixture corpus (documents + exact copies at +1e6
+    * for doc_id%10 + [[shiftedCopies]]) — the arrival index a growing
+    * corpus maintains incrementally in production.
     * Same discipline as [[docWindowHashes]]; the plant recipe is part
     * of the logic key.
     */
@@ -462,18 +513,7 @@ object TextOps {
         .select(col("doc_id"), split(col("text"), " ").as("ws"))
       val exact = sp0.filter(col("doc_id") % 10 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("ws"))
-      val shifted = sp0.filter(col("doc_id") % 5 === 0 && size(col("ws")) >= 48)
-        .select(col("doc_id"), col("ws"),
-          expr("transform(sequence(0, 7), " +
-            "i -> concat('x', CAST(doc_id AS STRING), 'f', CAST(i AS STRING)))").as("fill"))
-        .select((col("doc_id") + 30000000L).as("doc_id"),
-          expr("concat(slice(ws, 1, 12), fill, slice(ws, 31, 12))").as("ws"))
-      sp0.unionByName(exact).unionByName(shifted)
-        .filter(size(col("ws")) >= 8)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(ws) - 8), " +
-            "i -> concat_ws(' ', slice(ws, i + 1, 8)))")).as("w"))
-        .select(col("doc_id"), phash(col("w")).as("h"))
+      windowHashes(sp0.unionByName(exact).unionByName(shiftedCopies(sp0)), Seq("doc_id"))
         .distinct()
         .write.parquet(out)
     }
@@ -564,12 +604,7 @@ object TextOps {
     * decontamination screen. Fixture-sized; callers checkpoint/cache.
     */
   private[graft] def d7bBenchWindows(bench: DataFrame): DataFrame =
-    bench.filter(size(col("bws")) >= 8)
-      .select(col("bench_id"), explode(expr(
-        "transform(sequence(0, size(bws) - 8), " +
-          "i -> concat_ws(' ', slice(bws, i + 1, 8)))")).as("w"))
-      .select(col("bench_id"), phash(col("w")).as("h"))
-      .distinct()
+    windowHashes(bench, Seq("bench_id"), "bws").distinct()
 
   /** The threshold-overlap verdicts for a doc frame (`doc_id`, `ws`
     * token array) against a bench-window frame: per (doc, item), the
@@ -581,22 +616,29 @@ object TextOps {
     * makes the streaming twin's replay convergence trivial.
     */
   private[graft] def d7bVerdicts(sp: DataFrame, bw: DataFrame): DataFrame =
-    d7bVerdictsFromWindows(d7bDocWindows(sp), bw)
+    d7bVerdictsFromWindows(windowHashes(sp, Seq("doc_id")), bw)
 
   /** Per bench item, its number of distinct windows (`bench_id`,
     * `n_item_windows`) — the denominator of every verdict. Fixture-sized.
     */
-  private[graft] def d7bBenchTotals(bw: DataFrame): DataFrame =
+  private def d7bBenchTotals(bw: DataFrame): DataFrame =
     bw.groupBy("bench_id").agg(count(lit(1)).cast("long").as("n_item_windows"))
+
+  /** The (bench_id, h, n_item_windows) fixture [[d7bVerdictsInPlace]]
+    * screens against: a bench-window frame with its [[d7bBenchTotals]].
+    * Streaming screens build it once per run, not per micro-batch.
+    */
+  private[graft] def d7bBenchWithTotals(bw: DataFrame): DataFrame =
+    bw.join(d7bBenchTotals(bw), "bench_id")
 
   /** [[d7bVerdicts]] in place, the streaming entry: `docs` (doc_id, ws,
     * ...) with `verdicts` added — for each row where `on` holds, its
     * flagged (bench_id, n_item_windows, n_present, overlap_ppm) rows as
     * an array, NULL when it has none. `bench` is the (bench_id, h,
-    * n_item_windows) fixture — [[d7bBenchWindows]] with its
-    * [[d7bBenchTotals]] — built once up front, so a micro-batch does not
-    * recount it. A row's window hashes meet the broadcast fixture and
-    * fold back into that row (no join back to `docs`); the hits,
+    * n_item_windows) fixture — [[d7bBenchWithTotals]] — built once up
+    * front, so a micro-batch does not recount it. A row's window hashes
+    * meet the broadcast fixture and fold back into that row (no join
+    * back to `docs`); the hits,
     * threshold and ppm are [[d7bVerdicts]]'.
     */
   private[graft] def d7bVerdictsInPlace(docs: DataFrame, on: Column,
@@ -615,20 +657,13 @@ object TextOps {
   }
 
   /** A doc's 8-gram windows over its `ws` token array (≥ 8 tokens). */
-  private def docWindows: Column =
-    expr("transform(sequence(0, size(ws) - 8), i -> concat_ws(' ', slice(ws, i + 1, 8)))")
+  private def docWindows: Column = windows8("ws")
 
   /** The verdict threshold: at least half of the item's windows present. */
   private def d7bFlagged: Column = col("n_present") * 2 >= col("n_item_windows")
 
   private def d7bPpm: Column =
     expr("CAST((1000000 * n_present) div n_item_windows AS BIGINT)")
-
-  /** A doc frame's (`doc_id`, `h`) 8-gram window hashes. */
-  private def d7bDocWindows(sp: DataFrame): DataFrame =
-    sp.filter(size(col("ws")) >= 8)
-      .select(col("doc_id"), explode(docWindows).as("w"))
-      .select(col("doc_id"), phash(col("w")).as("h"))
 
   /** [[d7bVerdicts]] over a PREBUILT (doc_id, h) window-hash stream —
     * the d7b query serves the stored [[docWindowHashes]] artifact
@@ -1313,13 +1348,9 @@ object TextOps {
          |               list_transform(generate_series(0, 7),
          |                 i -> 'z' || CAST(doc_id AS VARCHAR) || 'p' || CAST(i AS VARCHAR)) AS fill
          |        FROM sp WHERE doc_id < 5)),
-         |bw AS (SELECT DISTINCT bench_id, ${phashSql("array_to_string(bws[i + 1 : i + 8], ' ')")} AS h
-         |       FROM (SELECT bench_id, bws, unnest(generate_series(0, len(bws) - 8)) AS i
-         |             FROM bench WHERE len(bws) >= 8)),
+         |bw AS (SELECT DISTINCT * FROM (${windowHashSql("bench", Seq("bench_id"), "bws")})),
          |bt AS (SELECT bench_id, CAST(COUNT(*) AS BIGINT) AS n_item_windows FROM bw GROUP BY 1),
-         |dw AS (SELECT doc_id, ${phashSql("array_to_string(ws[i + 1 : i + 8], ' ')")} AS h
-         |       FROM (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 8)) AS i
-         |             FROM sp WHERE len(ws) >= 8)),
+         |dw AS (${windowHashSql("sp", Seq("doc_id"))}),
          |hit AS (SELECT d.doc_id, b.bench_id, CAST(COUNT(DISTINCT d.h) AS BIGINT) AS n_present
          |        FROM dw d JOIN bw b ON d.h = b.h
          |        GROUP BY 1, 2)
@@ -1380,9 +1411,7 @@ object TextOps {
          |               list_transform(generate_series(0, 7),
          |                 i -> 'z' || CAST(doc_id AS VARCHAR) || 'p' || CAST(i AS VARCHAR)) AS fill
          |        FROM sp WHERE doc_id < 5)),
-         |bw AS (SELECT DISTINCT ${phashSql("array_to_string(bws[i + 1 : i + 8], ' ')")} AS h
-         |       FROM (SELECT bench_id, bws, unnest(generate_series(0, len(bws) - 8)) AS i
-         |             FROM bench WHERE len(bws) >= 8)),
+         |bw AS (SELECT DISTINCT h FROM (${windowHashSql("bench", Seq("bench_id"), "bws")})),
          |bits AS (SELECT DISTINCT p // 32 AS wd,
          |                CAST(1 AS BIGINT) << CAST(p % 32 AS INT) AS msk
          |         FROM (SELECT ((h % 4096) + i * (2 * ((h // 4096) % 2048) + 1)) % 4096 AS p
@@ -1391,9 +1420,7 @@ object TextOps {
          |warr AS (SELECT list(COALESCE(w.v, 0) ORDER BY x.wd) AS W
          |         FROM (SELECT unnest(generate_series(0, 127)) AS wd) x
          |         LEFT JOIN wvals w USING (wd)),
-         |dwd AS (SELECT DISTINCT doc_id, ${phashSql("array_to_string(ws[i + 1 : i + 8], ' ')")} AS h
-         |        FROM (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 8)) AS i
-         |              FROM sp WHERE len(ws) >= 8)),
+         |dwd AS (SELECT DISTINCT * FROM (${windowHashSql("sp", Seq("doc_id"))})),
          |tested AS (SELECT doc_id, CASE WHEN $bitTests THEN 1 ELSE 0 END AS bloom
          |           FROM dwd CROSS JOIN warr),
          |ex AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_exact
@@ -1510,16 +1537,8 @@ object TextOps {
     // so this needs no df cap to stay linear.
     QueryDef.sql("d18_substring_spans",
       s"""WITH sp0 AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         |c AS (SELECT doc_id, ws FROM sp0
-         |      UNION ALL
-         |      SELECT doc_id + 30000000 AS doc_id, ws[1:12] || fill || ws[31:42] AS ws
-         |      FROM (SELECT doc_id, ws,
-         |                   list_transform(generate_series(0, 7),
-         |                     i -> 'x' || CAST(doc_id AS VARCHAR) || 'f' || CAST(i AS VARCHAR)) AS fill
-         |            FROM sp0 WHERE doc_id % 5 = 0 AND len(ws) >= 48)),
-         |win AS (SELECT doc_id, i, ${phashSql("array_to_string(ws[i + 1 : i + 8], ' ')")} AS h
-         |        FROM (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 8)) AS i
-         |              FROM c WHERE len(ws) >= 8)),
+         |c AS (SELECT doc_id, ws FROM sp0 UNION ALL ${shiftedCopiesSql("sp0")}),
+         |win AS (${windowHashSql("c", Seq("doc_id"), positional = true)}),
          |dup AS (SELECT h FROM (SELECT DISTINCT h, doc_id FROM win)
          |        GROUP BY h HAVING COUNT(*) >= 2),
          |cov AS (SELECT doc_id, i FROM win JOIN dup USING (h)),
@@ -1588,13 +1607,7 @@ object TextOps {
     // its square (PlanSpec pins zero SortMergeJoin/cartesian).
     QueryDef.sql("d19_span_removal",
       s"""WITH sp0 AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-         |c AS (SELECT doc_id, ws FROM sp0
-         |      UNION ALL
-         |      SELECT doc_id + 30000000 AS doc_id, ws[1:12] || fill || ws[31:42] AS ws
-         |      FROM (SELECT doc_id, ws,
-         |                   list_transform(generate_series(0, 7),
-         |                     i -> 'x' || CAST(doc_id AS VARCHAR) || 'f' || CAST(i AS VARCHAR)) AS fill
-         |            FROM sp0 WHERE doc_id % 5 = 0 AND len(ws) >= 48)),
+         |c AS (SELECT doc_id, ws FROM sp0 UNION ALL ${shiftedCopiesSql("sp0")}),
          |${spanCutSql("c")}
          |SELECT c.doc_id, CAST(len(c.ws) AS BIGINT) AS n_before,
          |       CAST(coalesce(a.n_after, 0) AS BIGINT) AS n_after,
@@ -1603,17 +1616,11 @@ object TextOps {
          |ORDER BY doc_id""".stripMargin) { (s, d) =>
       val sp0 = Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      val planted = sp0.filter(col("doc_id") % 5 === 0 && size(col("ws")) >= 48)
-        .select(col("doc_id"), col("ws"),
-          expr("transform(sequence(0, 7), " +
-            "i -> concat('x', CAST(doc_id AS STRING), 'f', CAST(i AS STRING)))").as("fill"))
-        .select((col("doc_id") + 30000000L).as("doc_id"),
-          expr("concat(slice(ws, 1, 12), fill, slice(ws, 31, 12))").as("ws"))
       // window stream from the stored span_window_hashes artifact
       // (r18); the corpus frame is still scanned for the rewrite
       // (kept tokens reassemble from ws), which is the honest
       // text-touching half of the pipeline
-      spanCleaned(sp0.unionByName(planted),
+      spanCleaned(sp0.unionByName(shiftedCopies(sp0)),
           win0 = Some(spanWindowHashes(s, d)))
         .select(col("doc_id"),
           size(col("ws")).cast("long").as("n_before"),
@@ -1644,15 +1651,8 @@ object TextOps {
          |c AS (SELECT doc_id, ws FROM sp0
          |      UNION ALL
          |      SELECT doc_id + 1000000 AS doc_id, ws FROM sp0 WHERE doc_id % 10 = 0
-         |      UNION ALL
-         |      SELECT doc_id + 30000000 AS doc_id, ws[1:12] || fill || ws[31:42] AS ws
-         |      FROM (SELECT doc_id, ws,
-         |                   list_transform(generate_series(0, 7),
-         |                     i -> 'x' || CAST(doc_id AS VARCHAR) || 'f' || CAST(i AS VARCHAR)) AS fill
-         |            FROM sp0 WHERE doc_id % 5 = 0 AND len(ws) >= 48)),
-         |win AS (SELECT DISTINCT doc_id, ${phashSql("array_to_string(ws[i + 1 : i + 8], ' ')")} AS h
-         |        FROM (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 8)) AS i
-         |              FROM c WHERE len(ws) >= 8)),
+         |      UNION ALL ${shiftedCopiesSql("sp0")}),
+         |win AS (SELECT DISTINCT * FROM (${windowHashSql("c", Seq("doc_id"))})),
          |fst AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY h) AS first_doc FROM win)
          |SELECT doc_id,
          |       CAST(COUNT(*) AS BIGINT) AS n_windows,
@@ -1704,9 +1704,7 @@ object TextOps {
          |                   list_transform(generate_series(0, 7),
          |                     i -> 'y' || CAST(doc_id AS VARCHAR) || 'g' || CAST(i AS VARCHAR)) AS fill
          |            FROM sp0 WHERE doc_id % 4 = 0 AND len(ws) >= 12)),
-         |win AS (SELECT DISTINCT source, ${phashSql("array_to_string(ws[i + 1 : i + 8], ' ')")} AS h
-         |        FROM (SELECT source, ws, unnest(generate_series(0, len(ws) - 8)) AS i
-         |              FROM c WHERE len(ws) >= 8)),
+         |win AS (SELECT DISTINCT * FROM (${windowHashSql("c", Seq("source"))})),
          |tot AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_src FROM win GROUP BY 1),
          |ov AS (SELECT a.source AS source_a, b.source AS source_b,
          |              CAST(COUNT(*) AS BIGINT) AS n_shared
@@ -1735,14 +1733,7 @@ object TextOps {
           .select((col("doc_id") + 40000000L).as("doc_id"),
             lit("synthetic").as("source"),
             expr("concat(slice(ws, 1, 12), fill)").as("ws"))
-        sp0.unionByName(planted)
-          .filter(size(col("ws")) >= 8)
-          .select(col("source"), explode(expr(
-            "transform(sequence(0, size(ws) - 8), " +
-              "i -> concat_ws(' ', slice(ws, i + 1, 8)))")).as("w"))
-          .select(col("source"), phash(col("w")).as("h"))
-          .distinct()
-          .write.parquet(out)
+        windowHashes(sp0.unionByName(planted), Seq("source")).distinct().write.parquet(out)
       }
       // r17 note: a per-h collect_set + pair-explode variant (one
       // h exchange instead of the self-join) was measured and REVERTED
@@ -1828,12 +1819,8 @@ object TextOps {
          |           UNION ALL
          |           SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
          |           UNION ALL
-         |           SELECT doc_id + 30000000 AS doc_id,
-         |                  array_to_string(ws[1:12] || fill || ws[31:42], ' ') AS text
-         |           FROM (SELECT doc_id, ws,
-         |                        list_transform(generate_series(0, 7),
-         |                          i -> 'x' || CAST(doc_id AS VARCHAR) || 'f' || CAST(i AS VARCHAR)) AS fill
-         |                 FROM sp0 WHERE doc_id % 5 = 0 AND len(ws) >= 48)),
+         |           SELECT doc_id, array_to_string(ws, ' ') AS text
+         |           FROM (${shiftedCopiesSql("sp0")})),
          |q AS (SELECT doc_id, text, $qualityFormulaSql AS quality
          |      FROM (SELECT doc_id, text, $qualityFeaturesSql FROM corpus)),
          |gated AS (SELECT doc_id, text, quality, md5(text) AS fp FROM q WHERE quality >= 0.5),
@@ -1854,12 +1841,7 @@ object TextOps {
          |FROM final ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       val sp0 = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
-      val shifted = sp0.filter(col("doc_id") % 5 === 0 && size(col("ws")) >= 48)
-        .select(col("doc_id"), col("ws"),
-          expr("transform(sequence(0, 7), " +
-            "i -> concat('x', CAST(doc_id AS STRING), 'f', CAST(i AS STRING)))").as("fill"))
-        .select((col("doc_id") + 30000000L).as("doc_id"),
-          expr("concat_ws(' ', concat(slice(ws, 1, 12), fill, slice(ws, 31, 12)))").as("text"))
+      val shifted = shiftedCopies(sp0).select(col("doc_id"), concat_ws(" ", col("ws")).as("text"))
       val corpus = withDupes(docs).unionByName(shifted)
       val gated = corpus
         .select(Seq(col("doc_id"), col("text")) ++ qualityFeatureCols: _*)
@@ -1960,14 +1942,9 @@ object TextOps {
          |               list_transform(generate_series(0, 7),
          |                 i -> 'z' || CAST(doc_id AS VARCHAR) || 'p' || CAST(i AS VARCHAR)) AS fill
          |        FROM sp4 WHERE doc_id < 5)),
-         |bw4 AS (SELECT DISTINCT bench_id, ${phashSql("array_to_string(bws[i + 1 : i + 8], ' ')")} AS h
-         |        FROM (SELECT bench_id, bws, unnest(generate_series(0, len(bws) - 8)) AS i
-         |              FROM bench4 WHERE len(bws) >= 8)),
+         |bw4 AS (SELECT DISTINCT * FROM (${windowHashSql("bench4", Seq("bench_id"), "bws")})),
          |bt4 AS (SELECT bench_id, CAST(COUNT(*) AS BIGINT) AS n_item_windows FROM bw4 GROUP BY 1),
-         |dw4 AS (SELECT doc_id, ${phashSql("array_to_string(ws[i + 1 : i + 8], ' ')")} AS h
-         |        FROM (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 8)) AS i
-         |              FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM ndsurv)
-         |              WHERE len(ws) >= 8)),
+         |dw4 AS (${windowHashSql("(SELECT doc_id, string_split(text, ' ') AS ws FROM ndsurv)", Seq("doc_id"))}),
          |contam4 AS (SELECT DISTINCT hh.doc_id
          |            FROM (SELECT d.doc_id, b.bench_id,
          |                         CAST(COUNT(DISTINCT d.h) AS BIGINT) AS n_present

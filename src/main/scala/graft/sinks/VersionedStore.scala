@@ -340,7 +340,7 @@ object VersionedStore {
     val f = fs(spark, dir)
     if (!isComplete(f, dir)) throw new java.io.FileNotFoundException(
       s"version $version at $base is not a complete committed version")
-    readCommitted(spark, dir.toString)
+    readCommitted(spark, dir)
   }
 
   /** Roll the pointer back (or forward) to a retained version — a
@@ -413,8 +413,10 @@ object VersionedStore {
       entries.foreach { st =>
         val n = st.getPath.getName
         val stale = now - st.getModificationTime >= ttl
-        if (n.startsWith("v_") && !keepAll(n) && !leased(n) && !liveLease(n))
+        if (n.startsWith("v_") && !keepAll(n) && !leased(n) && !liveLease(n)) {
           f.delete(st.getPath, true)
+          schemaCatalog.remove(catalogKey(st.getPath))
+        }
         else if (n.startsWith(".LATEST.tmp_") && stale)
           f.delete(st.getPath, false)
         else if (n.startsWith(IntentPrefix) && stale)
@@ -651,25 +653,38 @@ object VersionedStore {
     * execution (r18 profile: 5 such jobs in r2_hybrid_rrf alone).
     * Schema is catalog metadata, not query results: data is still
     * read from parquet on every scan. Bounded driver state: one
-    * StructType per version dir touched in the process.
+    * StructType per live version dir touched in the process — [[prune]]
+    * evicts the entry of every version dir it deletes.
     */
   private val schemaCatalog = scala.collection.concurrent.TrieMap
     .empty[String, org.apache.spark.sql.types.StructType]
+
+  /** A version dir's [[schemaCatalog]] key: its scheme-less path, so
+    * `file:/x/v_1` (a listing) and `/x/v_1` (a pointer) are one entry.
+    */
+  private def catalogKey(dir: Path): String = dir.toUri.getPath
+
+  /** The cataloged version dirs under `base` (for tests). */
+  private[graft] def catalogedVersions(base: String): Set[String] = {
+    val b = catalogKey(new Path(base))
+    schemaCatalog.keySet.filter(k => new Path(k).getParent.toUri.getPath == b)
+      .map(k => new Path(k).getName).toSet
+  }
 
   /** Read a COMMITTED (immutable) version dir with its cached schema,
     * skipping the per-call inference job. Only version dirs may pass
     * through here — never a path whose content can change.
     */
-  private def readCommitted(spark: SparkSession, dir: String): DataFrame = {
-    val schema =
-      schemaCatalog.getOrElseUpdate(dir, spark.read.parquet(dir).schema)
-    spark.read.schema(schema).parquet(dir)
+  private def readCommitted(spark: SparkSession, dir: Path): DataFrame = {
+    val schema = schemaCatalog.getOrElseUpdate(catalogKey(dir),
+      spark.read.parquet(dir.toString).schema)
+    spark.read.schema(schema).parquet(dir.toString)
   }
 
   /** Read the live version (throws if nothing was ever published). */
   def read(spark: SparkSession, base: String): DataFrame =
     resolve(spark, base) match {
-      case Some(dir) => readCommitted(spark, dir.toString)
+      case Some(dir) => readCommitted(spark, dir)
       case None => throw new java.io.FileNotFoundException(
         s"no published version at $base")
     }
@@ -721,7 +736,7 @@ object VersionedStore {
       buildLedger.add((new Path(base).getName, (System.nanoTime() - t0) / 1e9))
       built
     }
-    readCommitted(spark, dir.toString)
+    readCommitted(spark, dir)
   }
 
   /** The standard corpus-derived-artifact cache: warehouse-dir base

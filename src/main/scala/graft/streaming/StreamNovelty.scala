@@ -55,12 +55,7 @@ object StreamNovelty {
     * cohort-keyed: text reduces to `h` inside the scan's transform.
     */
   private def batchWindowHashes(batch: DataFrame): DataFrame =
-    batch.select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= 8)
-      .select(explode(expr(
-        "transform(sequence(0, size(ws) - 8), " +
-          "i -> concat_ws(' ', slice(ws, i + 1, 8)))")).as("w"))
-      .select(TextOps.phash(col("w")).as("h"))
+    TextOps.windowHashes(batch.select(col("doc_id"), split(col("text"), " ").as("ws")), Nil)
       .distinct()
 
   /** Every window hash the store has seen (deltas + folds, set

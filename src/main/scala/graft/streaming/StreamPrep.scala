@@ -127,8 +127,7 @@ object StreamPrep {
       trigger: Trigger = Trigger.ProcessingTime(0),
       foldEvery: Int = 0): StreamingQuery = {
     // the decontamination fixture with its per-item totals, built once
-    val bench = benchWindows.join(TextOps.d7bBenchTotals(benchWindows), "bench_id")
-      .localCheckpoint()
+    val bench = TextOps.d7bBenchWithTotals(benchWindows).localCheckpoint()
     StoreSink.start(docs, s"$checkpointDir/prep", Seq(s"$storeDir/exact", s"$storeDir/sigs"),
       trigger, foldEvery, fold(_, storeDir)) { (spark, batch, batchId) =>
       val frozen = StreamDedup.withStoreRetry(
@@ -172,9 +171,7 @@ object StreamPrep {
     StreamDedup.writeDelta(frozen, batchId, s"$storeDir/exact")
     StreamNearDup.writeDelta(frozen, batchId, s"$storeDir/sigs")
     StreamNearDup.writeMatches(frozen, batchId, s"$storeDir/sigs")
-    frozen.select(col("doc_id"), explode(col("verdicts")).as("r"))
-      .select(col("doc_id"), col("r.bench_id").cast(LongType).as("bench_id"),
-        col("r.n_item_windows"), col("r.n_present"), col("r.overlap_ppm"), b)
+    StreamDecontam.verdictRows(frozen, b)
       .write.mode("overwrite").parquet(s"$storeDir/decontam/verdicts_b$batchId")
     frozen.select(col("doc_id"), col("stage"), round(col("quality"), 6).as("quality"), b)
       .write.mode("overwrite").parquet(s"$storeDir/manifest_b$batchId")

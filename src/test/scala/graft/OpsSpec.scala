@@ -1100,6 +1100,31 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("span window store pairs with d19's corpus: every doc's windows stored, planted ids match") {
+    // the store and d19's rewrite plant through one helper
+    // (TextOps.shiftedCopies): a doc of n tokens owns exactly
+    // max(0, n - 7) stored windows, starting at 0 … n - 8
+    val d = "/root/testdata/sf0.001"
+    val docs = SparkEntry.queries("d19_span_removal")(spark, d)
+      .select("doc_id", "n_before").as[(Long, Long)].collect().toMap
+    val win = graft.operators.TextOps.spanWindowHashes(spark, d)
+      .groupBy("doc_id")
+      .agg(count(lit(1)), countDistinct("i"), min("i"), max("i"))
+      .as[(Long, Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
+    assert(win.keySet.subsetOf(docs.keySet),
+      s"windows of docs d19 never rewrites: ${(win.keySet -- docs.keySet).take(5)}")
+    for ((id, n) <- docs) win.get(id) match {
+      case None => assert(n < 8, s"doc $id ($n tokens) has no stored windows")
+      case Some((_, c, starts, lo, hi)) =>
+        assert(c == n - 7 && starts == c && lo == 0L && hi == n - 8,
+          s"doc $id ($n tokens): $c windows, $starts distinct starts in [$lo, $hi]")
+    }
+    val planted = docs.keySet.filter(_ >= 30000000L)
+    assert(planted.nonEmpty, "no planted doc")
+    assert(win.keySet.filter(_ >= 30000000L) == planted,
+      "the store's planted doc ids differ from d19's")
+  }
+
   test("e2e2 span prep: each stage kills exactly its planted family; split and geometry recounted") {
     // stage attribution the final hash can't show: the byte-identical
     // copies (+1e6) die at the DEDUP stage (they pass the quality gate

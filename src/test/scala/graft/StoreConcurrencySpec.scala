@@ -195,28 +195,33 @@ class StoreConcurrencySpec extends SparkSpec {
     assert(fs.listStatus(basePath).forall(
       !_.getPath.getName.startsWith(".MAINT_LEASE.reclaim")),
       "a reclaim temp file leaked")
-    // heartbeat: with a 400 ms TTL and a 1.5 s critical section, the
+    // heartbeat: with a 3 s TTL and a 4.5 s critical section, the
     // holder's lock must keep its mtime fresh throughout — a live
-    // writer is never presumed crashed mid-publish
-    spark.conf.set("spark.graft.store.intentTtlMs", "600")
+    // writer is never presumed crashed mid-publish. The heartbeat
+    // renews every TTL/4, so only a renewal stalled for 2.25 s reads as
+    // stale, not a scheduler or GC pause of a loaded test JVM; without
+    // the heartbeat the lock goes stale 1.5 s before the body ends.
+    val ttl = 3000L
+    spark.conf.set("spark.graft.store.intentTtlMs", ttl.toString)
     try {
       val done = new CountDownLatch(1)
       val holder = new Thread(() =>
         VersionedStore.withMaintenanceLease(spark, base) {
-          Thread.sleep(2000); done.countDown()
+          Thread.sleep(ttl * 3 / 2); done.countDown()
         })
       holder.start()
       // wait for the lock to appear, then watch its staleness
-      val deadline = System.currentTimeMillis() + 5000
-      while (!fs.exists(lock) && System.currentTimeMillis() < deadline)
+      val acquired = System.currentTimeMillis() + 5000
+      while (!fs.exists(lock) && System.currentTimeMillis() < acquired)
         Thread.sleep(10)
       assert(fs.exists(lock), "holder never acquired")
+      val deadline = System.currentTimeMillis() + 4 * ttl
       var everStale = false
       while (done.getCount > 0 && System.currentTimeMillis() < deadline) {
         try {
           val age = System.currentTimeMillis() -
             fs.getFileStatus(lock).getModificationTime
-          if (age >= 600) everStale = true
+          if (age >= ttl) everStale = true
         } catch { case _: java.io.FileNotFoundException => () }
         Thread.sleep(50)
       }
@@ -225,6 +230,21 @@ class StoreConcurrencySpec extends SparkSpec {
       assert(!everStale,
         "a live lease went stale mid-cycle — heartbeat not renewing")
     } finally spark.conf.set("spark.graft.store.intentTtlMs", (15L * 60 * 1000).toString)
+  }
+
+  test("schema catalog: publish and prune cycles keep only the live versions cataloged") {
+    val base = tmpDir("graft-catalog") + "/store"
+    def cataloged = VersionedStore.catalogedVersions(base)
+    for (k <- 1 to 5) {
+      VersionedStore.publish(spark, base)(out => spark.range(k).write.parquet(out))
+      assert(VersionedStore.read(spark, base).count() == k)
+      // keepVersions = 1: the new version plus its one-publish grace
+      assert(cataloged == VersionedStore.listVersions(spark, base).toSet,
+        s"cycle $k: cataloged $cataloged, live ${VersionedStore.listVersions(spark, base)}")
+    }
+    VersionedStore.pruneToPointer(spark, base)
+    assert(cataloged == VersionedStore.listVersions(spark, base).toSet && cataloged.size == 1,
+      s"after pruneToPointer: cataloged $cataloged")
   }
 
   test("maintenance lease: a taken-over holder neither renews nor deletes the successor's lock") {

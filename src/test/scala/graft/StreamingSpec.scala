@@ -1730,6 +1730,58 @@ class StreamingSpec extends SparkSpec {
       "restart reprocessed or disturbed prior verdicts")
   }
 
+  test("streaming decontamination twin: a steady batch does not recount the bench totals") {
+    import graft.operators.TextOps
+    import graft.streaming.StreamDecontam
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val store = tmpDir("graft-sdecon-steady") + "/store"
+    val cp = tmpDir("graft-sdecon-steady-cp")
+    val benchTokens = (1 to 12).map(i => s"bench$i").toSeq
+    val bw = TextOps.d7bBenchWindows(Seq((7L, benchTokens)).toDF("bench_id", "bws"))
+      .localCheckpoint()
+    def docs(k: Int) = Seq(
+      (10L * k, (benchTokens ++ Seq(s"tail$k")).mkString(" ")),
+      (10L * k + 1, (1 to 12).map(i => s"w${k}x$i").mkString(" ")))
+    // the streaming query runs its batches in a clone of the session,
+    // which copies the listeners registered before it starts
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    val steady = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (steady.get) plans.add(qe.optimizedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val in = MemoryStream[(Long, String)]
+    val q = StreamDecontam.start(in.toDF().toDF("doc_id", "text"), bw, store, cp)
+    try {
+      in.addData(docs(0): _*)
+      q.processAllAvailable()
+      org.apache.spark.graftshim.ListenerBus.drain(spark.sparkContext)
+      steady.set(true)
+      in.addData(docs(1): _*)
+      q.processAllAvailable()
+      org.apache.spark.graftshim.ListenerBus.drain(spark.sparkContext)
+      steady.set(false)
+    } finally {
+      q.stop()
+      spark.listenerManager.unregister(listener)
+    }
+    val aggs = plans.toArray(Array.empty[LogicalPlan]).toSeq
+      .flatMap(_.collectWithSubqueries { case a: Aggregate => a })
+    assert(aggs.nonEmpty, "the steady batch's screen plan was not captured")
+    val totals = aggs.filter(_.groupingExpressions.flatMap(_.references.map(_.name)) ==
+      Seq("bench_id"))
+    assert(totals.isEmpty, s"a steady batch recounts the bench totals: $totals")
+    val flagged = StreamDecontam.serve(spark, store).select("doc_id", "bench_id", "overlap_ppm")
+      .as[(Long, Long, Long)].collect().toSet
+    assert(flagged == Set((0L, 7L, 1000000L), (10L, 7L, 1000000L)), s"verdicts: $flagged")
+  }
+
   test("sidecar folds: manifest/verdict/matches/drift dirs compact, readers unchanged, crash overlap absorbed") {
     import graft.operators.TextOps
     import graft.streaming.{StreamDedup, StreamPrep}
