@@ -876,9 +876,9 @@ object Retrieval {
           explode(slice(col("toks"), 1, 3)).as("term"))
         .distinct()
         .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      val kw = serveBm25(indexArtifact(s, d), statsArtifact(s, d),
-          mqRows.toDF("query_id", "term"), mqRows.map(_._2).distinct, 20,
-          excludeSelf = true)
+      // both channels unsorted: the fusion aggregate drops their order
+      val kw = topK(servedScores(indexArtifact(s, d), statsArtifact(s, d),
+          mqRows.toDF("query_id", "term"), mqRows.map(_._2).distinct, excludeSelf = true), 20)
         .select(col("query_id"), col("doc_id").as("cand_id"), col("rn"))
       val vec = VectorOps.v9Ranked(s, d, 20)
         .select("query_id", "cand_id", "rn")
@@ -1400,8 +1400,9 @@ object Retrieval {
     // q-gram lemma (see [[GramMinQueryLen]]) — and shorter queries
     // read the dictionary under the |len − qlen| ≤ 2 length prune
     // (necessary for distance ≤ 2, so also exact). Both paths finish
-    // with the codegen'd levenshtein as the EXACT filter; both engines
-    // implement classic unit-cost edit distance, so the integer
+    // with the codegen'd levenshtein, bounded at 2 (it returns -1 past
+    // the bound instead of finishing the DP), as the EXACT filter; both
+    // engines implement classic unit-cost edit distance, so the integer
     // distances agree exactly and the pruned serving hash-matches the
     // oracle's full vocabulary × query scan. A query beyond distance 2
     // from everything simply yields no rows.
@@ -1425,8 +1426,8 @@ object Retrieval {
       val mis = Seq((0, "spak"), (1, "joinn"), (2, "windw"),
         (3, "custmer"), (4, "tble"), (5, "zzzzzzzzzz"))
       spellCandidates(s, d, mis)
-        .withColumn("dist", levenshtein(col("mis"), col("term")).cast("long"))
-        .filter(col("dist") <= 2)
+        .withColumn("dist", levenshtein(col("mis"), col("term"), 2).cast("long"))
+        .filter(col("dist") >= 0)
         .withColumn("rn", row_number().over(Window.partitionBy("qid")
           .orderBy(col("dist").asc, col("df").desc, col("term").asc)))
         .filter(col("rn") <= 3)
@@ -2352,8 +2353,8 @@ object Retrieval {
       val mis = Seq((0, "spak"), (1, "joinn"), (2, "windw"),
         (3, "custmer"), (4, "tble"), (5, "zzzzzzzzzz"))
       val corrected: Seq[(Long, String)] = spellCandidates(s, d, mis)
-        .withColumn("dist", levenshtein(col("mis"), col("term")).cast("long"))
-        .filter(col("dist") <= 2)
+        .withColumn("dist", levenshtein(col("mis"), col("term"), 2).cast("long"))
+        .filter(col("dist") >= 0)
         .withColumn("crn", row_number().over(Window.partitionBy("qid")
           .orderBy(col("dist").asc, col("df").desc, col("term").asc)))
         .filter(col("crn") === 1)

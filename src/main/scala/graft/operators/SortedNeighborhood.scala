@@ -39,6 +39,17 @@ object SortedNeighborhood {
   private val BlockChars = 12
   private val Threshold = 0.5
 
+  /** d13's verdict on the string columns `a` and `b`: at most 20% of the
+    * longer string edited, 5·levenshtein(a, b) ≤ max(len). For an
+    * integer distance that is levenshtein(a, b) ≤ max(len) div 5, so the
+    * bounded DP decides it: Spark's three-argument levenshtein gives up
+    * once the distance passes the bound and returns −1. Dissimilar
+    * neighbours, the common case, stop after a band of the full O(n·m)
+    * table. The oracle SQL keeps the full DP as the independent check.
+    */
+  private[graft] def withinEditBound(a: String, b: String): Column =
+    expr(s"levenshtein($a, $b, greatest(length($a), length($b)) div 5) >= 0")
+
   private def jacc(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 
@@ -112,7 +123,8 @@ object SortedNeighborhood {
      * catches both). A predecessor within the w=3 window is a duplicate
      * when 5·dist ≤ max(len) — i.e. ≤ 20% of the longer text edited.
      * Levenshtein is the classic integer DP, identical in any engine —
-     * no float anywhere in the verdict.
+     * no float anywhere in the verdict. Spark runs it bounded
+     * ([[withinEditBound]]); the oracle runs the full DP.
      *
      * Same scale shape as d11: one shuffle on the block prefix, lag()
      * instead of a self-join, O(n·w) distance computations each bounded
@@ -168,9 +180,7 @@ object SortedNeighborhood {
           .withColumn(s"k$i", lag("k", i).over(w))
       }
       val candidates = (1 to W).map { i =>
-        when(col(s"k$i").isNotNull &&
-          lit(5) * levenshtein(col("k"), col(s"k$i"))
-            <= greatest(length(col("k")), length(col(s"k$i"))), col(s"id$i"))
+        when(col(s"k$i").isNotNull && withinEditBound("k", s"k$i"), col(s"id$i"))
       }
       lagged
         .select(col("doc_id"), least(candidates: _*).as("matched_with"))

@@ -714,9 +714,9 @@ object VectorOps {
         .localCheckpoint() // bounded (queries × probed candidates); both strategies rank it
       val allowed = emb.filter(col("label") < 3)
         .select(col("vec_id").as("cand_id"))
-      val pre = adcTopKTail(scored.join(allowed, Seq("cand_id"), "left_semi"), 10)
+      val pre = adcRanked(scored.join(allowed, Seq("cand_id"), "left_semi"), 10)
         .withColumn("strategy", lit("pre"))
-      val post = adcTopKTail(scored, 10)
+      val post = adcRanked(scored, 10)
         .join(allowed, Seq("cand_id"), "left_semi")
         .withColumn("strategy", lit("post"))
       pre.unionByName(post)
@@ -1703,10 +1703,12 @@ object VectorOps {
        |                                      ORDER BY adist, cand_id) AS rn
        |            FROM sc)""".stripMargin
 
-  private def v9TopK(s: SparkSession, d: String): DataFrame = v9Ranked(s, d, 10)
+  private def v9TopK(s: SparkSession, d: String): DataFrame =
+    v9Ranked(s, d, 10).orderBy("query_id", "rn")
 
-  /** v9's fixture ranking at an arbitrary depth k — the vector channel
-    * the hybrid retrieval fusion (Retrieval.r2) reranks over.
+  /** v9's fixture ranking at an arbitrary depth k, rows unsorted — the
+    * vector channel the hybrid retrieval fusion (Retrieval.r2) reranks
+    * over.
     */
   private[operators] def v9Ranked(s: SparkSession, d: String, k: Int): DataFrame = {
     graft.functions.NativeFunctions.register(s)
@@ -1718,7 +1720,7 @@ object VectorOps {
     val cand = broadcast(probes).join(cells, Seq("cell"))
       .filter(col("cand_id") =!= col("query_id"))
       .join(codes, Seq("cand_id"))
-    adcTopKTail(adcScoreKeyed(s, cand, qs, books), k)
+    adcRanked(adcScoreKeyed(s, cand, qs, books), k)
   }
 
   /** PQ constants: M subspaces × P dims each (M·P = the corpus dim),
@@ -2264,14 +2266,21 @@ object VectorOps {
         .drop((0 until PqM).map(m => s"lut$m"): _*)
   }
 
-  /** Shared top-k tail: per-query rank by (adist, cand_id). */
-  private def adcTopKTail(scored: DataFrame, k: Int): DataFrame =
+  /** Shared top-k: per-query rank by (adist, cand_id), rows unsorted —
+    * for callers that go on to union, join or aggregate the ranking, where
+    * a global sort here would be a range exchange whose order is thrown
+    * away.
+    */
+  private def adcRanked(scored: DataFrame, k: Int): DataFrame =
     scored
       .withColumn("rn", row_number().over(
         Window.partitionBy("query_id").orderBy(asc("adist"), asc("cand_id"))))
       .filter(col("rn") <= k)
       .select("query_id", "rn", "cand_id", "adist")
-      .orderBy("query_id", "rn")
+
+  /** [[adcRanked]] sorted by (query_id, rn): the tail of a result. */
+  private def adcTopKTail(scored: DataFrame, k: Int): DataFrame =
+    adcRanked(scored, k).orderBy("query_id", "rn")
 
   /** Public end-to-end ADC search: train (or reuse) the PQ codebooks,
     * encode the corpus once (or serve from a stored code table — see

@@ -51,6 +51,13 @@ import scala.util.matching.Regex
   *    one evaluation, so they agree with each other even if a job of the
   *    batch is retried. StreamVec's `persist()`ed batch frame does not
   *    freeze: Spark may recompute it after an eviction.
+  *  - CONCURRENT STEPS, ONE COMMIT. A batch's independent steps (the
+  *    part writes of one frozen frame; the folds of different stores)
+  *    may run at the same time ([[concurrently]]). All of them finish
+  *    before the batch returns, so before Spark commits it: a failed or
+  *    replayed batch never races a write of its own earlier attempt.
+  *    Folds of the same store run one after another under one
+  *    acquisition of that store's maintenance lease.
   */
 private[streaming] object StoreSink {
 
@@ -76,6 +83,45 @@ private[streaming] object StoreSink {
     * comes from the codegen cache.
     */
   def batchIdCol(batchId: Long): Column = udf(() => batchId).asNonNullable()()
+
+  /** Run a micro-batch's independent store `steps` at the same time, one
+    * short-lived thread per step, and return only once every step has
+    * stopped; then rethrow the first failure (the others ride along as
+    * suppressed). Each step runs with `spark` as its active session and
+    * with a copy of the caller's Spark local properties (Spark's
+    * inheritable thread-local), so its jobs carry the caller's
+    * `streaming.sql.batchId` and query id, and stopping the query
+    * cancels them. An interrupt of the caller is passed on to the steps,
+    * still waited out, and restored on return.
+    */
+  def concurrently(spark: SparkSession)(steps: (() => Unit)*): Unit = {
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = steps.zipWithIndex.map { case (step, i) =>
+      val t = new Thread(() => {
+        SparkSession.setActiveSession(spark)
+        try step() catch { case e: Throwable => failures.add(e) }
+      }, s"graft-store-step-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive) {
+        try t.join()
+        catch {
+          case _: InterruptedException =>
+            if (!interrupted) threads.foreach(_.interrupt())
+            interrupted = true
+        }
+      }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    Option(failures.poll()).foreach { first =>
+      failures.forEach(e => first.addSuppressed(e))
+      throw first
+    }
+  }
 
   /** Every family at once — what the ownership fallback must see. */
   private val AnyFamily =

@@ -197,8 +197,20 @@ object StreamDedup {
     */
   def foldDeltas(spark: SparkSession, storeDir: String,
       schema: Option[StructType] = None): Int =
+    foldFamilies(spark, storeDir, StoreSink.Delta -> schema)
+
+  /** Fold several families of one store, in the given order, under ONE
+    * acquisition of its maintenance lease — each exactly as
+    * [[foldDeltas]] / [[foldSidecars]] folds it alone, each read under
+    * its declared schema (`None`: footer-inferred). Returns the number
+    * of dirs folded away.
+    */
+  private[streaming] def foldFamilies(spark: SparkSession, storeDir: String,
+      families: (StoreSink.Family, Option[StructType])*): Int =
     graft.sinks.VersionedStore.withMaintenanceLease(spark, storeDir) {
-      foldDeltasExclusive(spark, storeDir, schema = schema)
+      families.map { case (family, schema) =>
+        foldDeltasExclusive(spark, storeDir, family = family, schema = schema)
+      }.sum
     }
 
   /** [[foldDeltas]] with a per-fold SHRINK step applied to the folded
@@ -238,9 +250,7 @@ object StreamDedup {
     */
   def foldSidecars(spark: SparkSession, storeDir: String, prefix: String,
       schema: Option[StructType] = None): Int =
-    graft.sinks.VersionedStore.withMaintenanceLease(spark, storeDir) {
-      foldDeltasExclusive(spark, storeDir, family = StoreSink.sidecar(prefix), schema = schema)
-    }
+    foldFamilies(spark, storeDir, StoreSink.sidecar(prefix) -> schema)
 
   private def foldDeltasExclusive(spark: SparkSession, storeDir: String,
       shrink: DataFrame => DataFrame = identity,

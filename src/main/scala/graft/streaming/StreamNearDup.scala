@@ -61,7 +61,7 @@ object StreamNearDup {
   /** The full dedup provenance: one row per (rejected doc, matching
     * doc) with the estimate and the stage that rejected it. Reads the
     * per-batch `matches_b*` dirs plus `matches_fold_0_*` compactions
-    * ([[foldMatches]]); distinct on the internal batch-id column `b`
+    * ([[fold]]); distinct on the internal batch-id column `b`
     * (dropped from the served rows) collapses exactly fold/crash
     * overlap while keeping a re-sent doc's later-batch rejection rows.
     *
@@ -84,18 +84,20 @@ object StreamNearDup {
   /** Fold sig deltas into one `fold_0_<hi>` range dir — StreamDedup's
     * compaction verbatim (same dir naming, same write-then-delete crash
     * discipline, newest delta never folded); the `matches_b` provenance
-    * dirs are history, not screen state — [[foldMatches]] compacts them
-    * separately.
+    * dirs are history, not screen state — [[fold]] compacts them too.
     */
   def foldDeltas(spark: SparkSession, storeDir: String): Int =
     StreamDedup.foldDeltas(spark, storeDir, Some(sigSchema))
 
-  /** Compact the `matches_b*` provenance dirs (one per micro-batch
-    * forever otherwise — the small-file problem at ingest) into
-    * `matches_fold_0_<hi>` under the store's maintenance lease.
+  /** The store's whole maintenance pass under ONE acquisition of its
+    * lease: the sig deltas ([[foldDeltas]]), then the `matches_b*`
+    * provenance dirs (one per micro-batch forever otherwise — the
+    * small-file problem at ingest) into `matches_fold_0_<hi>`. Returns
+    * the number of dirs folded away.
     */
-  def foldMatches(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldSidecars(spark, storeDir, "matches", Some(matchesSchema))
+  def fold(spark: SparkSession, storeDir: String): Int =
+    StreamDedup.foldFamilies(spark, storeDir, StoreSink.Delta -> Some(sigSchema),
+      StoreSink.sidecar("matches") -> Some(matchesSchema))
 
   /** Start the near-dup screen over a `(doc_id, text)` source. The
     * STORE is the output: [[keptIds]] is the deduped id set,
@@ -105,9 +107,8 @@ object StreamNearDup {
       threshold: Double = 0.5,
       trigger: Trigger = Trigger.ProcessingTime(0),
       foldEvery: Int = 0): StreamingQuery =
-    // the fold compacts both the signature deltas and the provenance
     StoreSink.start(docs, s"$checkpointDir/neardup", Seq(storeDir), trigger, foldEvery,
-      s => foldDeltas(s, storeDir) + foldMatches(s, storeDir)) { (spark, batch, batchId) =>
+      fold(_, storeDir)) { (spark, batch, batchId) =>
       // like StreamDedup's screen, the store READ races a concurrent
       // fold's post-commit input delete — retry with a fresh listing
       // (sound: the fold commits the same signature set before deleting

@@ -38,7 +38,9 @@ import graft.operators.TextOps
   * so the four compose into one per-doc plan with no join back to the
   * batch, and the exit `stage` is one CASE over those columns. The plan is
   * frozen ONCE with a localCheckpoint, and all five writes are map-only
-  * projections of that one evaluation. So the delta, matches, verdict
+  * projections of that one evaluation, written concurrently: each is a
+  * one-task job, so on a trigger-sized batch its cost is scheduling and
+  * storage round trips, which overlap. So the delta, matches, verdict
   * and manifest parts of a batch can never disagree, even if a job is
   * retried mid-write — the consistency the chain once bought by reading
   * each committed part back before the next stage, at a round trip per
@@ -94,19 +96,25 @@ object StreamPrep {
 
   /** Compact the chain's per-batch output dirs — the maintenance pass a
     * 30 s-trigger deployment schedules (one dir per family per batch is
-    * ~2,900 dirs/day/family otherwise). Folds all four accumulating
-    * families under their stores' maintenance leases: the two screens'
+    * ~2,900 dirs/day/family otherwise). Folds all five accumulating
+    * families, each read under its declared schema: the two screens'
     * signature/hash deltas (the newest-delta screen-bound discipline,
     * as standalone), the near-dup `matches_b*` provenance, the decontam
-    * `verdicts_b*` sidecars, and the `manifest_b*` rows — each read
-    * under its declared schema. Returns the number of dirs folded away.
+    * `verdicts_b*` sidecars, and the `manifest_b*` rows. The four stores
+    * fold concurrently, each under its own maintenance lease; the
+    * `sigs/` deltas and matches share that store's one lease, in that
+    * order. Returns the number of dirs folded away.
     */
-  def fold(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldDeltas(spark, s"$storeDir/exact", Some(StreamDedup.StoreSchema)) +
-      StreamNearDup.foldDeltas(spark, s"$storeDir/sigs") +
-      StreamNearDup.foldMatches(spark, s"$storeDir/sigs") +
-      StreamDedup.foldSidecars(spark, s"$storeDir/decontam", "verdicts", Some(verdictSchema)) +
-      StreamDedup.foldSidecars(spark, storeDir, "manifest", Some(manifestSchema))
+  def fold(spark: SparkSession, storeDir: String): Int = {
+    val folded = new java.util.concurrent.atomic.AtomicInteger
+    def step(pass: => Int): () => Unit = () => { folded.addAndGet(pass); () }
+    StoreSink.concurrently(spark)(
+      step(StreamDedup.foldDeltas(spark, s"$storeDir/exact", Some(StreamDedup.StoreSchema))),
+      step(StreamNearDup.fold(spark, s"$storeDir/sigs")),
+      step(StreamDedup.foldSidecars(spark, s"$storeDir/decontam", "verdicts", Some(verdictSchema))),
+      step(StreamDedup.foldSidecars(spark, storeDir, "manifest", Some(manifestSchema))))
+    folded.get
+  }
 
   /** The training-set ids the chain has admitted so far. */
   def keptIds(spark: SparkSession, storeDir: String): DataFrame =
@@ -162,18 +170,20 @@ object StreamPrep {
   }
 
   /** The batch's five parts, each a map-only projection of the frozen
-    * per-doc frame; the rows of the sidecar families carry the batch id
-    * `b` (fold-overlap vs re-send disambiguation — see [[manifest]]'s
-    * scaladoc).
+    * per-doc frame, written concurrently (they share no input but the
+    * frozen frame and no output dir); the rows of the sidecar families
+    * carry the batch id `b` (fold-overlap vs re-send disambiguation —
+    * see [[manifest]]'s scaladoc).
     */
   private def write(frozen: DataFrame, batchId: Long, storeDir: String): Unit = {
     val b = StoreSink.batchIdCol(batchId).as("b")
-    StreamDedup.writeDelta(frozen, batchId, s"$storeDir/exact")
-    StreamNearDup.writeDelta(frozen, batchId, s"$storeDir/sigs")
-    StreamNearDup.writeMatches(frozen, batchId, s"$storeDir/sigs")
-    StreamDecontam.verdictRows(frozen, b)
-      .write.mode("overwrite").parquet(s"$storeDir/decontam/verdicts_b$batchId")
-    frozen.select(col("doc_id"), col("stage"), round(col("quality"), 6).as("quality"), b)
-      .write.mode("overwrite").parquet(s"$storeDir/manifest_b$batchId")
+    StoreSink.concurrently(frozen.sparkSession)(
+      () => StreamDedup.writeDelta(frozen, batchId, s"$storeDir/exact"),
+      () => StreamNearDup.writeDelta(frozen, batchId, s"$storeDir/sigs"),
+      () => StreamNearDup.writeMatches(frozen, batchId, s"$storeDir/sigs"),
+      () => StreamDecontam.verdictRows(frozen, b)
+        .write.mode("overwrite").parquet(s"$storeDir/decontam/verdicts_b$batchId"),
+      () => frozen.select(col("doc_id"), col("stage"), round(col("quality"), 6).as("quality"), b)
+        .write.mode("overwrite").parquet(s"$storeDir/manifest_b$batchId"))
   }
 }

@@ -245,4 +245,44 @@ class OpsPropSpec extends SparkSpec {
     }
     run("md5_prefix60 equivalence", prop, 12)
   }
+
+  test("d13's bounded edit verdict equals the full-DP verdict on random pairs") {
+    // levenshtein(a, b, max(len) div 5) >= 0 against 5·levenshtein(a, b)
+    // <= max(len). Pairs are random strings (empty, non-ASCII and a
+    // surrogate pair included), equal-length substitutions, and edited
+    // copies whose distance lands on either side of the bound.
+    import graft.operators.SortedNeighborhood
+    // strings as code points; the last is a surrogate pair in UTF-16
+    val char = Gen.frequency((12, Gen.oneOf("a", "b", "c", " ")),
+      (2, Gen.oneOf("é", "ß", "中")), (1, Gen.const("\uD83D\uDE00")))
+    val str = Gen.chooseNum(0, 40).flatMap(Gen.listOfN(_, char)).map(_.toVector)
+    def edited(a: Vector[String]): Gen[Vector[String]] = Gen.chooseNum(0, 12).flatMap { n =>
+      Gen.listOfN(n, Gen.zip(Gen.chooseNum(0, 2), Gen.chooseNum(0, 1000), char))
+        .map(_.foldLeft(a) { case (s, (op, at, c)) =>
+          val i = if (s.isEmpty) 0 else at % s.size
+          op match {
+            case 0 => s.patch(i, Seq(c), 0) // insert
+            case 1 => s.patch(i, Nil, 1) // delete
+            case _ => s.patch(i, Seq(c), 1) // substitute
+          }
+        })
+    }
+    val pair = Gen.frequency(
+      (3, Gen.zip(str, str)),
+      (3, str.flatMap(a => edited(a).map(a -> _))),
+      (2, str.flatMap(a => Gen.listOfN(a.size, char).map(a -> _.toVector))), // equal length
+      (1, str.map(Vector.empty[String] -> _)),
+      (1, str.map(a => a -> a)))
+    var verdicts = Set.empty[Boolean]
+    val prop = Prop.forAll(Gen.listOfN(100, pair)) { ps =>
+      val rows = ps.map { case (a, b) => (a.mkString, b.mkString) }.toDF("a", "b").select(
+        SortedNeighborhood.withinEditBound("a", "b"),
+        lit(5) * levenshtein(col("a"), col("b")) <= greatest(length(col("a")), length(col("b"))))
+        .collect()
+      verdicts ++= rows.map(_.getBoolean(1))
+      rows.forall(r => r.getBoolean(0) == r.getBoolean(1))
+    }
+    run("bounded edit verdict", prop, 20)
+    assert(verdicts == Set(true, false), "the pairs never reached one side of the bound")
+  }
 }

@@ -916,6 +916,21 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(plan.toString.contains("BroadcastHashJoin"), plan.toString.take(800))
   }
 
+  test("r2 and v18: only the result's ORDER BY range-partitions — the ranked channels reach the union unsorted") {
+    // a global sort under the union or the fusion aggregate is a range
+    // exchange whose order the plan above throws away
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    for (q <- Seq("r2_hybrid_rrf", "v18_filtered_ann")) {
+      val df = SparkEntry.queries(q)(spark, sf)
+      df.collect()
+      val ranges = collectWithSubqueries(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+      assert(ranges.size == 1, s"$q: ${ranges.size} range exchanges")
+    }
+  }
+
   test("t16 source mix: one corpus scan — the totals window reads the agg, not the table") {
     val df = SparkEntry.queries("t16_source_mix_report")(spark, sf)
     df.collect()

@@ -440,4 +440,78 @@ class StoreConcurrencySpec extends SparkSpec {
     assert(survived == (0 until 10).map(i => s"h_new_$i").toSet,
       s"retried screen re-admitted seen hashes or lost new ones: $survived")
   }
+
+  test("StreamPrep fold: four lease groups folded concurrently commit the sequential fold's parts, and a replayed fold batch rewrites every family") {
+    import org.apache.hadoop.fs.FileUtil
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.operators.TextOps
+    import graft.streaming.{StreamDedup, StreamNearDup, StreamPrep}
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    val corpus = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1).toSeq
+    val benchTokens = corpus.head._2.split(" ").take(40).toSeq
+    // batch k: 8 corpus docs, an exact and a near copy of the previous
+    // batch's first doc, and a doc that carries the bench item
+    def batch(k: Int): Seq[(Long, String)] = {
+      val own = corpus.slice(1 + 8 * k, 9 + 8 * k)
+      val prev = corpus(1 + 8 * math.max(k - 1, 0))._2
+      own ++ Seq((1000L + 10 * k) -> prev, (1001L + 10 * k) -> s"$prev extra words",
+        (1002L + 10 * k) -> (benchTokens ++ corpus(400 + k)._2.split(" ")).mkString(" "))
+    }
+    val bw = TextOps.d7bBenchWindows(Seq((1L, benchTokens)).toDF("bench_id", "bws"))
+      .localCheckpoint()
+    val store = tmpDir("graft-prepfold") + "/store"
+    val cp = tmpDir("graft-prepfold-cp")
+    val in = MemoryStream[(Long, String)]
+    def ingest(foldEvery: Int, batches: Seq[Int]): Unit = {
+      val q = StreamPrep.start(in.toDF().toDF("doc_id", "text"), bw, store, cp,
+        foldEvery = foldEvery)
+      try {
+        batches.foreach { k => in.addData(batch(k): _*); q.processAllAvailable() }
+        q.processAllAvailable() // a restart with no new batch replays an uncommitted one
+      } finally q.stop()
+    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(store).getFileSystem(conf)
+    // every committed part of every family: its path under the store and
+    // its rows
+    def parts(root: String): Map[String, Seq[String]] =
+      Seq("", "/exact", "/sigs", "/decontam").flatMap { sub =>
+        fs.listStatus(new Path(root + sub)).toSeq
+          .filter(st => st.isDirectory && st.getPath.getName.matches(".*(_b|fold_0_)\\d+"))
+          .map(st => s"$sub/${st.getPath.getName}" ->
+            spark.read.parquet(st.getPath.toString).collect().map(_.toString).sorted.toSeq)
+      }.toMap
+
+    ingest(foldEvery = 0, 0 until 4) // four parts per family, none folded
+    val sequential = tmpDir("graft-prepfold-seq") + "/store"
+    assert(FileUtil.copy(fs, new Path(store), fs, new Path(sequential), false, conf))
+    // the reference: the five folds one after another, each under its
+    // own acquisition of its store's lease
+    val sequentialFolded = StreamDedup.foldDeltas(spark, s"$sequential/exact") +
+      StreamNearDup.foldDeltas(spark, s"$sequential/sigs") +
+      StreamDedup.foldSidecars(spark, s"$sequential/sigs", "matches") +
+      StreamDedup.foldSidecars(spark, s"$sequential/decontam", "verdicts") +
+      StreamDedup.foldSidecars(spark, sequential, "manifest")
+    assert(sequentialFolded == 5 * 3, "each family folds its three older parts")
+    assert(StreamPrep.fold(spark, store) == sequentialFolded)
+    val folded = parts(store)
+    assert(folded == parts(sequential), "the concurrent fold committed other parts or rows")
+    val folds = folded.filter(_._1.contains("fold_0_2"))
+    assert(folds.size == 5 && folds.values.forall(_.nonEmpty), s"fold parts: ${folds.keys}")
+    assert(Seq("", "/exact", "/sigs", "/decontam").forall(sub =>
+      !fs.exists(new Path(s"$store$sub/.MAINT_LEASE"))), "a lease outlived the fold")
+
+    // batch 5 folds in the trigger (foldEvery = 3); forget that it
+    // committed, and its replay rewrites the same parts
+    ingest(foldEvery = 3, 4 to 5)
+    val before = parts(store)
+    assert(before.keySet.count(_.endsWith("fold_0_4")) == 5, s"parts: ${before.keySet}")
+    val commit = new Path(s"$cp/prep/commits/5")
+    assert(fs.delete(commit, false), s"no commit file $commit")
+    ingest(foldEvery = 3, Seq.empty)
+    assert(fs.exists(commit), "the restart did not replay batch 5")
+    assert(parts(store) == before, "the replayed fold batch changed a family")
+  }
 }
