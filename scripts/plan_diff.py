@@ -13,7 +13,10 @@ differs between any two runs of the same plan:
   - the warehouse root and temp paths (`file:/.../spark-warehouse/`,
     `/tmp/...`);
   - RDD ids, source line numbers of checkpoint call sites and lambda
-    class names.
+    class names;
+  - the JVM-wide counters in the names of lambda variables
+    (`lambda x_26`) and of common-expression aliases (`_common_expr_14`),
+    which depend on how many were made before the plan.
 
 Usage:
   python3 scripts/plan_diff.py BASE NEW [--sf DIR] [--out DIR] [q1 q2 ...]
@@ -52,6 +55,8 @@ NORMALIZE = [
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
     (re.compile(r"\.scala:\d+"), ".scala"),
     (re.compile(r"\$Lambda[$/\w]*@[0-9a-f]+"), "$Lambda"),
+    (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_"),
+    (re.compile(r"\b_common_expr_\d+"), "_common_expr_"),
 ]
 
 

@@ -80,6 +80,11 @@ object Prometheus {
       "Generated classes compiled by this JVM (codegen cache misses).")(
       Seq("" -> org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME.getCount.toDouble))
+    // a streaming screen re-run because a store part it had listed was
+    // deleted under it; a rising count means a fold is racing a reader
+    family("graft_store_read_retries_total", "counter",
+      "Store screens re-run after a listed part vanished (StreamDedup.withStoreRetry).")(
+      Seq("" -> graft.streaming.StreamDedup.storeReadRetries.toDouble))
     sb.result()
   }
 

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.util.concurrent.CountDownLatch
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.udf
@@ -39,27 +41,31 @@ import scala.util.matching.Regex
   *    partial fold could hold a subset of its inputs); such dirs are
   *    invisible to readers and folds, and the next fold reclaims them.
   *  - FOLD CADENCE. With `foldEvery` > 0 the module's fold runs inside
-  *    the trigger, after the ingest of every batch where
-  *    `StreamDedup.foldDue` fires. A fold unions the committed parts of a
-  *    family (never the newest batch dir, the one batch that can still
-  *    replay) into `<prefix>_fold_0_<hi>` under the store's maintenance
-  *    lease, and writes it before deleting its inputs: a crash leaves
-  *    overlap, never loss, and readers absorb the overlap.
+  *    the trigger of every batch N where `StreamDedup.foldDue` fires,
+  *    beside N's ingest ([[FoldAt]]). A fold unions the committed parts
+  *    of a family below N (never N's own dirs, the one batch that can
+  *    still replay) into `<prefix>_fold_0_<hi>` under the store's
+  *    maintenance lease, and writes it before deleting its inputs: a
+  *    crash leaves overlap, never loss, and readers absorb the overlap.
+  *    Every delete waits until N's ingest has returned, so no screen of
+  *    N loses a part it listed.
   *  - ONE EVALUATION PER BATCH, where a batch freezes. A store that
   *    writes several parts per batch from a `localCheckpoint`ed frame
   *    (StreamPrep, NearDup, Novelty, Phash) derives them all from that
   *    one evaluation, so they agree with each other even if a job of the
   *    batch is retried. StreamVec's `persist()`ed batch frame does not
   *    freeze: Spark may recompute it after an eviction.
-  *  - CONCURRENT STEPS, ONE COMMIT. A batch's independent steps (the
-  *    part writes of one frozen frame; the folds of different stores)
-  *    may run at the same time ([[concurrently]]). All of them finish
-  *    before the batch returns, so before Spark commits it: a failed or
-  *    replayed batch never races a write of its own earlier attempt.
-  *    Folds of the same store run one after another under one
-  *    acquisition of that store's maintenance lease.
+  *  - CONCURRENT STEPS, ONE COMMIT. A batch's independent steps (its
+  *    ingest and its fold; the part writes of one frozen frame; the
+  *    folds of different stores) may run at the same time
+  *    ([[concurrently]]). All of them finish before the batch returns,
+  *    so before Spark commits it: a failed or replayed batch never races
+  *    a write of its own earlier attempt. Folds of the same store run one
+  *    after another under one acquisition of that store's maintenance
+  *    lease, and a fold's deletes, held until the ingest has returned,
+  *    still happen under that acquisition and before the commit.
   */
-private[streaming] object StoreSink {
+private[graft] object StoreSink {
 
   /** A batch-keyed family of parts: the batch dirs, the folds that
     * compact them, and the name of a new fold. Each family folds under
@@ -73,6 +79,18 @@ private[streaming] object StoreSink {
 
   def sidecar(prefix: String): Family = Family(
     s"${prefix}_b(\\d+)".r, s"${prefix}_fold_0_(\\d+)".r, hi => s"${prefix}_fold_0_$hi")
+
+  /** Where a fold runs. [[Alone]]: outside any batch, so it leaves out
+    * each family's newest batch dir (the one batch that can still
+    * replay) and deletes its inputs once its output has committed.
+    * Beside the ingest of batch `before` ([[start]]): it folds the parts
+    * below that batch (the same set, since the batch's own dirs are the
+    * newest), and every delete it makes, resume-path deletes included,
+    * waits until `ingested` opens, when the ingest has returned.
+    */
+  final case class FoldAt(before: Option[Long], ingested: CountDownLatch)
+
+  val Alone: FoldAt = FoldAt(None, new CountDownLatch(0))
 
   /** The batch id as a column for the `b`/`batch_id` rows every family
     * carries: a non-nullable long, as `lit(batchId)` was. It is a
@@ -231,12 +249,14 @@ private[streaming] object StoreSink {
 
   /** Start `source` as a sink over `stores`, checkpointed at `checkpoint`
     * and fired on `trigger`. A run's first batch verifies (or claims)
-    * every store; each batch then runs `ingest`, followed by `fold` when
-    * `StreamDedup.foldDue(foldEvery, batchId)` fires (0 = never).
+    * every store; each batch then runs `ingest`, and, when
+    * `StreamDedup.foldDue(foldEvery, batchId)` fires (0 = never), `fold`
+    * beside it: the fold's writes overlap the ingest, its deletes wait
+    * for it ([[FoldAt]]).
     */
   def start(source: DataFrame, checkpoint: String, stores: Seq[String],
       trigger: Trigger = Trigger.ProcessingTime(0), foldEvery: Int = 0,
-      fold: SparkSession => Int = _ => 0)(
+      fold: (SparkSession, FoldAt) => Int = (_, _) => 0)(
       ingest: (SparkSession, DataFrame, Long) => Unit): StreamingQuery = {
     // one ownership check per run (driver-side closure state; a driver
     // restart just re-verifies once on its first batch)
@@ -251,8 +271,12 @@ private[streaming] object StoreSink {
           stores.foreach(verifyStoreOwnership(spark, _, checkpoint, batchId))
           ownershipVerified = true
         }
-        ingest(spark, batch, batchId)
-        if (StreamDedup.foldDue(foldEvery, batchId)) { fold(spark); () }
+        if (StreamDedup.foldDue(foldEvery, batchId)) {
+          val ingested = new CountDownLatch(1)
+          concurrently(spark)(
+            () => try ingest(spark, batch, batchId) finally ingested.countDown(),
+            () => { fold(spark, FoldAt(Some(batchId), ingested)); () })
+        } else ingest(spark, batch, batchId)
       }
       .start()
   }

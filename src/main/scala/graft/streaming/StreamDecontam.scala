@@ -37,7 +37,7 @@ object StreamDecontam {
       checkpointDir: String, foldEvery: Int = 0): StreamingQuery = {
     val bench = TextOps.d7bBenchWithTotals(benchWindows).localCheckpoint()
     StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
-      fold = fold(_, storeDir)) { (_, batch, batchId) =>
+      fold = fold(_, storeDir, _)) { (_, batch, batchId) =>
       val sp = batch.select(col("doc_id"), split(col("text"), " ").as("ws"))
       verdictRows(TextOps.d7bVerdictsInPlace(sp, lit(true), bench),
           StoreSink.batchIdCol(batchId).as("b"))
@@ -61,8 +61,9 @@ object StreamDecontam {
     * machinery under the store's maintenance lease; crash leaves
     * overlap that [[serve]]'s distinct absorbs.
     */
-  def fold(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldSidecars(spark, storeDir, "verdicts")
+  def fold(spark: SparkSession, storeDir: String,
+      at: StoreSink.FoldAt = StoreSink.Alone): Int =
+    StreamDedup.foldSidecars(spark, storeDir, "verdicts", at = at)
 
   /** The stored verdicts across all ingested batches (per-batch dirs
     * plus [[fold]] compactions; overlap collapsed by distinct on the

@@ -77,23 +77,37 @@ object StreamDedup {
   private[graft] def withStoreRetry[T](body: => T): T = {
     val attempts = 3
     var last: Throwable = null
-    for (_ <- 1 to attempts) {
+    for (attempt <- 1 to attempts) {
       try return body
-      catch { case e: Throwable if isMissingFileError(e) => last = e }
+      catch {
+        case e: Throwable if isMissingFileError(e) =>
+          last = e
+          if (attempt < attempts) retries.incrementAndGet()
+      }
     }
     throw last
   }
+
+  private val retries = new java.util.concurrent.atomic.AtomicLong
+
+  /** Screen re-runs [[withStoreRetry]] has made in this JVM: each one is a
+    * store part deleted under a listed snapshot.
+    */
+  def storeReadRetries: Long = retries.get
 
   /** True on the batches where a `foldEvery`-cadence maintenance pass
     * should run — shared by every store's in-trigger fold hook. Fires
     * on batchId ≡ foldEvery−1 (mod foldEvery) so the FIRST fold waits
     * until foldEvery deltas exist; 0 disables. Running the fold inside
-    * foreachBatch (after the batch's own writes) is safe by
-    * construction: the fold excludes the newest delta, the next batch
-    * only starts after this trigger returns (no same-query race), and
-    * a concurrent OTHER maintainer is serialized by the lease. A
-    * replayed batch re-runs the fold too — idempotent (nothing new to
-    * fold; the resume path reclaims covered dirs).
+    * foreachBatch, beside the batch's own ingest (`StoreSink.FoldAt`),
+    * is safe by construction: the fold takes only parts below the
+    * batch, so it never reads or deletes a dir the ingest writes; it
+    * deletes nothing until the ingest has returned, so the ingest's
+    * screen never loses a part it listed; the next batch only starts
+    * after this trigger returns (no same-query race); and a concurrent
+    * OTHER maintainer is serialized by the lease. A replayed batch
+    * re-runs the fold too — idempotent (nothing new to fold; the resume
+    * path reclaims covered dirs).
     */
   private[streaming] def foldDue(foldEvery: Int, batchId: Long): Boolean =
     foldEvery > 0 && batchId % foldEvery == foldEvery - 1
@@ -112,20 +126,22 @@ object StreamDedup {
       trigger: Trigger = Trigger.ProcessingTime(0),
       foldEvery: Int = 0): StreamingQuery =
     StoreSink.start(docs, s"$checkpointDir/dedup", Seq(storeDir), trigger, foldEvery,
-      foldDeltas(_, storeDir)) { (spark, batch, batchId) =>
+      (spark, at) => foldDeltas(spark, storeDir, at = at)) { (spark, batch, batchId) =>
       // the screen READ races a concurrent fold's post-commit input
       // delete (the fold is committed before its inputs go, so a
       // fresh listing always sees a superset) — retry with a fresh
       // snapshot instead of letting the FileNotFound kill the stream
-      withStoreRetry(writeDelta(screen(spark, batch, batchId, storeDir), batchId, storeDir))
+      withStoreRetry(writeDelta(
+        screen(batch, storeBefore(spark, storeDir, boundExclusive = batchId)), batchId, storeDir))
     }
 
   /** One micro-batch of the exact screen, pure (no writes): `docs`
     * (doc_id, text, ...) with two columns added — `h`, the text's md5,
     * and `exact_ok`, true on the rows the store admits: the in-batch
-    * winner of each hash (min doc_id, replay-deterministic) whose hash no
-    * part below the batch holds. Only rows where `on` holds are screened;
-    * the others get a NULL `h` and `exact_ok` false.
+    * winner of each hash (min doc_id, replay-deterministic) whose hash
+    * `store` (the (h, doc_id) parts below the batch, [[storeBefore]])
+    * does not hold. Only rows where `on` holds are screened; the others
+    * get a NULL `h` and `exact_ok` false.
     *
     * The store is probed in its own scan tasks against the batch's
     * hashes (broadcast: the batch is the small side), so only the store
@@ -134,10 +150,10 @@ object StreamDedup {
     * and the result stays in that partition, so what follows needs no
     * shuffle. StreamPrep composes the screen into its one per-batch plan.
     */
-  private[streaming] def screen(spark: SparkSession, docs: DataFrame, batchId: Long,
-      storeDir: String, on: Column = lit(true)): DataFrame = {
+  private[streaming] def screen(docs: DataFrame, store: DataFrame,
+      on: Column = lit(true)): DataFrame = {
     val hashed = docs.withColumn("h", when(on, md5(col("text"))))
-    val hits = storeBefore(spark, storeDir, boundExclusive = batchId).select("h")
+    val hits = store.select("h")
       .join(broadcast(hashed.select("h").filter(col("h").isNotNull)), Seq("h"), "left_semi")
       .repartition(1)
     val perHash = Window.partitionBy("h")
@@ -169,6 +185,8 @@ object StreamDedup {
     * would carry its id and be excluded from its own replay's screen,
     * re-admitting every previously-seen hash. Keeping the newest delta
     * out means every fold's hi is strictly below any replayable batch.
+    * Beside batch N's ingest the fold takes only parts below N, which
+    * keeps N's delta out whether or not the ingest has written it yet.
     *
     * Concurrency: the body runs under the store's MAINTENANCE LEASE
     * (VersionedStore.withMaintenanceLease — the same advisory lock
@@ -183,35 +201,37 @@ object StreamDedup {
     * construction), and readers absorb fold/delta overlap by
     * distinct(). The ingest's per-batch screen READ, though, can race
     * a fold's post-commit input delete — its lazily resolved store
-    * snapshot lists deltas the fold then removes mid-action; the
-    * ingest handles that by re-listing and retrying
-    * ([[withStoreRetry]]), sound because the fold commits before any
-    * delete (the retried screen sees a superset, never fewer hashes).
+    * snapshot lists deltas the fold then removes mid-action. The fold
+    * of its own batch deletes only after the ingest has returned
+    * ([[StoreSink.FoldAt]]); against any other maintainer the ingest
+    * re-lists and retries ([[withStoreRetry]]), sound because the fold
+    * commits before any delete (the retried screen sees a superset,
+    * never fewer hashes).
     * StoreConcurrencySpec drives ingest and folds concurrently and
     * pins that neither loses a write, and pins the retry path on a
     * deterministically staged delete.
     *
     * `schema`: the family's declared schema, read under it without a
     * footer-inference job; `None` (a family that declares none) infers
-    * it from the inputs' footers.
+    * it from the inputs' footers. `at`: outside a batch, or beside a
+    * batch's ingest ([[StoreSink.FoldAt]]).
     */
   def foldDeltas(spark: SparkSession, storeDir: String,
-      schema: Option[StructType] = None): Int =
-    foldFamilies(spark, storeDir, StoreSink.Delta -> schema)
+      schema: Option[StructType] = None, at: StoreSink.FoldAt = StoreSink.Alone): Int =
+    foldFamilies(spark, storeDir, at, StoreSink.Delta -> schema)
 
   /** Fold several families of one store, in the given order, under ONE
     * acquisition of its maintenance lease — each exactly as
     * [[foldDeltas]] / [[foldSidecars]] folds it alone, each read under
-    * its declared schema (`None`: footer-inferred). Returns the number
-    * of dirs folded away.
+    * its declared schema (`None`: footer-inferred); the deletes of all
+    * of them follow the last fold's write. Returns the number of dirs
+    * folded away.
     */
   private[streaming] def foldFamilies(spark: SparkSession, storeDir: String,
-      families: (StoreSink.Family, Option[StructType])*): Int =
-    graft.sinks.VersionedStore.withMaintenanceLease(spark, storeDir) {
-      families.map { case (family, schema) =>
-        foldDeltasExclusive(spark, storeDir, family = family, schema = schema)
-      }.sum
-    }
+      at: StoreSink.FoldAt, families: (StoreSink.Family, Option[StructType])*): Int =
+    foldUnderLease(spark, storeDir, at)(families.map { case (family, schema) =>
+      foldPass(spark, storeDir, at, family, schema) _
+    }: _*)
 
   /** [[foldDeltas]] with a per-fold SHRINK step applied to the folded
     * rows — the content-aware compaction the last-writer stores
@@ -232,11 +252,10 @@ object StreamDedup {
     *  - replay safety is the fold's own (the newest delta is never an
     *    input, so a replayed batch never rewrites a folded dir).
     */
-  private[streaming] def foldDeltasWith(spark: SparkSession, storeDir: String)(
-      shrink: DataFrame => DataFrame): Int =
-    graft.sinks.VersionedStore.withMaintenanceLease(spark, storeDir) {
-      foldDeltasExclusive(spark, storeDir, shrink)
-    }
+  private[streaming] def foldDeltasWith(spark: SparkSession, storeDir: String,
+      at: StoreSink.FoldAt = StoreSink.Alone)(shrink: DataFrame => DataFrame): Int =
+    foldUnderLease(spark, storeDir, at)(
+      foldPass(spark, storeDir, at, StoreSink.Delta, None, shrink) _)
 
   /** Fold a batchId-keyed SIDECAR family (`<prefix>_b<id>` — StreamPrep's
     * manifests, the verdict, drift and matches dirs, the ledgers) into
@@ -249,26 +268,42 @@ object StreamDedup {
     * interim double-serve.
     */
   def foldSidecars(spark: SparkSession, storeDir: String, prefix: String,
-      schema: Option[StructType] = None): Int =
-    foldFamilies(spark, storeDir, StoreSink.sidecar(prefix) -> schema)
+      schema: Option[StructType] = None, at: StoreSink.FoldAt = StoreSink.Alone): Int =
+    foldFamilies(spark, storeDir, at, StoreSink.sidecar(prefix) -> schema)
 
-  private def foldDeltasExclusive(spark: SparkSession, storeDir: String,
-      shrink: DataFrame => DataFrame = identity,
-      family: StoreSink.Family = StoreSink.Delta,
-      schema: Option[StructType] = None): Int = {
-    val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (folds, deltas) = StoreSink.parts(spark, storeDir, family).partition(_.isFold)
-    // resume a crashed delete first: anything the newest fold already
-    // covers (older folds, deltas with id <= its hi) is pure overlap
-    val newest = folds.sortBy(_.id).lastOption
-    newest.foreach { f =>
-      (folds.filterNot(_ == f) ++ deltas.filter(_.id <= f.id))
-        .foreach(p => fs.delete(p.path, true))
+  /** Run fold `passes` of one store under one acquisition of its lease,
+    * then — once `at`'s ingest has returned, still under the lease —
+    * delete every part they made redundant. Returns the dirs folded.
+    */
+  private def foldUnderLease(spark: SparkSession, storeDir: String, at: StoreSink.FoldAt)(
+      passes: (() => (Int, Seq[Path]))*): Int =
+    graft.sinks.VersionedStore.withMaintenanceLease(spark, storeDir) {
+      val done = passes.map(_())
+      val fs = new Path(storeDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      at.ingested.await()
+      done.flatMap(_._2).foreach(p => fs.delete(p, true))
+      done.map(_._1).sum
     }
+
+  /** One family's fold: writes `<prefix>_fold_0_<hi>` when there is
+    * something to fold, and returns the number of dirs folded with the
+    * parts the caller deletes afterwards — the fold's inputs, and what a
+    * crashed earlier delete left behind.
+    */
+  private def foldPass(spark: SparkSession, storeDir: String, at: StoreSink.FoldAt,
+      family: StoreSink.Family, schema: Option[StructType],
+      shrink: DataFrame => DataFrame = identity)(): (Int, Seq[Path]) = {
+    val (folds, deltas) = StoreSink.parts(spark, storeDir, family,
+      at.before.getOrElse(Long.MaxValue)).partition(_.isFold)
+    // resume a crashed delete: anything the newest fold already covers
+    // (older folds, deltas with id <= its hi) is pure overlap
+    val newest = folds.sortBy(_.id).lastOption
+    val covered = newest.toSeq.flatMap(f => folds.filterNot(_ == f) ++ deltas.filter(_.id <= f.id))
     val live = deltas.filter(d => newest.forall(d.id > _.id)).sortBy(_.id)
-    val foldable = live.dropRight(1) // newest delta: possibly uncommitted
+    // outside a batch, the newest delta is possibly uncommitted
+    val foldable = if (at.before.isDefined) live else live.dropRight(1)
     val inputs = newest.toSeq ++ foldable
-    if (foldable.isEmpty || inputs.size < 2) return 0
+    if (foldable.isEmpty || inputs.size < 2) return (0, covered.map(_.path))
     // hi comes from a FOLDABLE delta, strictly above any fold's hi, so
     // the destination is never one of the inputs. Written DIRECTLY (no
     // directory rename — the store discipline): a crash mid-write leaves
@@ -280,7 +315,6 @@ object StreamDedup {
     shrink(reader.parquet(inputs.map(_.path.toString): _*).distinct())
       .coalesce(1) // hash rows are tiny; one file per fold
       .write.mode("overwrite").parquet(dst.toString)
-    inputs.foreach(p => fs.delete(p.path, true))
-    inputs.size
+    (inputs.size, (covered ++ inputs).map(_.path))
   }
 }

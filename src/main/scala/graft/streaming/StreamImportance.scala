@@ -49,7 +49,7 @@ object StreamImportance {
       checkpointDir: String, foldEvery: Int = 0): StreamingQuery = {
     require(liftArr.length == 4096, s"lift array has ${liftArr.length} buckets, want 4096")
     StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
-      fold = fold(_, storeDir)) { (_, batch, batchId) =>
+      fold = fold(_, storeDir, _)) { (_, batch, batchId) =>
       CorpusPrep.dsirScore(batch, liftArr)
         .withColumn("b", StoreSink.batchIdCol(batchId))
         .coalesce(1)
@@ -62,8 +62,9 @@ object StreamImportance {
     * maintenance lease; crash leaves overlap that [[serve]]'s distinct
     * absorbs.
     */
-  def fold(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldSidecars(spark, storeDir, "verdicts")
+  def fold(spark: SparkSession, storeDir: String,
+      at: StoreSink.FoldAt = StoreSink.Alone): Int =
+    StreamDedup.foldSidecars(spark, storeDir, "verdicts", at = at)
 
   /** The stored per-doc verdicts across all ingested batches —
     * (doc_id, source, n_bigrams, mean_lift_ppm, selected), the same

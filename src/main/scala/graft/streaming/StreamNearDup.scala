@@ -95,8 +95,9 @@ object StreamNearDup {
     * small-file problem at ingest) into `matches_fold_0_<hi>`. Returns
     * the number of dirs folded away.
     */
-  def fold(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldFamilies(spark, storeDir, StoreSink.Delta -> Some(sigSchema),
+  def fold(spark: SparkSession, storeDir: String,
+      at: StoreSink.FoldAt = StoreSink.Alone): Int =
+    StreamDedup.foldFamilies(spark, storeDir, at, StoreSink.Delta -> Some(sigSchema),
       StoreSink.sidecar("matches") -> Some(matchesSchema))
 
   /** Start the near-dup screen over a `(doc_id, text)` source. The
@@ -108,14 +109,15 @@ object StreamNearDup {
       trigger: Trigger = Trigger.ProcessingTime(0),
       foldEvery: Int = 0): StreamingQuery =
     StoreSink.start(docs, s"$checkpointDir/neardup", Seq(storeDir), trigger, foldEvery,
-      fold(_, storeDir)) { (spark, batch, batchId) =>
+      fold(_, storeDir, _)) { (spark, batch, batchId) =>
       // like StreamDedup's screen, the store READ races a concurrent
       // fold's post-commit input delete — retry with a fresh listing
       // (sound: the fold commits the same signature set before deleting
       // its inputs, and both writes are mode(overwrite)-idempotent).
       // Both writes derive from one frozen evaluation of the screen.
       StreamDedup.withStoreRetry {
-        val screened = screen(spark, batch, batchId, storeDir, threshold).localCheckpoint()
+        val screened = screen(batch, sigStore(spark, storeDir, boundExclusive = batchId),
+          threshold).localCheckpoint()
         writeMatches(screened, batchId, storeDir)
         writeDelta(screened, batchId, storeDir)
       }
@@ -126,8 +128,9 @@ object StreamNearDup {
     * MinHash signature as an array (NULL when it is not screened or has
     * no shingle); `near_ok`, true on the rows the store admits; and
     * `matches`, the rejection provenance (matched_id, est_jaccard, stage)
-    * of a rejected row, NULL otherwise. Only rows where `on` holds are
-    * screened. Stage 'batch': the doc near-dups a smaller-id batch-mate
+    * of a rejected row, NULL otherwise. `store` is the admitted
+    * signatures below the batch ([[sigStore]]). Only rows where `on`
+    * holds are screened. Stage 'batch': the doc near-dups a smaller-id batch-mate
     * (deterministic on replay); stage 'store': a survivor of that
     * near-dups admitted docs of strictly earlier batches (replay-safe).
     *
@@ -141,8 +144,8 @@ object StreamNearDup {
     * collisions per bucket — and its pairs fold back into the doc's row.
     * Same signatures, bands and estimate as the batch detector (MinHash).
     */
-  private[streaming] def screen(spark: SparkSession, docs: DataFrame, batchId: Long,
-      storeDir: String, threshold: Double, on: Column = lit(true)): DataFrame = {
+  private[streaming] def screen(docs: DataFrame, store: DataFrame, threshold: Double,
+      on: Column = lit(true)): DataFrame = {
     val signed = docs.withColumn("toks", split(col("text"), " "))
       .withColumn("hps", when(on, MinHash.shingleHashes(TextOps.shingleArray)))
       .withColumn("sig", MinHash.signatureOf(col("hps")))
@@ -151,8 +154,7 @@ object StreamNearDup {
     def banded(df: DataFrame): DataFrame = df.select(col("*"),
       posexplode_outer(MinHash.bandValuesOf(col("sig"))).as(Seq("band", "band_val")))
     val buckets = banded(signed.filter(col("sig").isNotNull)).select("band", "band_val")
-    val stored = banded(sigStore(spark, storeDir, boundExclusive = batchId)
-        .select(col("doc_id"),
+    val stored = banded(store.select(col("doc_id"),
           array((0 until MinHash.K).map(i => col(s"m$i")): _*).as("sig")))
       .join(broadcast(buckets), Seq("band", "band_val"), "left_semi")
       .withColumn("stored", lit(true))

@@ -73,9 +73,10 @@ object StreamNovelty {
   /** Compact the seen-hash deltas and the novelty sidecars — one
     * maintenance pass, StreamDedup's machinery for both families.
     */
-  def foldSeen(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldDeltas(spark, storeDir) +
-      StreamDedup.foldSidecars(spark, storeDir, "novelty")
+  def foldSeen(spark: SparkSession, storeDir: String,
+      at: StoreSink.FoldAt = StoreSink.Alone): Int =
+    StreamDedup.foldDeltas(spark, storeDir, at = at) +
+      StreamDedup.foldSidecars(spark, storeDir, "novelty", at = at)
 
   /** Start the novelty monitor over a `(doc_id, text)` source. The
     * STORE is the output: [[noveltyLog]] for the per-cohort verdicts,
@@ -85,7 +86,7 @@ object StreamNovelty {
       trigger: Trigger = Trigger.ProcessingTime(0),
       foldEvery: Int = 0): StreamingQuery =
     StoreSink.start(docs, s"$checkpointDir/novelty", Seq(storeDir), trigger, foldEvery,
-      foldSeen(_, storeDir)) { (spark, batch, batchId) =>
+      foldSeen(_, storeDir, _)) { (spark, batch, batchId) =>
       // one window pass feeds the anti-join and both counters
       val bh = batchWindowHashes(batch).localCheckpoint()
       val nDocs = batch.select("doc_id").distinct().count()

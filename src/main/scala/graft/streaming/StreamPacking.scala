@@ -49,7 +49,7 @@ object StreamPacking {
   def start(source: DataFrame, storeDir: String, checkpointDir: String,
       foldEvery: Int = 0): StreamingQuery =
     StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
-      fold = fold(_, storeDir)) { (_, batch, batchId) =>
+      fold = fold(_, storeDir, _)) { (_, batch, batchId) =>
       batch.select(col("doc_id"),
           size(expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
             .cast("long").as("n_tokens"))
@@ -63,8 +63,9 @@ object StreamPacking {
     * dir — StreamDedup's fold machinery under the store's maintenance
     * lease; crash leaves overlap that the ledger's distinct absorbs.
     */
-  def fold(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldSidecars(spark, storeDir, "toks")
+  def fold(spark: SparkSession, storeDir: String,
+      at: StoreSink.FoldAt = StoreSink.Alone): Int =
+    StreamDedup.foldSidecars(spark, storeDir, "toks", at = at)
 
   /** The accumulated (doc_id, n_tokens, b) ledger across all ingested
     * batches — replay overlap collapsed, genuine re-sends kept per

@@ -83,9 +83,10 @@ object StreamPhash {
   /** Compact the keeper deltas and the media sidecars — one maintenance
     * pass, StreamDedup's machinery for both families.
     */
-  def foldKeepers(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldDeltas(spark, storeDir) +
-      StreamDedup.foldSidecars(spark, storeDir, "media")
+  def foldKeepers(spark: SparkSession, storeDir: String,
+      at: StoreSink.FoldAt = StoreSink.Alone): Int =
+    StreamDedup.foldDeltas(spark, storeDir, at = at) +
+      StreamDedup.foldSidecars(spark, storeDir, "media", at = at)
 
   /** Start the image-dedup screen over a `(doc_id, media)` source. The
     * STORE is the output: [[keepers]] for the canonical image set,
@@ -95,7 +96,7 @@ object StreamPhash {
       trigger: Trigger = Trigger.ProcessingTime(0),
       foldEvery: Int = 0): StreamingQuery =
     StoreSink.start(media, s"$checkpointDir/phash", Seq(storeDir), trigger, foldEvery,
-      foldKeepers(_, storeDir)) { (spark, batch, batchId) =>
+      foldKeepers(_, storeDir, _)) { (spark, batch, batchId) =>
       // one decode pass feeds the winner window, the screen, and
       // both counters
       val hashes = batchHashes(batch).localCheckpoint()

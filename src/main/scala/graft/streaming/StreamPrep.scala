@@ -49,6 +49,15 @@ import graft.operators.TextOps
   * every family row-identically). The freeze reads the two screen
   * stores, so it runs under StreamDedup's store-read retry.
   *
+  * One analyzed plan per run: the per-doc plan is ~50 Dataset
+  * operations, and the Dataset API analyzes the plan again at each, so
+  * building it per batch cost more driver time than most of the
+  * batch's jobs. [[start]] builds it once, over stand-ins for the batch
+  * and the `exact/` and `sigs/` stores ([[PlanTemplate]]), and each
+  * batch binds its rows and its freshly listed store parts into that
+  * plan and analyzes it once. A fold batch runs its fold beside its
+  * ingest ([[StoreSink.FoldAt]]).
+  *
   * Store layout under `storeDir`: `exact/` and `sigs/` are the two
   * screens' ordinary delta stores, both claimed by the chain's
   * checkpoint; `decontam/verdicts_b<id>` and `manifest_b<id>` are pure
@@ -105,14 +114,16 @@ object StreamPrep {
     * `sigs/` deltas and matches share that store's one lease, in that
     * order. Returns the number of dirs folded away.
     */
-  def fold(spark: SparkSession, storeDir: String): Int = {
+  def fold(spark: SparkSession, storeDir: String,
+      at: StoreSink.FoldAt = StoreSink.Alone): Int = {
     val folded = new java.util.concurrent.atomic.AtomicInteger
     def step(pass: => Int): () => Unit = () => { folded.addAndGet(pass); () }
     StoreSink.concurrently(spark)(
-      step(StreamDedup.foldDeltas(spark, s"$storeDir/exact", Some(StreamDedup.StoreSchema))),
-      step(StreamNearDup.fold(spark, s"$storeDir/sigs")),
-      step(StreamDedup.foldSidecars(spark, s"$storeDir/decontam", "verdicts", Some(verdictSchema))),
-      step(StreamDedup.foldSidecars(spark, storeDir, "manifest", Some(manifestSchema))))
+      step(StreamDedup.foldDeltas(spark, s"$storeDir/exact", Some(StreamDedup.StoreSchema), at)),
+      step(StreamNearDup.fold(spark, s"$storeDir/sigs", at)),
+      step(StreamDedup.foldSidecars(spark, s"$storeDir/decontam", "verdicts",
+        Some(verdictSchema), at)),
+      step(StreamDedup.foldSidecars(spark, storeDir, "manifest", Some(manifestSchema), at)))
     folded.get
   }
 
@@ -136,12 +147,28 @@ object StreamPrep {
       foldEvery: Int = 0): StreamingQuery = {
     // the decontamination fixture with its per-item totals, built once
     val bench = TextOps.d7bBenchWithTotals(benchWindows).localCheckpoint()
+    val template = screenTemplate(docs.sparkSession, bench, threshold)
     StoreSink.start(docs, s"$checkpointDir/prep", Seq(s"$storeDir/exact", s"$storeDir/sigs"),
-      trigger, foldEvery, fold(_, storeDir)) { (spark, batch, batchId) =>
-      val frozen = StreamDedup.withStoreRetry(
-        screened(spark, batch, batchId, bench, storeDir, threshold).localCheckpoint())
+      trigger, foldEvery, fold(_, storeDir, _)) { (spark, batch, batchId) =>
+      val frozen = StreamDedup.withStoreRetry(template.bind(batch.select("doc_id", "text"),
+        StreamDedup.storeBefore(spark, s"$storeDir/exact", boundExclusive = batchId),
+        StreamNearDup.sigStore(spark, s"$storeDir/sigs", boundExclusive = batchId))
+        .localCheckpoint())
       write(frozen.coalesce(1), batchId, storeDir)
     }
+  }
+
+  /** [[screened]] over stand-ins for its three inputs, in this order:
+    * the batch's (doc_id, text) rows, the exact store and the signature
+    * store, each read below the batch.
+    */
+  private[graft] def screenTemplate(spark: SparkSession, bench: DataFrame,
+      threshold: Double): PlanTemplate = {
+    val standIns = Seq(
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))),
+      StreamDedup.StoreSchema, StreamNearDup.sigSchema).map(PlanTemplate.standIn(spark, _))
+    new PlanTemplate(screened(standIns(0), standIns(1), standIns(2), bench, threshold),
+      standIns: _*)
   }
 
   /** The batch's one per-doc plan: every incoming row with its
@@ -149,15 +176,14 @@ object StreamPrep {
     * exact screen's `h`/`exact_ok`, the near-dup screen's
     * `sig`/`near_ok`/`matches` and its decontamination `verdicts`. Each
     * screen sees only the survivors of the one before it, and each
-    * annotates the rows in place.
+    * annotates the rows in place. `exactStore` and `sigs` are the two screens'
+    * stores below the batch.
     */
-  private def screened(spark: SparkSession, batch: DataFrame, batchId: Long,
-      bench: DataFrame, storeDir: String, threshold: Double): DataFrame = {
+  private[graft] def screened(batch: DataFrame, exactStore: DataFrame, sigs: DataFrame,
+      bench: DataFrame, threshold: Double): DataFrame = {
     val scored = TextOps.qualityScored(batch.select("doc_id", "text"))
-    val exact = StreamDedup.screen(spark, scored, batchId, s"$storeDir/exact",
-      on = col("quality") >= 0.5)
-    val near = StreamNearDup.screen(spark, exact, batchId, s"$storeDir/sigs", threshold,
-      on = col("exact_ok"))
+    val exact = StreamDedup.screen(scored, exactStore, on = col("quality") >= 0.5)
+    val near = StreamNearDup.screen(exact, sigs, threshold, on = col("exact_ok"))
     TextOps.d7bVerdictsInPlace(near.withColumn("ws", split(col("text"), " ")),
         col("near_ok"), bench)
       .withColumn("stage",

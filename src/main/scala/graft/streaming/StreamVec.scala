@@ -228,8 +228,9 @@ object StreamVec {
     * `StreamDedup.foldDeltas` remains valid for this store — it just
     * reclaims no superseded rows.
     */
-  def foldCodes(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldDeltasWith(spark, storeDir) { df =>
+  def foldCodes(spark: SparkSession, storeDir: String,
+      at: StoreSink.FoldAt = StoreSink.Alone): Int =
+    StreamDedup.foldDeltasWith(spark, storeDir, at) { df =>
       import org.apache.spark.sql.expressions.Window
       df.withColumn("__bmax", max("b").over(Window.partitionBy("vec_id")))
         .filter(col("b") === col("__bmax"))
@@ -239,7 +240,7 @@ object StreamVec {
       // compact them in the same maintenance pass (one dir per batch
       // forever otherwise); rows carry b, so the fold's distinct can
       // only collapse replay/crash overlap
-      StreamDedup.foldSidecars(spark, storeDir, "drift")
+      StreamDedup.foldSidecars(spark, storeDir, "drift", at = at)
 
   // ---------------------------------------------------------------
   // Codebook rotation — closing the drift loop. The gate above FLAGS;
@@ -442,7 +443,7 @@ object StreamVec {
       trigger: Trigger = Trigger.ProcessingTime(0),
       foldEvery: Int = 0): StreamingQuery = {
     val q = StoreSink.start(vecs, s"$checkpointDir/index", Seq(storeDir), trigger,
-      foldEvery, foldCodes(_, storeDir)) { (spark, batch, batchId) =>
+      foldEvery, foldCodes(_, storeDir, _)) { (spark, batch, batchId) =>
       graft.functions.NativeFunctions.register(spark)
       // one encode pass feeds both the delta and the drift verdict;
       // persist so the two actions don't re-run the argmin

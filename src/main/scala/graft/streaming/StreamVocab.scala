@@ -47,7 +47,7 @@ object StreamVocab {
   def start(source: DataFrame, storeDir: String, checkpointDir: String,
       foldEvery: Int = 0): StreamingQuery =
     StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
-      fold = fold(_, storeDir)) { (_, batch, batchId) =>
+      fold = fold(_, storeDir, _)) { (_, batch, batchId) =>
       CorpusPrep.unigramWordCounts(batch)
         .withColumn("b", StoreSink.batchIdCol(batchId))
         .coalesce(1)
@@ -58,8 +58,9 @@ object StreamVocab {
     * — StreamDedup's fold machinery under the store's maintenance
     * lease; crash leaves overlap that the ledger's distinct absorbs.
     */
-  def fold(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldSidecars(spark, storeDir, "wc")
+  def fold(spark: SparkSession, storeDir: String,
+      at: StoreSink.FoldAt = StoreSink.Alone): Int =
+    StreamDedup.foldSidecars(spark, storeDir, "wc", at = at)
 
   /** The accumulated (word, freq, b) delta ledger across all ingested
     * batches — replay overlap collapsed, genuine re-sends kept per

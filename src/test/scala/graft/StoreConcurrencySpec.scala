@@ -514,4 +514,92 @@ class StoreConcurrencySpec extends SparkSpec {
     assert(fs.exists(commit), "the restart did not replay batch 5")
     assert(parts(store) == before, "the replayed fold batch changed a family")
   }
+
+  test("a fold beside an ingest whose screen lists its inputs deletes them only after the ingest: the parts of the fold run alone, no retry, no lease left") {
+    import java.util.concurrent.CountDownLatch
+    import org.apache.hadoop.fs.FileUtil
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.operators.TextOps
+    import graft.streaming.{StoreSink, StreamDedup, StreamNearDup, StreamPrep}
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    val corpus = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1).toSeq
+    val benchTokens = corpus.head._2.split(" ").take(40).toSeq
+    // batch k: 8 corpus docs, a copy of the previous batch's first doc
+    // and a doc that carries the bench item
+    def batch(k: Int): Seq[(Long, String)] = corpus.slice(1 + 8 * k, 9 + 8 * k) ++ Seq(
+      (1000L + 10 * k) -> corpus(1 + 8 * math.max(k - 1, 0))._2,
+      (1001L + 10 * k) -> (benchTokens ++ corpus(400 + k)._2.split(" ")).mkString(" "))
+    val bw = TextOps.d7bBenchWindows(Seq((1L, benchTokens)).toDF("bench_id", "bws"))
+      .localCheckpoint()
+    val store = tmpDir("graft-foldbeside") + "/store"
+    val in = MemoryStream[(Long, String)]
+    val q = StreamPrep.start(in.toDF().toDF("doc_id", "text"), bw, store,
+      tmpDir("graft-foldbeside-cp"))
+    try (0 until 4).foreach { k => in.addData(batch(k): _*); q.processAllAvailable() }
+    finally q.stop()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(store).getFileSystem(conf)
+    val subs = Seq("", "/exact", "/sigs", "/decontam")
+    def parts(root: String): Map[String, Seq[String]] = subs.flatMap { sub =>
+      fs.listStatus(new Path(root + sub)).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.matches(".*(_b|fold_0_)\\d+"))
+        .map(st => s"$sub/${st.getPath.getName}" ->
+          spark.read.parquet(st.getPath.toString).collect().map(_.toString).sorted.toSeq)
+    }.toMap
+
+    // batch 4's screen over a store: it lists the parts below batch 4
+    val template = StreamPrep.screenTemplate(spark,
+      TextOps.d7bBenchWithTotals(bw).localCheckpoint(), 0.5)
+    def screen(root: String): DataFrame = template.bind(batch(4).toDF("doc_id", "text"),
+      StreamDedup.storeBefore(spark, s"$root/exact", boundExclusive = 4),
+      StreamNearDup.sigStore(spark, s"$root/sigs", boundExclusive = 4))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+
+    // the reference: the same fold, run alone on a copy of the store
+    val alone = tmpDir("graft-foldbeside-alone") + "/store"
+    assert(FileUtil.copy(fs, new Path(store), fs, new Path(alone), false, conf))
+    val aloneRows = rows(screen(alone))
+    assert(StreamPrep.fold(spark, alone, StoreSink.FoldAt(Some(4L), new CountDownLatch(0))) ==
+      5 * 4, "each family folds its four parts below batch 4")
+
+    // foldEvery = 5: batch 4 folds beside its ingest. Batches 0-3 of this
+    // sink only advance its batch id; batch 4's ingest lists the parts,
+    // waits until the fold has committed all five fold dirs and for up
+    // to 1.5 s more, and only then reads what it listed
+    val folds = Seq("/exact/fold_0_3", "/sigs/fold_0_3", "/sigs/matches_fold_0_3",
+      "/decontam/verdicts_fold_0_3", "/manifest_fold_0_3").map(p => new Path(store + p, "_SUCCESS"))
+    val input = new Path(s"$store/exact/delta_b0")
+    def await(cond: => Boolean, ms: Long): Boolean = {
+      val deadline = System.currentTimeMillis() + ms
+      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      cond
+    }
+    val seen = new AtomicReference[Seq[String]]
+    var inputsHeld = true
+    val retries = StreamDedup.storeReadRetries
+    val tick = MemoryStream[Int]
+    val sink = StoreSink.start(tick.toDF(), tmpDir("graft-foldbeside-sink"), Seq.empty,
+      foldEvery = 5, fold = StreamPrep.fold(_, store, _)) { (_, _, batchId) =>
+      if (batchId == 4) StreamDedup.withStoreRetry {
+        val listed = screen(store)
+        assert(await(folds.forall(fs.exists), 60000), "the fold did not commit")
+        inputsHeld &&= !await(!fs.exists(input), 1500)
+        seen.set(rows(listed))
+      }
+    }
+    try (0 until 5).foreach { k => tick.addData(k); sink.processAllAvailable() }
+    finally sink.stop()
+
+    assert(inputsHeld, "the fold deleted an input its ingest had listed before the ingest returned")
+    assert(StreamDedup.storeReadRetries == retries,
+      s"${StreamDedup.storeReadRetries - retries} store-read retries")
+    assert(seen.get == aloneRows, "the ingest screened other rows beside the fold")
+    assert(parts(store) == parts(alone), "the fold beside the ingest committed other parts or rows")
+    assert(!fs.exists(input), "the fold's inputs outlived the batch")
+    assert(subs.forall(sub => !fs.exists(new Path(s"$store$sub/.MAINT_LEASE"))),
+      "a lease outlived the fold")
+  }
 }

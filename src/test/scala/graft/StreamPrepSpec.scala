@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextOps
-import graft.streaming.{StreamDedup, StreamNearDup, StreamPrep}
+import graft.streaming.{PlanTemplate, StreamDedup, StreamNearDup, StreamPrep}
 
 /** What one StreamPrep micro-batch costs, and the replay contract its
   * one frozen evaluation rests on.
@@ -74,6 +74,7 @@ class StreamPrepSpec extends SparkSpec {
       foldEvery = 2)
     val listener = new JobsPerBatch(q.id.toString)
     spark.sparkContext.addSparkListener(listener)
+    val retriesBefore = StreamDedup.storeReadRetries
     val compiled = try {
       (0 until 4).map { k =>
         val before = compiles
@@ -100,7 +101,63 @@ class StreamPrepSpec extends SparkSpec {
     // per family, none of them foldable (the newest never is)
     assert(jobs == Seq(9, 11, 11, 21), s"jobs per batch $jobs, expected 9, 11, 11, 21")
     assert(compiled(2) == 0, s"steady ingest batch 2 compiled ${compiled(2)} classes")
+    // the fold of batches 1 and 3 runs beside their ingest; its deletes
+    // wait for the ingest, so no screen re-lists a store
+    assert(StreamDedup.storeReadRetries == retriesBefore,
+      s"${StreamDedup.storeReadRetries - retriesBefore} store-read retries")
     assert(StreamPrep.manifest(spark, store).count() == 4 * docs(0).size)
+  }
+
+  test("the run's one analyzed template binds to the same plan and rows as a fresh build") {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val corpus = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1).toSeq
+    // each batch: 10 corpus docs, copies of a doc of the previous batch
+    // and of a batch-mate, and a doc carrying the bench item
+    def batch(k: Int): Seq[(Long, String)] = {
+      val own = corpus.slice(10 * k, 10 * k + 10)
+      val prev = corpus(10 * math.max(k - 1, 0))._2
+      own ++ Seq((5000L + 10 * k) -> prev, (5001L + 10 * k) -> s"$prev and more",
+        (5002L + 10 * k) -> own(1)._2,
+        (5003L + 10 * k) -> (benchTokens ++ corpus(300 + k)._2.split(" ")).mkString(" "))
+    }
+    val bench = TextOps.d7bBenchWithTotals(benchWindows).localCheckpoint()
+    val template = StreamPrep.screenTemplate(spark, bench, 0.5)
+    val store = tmpDir("graft-preptemplate") + "/store"
+    val cp = tmpDir("graft-preptemplate-cp")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def check(k: Int): Unit = {
+      val inputs = Seq(batch(k).toDF("doc_id", "text"),
+        StreamDedup.storeBefore(spark, s"$store/exact", boundExclusive = k),
+        StreamNearDup.sigStore(spark, s"$store/sigs", boundExclusive = k))
+      val fresh = StreamPrep.screened(inputs(0), inputs(1), inputs(2), bench, 0.5)
+      val bound = template.bind(inputs: _*)
+      assert(bound.queryExecution.optimizedPlan.canonicalized ==
+        fresh.queryExecution.optimizedPlan.canonicalized,
+        s"batch $k: the bound plan\n${bound.queryExecution.optimizedPlan}\n" +
+          s"differs from the fresh one\n${fresh.queryExecution.optimizedPlan}")
+      assert(rows(bound) == rows(fresh), s"batch $k: rows differ")
+    }
+    check(0) // empty stores
+    val in = MemoryStream[(Long, String)]
+    val q = StreamPrep.start(in.toDF().toDF("doc_id", "text"), benchWindows, store, cp)
+    try (0 until 2).foreach { k => in.addData(batch(k): _*); q.processAllAvailable() }
+    finally q.stop()
+    assert(StreamDedup.storeBefore(spark, s"$store/exact").count() > 0)
+    check(2) // both stores hold two batches
+
+    // the stand-ins are nullable, so frames bind whether or not their
+    // columns are (the batches above bind a non-nullable doc_id)
+    val standIn = PlanTemplate.standIn(spark, spark.range(1).schema)
+    assert(spark.range(1).schema.forall(!_.nullable) && standIn.schema.forall(_.nullable))
+    // a frame whose column names or types differ from the stand-in's fails
+    val store0 = Seq(StreamDedup.storeBefore(spark, s"$store/exact"),
+      StreamNearDup.sigStore(spark, s"$store/sigs"))
+    for (wrong <- Seq(Seq((1, "a")).toDF("doc_id", "text"), Seq((1L, "a")).toDF("id", "text"))) {
+      val e = intercept[IllegalArgumentException](template.bind(wrong +: store0: _*))
+      assert(e.getMessage.contains("cannot stand in"), e.getMessage)
+    }
   }
 
   test("a replayed batch rewrites every family row-identically") {

@@ -80,6 +80,8 @@ class StreamingSpec extends SparkSpec {
     val compiles = "(?m)^graft_codegen_compiles_total (\\d+)$".r
       .findFirstMatchIn(text).map(_.group(1).toLong)
     assert(compiles.exists(_ > 0), s"no codegen compile count in:\n$text")
+    assert("(?m)^graft_store_read_retries_total \\d+$".r.findFirstIn(text).nonEmpty,
+      s"no store-read retry count in:\n$text")
     // every non-comment line parses as `name{labels} value`
     text.linesIterator.filterNot(l => l.startsWith("#") || l.isEmpty).foreach { l =>
       assert(l.matches("""[a-z_]+(\{[^}]*\})? (-?[0-9.E+-]+|NaN)"""), s"bad line: $l")
