@@ -45,8 +45,8 @@ import org.apache.spark.sql.functions._
   *    the owning stream — a tombstone row (NULL embedding for
   *    `StreamVec`; an empty-tokenizing reissue for the postings
   *    ingests) stops the key serving at that trigger, and the
-  *    last-writer-aware compaction (`StreamVec.foldCodes`,
-  *    `StreamPostings.foldPostings`, `StreamPosPostings.foldPostings`)
+  *    last-writer-aware compaction (`StoreSink.fold` of those stores,
+  *    whose families declare the last-writer shrink)
   *    physically removes the payload rows once the tombstone's delta
   *    is foldable (one committed batch later). Same
   *    eventual-with-deadline contract as the retention note above;

@@ -20,28 +20,28 @@ import org.apache.spark.sql.types.StructType
   *    of empty-tokenizing reissues are dropped after that filter.
   *
   * Stores differ only in their row payload (tf/dl vs position arrays),
-  * which is exactly the `schema` parameter.
+  * which is exactly the `schema` of their [[family]].
   */
 private[streaming] object DeltaPostingsStore {
 
-  /** Last-writer shrink for the posting stores' content-aware fold
-    * (`StreamDedup.foldDeltasWith`): keep only each doc's max-b rows
-    * among the fold's inputs — physically dropping superseded reissue
+  /** Keep only each doc's max-b rows — the read filter, and the shrink
+    * of the stores' folds: a fold physically drops superseded reissue
     * postings and, for a tombstoned doc, its old payload rows (the
     * erasure path: reissue the doc with empty-tokenizing text, then
     * compact). The marker row survives when it is the doc's newest
     * input row — required by the crash contract (a leftover input dir
     * can resurrect old postings; the committed fold's marker must
-    * still beat them at read). Sound because the one excluded dir
-    * (the newest delta) always carries a strictly higher b than every
-    * input row.
+    * still beat them at read).
     */
-  def lastWriterShrink(df: DataFrame): DataFrame =
+  private def lastWriterShrink(df: DataFrame): DataFrame =
     df.withColumn("__bmax", max("b").over(Window.partitionBy("doc_id")))
       .filter(col("b") === col("__bmax"))
       .drop("__bmax")
 
-  def read(spark: SparkSession, storeDir: String, schema: StructType): DataFrame =
-    lastWriterShrink(StoreSink.read(spark, storeDir, StoreSink.Delta, schema).distinct())
+  /** A postings delta family with payload `schema`. */
+  def family(schema: StructType): StoreSink.Family = StoreSink.delta(schema, lastWriterShrink)
+
+  def read(spark: SparkSession, storeDir: String, family: StoreSink.Family): DataFrame =
+    lastWriterShrink(StoreSink.read(spark, storeDir, family).distinct())
       .filter(col("term") =!= "")
 }

@@ -40,11 +40,17 @@ import scala.util.matching.Regex
   *    write that crashed during job commit leaves a dir without it (a
   *    partial fold could hold a subset of its inputs); such dirs are
   *    invisible to readers and folds, and the next fold reclaims them.
-  *  - FOLD CADENCE. With `foldEvery` > 0 the module's fold runs inside
-  *    the trigger of every batch N where `StreamDedup.foldDue` fires,
-  *    beside N's ingest ([[FoldAt]]). A fold unions the committed parts
-  *    of a family below N (never N's own dirs, the one batch that can
-  *    still replay) into `<prefix>_fold_0_<hi>` under the store's
+  *  - FAMILIES. A store is its dir and the families it declares
+  *    ([[Store]]), one [[Family]] per part family: its name prefix, the
+  *    schema its rows are read and folded under, and, for a last-writer
+  *    store, the shrink its folds apply. Readers ([[read]]), the fold
+  *    ([[fold]]) and the ownership claim ([[start]]) all take that one
+  *    declaration, so no module states its fold policy itself.
+  *  - FOLD CADENCE. With `foldEvery` > 0 every declared family folds
+  *    inside the trigger of every batch N where `StreamDedup.foldDue`
+  *    fires, beside N's ingest ([[FoldAt]]). A fold unions the committed
+  *    parts of a family below N (never N's own dirs, the one batch that
+  *    can still replay) into `<prefix>_fold_0_<hi>` under the store's
   *    maintenance lease, and writes it before deleting its inputs: a
   *    crash leaves overlap, never loss, and readers absorb the overlap.
   *    Every delete waits until N's ingest has returned, so no screen of
@@ -72,13 +78,35 @@ private[graft] object StoreSink {
     * its own prefix, so families sharing a store dir never collide: the
     * main family is `delta_b<id>` / `fold_0_<hi>`, a sidecar family is
     * `<prefix>_b<id>` / `<prefix>_fold_0_<hi>`. Names match in full.
+    *
+    * `schema`: the rows' declared schema. [[read]] and [[fold]] read
+    * under it, with no footer-inference job; a fold under it keeps only
+    * its columns. `None` infers the schema from the parts' footers.
+    *
+    * `shrink`: applied to a fold's rows before it is written — the
+    * content-aware compaction the last-writer stores (StreamVec, the
+    * postings stores) use to physically drop rows their max-b read
+    * filter already hides (superseded reissues; a tombstoned id's
+    * payload rows). Sound for any max-b filter, because the shrink sees
+    * only the fold's inputs and every part it leaves out (the newest
+    * batch dir, or the batch beside whose ingest it runs) has a
+    * strictly higher batch id than every input row's `b`, so it never
+    * drops a row the global max-b read would serve. Replay safety is
+    * the fold's own: a replayable batch dir is never an input.
     */
-  final case class Family(batchRe: Regex, foldRe: Regex, foldName: Long => String)
+  final case class Family(batchRe: Regex, foldRe: Regex, foldName: Long => String,
+      schema: Option[StructType] = None, shrink: DataFrame => DataFrame = identity)
 
-  val Delta: Family = Family("delta_b(\\d+)".r, "fold_0_(\\d+)".r, hi => s"fold_0_$hi")
+  /** The main family of a store, `delta_b<id>` / `fold_0_<hi>`. */
+  def delta(schema: StructType, shrink: DataFrame => DataFrame = identity): Family =
+    Family("delta_b(\\d+)".r, "fold_0_(\\d+)".r, hi => s"fold_0_$hi", Some(schema), shrink)
 
-  def sidecar(prefix: String): Family = Family(
-    s"${prefix}_b(\\d+)".r, s"${prefix}_fold_0_(\\d+)".r, hi => s"${prefix}_fold_0_$hi")
+  /** A sidecar family, `<prefix>_b<id>` / `<prefix>_fold_0_<hi>`. */
+  def sidecar(prefix: String, schema: Option[StructType] = None): Family = Family(
+    s"${prefix}_b(\\d+)".r, s"${prefix}_fold_0_(\\d+)".r, hi => s"${prefix}_fold_0_$hi", schema)
+
+  /** A store: its dir and every family written under it, in fold order. */
+  final case class Store(dir: String, families: Family*)
 
   /** Where a fold runs. [[Alone]]: outside any batch, so it leaves out
     * each family's newest batch dir (the one batch that can still
@@ -141,9 +169,10 @@ private[graft] object StoreSink {
     }
   }
 
-  /** Every family at once — what the ownership fallback must see. */
-  private val AnyFamily =
-    Family("[a-z]+_b(\\d+)".r, "(?:[a-z]+_)?fold_0_(\\d+)".r, Delta.foldName)
+  /** Every family at once — what the ownership fallback must see; it is
+    * only ever listed, never folded.
+    */
+  private val AnyFamily = Family("[a-z]+_b(\\d+)".r, "(?:[a-z]+_)?fold_0_(\\d+)".r, _ => "")
 
   /** A committed part: a batch dir (id = its batch) or a fold (id = the
     * highest batch it covers).
@@ -170,49 +199,141 @@ private[graft] object StoreSink {
   }
 
   /** The committed parts of `family` below `before`, read under the
-    * family's declared `schema`: no footer-inference job, a column an
-    * older part lacks reads as NULL, and an empty store is an
-    * empty-but-typed frame.
+    * family's declared schema: a column an older part lacks reads as
+    * NULL, and an empty store is an empty-but-typed frame. A family that
+    * declares none is footer-inferred, and an empty store fails loudly.
     */
-  def read(spark: SparkSession, storeDir: String, family: Family, schema: StructType,
-      before: Long = Long.MaxValue): DataFrame =
-    parts(spark, storeDir, family, before).map(_.path.toString) match {
-      case Seq() => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      case dirs => spark.read.schema(schema).parquet(dirs: _*)
+  def read(spark: SparkSession, storeDir: String, family: Family,
+      before: Long = Long.MaxValue): DataFrame = {
+    val dirs = parts(spark, storeDir, family, before).map(_.path)
+    if (dirs.nonEmpty) load(spark, family, dirs)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], family.schema.getOrElse(
+      throw new IllegalArgumentException(s"no committed ${family.batchRe} parts under $storeDir")))
+  }
+
+  private def load(spark: SparkSession, family: Family, dirs: Seq[Path]): DataFrame =
+    family.schema.fold(spark.read)(spark.read.schema(_)).parquet(dirs.map(_.toString): _*)
+
+  /** Compact every family of `stores` — the small-files maintenance pass
+    * (one dir per family per batch otherwise: ~2,900 a day at a 30 s
+    * trigger). Each store folds its families in declared order under
+    * ONE acquisition of its maintenance lease
+    * (`VersionedStore.withMaintenanceLease`), and distinct stores fold
+    * at the same time ([[concurrently]]). Returns the number of dirs
+    * folded away.
+    *
+    * Each family folds its committed parts into one
+    * `<prefix>_fold_0_<hi>`, read under its schema, with replay/crash
+    * overlap collapsed by distinct() and its `shrink` applied. The
+    * order is write-then-delete: the fold commits (`_SUCCESS` included)
+    * before any input is deleted, so a crash leaves overlap, never loss,
+    * and the next fold's resume path deletes what the newest fold
+    * covers. A replayed covered batch rewrites a `<prefix>_b<id>` its
+    * fold already supersedes; that resume path reclaims it too, and
+    * readers' distinct() collapses the interim double-serve.
+    *
+    * Alone, the NEWEST batch dir of a family is never folded: only the
+    * last batch can be uncommitted in the checkpoint (batch N+1 starts
+    * only after N commits), and its replay screens the parts below its
+    * id — a fold that swallowed it would carry its id and be left out
+    * of its own replay's screen, re-admitting every previously-seen
+    * row. So every fold's hi is strictly below any replayable batch.
+    * Beside batch N's ingest ([[FoldAt]]) the fold takes only parts
+    * below N, which keeps N's dirs out whether or not the ingest has
+    * written them yet.
+    *
+    * Concurrency: two UNSERIALIZED folds of one store can lose data —
+    * the loser overwrites the winner's just-committed fold dir while
+    * lazily reading inputs the winner already deleted, a fold missing
+    * rows that then masquerades as the store's history; the lease
+    * serializes them. Racing a streaming ingest's WRITES needs no lock:
+    * the ingest only creates new batch dirs (a fold snapshot either sees
+    * them or leaves them for next time), and a replay rewrites only the
+    * newest batch, never an input. An ingest's screen READ, though, can
+    * race a fold's deletes: its lazily resolved store snapshot lists
+    * parts the fold then removes mid-action. The fold of its own batch
+    * deletes only after the ingest has returned; against any other
+    * maintainer the ingest re-lists and retries
+    * (`StreamDedup.withStoreRetry`), sound because the fold commits
+    * before any delete (the retried screen sees a superset). Both are
+    * pinned by StoreConcurrencySpec.
+    */
+  def fold(spark: SparkSession, stores: Seq[Store], at: FoldAt = Alone): Int = {
+    val folded = new java.util.concurrent.atomic.AtomicInteger
+    concurrently(spark)(stores.map(s => () => { folded.addAndGet(foldStore(spark, s, at)); () }): _*)
+    folded.get
+  }
+
+  /** One store's families folded under one acquisition of its lease,
+    * then — once `at`'s ingest has returned, still under the lease —
+    * every part they made redundant deleted.
+    */
+  private def foldStore(spark: SparkSession, store: Store, at: FoldAt): Int =
+    graft.sinks.VersionedStore.withMaintenanceLease(spark, store.dir) {
+      val done = store.families.map(foldFamily(spark, store.dir, at, _))
+      val fs = new Path(store.dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      at.ingested.await()
+      done.flatMap(_._2).foreach(p => fs.delete(p, true))
+      done.map(_._1).sum
     }
 
-  /** The committed parts of a family that declares no schema: footer
-    * inferred, and an empty store fails loudly.
+  /** One family's fold: writes `<prefix>_fold_0_<hi>` when there is
+    * something to fold, and returns the number of dirs folded with the
+    * parts the caller deletes afterwards — the fold's inputs, and what a
+    * crashed earlier delete left behind.
     */
-  def readInferred(spark: SparkSession, storeDir: String, family: Family): DataFrame = {
-    val dirs = parts(spark, storeDir, family).map(_.path.toString)
-    require(dirs.nonEmpty, s"no committed ${family.batchRe} parts under $storeDir")
-    spark.read.parquet(dirs: _*)
+  private def foldFamily(spark: SparkSession, storeDir: String, at: FoldAt,
+      family: Family): (Int, Seq[Path]) = {
+    val (folds, deltas) = parts(spark, storeDir, family,
+      at.before.getOrElse(Long.MaxValue)).partition(_.isFold)
+    // resume a crashed delete: anything the newest fold already covers
+    // (older folds, deltas with id <= its hi) is pure overlap
+    val newest = folds.sortBy(_.id).lastOption
+    val covered = newest.toSeq.flatMap(f => folds.filterNot(_ == f) ++ deltas.filter(_.id <= f.id))
+    val live = deltas.filter(d => newest.forall(d.id > _.id)).sortBy(_.id)
+    // outside a batch, the newest delta is possibly uncommitted
+    val foldable = if (at.before.isDefined) live else live.dropRight(1)
+    val inputs = newest.toSeq ++ foldable
+    if (foldable.isEmpty || inputs.size < 2) return (0, covered.map(_.path))
+    // hi comes from a FOLDABLE delta, strictly above any fold's hi, so
+    // the destination is never one of the inputs. Written DIRECTLY (no
+    // directory rename — the store discipline): a crash mid-write leaves
+    // an incomplete dir without _SUCCESS that `parts` ignores, and the
+    // inputs are still in place — at worst overlap, never loss.
+    val dst = new Path(storeDir, family.foldName(foldable.map(_.id).max))
+    family.shrink(load(spark, family, inputs.map(_.path)).distinct())
+      .coalesce(1) // store rows are small; one file per fold
+      .write.mode("overwrite").parquet(dst.toString)
+    (inputs.size, (covered ++ inputs).map(_.path))
   }
 
   private val QueryIdMarker = "_QUERY_ID"
+
+  /** The content of the small text file at `p`, if there is one. */
+  private def readText(spark: SparkSession, p: Path): Option[String] = {
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
+    }
+  }
 
   /** The streaming query id Spark persisted into the checkpoint's
     * `metadata` file: stable across restarts from that checkpoint and
     * different for every new one — the identity a store is keyed by.
     */
-  private def checkpointQueryId(spark: SparkSession, cpDir: String): Option[String] = {
-    val p = new Path(cpDir, "metadata")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val content =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      "\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(content).map(_.group(1))
-    }
-  }
+  private def checkpointQueryId(spark: SparkSession, cpDir: String): Option[String] =
+    readText(spark, new Path(cpDir, "metadata")).flatMap(
+      "\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(_).map(_.group(1)))
 
   /** Claim `storeDir` for the checkpoint at `cpDir`, or fail fast when a
     * different checkpoint owns it. A store without a marker (written
     * before markers existed) is refused when it holds parts of any family
-    * above `batchId` — ids a same-checkpoint run could not have left.
+    * above `batchId` — ids a same-checkpoint run could not have left. An
+    * empty marker counts as none: the marker is written to a temp file
+    * and renamed into place, so only a crash of an older writer between
+    * its create and its write can leave one.
     */
   private[streaming] def verifyStoreOwnership(spark: SparkSession, storeDir: String,
       cpDir: String, batchId: Long): Unit = {
@@ -223,11 +344,8 @@ private[graft] object StoreSink {
       throw new IllegalStateException(
         s"no streaming metadata at $cpDir — cannot establish store ownership"))
     val marker = new Path(base, QueryIdMarker)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val owner =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
+    val owner = readText(spark, marker).fold("")(_.trim)
+    if (owner.nonEmpty) {
       if (owner != qid) throw new IllegalStateException(
         s"store $storeDir belongs to streaming query $owner, but this query " +
           s"is $qid (a different checkpoint): its batch ids restart at 0, so " +
@@ -241,22 +359,20 @@ private[graft] object StoreSink {
           s"batch ${maxPart.get} while this query is at batch $batchId — it " +
           "was written by a different checkpoint. Resume from the original " +
           "checkpoint, or point at a fresh store dir.")
-      fs.mkdirs(base)
-      val out = fs.create(marker, true)
+      val tmp = new Path(base, s".$QueryIdMarker.${java.util.UUID.randomUUID()}")
+      val out = fs.create(tmp, true)
       try out.write(qid.getBytes("UTF-8")) finally out.close()
+      fs.delete(marker, false)
+      if (!fs.rename(tmp, marker)) throw new java.io.IOException(s"cannot rename $tmp to $marker")
     }
   }
 
   /** Start `source` as a sink over `stores`, checkpointed at `checkpoint`
     * and fired on `trigger`. A run's first batch verifies (or claims)
-    * every store; each batch then runs `ingest`, and, when
-    * `StreamDedup.foldDue(foldEvery, batchId)` fires (0 = never), `fold`
-    * beside it: the fold's writes overlap the ingest, its deletes wait
-    * for it ([[FoldAt]]).
+    * every store; each batch then runs [[step]].
     */
-  def start(source: DataFrame, checkpoint: String, stores: Seq[String],
-      trigger: Trigger = Trigger.ProcessingTime(0), foldEvery: Int = 0,
-      fold: (SparkSession, FoldAt) => Int = (_, _) => 0)(
+  def start(source: DataFrame, checkpoint: String, stores: Seq[Store],
+      trigger: Trigger = Trigger.ProcessingTime(0), foldEvery: Int = 0)(
       ingest: (SparkSession, DataFrame, Long) => Unit): StreamingQuery = {
     // one ownership check per run (driver-side closure state; a driver
     // restart just re-verifies once on its first batch)
@@ -268,16 +384,25 @@ private[graft] object StoreSink {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         if (!ownershipVerified) {
-          stores.foreach(verifyStoreOwnership(spark, _, checkpoint, batchId))
+          stores.foreach(s => verifyStoreOwnership(spark, s.dir, checkpoint, batchId))
           ownershipVerified = true
         }
-        if (StreamDedup.foldDue(foldEvery, batchId)) {
-          val ingested = new CountDownLatch(1)
-          concurrently(spark)(
-            () => try ingest(spark, batch, batchId) finally ingested.countDown(),
-            () => { fold(spark, FoldAt(Some(batchId), ingested)); () })
-        } else ingest(spark, batch, batchId)
+        step(spark, stores, foldEvery, batchId)(ingest(spark, batch, batchId))
       }
       .start()
   }
+
+  /** One batch of [[start]] once its stores are claimed: `ingest`, and,
+    * when `StreamDedup.foldDue(foldEvery, batchId)` fires (0 = never),
+    * the fold of every store beside it: the fold's writes overlap the
+    * ingest, its deletes wait for it ([[FoldAt]]).
+    */
+  private[graft] def step(spark: SparkSession, stores: Seq[Store], foldEvery: Int,
+      batchId: Long)(ingest: => Unit): Unit =
+    if (StreamDedup.foldDue(foldEvery, batchId)) {
+      val ingested = new CountDownLatch(1)
+      concurrently(spark)(
+        () => try ingest finally ingested.countDown(),
+        () => { fold(spark, stores, FoldAt(Some(batchId), ingested)); () })
+    } else ingest
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.operators.TextOps
 
 /** d7b's threshold-overlap decontamination run AT INGEST: every
@@ -28,6 +28,13 @@ import graft.operators.TextOps
   */
 object StreamDecontam {
 
+  private val Verdicts = StoreSink.sidecar("verdicts", Some(StructType(
+    Seq("doc_id", "bench_id", "n_item_windows", "n_present", "overlap_ppm", "b")
+      .map(StructField(_, LongType)))))
+
+  /** The verdict store under `dir`. */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Verdicts)
+
   /** Start the at-ingest screen over a stream with (doc_id, text)
     * columns. `benchWindows` is the (bench_id, h) fixture from
     * [[TextOps.d7bBenchWindows]] — bounded; its per-item window totals
@@ -36,8 +43,8 @@ object StreamDecontam {
   def start(source: DataFrame, benchWindows: DataFrame, storeDir: String,
       checkpointDir: String, foldEvery: Int = 0): StreamingQuery = {
     val bench = TextOps.d7bBenchWithTotals(benchWindows).localCheckpoint()
-    StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
-      fold = fold(_, storeDir, _)) { (_, batch, batchId) =>
+    StoreSink.start(source, checkpointDir, Seq(store(storeDir)),
+      foldEvery = foldEvery) { (_, batch, batchId) =>
       val sp = batch.select(col("doc_id"), split(col("text"), " ").as("ws"))
       verdictRows(TextOps.d7bVerdictsInPlace(sp, lit(true), bench),
           StoreSink.batchIdCol(batchId).as("b"))
@@ -55,21 +62,11 @@ object StreamDecontam {
       .select(col("doc_id"), col("r.bench_id").cast(LongType).as("bench_id"),
         col("r.n_item_windows"), col("r.n_present"), col("r.overlap_ppm"), b)
 
-  /** Compact per-batch verdict dirs into one `verdicts_fold_0_<hi>`
-    * range dir (the dirs otherwise accumulate one per micro-batch
-    * forever — ~2,900/day at a 30 s trigger). StreamDedup's fold
-    * machinery under the store's maintenance lease; crash leaves
-    * overlap that [[serve]]'s distinct absorbs.
-    */
-  def fold(spark: SparkSession, storeDir: String,
-      at: StoreSink.FoldAt = StoreSink.Alone): Int =
-    StreamDedup.foldSidecars(spark, storeDir, "verdicts", at = at)
-
   /** The stored verdicts across all ingested batches (per-batch dirs
-    * plus [[fold]] compactions; overlap collapsed by distinct on the
-    * internal batch-id column, which is dropped from the served rows).
+    * plus their folds; overlap collapsed by distinct on the internal
+    * batch-id column, which is dropped from the served rows).
+    * Empty-but-typed before the first commit.
     */
   def serve(spark: SparkSession, storeDir: String): DataFrame =
-    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("verdicts"))
-      .distinct().drop("b")
+    StoreSink.read(spark, storeDir, Verdicts).distinct().drop("b")
 }

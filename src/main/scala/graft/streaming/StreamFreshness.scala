@@ -24,6 +24,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamFreshness {
 
+  private val Marks = StoreSink.sidecar("fresh")
+
+  /** The freshness history under `dir`. */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Marks)
+
   /** One batch's freshness rows: (source, n_rows, max_ts_ms). */
   def batchMarks(df: DataFrame): DataFrame =
     df.groupBy(col("event_type").as("source"))
@@ -31,7 +36,7 @@ object StreamFreshness {
         (unix_millis(max(col("ts")))).as("max_ts_ms"))
 
   def start(source: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
-    StoreSink.start(source, checkpointDir, Seq(storeDir)) { (_, batch, batchId) =>
+    StoreSink.start(source, checkpointDir, Seq(store(storeDir))) { (_, batch, batchId) =>
       batchMarks(batch)
         .withColumn("batch_id", StoreSink.batchIdCol(batchId))
         .coalesce(1)
@@ -40,7 +45,7 @@ object StreamFreshness {
 
   /** The committed per-batch freshness rows. */
   def history(spark: SparkSession, storeDir: String): DataFrame =
-    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("fresh"))
+    StoreSink.read(spark, storeDir, Marks)
 
   /** The qa5-shaped verdict over the stored history: per source,
     * batches present/missing, longest silent RUN of batch ids, and

@@ -41,6 +41,11 @@ import graft.operators.CorpusPrep
   */
 object StreamImportance {
 
+  private val Verdicts = StoreSink.sidecar("verdicts")
+
+  /** The importance ledger under `dir`. */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Verdicts)
+
   /** Start the at-ingest scorer over a stream with (doc_id, source,
     * text) columns. `liftArr` is the frozen 4096-bucket lift table from
     * [[CorpusPrep.dsirLiftArray]] over the reference corpus.
@@ -48,23 +53,14 @@ object StreamImportance {
   def start(source: DataFrame, liftArr: Array[Long], storeDir: String,
       checkpointDir: String, foldEvery: Int = 0): StreamingQuery = {
     require(liftArr.length == 4096, s"lift array has ${liftArr.length} buckets, want 4096")
-    StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
-      fold = fold(_, storeDir, _)) { (_, batch, batchId) =>
+    StoreSink.start(source, checkpointDir, Seq(store(storeDir)),
+      foldEvery = foldEvery) { (_, batch, batchId) =>
       CorpusPrep.dsirScore(batch, liftArr)
         .withColumn("b", StoreSink.batchIdCol(batchId))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$storeDir/verdicts_b$batchId")
     }
   }
-
-  /** Compact per-batch verdict dirs into one `verdicts_fold_0_<hi>`
-    * range dir — StreamDedup's fold machinery under the store's
-    * maintenance lease; crash leaves overlap that [[serve]]'s distinct
-    * absorbs.
-    */
-  def fold(spark: SparkSession, storeDir: String,
-      at: StoreSink.FoldAt = StoreSink.Alone): Int =
-    StreamDedup.foldSidecars(spark, storeDir, "verdicts", at = at)
 
   /** The stored per-doc verdicts across all ingested batches —
     * (doc_id, source, n_bigrams, mean_lift_ppm, selected), the same
@@ -81,7 +77,7 @@ object StreamImportance {
     verdicts(spark, storeDir).drop("b")
 
   private def verdicts(spark: SparkSession, storeDir: String): DataFrame =
-    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("verdicts")).distinct()
+    StoreSink.read(spark, storeDir, Verdicts).distinct()
 
   /** The per-cohort admission dial: one row per micro-batch with the
     * cohort's document count, accepted count, and acceptance rate in

@@ -42,17 +42,26 @@ object StreamNearDup {
     StructField("doc_id", LongType) +:
       (0 until MinHash.K).map(i => StructField(s"m$i", LongType)))
 
-  private[streaming] def matchesSchema: StructType = StructType(Seq(
+  private val Sigs = StoreSink.delta(sigSchema)
+
+  /** The `matches_b*` provenance dirs are history, not screen state, but
+    * they fold with the signatures (one per micro-batch forever
+    * otherwise — the small-file problem at ingest).
+    */
+  private val Matches = StoreSink.sidecar("matches", Some(StructType(Seq(
     StructField("doc_id", LongType), StructField("matched_id", LongType),
     StructField("est_jaccard", DoubleType), StructField("stage", StringType),
-    StructField("b", LongType)))
+    StructField("b", LongType)))))
+
+  /** The signature store under `dir`: sig deltas, then matches. */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Sigs, Matches)
 
   /** The admitted signature store visible to batch `boundExclusive`
     * (deltas + folds; a fold's id is the highest batch it covers).
     */
   def sigStore(spark: SparkSession, storeDir: String,
       boundExclusive: Long = Long.MaxValue): DataFrame =
-    StoreSink.read(spark, storeDir, StoreSink.Delta, sigSchema, boundExclusive)
+    StoreSink.read(spark, storeDir, Sigs, boundExclusive)
 
   /** Ids the screen has admitted so far. */
   def keptIds(spark: SparkSession, storeDir: String): DataFrame =
@@ -61,7 +70,7 @@ object StreamNearDup {
   /** The full dedup provenance: one row per (rejected doc, matching
     * doc) with the estimate and the stage that rejected it. Reads the
     * per-batch `matches_b*` dirs plus `matches_fold_0_*` compactions
-    * ([[fold]]); distinct on the internal batch-id column `b`
+    * (`StoreSink.fold`); distinct on the internal batch-id column `b`
     * (dropped from the served rows) collapses exactly fold/crash
     * overlap while keeping a re-sent doc's later-batch rejection rows.
     *
@@ -76,29 +85,10 @@ object StreamNearDup {
     * fold-vs-leftover-delta overlap still cancels within its cohort.
     */
   def matches(spark: SparkSession, storeDir: String): DataFrame = {
-    val raw = StoreSink.read(spark, storeDir, StoreSink.sidecar("matches"), matchesSchema)
+    val raw = StoreSink.read(spark, storeDir, Matches)
     raw.filter(col("b").isNotNull).distinct().drop("b")
       .unionByName(raw.filter(col("b").isNull).drop("b").distinct())
   }
-
-  /** Fold sig deltas into one `fold_0_<hi>` range dir — StreamDedup's
-    * compaction verbatim (same dir naming, same write-then-delete crash
-    * discipline, newest delta never folded); the `matches_b` provenance
-    * dirs are history, not screen state — [[fold]] compacts them too.
-    */
-  def foldDeltas(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldDeltas(spark, storeDir, Some(sigSchema))
-
-  /** The store's whole maintenance pass under ONE acquisition of its
-    * lease: the sig deltas ([[foldDeltas]]), then the `matches_b*`
-    * provenance dirs (one per micro-batch forever otherwise — the
-    * small-file problem at ingest) into `matches_fold_0_<hi>`. Returns
-    * the number of dirs folded away.
-    */
-  def fold(spark: SparkSession, storeDir: String,
-      at: StoreSink.FoldAt = StoreSink.Alone): Int =
-    StreamDedup.foldFamilies(spark, storeDir, at, StoreSink.Delta -> Some(sigSchema),
-      StoreSink.sidecar("matches") -> Some(matchesSchema))
 
   /** Start the near-dup screen over a `(doc_id, text)` source. The
     * STORE is the output: [[keptIds]] is the deduped id set,
@@ -108,8 +98,8 @@ object StreamNearDup {
       threshold: Double = 0.5,
       trigger: Trigger = Trigger.ProcessingTime(0),
       foldEvery: Int = 0): StreamingQuery =
-    StoreSink.start(docs, s"$checkpointDir/neardup", Seq(storeDir), trigger, foldEvery,
-      fold(_, storeDir, _)) { (spark, batch, batchId) =>
+    StoreSink.start(docs, s"$checkpointDir/neardup", Seq(store(storeDir)), trigger,
+      foldEvery) { (spark, batch, batchId) =>
       // like StreamDedup's screen, the store READ races a concurrent
       // fold's post-commit input delete — retry with a fresh listing
       // (sound: the fold commits the same signature set before deleting

@@ -43,13 +43,15 @@ import graft.operators.TextOps
   */
 object StreamNovelty {
 
-  private def winSchema: StructType =
-    StructType(Seq(StructField("h", LongType)))
+  private val Seen = StoreSink.delta(StructType(Seq(StructField("h", LongType))))
 
-  private def logSchema: StructType = StructType(Seq(
+  private val Log = StoreSink.sidecar("novelty", Some(StructType(Seq(
     StructField("b", LongType), StructField("n_docs", LongType),
     StructField("n_windows", LongType), StructField("n_novel", LongType),
-    StructField("novelty_ppm", LongType)))
+    StructField("novelty_ppm", LongType)))))
+
+  /** The novelty store under `dir`: seen-hash deltas and verdicts. */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Seen, Log)
 
   /** The batch's distinct 8-word window hashes — d21's projection,
     * cohort-keyed: text reduces to `h` inside the scan's transform.
@@ -63,20 +65,12 @@ object StreamNovelty {
     * vocabulary; [[noveltyLog]] is the per-cohort view.
     */
   def seenHashes(spark: SparkSession, storeDir: String): DataFrame =
-    StoreSink.read(spark, storeDir, StoreSink.Delta, winSchema).distinct()
+    StoreSink.read(spark, storeDir, Seen).distinct()
 
   /** The per-batch novelty audit trail, ordered by batch. */
   def noveltyLog(spark: SparkSession, storeDir: String): DataFrame =
-    StoreSink.read(spark, storeDir, StoreSink.sidecar("novelty"), logSchema)
+    StoreSink.read(spark, storeDir, Log)
       .distinct().orderBy("b")
-
-  /** Compact the seen-hash deltas and the novelty sidecars — one
-    * maintenance pass, StreamDedup's machinery for both families.
-    */
-  def foldSeen(spark: SparkSession, storeDir: String,
-      at: StoreSink.FoldAt = StoreSink.Alone): Int =
-    StreamDedup.foldDeltas(spark, storeDir, at = at) +
-      StreamDedup.foldSidecars(spark, storeDir, "novelty", at = at)
 
   /** Start the novelty monitor over a `(doc_id, text)` source. The
     * STORE is the output: [[noveltyLog]] for the per-cohort verdicts,
@@ -85,8 +79,8 @@ object StreamNovelty {
   def start(docs: DataFrame, storeDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime(0),
       foldEvery: Int = 0): StreamingQuery =
-    StoreSink.start(docs, s"$checkpointDir/novelty", Seq(storeDir), trigger, foldEvery,
-      foldSeen(_, storeDir, _)) { (spark, batch, batchId) =>
+    StoreSink.start(docs, s"$checkpointDir/novelty", Seq(store(storeDir)), trigger,
+      foldEvery) { (spark, batch, batchId) =>
       // one window pass feeds the anti-join and both counters
       val bh = batchWindowHashes(batch).localCheckpoint()
       val nDocs = batch.select("doc_id").distinct().count()
@@ -96,7 +90,7 @@ object StreamNovelty {
       // same hash set first, so the retried screen sees a superset)
       StreamDedup.withStoreRetry {
         // the seen set visible to this batch: strictly earlier parts
-        val seen = StoreSink.read(spark, storeDir, StoreSink.Delta, winSchema, batchId)
+        val seen = StoreSink.read(spark, storeDir, Seen, batchId)
         val novel = bh.join(seen, Seq("h"), "left_anti").localCheckpoint()
         val nNovel = novel.count()
         val ppm = if (nWindows == 0) 0L else 1000000L * nNovel / nWindows

@@ -42,14 +42,19 @@ import graft.operators.CorpusPrep
   */
 object StreamPacking {
 
+  private val Toks = StoreSink.sidecar("toks")
+
+  /** The token-count ledger under `dir`. */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Toks)
+
   /** Start the at-ingest ledger over a stream with (doc_id, text)
     * columns. Zero-token docs emit no ledger row (tok10/tok11's
     * convention — they contribute nothing to any packing).
     */
   def start(source: DataFrame, storeDir: String, checkpointDir: String,
       foldEvery: Int = 0): StreamingQuery =
-    StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
-      fold = fold(_, storeDir, _)) { (_, batch, batchId) =>
+    StoreSink.start(source, checkpointDir, Seq(store(storeDir)),
+      foldEvery = foldEvery) { (_, batch, batchId) =>
       batch.select(col("doc_id"),
           size(expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
             .cast("long").as("n_tokens"))
@@ -59,20 +64,12 @@ object StreamPacking {
         .write.mode("overwrite").parquet(s"$storeDir/toks_b$batchId")
     }
 
-  /** Compact per-batch ledger dirs into one `toks_fold_0_<hi>` range
-    * dir — StreamDedup's fold machinery under the store's maintenance
-    * lease; crash leaves overlap that the ledger's distinct absorbs.
-    */
-  def fold(spark: SparkSession, storeDir: String,
-      at: StoreSink.FoldAt = StoreSink.Alone): Int =
-    StreamDedup.foldSidecars(spark, storeDir, "toks", at = at)
-
   /** The accumulated (doc_id, n_tokens, b) ledger across all ingested
     * batches — replay overlap collapsed, genuine re-sends kept per
     * cohort (see the object scaladoc).
     */
   private def ledger(spark: SparkSession, storeDir: String): DataFrame =
-    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("toks")).distinct()
+    StoreSink.read(spark, storeDir, Toks).distinct()
 
   /** The packing manifest over every ingested doc — on a once-ingested
     * corpus, the same 32 rows as batch tok11.

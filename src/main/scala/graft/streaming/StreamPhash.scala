@@ -42,14 +42,17 @@ import graft.operators.Multimodal
   */
 object StreamPhash {
 
-  private def keeperSchema: StructType = StructType(Seq(
+  private val Keepers = StoreSink.delta(StructType(Seq(
     StructField("h_hi", LongType), StructField("h_lo", LongType),
-    StructField("doc_id", LongType)))
+    StructField("doc_id", LongType))))
 
-  private def logSchema: StructType = StructType(Seq(
+  private val Log = StoreSink.sidecar("media", Some(StructType(Seq(
     StructField("b", LongType), StructField("n_docs", LongType),
     StructField("n_unique", LongType), StructField("n_admitted", LongType),
-    StructField("dup_ppm", LongType)))
+    StructField("dup_ppm", LongType)))))
+
+  /** The image store under `dir`: keeper deltas and verdicts. */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Keepers, Log)
 
   /** The batch's per-image hashes: m5's decode + dHash hop over the
     * raw `(doc_id, media)` rows — one DHashRow per input row, media
@@ -73,20 +76,12 @@ object StreamPhash {
     * (deltas + folds, set semantics).
     */
   def keepers(spark: SparkSession, storeDir: String): DataFrame =
-    StoreSink.read(spark, storeDir, StoreSink.Delta, keeperSchema).distinct()
+    StoreSink.read(spark, storeDir, Keepers).distinct()
 
   /** The per-batch dedup audit trail, ordered by batch. */
   def mediaLog(spark: SparkSession, storeDir: String): DataFrame =
-    StoreSink.read(spark, storeDir, StoreSink.sidecar("media"), logSchema)
+    StoreSink.read(spark, storeDir, Log)
       .distinct().orderBy("b")
-
-  /** Compact the keeper deltas and the media sidecars — one maintenance
-    * pass, StreamDedup's machinery for both families.
-    */
-  def foldKeepers(spark: SparkSession, storeDir: String,
-      at: StoreSink.FoldAt = StoreSink.Alone): Int =
-    StreamDedup.foldDeltas(spark, storeDir, at = at) +
-      StreamDedup.foldSidecars(spark, storeDir, "media", at = at)
 
   /** Start the image-dedup screen over a `(doc_id, media)` source. The
     * STORE is the output: [[keepers]] for the canonical image set,
@@ -95,8 +90,8 @@ object StreamPhash {
   def start(media: DataFrame, storeDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime(0),
       foldEvery: Int = 0): StreamingQuery =
-    StoreSink.start(media, s"$checkpointDir/phash", Seq(storeDir), trigger, foldEvery,
-      foldKeepers(_, storeDir, _)) { (spark, batch, batchId) =>
+    StoreSink.start(media, s"$checkpointDir/phash", Seq(store(storeDir)), trigger,
+      foldEvery) { (spark, batch, batchId) =>
       // one decode pass feeds the winner window, the screen, and
       // both counters
       val hashes = batchHashes(batch).localCheckpoint()
@@ -113,7 +108,7 @@ object StreamPhash {
       // same keeper set first, so the retried screen sees a superset)
       StreamDedup.withStoreRetry {
         // the keeper set visible to this batch: strictly earlier parts
-        val seen = StoreSink.read(spark, storeDir, StoreSink.Delta, keeperSchema, batchId)
+        val seen = StoreSink.read(spark, storeDir, Keepers, batchId)
         val admitted = winners.join(seen, Seq("h_hi", "h_lo"), "left_anti")
           .select("h_hi", "h_lo", "doc_id").localCheckpoint()
         val nAdmitted = admitted.count()

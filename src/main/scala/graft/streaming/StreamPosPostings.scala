@@ -33,9 +33,12 @@ import graft.operators.Retrieval
   */
 object StreamPosPostings {
 
-  private def posSchema: StructType = StructType(Seq(
+  private val Positions = DeltaPostingsStore.family(StructType(Seq(
     StructField("term", StringType), StructField("doc_id", LongType),
-    StructField("ps", ArrayType(IntegerType)), StructField("b", LongType)))
+    StructField("ps", ArrayType(IntegerType)), StructField("b", LongType))))
+
+  /** The positional store under `dir`, folded as StreamPostings' is. */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Positions)
 
   /** Positional postings the store currently holds: all COMPLETE
     * delta/fold dirs, replay overlap distinct()-deduplicated, per
@@ -43,21 +46,13 @@ object StreamPosPostings {
     * Empty-but-typed before the first commit.
     */
   def postings(spark: SparkSession, storeDir: String): DataFrame =
-    DeltaPostingsStore.read(spark, storeDir, posSchema)
+    DeltaPostingsStore.read(spark, storeDir, Positions)
 
   /** The servable positional index — no global statistic to refresh,
     * so this is [[postings]] minus the batch-id bookkeeping column.
     */
   def served(spark: SparkSession, storeDir: String): DataFrame =
     postings(spark, storeDir).drop("b")
-
-  /** Last-writer-aware compaction — StreamPostings.foldPostings'
-    * twin over the positional payload (see
-    * [[DeltaPostingsStore.lastWriterShrink]]).
-    */
-  def foldPostings(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldDeltasWith(spark, storeDir)(
-      DeltaPostingsStore.lastWriterShrink)
 
   /** Start the ingest over a `(doc_id, text)` source. The STORE is the
     * output — readers serve phrase queries via [[served]]. `analyzer`
@@ -69,7 +64,7 @@ object StreamPosPostings {
   def start(docs: DataFrame, storeDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime(0),
       analyzer: String = Retrieval.RawAnalyzerSql): StreamingQuery =
-    StoreSink.start(docs, s"$checkpointDir/pospostings", Seq(storeDir), trigger) {
+    StoreSink.start(docs, s"$checkpointDir/pospostings", Seq(store(storeDir)), trigger) {
       (_, batch, batchId) =>
         import org.apache.spark.sql.functions._
         val raw = Retrieval.rawPosPostings(batch.select(col("doc_id"),

@@ -44,10 +44,17 @@ import graft.operators.Retrieval
   */
 object StreamPostings {
 
-  private def postingsSchema: StructType = StructType(Seq(
+  private val Postings = DeltaPostingsStore.family(StructType(Seq(
     StructField("term", StringType), StructField("doc_id", LongType),
     StructField("tf", LongType), StructField("dl", IntegerType),
-    StructField("b", LongType)))
+    StructField("b", LongType))))
+
+  /** The postings store under `dir`; its folds drop superseded reissue
+    * postings and tombstoned docs' payload rows
+    * ([[DeltaPostingsStore]]), so served results are unchanged and the
+    * disk stops carrying them.
+    */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Postings)
 
   /** Raw postings the store currently holds (with their writing batch
     * id `b`): all COMPLETE delta/fold dirs, replay overlap
@@ -57,24 +64,13 @@ object StreamPostings {
     * first commit.
     */
   def postings(spark: SparkSession, storeDir: String): DataFrame =
-    DeltaPostingsStore.read(spark, storeDir, postingsSchema)
+    DeltaPostingsStore.read(spark, storeDir, Postings)
 
   /** The servable index: df refreshed over the CURRENT store content —
     * exact idf after every micro-batch, never stale between segments.
     */
   def served(spark: SparkSession, storeDir: String): DataFrame =
     Retrieval.withDf(postings(spark, storeDir).drop("b"))
-
-  /** Last-writer-aware compaction (see
-    * [[DeltaPostingsStore.lastWriterShrink]]): physically drops
-    * superseded reissue postings and tombstoned docs' payload rows —
-    * the space-reclaim/erasure fold; served results are identical to
-    * plain `StreamDedup.foldDeltas` (the read filter already hid those
-    * rows), the disk just stops carrying them.
-    */
-  def foldPostings(spark: SparkSession, storeDir: String): Int =
-    StreamDedup.foldDeltasWith(spark, storeDir)(
-      DeltaPostingsStore.lastWriterShrink)
 
   /** The default analyzer: lowercase → [a-z]+ tokens — r1's chain,
     * the SAME definition the batch maintenance ops use.
@@ -102,7 +98,7 @@ object StreamPostings {
   def start(docs: DataFrame, storeDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime(0),
       analyzer: String = RawAnalyzer): StreamingQuery =
-    StoreSink.start(docs, s"$checkpointDir/postings", Seq(storeDir), trigger) {
+    StoreSink.start(docs, s"$checkpointDir/postings", Seq(store(storeDir)), trigger) {
       (_, batch, batchId) =>
         import org.apache.spark.sql.functions._
         val raw = Retrieval.rawPostings(batch.select(col("doc_id"),

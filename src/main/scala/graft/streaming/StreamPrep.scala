@@ -58,11 +58,11 @@ import graft.operators.TextOps
   * plan and analyzes it once. A fold batch runs its fold beside its
   * ingest ([[StoreSink.FoldAt]]).
   *
-  * Store layout under `storeDir`: `exact/` and `sigs/` are the two
-  * screens' ordinary delta stores, both claimed by the chain's
-  * checkpoint; `decontam/verdicts_b<id>` and `manifest_b<id>` are pure
-  * per-batch verdicts. The store contract ([[StoreSink]]) holds
-  * chain-wide.
+  * Store layout under `storeDir` ([[stores]]): `exact/`, `sigs/` and
+  * `decontam/` are the stores of the three standalone screens, and the
+  * root holds the `manifest_b<id>` verdicts. All four are claimed by the
+  * chain's checkpoint and fold concurrently, each under its own lease.
+  * The store contract ([[StoreSink]]) holds chain-wide.
   *
   * 100 TB shape: unchanged from the standalone twins — the chain
   * ORDER is the cost order (cheap doc-level gate first, hash screen
@@ -78,20 +78,21 @@ import graft.operators.TextOps
   */
 object StreamPrep {
 
-  private def manifestSchema: StructType = StructType(Seq(
+  private val Manifest = StoreSink.sidecar("manifest", Some(StructType(Seq(
     StructField("doc_id", LongType), StructField("stage", StringType),
-    StructField("quality", DoubleType), StructField("b", LongType)))
+    StructField("quality", DoubleType), StructField("b", LongType)))))
 
-  private def verdictSchema: StructType = StructType(
-    Seq("doc_id", "bench_id", "n_item_windows", "n_present", "overlap_ppm", "b")
-      .map(StructField(_, LongType)))
+  /** The chain's four stores under `storeDir`, in fold order. */
+  private[graft] def stores(storeDir: String): Seq[StoreSink.Store] = Seq(
+    StreamDedup.store(s"$storeDir/exact"), StreamNearDup.store(s"$storeDir/sigs"),
+    StreamDecontam.store(s"$storeDir/decontam"), StoreSink.Store(storeDir, Manifest))
 
   /** The per-doc manifest across all ingested batches: exactly one row
     * per incoming doc_id (re-sends of an already-screened doc_id get
     * their own verdict in their own batch — screens are content-keyed,
     * so a byte-identical re-send lands as 'exact'). Empty-but-typed
     * before the first commit. Reads per-batch `manifest_b*` dirs AND
-    * `manifest_fold_0_*` compactions ([[fold]]); the distinct() is
+    * `manifest_fold_0_*` compactions; the distinct() is
     * load-bearing — a crashed fold's write-then-delete leaves the same
     * rows in fold and delta ("overlap, never loss"), and manifest rows
     * ride an internal batch-id column `b` (dropped here) precisely so
@@ -100,32 +101,7 @@ object StreamPrep {
     * multiplicity through the fold's own distinct.
     */
   def manifest(spark: SparkSession, storeDir: String): DataFrame =
-    StoreSink.read(spark, storeDir, StoreSink.sidecar("manifest"), manifestSchema)
-      .distinct().drop("b")
-
-  /** Compact the chain's per-batch output dirs — the maintenance pass a
-    * 30 s-trigger deployment schedules (one dir per family per batch is
-    * ~2,900 dirs/day/family otherwise). Folds all five accumulating
-    * families, each read under its declared schema: the two screens'
-    * signature/hash deltas (the newest-delta screen-bound discipline,
-    * as standalone), the near-dup `matches_b*` provenance, the decontam
-    * `verdicts_b*` sidecars, and the `manifest_b*` rows. The four stores
-    * fold concurrently, each under its own maintenance lease; the
-    * `sigs/` deltas and matches share that store's one lease, in that
-    * order. Returns the number of dirs folded away.
-    */
-  def fold(spark: SparkSession, storeDir: String,
-      at: StoreSink.FoldAt = StoreSink.Alone): Int = {
-    val folded = new java.util.concurrent.atomic.AtomicInteger
-    def step(pass: => Int): () => Unit = () => { folded.addAndGet(pass); () }
-    StoreSink.concurrently(spark)(
-      step(StreamDedup.foldDeltas(spark, s"$storeDir/exact", Some(StreamDedup.StoreSchema), at)),
-      step(StreamNearDup.fold(spark, s"$storeDir/sigs", at)),
-      step(StreamDedup.foldSidecars(spark, s"$storeDir/decontam", "verdicts",
-        Some(verdictSchema), at)),
-      step(StreamDedup.foldSidecars(spark, storeDir, "manifest", Some(manifestSchema), at)))
-    folded.get
-  }
+    StoreSink.read(spark, storeDir, Manifest).distinct().drop("b")
 
   /** The training-set ids the chain has admitted so far. */
   def keptIds(spark: SparkSession, storeDir: String): DataFrame =
@@ -148,8 +124,8 @@ object StreamPrep {
     // the decontamination fixture with its per-item totals, built once
     val bench = TextOps.d7bBenchWithTotals(benchWindows).localCheckpoint()
     val template = screenTemplate(docs.sparkSession, bench, threshold)
-    StoreSink.start(docs, s"$checkpointDir/prep", Seq(s"$storeDir/exact", s"$storeDir/sigs"),
-      trigger, foldEvery, fold(_, storeDir, _)) { (spark, batch, batchId) =>
+    StoreSink.start(docs, s"$checkpointDir/prep", stores(storeDir), trigger,
+      foldEvery) { (spark, batch, batchId) =>
       val frozen = StreamDedup.withStoreRetry(template.bind(batch.select("doc_id", "text"),
         StreamDedup.storeBefore(spark, s"$storeDir/exact", boundExclusive = batchId),
         StreamNearDup.sigStore(spark, s"$storeDir/sigs", boundExclusive = batchId))

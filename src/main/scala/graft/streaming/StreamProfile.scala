@@ -21,6 +21,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamProfile {
 
+  private val Profiles = StoreSink.sidecar("profile")
+
+  /** The profile history under `dir`. */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Profiles)
+
   /** Profile one (batch) frame: (col, n_rows, n_null, n_distinct) per
     * profiled column, from ONE wide aggregate (the qa2 single-pass
     * shape — the frame is never rescanned per column).
@@ -46,7 +51,7 @@ object StreamProfile {
     */
   def start(source: DataFrame, columns: Seq[String], storeDir: String,
       checkpointDir: String): StreamingQuery =
-    StoreSink.start(source, checkpointDir, Seq(storeDir)) { (_, batch, batchId) =>
+    StoreSink.start(source, checkpointDir, Seq(store(storeDir))) { (_, batch, batchId) =>
       profile(batch, columns)
         .withColumn("batch_id", StoreSink.batchIdCol(batchId))
         .coalesce(1)
@@ -55,7 +60,7 @@ object StreamProfile {
 
   /** The stored profile history (all committed batches, all columns). */
   def history(spark: SparkSession, storeDir: String): DataFrame =
-    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("profile"))
+    StoreSink.read(spark, storeDir, Profiles)
 
   /** Batch-over-batch drift — qa3's verdict over the stored history:
     * per (column, batch), the deltas against the PREVIOUS batch's

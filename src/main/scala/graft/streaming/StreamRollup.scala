@@ -23,13 +23,18 @@ import graft.operators.Rollup
   */
 object StreamRollup {
 
+  private val States = StoreSink.sidecar("states")
+
+  /** The state history under `dir`. */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, States)
+
   /** Start the maintenance query over a stream with (ts, event_type,
     * value) columns: one state row per (day, event_type) per
     * micro-batch, written idempotently to `storeDir/states_b<id>`.
     */
   def start(source: DataFrame, storeDir: String,
       checkpointDir: String): StreamingQuery =
-    StoreSink.start(source, checkpointDir, Seq(storeDir)) { (_, batch, batchId) =>
+    StoreSink.start(source, checkpointDir, Seq(store(storeDir))) { (_, batch, batchId) =>
       Rollup.states(batch)
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$storeDir/states_b$batchId")
@@ -37,7 +42,7 @@ object StreamRollup {
 
   /** The stored state history (all committed batches' partials). */
   def history(spark: SparkSession, storeDir: String): DataFrame =
-    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("states"))
+    StoreSink.read(spark, storeDir, States)
 
   /** Serve the rollup from the store: the same merge the batch chain
     * runs — aggregates (batches × days × groups) state rows, never

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
@@ -38,8 +39,9 @@ import graft.operators.VectorOps
   *    LOUDLY instead of letting recall decay silently; data still
   *    lands (retraining invalidates every stored code, so the retrain
   *    decision is the operator's, not the ingest's). Sidecars are
-  *    invisible to [[codes]] and to the fold machinery (neither
-  *    matches the `drift_` prefix); [[driftLog]] reads them.
+  *    invisible to [[codes]] and to the code rows' folds (neither
+  *    matches the `drift_` prefix); they fold as their own family, and
+  *    [[driftLog]] reads them.
   *
   * Store contract: [[StoreSink]]. The `b`/`del` columns ride through
   * folds, so last-writer-wins survives compaction, and fold overlap
@@ -189,10 +191,38 @@ object StreamVec {
   /** v16's retrain threshold: batch mean residual ≥ 1.5× baseline. */
   val RetrainPpm = 1500000L
 
-  private def codesSchema: StructType = StructType(
+  /** The code rows. A fold keeps only each vec_id's max-b row among
+    * its inputs — physically dropping superseded reissue rows and, for
+    * tombstoned ids, the CODE rows themselves (the erasure path: send a
+    * NULL-embedding tombstone through the stream — the id stops serving
+    * at that trigger — then compact; the encoded data is physically
+    * gone once the tombstone's delta becomes foldable, i.e. after one
+    * more batch commits). The tombstone row itself SURVIVES compaction
+    * deliberately: the crash contract is "overlap, never loss" — a fold
+    * whose input delete crashed can leave an old code row in a leftover
+    * dir, and the committed fold's tombstone must still beat it at read
+    * time (the Kafka-compaction key-tombstone model; only the payload is
+    * erased, the key lingers).
+    */
+  private val Codes = StoreSink.delta(StructType(
     (StructField("vec_id", LongType) +:
       (0 until VectorOps.PqM).map(m => StructField(s"c$m", LongType))) ++
-      Seq(StructField("b", LongType), StructField("del", BooleanType)))
+      Seq(StructField("b", LongType), StructField("del", BooleanType))), { df =>
+    df.withColumn("__bmax", max("b").over(Window.partitionBy("vec_id")))
+      .filter(col("b") === col("__bmax"))
+      .drop("__bmax")
+  })
+
+  /** The drift gate's per-batch verdicts; their rows carry b, so a
+    * fold's distinct can only collapse replay/crash overlap.
+    */
+  private val Drift = StoreSink.sidecar("drift", Some(StructType(Seq(
+    StructField("b", LongType), StructField("n_vecs", LongType),
+    StructField("mean_err", LongType), StructField("drift_ppm", LongType),
+    StructField("retrain", BooleanType)))))
+
+  /** The index store under `dir`: code deltas, then drift verdicts. */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Codes, Drift)
 
   /** The index the store currently serves: all COMPLETE (_SUCCESS)
     * delta and fold dirs, replay overlap collapsed by distinct(), each
@@ -201,46 +231,15 @@ object StreamVec {
     * first commit. Plugs into `adcSearch`/`ivfServe` as their `codes0`.
     */
   def codes(spark: SparkSession, storeDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // distinct is load-bearing: the fold crash contract is "overlap,
     // never loss" — the same deterministic row can sit in two dirs,
     // and a duplicated vec_id would occupy two top-k slots.
-    StoreSink.read(spark, storeDir, StoreSink.Delta, codesSchema).distinct()
+    StoreSink.read(spark, storeDir, Codes).distinct()
       .withColumn("bmax", max("b").over(Window.partitionBy("vec_id")))
       .filter(col("b") === col("bmax"))
       .filter(!col("del"))
       .drop("bmax", "b", "del")
   }
-
-  /** Last-writer-aware compaction: StreamDedup's fold machinery with a
-    * SHRINK step that keeps only each vec_id's max-b row among the
-    * fold's inputs — physically dropping superseded reissue rows and,
-    * for tombstoned ids, the CODE rows themselves (the erasure path:
-    * send a NULL-embedding tombstone through the stream — the id stops
-    * serving at that trigger — then compact; the encoded data is
-    * physically gone once the tombstone's delta becomes foldable, i.e.
-    * after one more batch commits). The tombstone row itself SURVIVES
-    * compaction deliberately: the crash contract is "overlap, never
-    * loss" — a fold whose input delete crashed can leave an old code
-    * row in a leftover dir, and the committed fold's tombstone must
-    * still beat it at read time (the Kafka-compaction key-tombstone
-    * model; only the payload is erased, the key lingers). Plain
-    * `StreamDedup.foldDeltas` remains valid for this store — it just
-    * reclaims no superseded rows.
-    */
-  def foldCodes(spark: SparkSession, storeDir: String,
-      at: StoreSink.FoldAt = StoreSink.Alone): Int =
-    StreamDedup.foldDeltasWith(spark, storeDir, at) { df =>
-      import org.apache.spark.sql.expressions.Window
-      df.withColumn("__bmax", max("b").over(Window.partitionBy("vec_id")))
-        .filter(col("b") === col("__bmax"))
-        .drop("__bmax")
-    } +
-      // the drift sidecars are the store's other per-batch family —
-      // compact them in the same maintenance pass (one dir per batch
-      // forever otherwise); rows carry b, so the fold's distinct can
-      // only collapse replay/crash overlap
-      StreamDedup.foldSidecars(spark, storeDir, "drift", at = at)
 
   // ---------------------------------------------------------------
   // Codebook rotation — closing the drift loop. The gate above FLAGS;
@@ -338,7 +337,6 @@ object StreamVec {
   def rotate(spark: SparkSession, storeDir: String, emb: DataFrame,
       serveBase: String, sampleCap: Int = 4096,
       force: Boolean = false): Array[Array[Array[Long]]] = {
-    import org.apache.spark.sql.expressions.Window
     // ROTATION/INGEST EXCLUSION, loud (verdict-14 ask #2): a trigger
     // racing the rotation would keep encoding with the OLD codebook
     // into a store whose serving snapshot is about to cut over — data
@@ -410,14 +408,8 @@ object StreamVec {
     * (b, n_vecs, mean_err, drift_ppm, retrain). The operational signal
     * a frozen-codebook deployment watches — v16's audit, continuous.
     */
-  def driftLog(spark: SparkSession, storeDir: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("b", LongType), StructField("n_vecs", LongType),
-      StructField("mean_err", LongType), StructField("drift_ppm", LongType),
-      StructField("retrain", BooleanType)))
-    StoreSink.read(spark, storeDir, StoreSink.sidecar("drift"), schema)
-      .distinct().orderBy("b")
-  }
+  def driftLog(spark: SparkSession, storeDir: String): DataFrame =
+    StoreSink.read(spark, storeDir, Drift).distinct().orderBy("b")
 
   /** Start the ingest over a `(vec_id, embedding)` source (NULL
     * embedding ⇒ tombstone). `baselineMeanErr` is the pinned training
@@ -442,8 +434,8 @@ object StreamVec {
       storeDir: String, checkpointDir: String, baselineMeanErr: Long,
       trigger: Trigger = Trigger.ProcessingTime(0),
       foldEvery: Int = 0): StreamingQuery = {
-    val q = StoreSink.start(vecs, s"$checkpointDir/index", Seq(storeDir), trigger,
-      foldEvery, foldCodes(_, storeDir, _)) { (spark, batch, batchId) =>
+    val q = StoreSink.start(vecs, s"$checkpointDir/index", Seq(store(storeDir)), trigger,
+      foldEvery) { (spark, batch, batchId) =>
       graft.functions.NativeFunctions.register(spark)
       // one encode pass feeds both the delta and the drift verdict;
       // persist so the two actions don't re-run the argmin
@@ -467,7 +459,6 @@ object StreamVec {
         // (codes are a pure function of the embedding, so the
         // ordering is replay-stable; distinct code rows tie only if
         // the rows are byte-identical, where the pick is immaterial).
-        import org.apache.spark.sql.expressions.Window
         val inBatchOrder = col("del").desc +:
           (0 until VectorOps.PqM).map(m => col(s"c$m").desc)
         live.unionByName(tombs)

@@ -41,33 +41,30 @@ import graft.operators.CorpusPrep
   */
 object StreamVocab {
 
+  private val Counts = StoreSink.sidecar("wc")
+
+  /** The word-count ledger under `dir`. */
+  def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Counts)
+
   /** Start the at-ingest word-count ledger over a stream with
     * (doc_id, text) columns.
     */
   def start(source: DataFrame, storeDir: String, checkpointDir: String,
       foldEvery: Int = 0): StreamingQuery =
-    StoreSink.start(source, checkpointDir, Seq(storeDir), foldEvery = foldEvery,
-      fold = fold(_, storeDir, _)) { (_, batch, batchId) =>
+    StoreSink.start(source, checkpointDir, Seq(store(storeDir)),
+      foldEvery = foldEvery) { (_, batch, batchId) =>
       CorpusPrep.unigramWordCounts(batch)
         .withColumn("b", StoreSink.batchIdCol(batchId))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$storeDir/wc_b$batchId")
     }
 
-  /** Compact per-batch ledger dirs into one `wc_fold_0_<hi>` range dir
-    * — StreamDedup's fold machinery under the store's maintenance
-    * lease; crash leaves overlap that the ledger's distinct absorbs.
-    */
-  def fold(spark: SparkSession, storeDir: String,
-      at: StoreSink.FoldAt = StoreSink.Alone): Int =
-    StreamDedup.foldSidecars(spark, storeDir, "wc", at = at)
-
   /** The accumulated (word, freq, b) delta ledger across all ingested
     * batches — replay overlap collapsed, genuine re-sends kept per
     * cohort (see the object scaladoc).
     */
   private def ledger(spark: SparkSession, storeDir: String): DataFrame =
-    StoreSink.readInferred(spark, storeDir, StoreSink.sidecar("wc")).distinct()
+    StoreSink.read(spark, storeDir, Counts).distinct()
 
   /** The unigram-LM tokenizer report over every ingested doc — on a
     * once-ingested corpus, the same 50 rows as batch tok12.

@@ -356,7 +356,7 @@ class StoreConcurrencySpec extends SparkSpec {
     // the round-9 untested seam: the lease serializes BATCH maintenance
     // and the checkpoint epoch guard serializes STREAMING owners, but a
     // batch fold running DURING ingest crossed both domains unpinned.
-    // foldDeltas now runs under the lease (fold-vs-fold serialization);
+    // the fold runs under the lease (fold-vs-fold serialization);
     // fold-vs-ingest safety is structural (a fold snapshot either sees
     // a new delta or leaves it for next time, and never touches the
     // newest delta). Drive both concurrently and require the final
@@ -365,7 +365,7 @@ class StoreConcurrencySpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.{col, expr}
     import graft.operators.Retrieval
-    import graft.streaming.{StreamDedup, StreamPostings}
+    import graft.streaming.{StoreSink, StreamPostings}
     implicit val sc = spark.sqlContext
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
@@ -379,7 +379,7 @@ class StoreConcurrencySpec extends SparkSpec {
     val folds = new java.util.concurrent.atomic.AtomicInteger(0)
     val folder = new Thread(() => {
       while (stop.getCount > 0) {
-        folds.addAndGet(StreamDedup.foldDeltas(spark, store))
+        folds.addAndGet(StoreSink.fold(spark, Seq(StreamPostings.store(store))))
         Thread.sleep(20)
       }
     })
@@ -388,7 +388,7 @@ class StoreConcurrencySpec extends SparkSpec {
       in.addData(g: _*); q.processAllAvailable()
     } finally { stop.countDown(); folder.join(10000) }
     q.stop()
-    StreamDedup.foldDeltas(spark, store)
+    StoreSink.fold(spark, Seq(StreamPostings.store(store)))
     assert(folds.get() > 0, "the racing folder never folded — race untested")
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.select("term", "doc_id", "tf", "dl").collect()
@@ -412,7 +412,7 @@ class StoreConcurrencySpec extends SparkSpec {
     // the race is real, not hypothetical — and (b) the retrying screen
     // converges on the fold's superset listing with ZERO re-admissions.
     import org.apache.spark.sql.functions.col
-    import graft.streaming.StreamDedup
+    import graft.streaming.{StoreSink, StreamDedup}
     import spark.implicits._
     val store = tmpDir("graft-dedup-foldrace") + "/store"
     // three committed deltas, distinct hashes
@@ -425,7 +425,7 @@ class StoreConcurrencySpec extends SparkSpec {
     // resolve the snapshot BEFORE the fold; the fold then removes its
     // input deltas after committing the covering fold dir
     val stale = StreamDedup.storeBefore(spark, store, boundExclusive = 3L)
-    assert(StreamDedup.foldDeltas(spark, store) > 0, "fold did not run")
+    assert(StoreSink.fold(spark, Seq(StreamDedup.store(store))) > 0, "fold did not run")
     val staleFailed =
       try { stale.count(); false }
       catch { case e: Throwable => StreamDedup.isMissingFileError(e) }
@@ -445,7 +445,7 @@ class StoreConcurrencySpec extends SparkSpec {
     import org.apache.hadoop.fs.FileUtil
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.TextOps
-    import graft.streaming.{StreamDedup, StreamNearDup, StreamPrep}
+    import graft.streaming.{StoreSink, StreamPrep}
     implicit val sc = spark.sqlContext
     import spark.implicits._
     val corpus = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
@@ -487,15 +487,14 @@ class StoreConcurrencySpec extends SparkSpec {
     ingest(foldEvery = 0, 0 until 4) // four parts per family, none folded
     val sequential = tmpDir("graft-prepfold-seq") + "/store"
     assert(FileUtil.copy(fs, new Path(store), fs, new Path(sequential), false, conf))
-    // the reference: the five folds one after another, each under its
-    // own acquisition of its store's lease
-    val sequentialFolded = StreamDedup.foldDeltas(spark, s"$sequential/exact") +
-      StreamNearDup.foldDeltas(spark, s"$sequential/sigs") +
-      StreamDedup.foldSidecars(spark, s"$sequential/sigs", "matches") +
-      StreamDedup.foldSidecars(spark, s"$sequential/decontam", "verdicts") +
-      StreamDedup.foldSidecars(spark, sequential, "manifest")
+    // the reference: the five folds one after another, each a one-family
+    // store under its own acquisition of its store's lease
+    val oneFamily = StreamPrep.stores(sequential)
+      .flatMap(s => s.families.map(StoreSink.Store(s.dir, _)))
+    assert(oneFamily.size == 5)
+    val sequentialFolded = oneFamily.map(s => StoreSink.fold(spark, Seq(s))).sum
     assert(sequentialFolded == 5 * 3, "each family folds its three older parts")
-    assert(StreamPrep.fold(spark, store) == sequentialFolded)
+    assert(StoreSink.fold(spark, StreamPrep.stores(store)) == sequentialFolded)
     val folded = parts(store)
     assert(folded == parts(sequential), "the concurrent fold committed other parts or rows")
     val folds = folded.filter(_._1.contains("fold_0_2"))
@@ -513,6 +512,58 @@ class StoreConcurrencySpec extends SparkSpec {
     ingest(foldEvery = 3, Seq.empty)
     assert(fs.exists(commit), "the restart did not replay batch 5")
     assert(parts(store) == before, "the replayed fold batch changed a family")
+  }
+
+  test("an empty _QUERY_ID counts as no marker: a restart with parts at or below its batch resumes, a fresh checkpoint under parts above its batch is refused") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import graft.streaming.StreamDedup
+    implicit val sc = spark.sqlContext
+    import spark.implicits._
+    val store = tmpDir("graft-emptymarker") + "/store"
+    val cp = tmpDir("graft-emptymarker-cp")
+    val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new Path(store, "_QUERY_ID")
+    def owner(): String = {
+      val in = fs.open(marker)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    }
+    // a marker writer that crashed between its create and its write
+    def emptyMarker(): Unit = fs.create(marker, true).close()
+    def kept: Set[Long] = StreamDedup.keptIds(spark, store).collect().map(_.getLong(0)).toSet
+    val in = MemoryStream[(Long, String)]
+    val q = StreamDedup.start(in.toDF().toDF("doc_id", "text"), store, cp)
+    try Seq(1L -> "a", 2L -> "b").foreach { d => in.addData(d); q.processAllAvailable() }
+    finally q.stop()
+    val qid = owner()
+    assert(qid.nonEmpty)
+
+    // resume: batch 1 replays (its commit is gone) with parts at b0 and b1
+    emptyMarker()
+    assert(fs.delete(new Path(s"$cp/dedup/commits/1"), false))
+    val q2 = StreamDedup.start(in.toDF().toDF("doc_id", "text"), store, cp)
+    try {
+      q2.processAllAvailable()
+      in.addData(3L -> "a", 4L -> "c"); q2.processAllAvailable()
+    } finally q2.stop()
+    assert(fs.exists(new Path(s"$cp/dedup/commits/2")), "the owning checkpoint did not resume")
+    assert(owner() == qid, "the resumed run did not restore its marker")
+    assert(kept == Set(1L, 2L, 4L), s"after resume: $kept")
+
+    // refuse: a fresh checkpoint starts at batch 0 under parts up to b2
+    emptyMarker()
+    def b0Rows = spark.read.parquet(s"$store/delta_b0").collect().map(_.toString).sorted.toSeq
+    val before = b0Rows
+    val fresh = MemoryStream[(Long, String)]
+    val q3 = StreamDedup.start(fresh.toDF().toDF("doc_id", "text"), store,
+      tmpDir("graft-emptymarker-cp2"))
+    fresh.addData(5L -> "d")
+    val ex = intercept[StreamingQueryException](q3.processAllAvailable())
+    q3.stop()
+    assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null).take(10)
+      .exists(c => Option(c.getMessage).exists(_.contains("no ownership marker"))),
+      s"a fresh checkpoint under an empty marker was not refused: $ex")
+    assert(b0Rows == before, "the refused run changed delta_b0")
   }
 
   test("a fold beside an ingest whose screen lists its inputs deletes them only after the ingest: the parts of the fold run alone, no retry, no lease left") {
@@ -562,13 +613,15 @@ class StoreConcurrencySpec extends SparkSpec {
     val alone = tmpDir("graft-foldbeside-alone") + "/store"
     assert(FileUtil.copy(fs, new Path(store), fs, new Path(alone), false, conf))
     val aloneRows = rows(screen(alone))
-    assert(StreamPrep.fold(spark, alone, StoreSink.FoldAt(Some(4L), new CountDownLatch(0))) ==
-      5 * 4, "each family folds its four parts below batch 4")
+    assert(StoreSink.fold(spark, StreamPrep.stores(alone),
+      StoreSink.FoldAt(Some(4L), new CountDownLatch(0))) == 5 * 4,
+      "each family folds its four parts below batch 4")
 
-    // foldEvery = 5: batch 4 folds beside its ingest. Batches 0-3 of this
-    // sink only advance its batch id; batch 4's ingest lists the parts,
-    // waits until the fold has committed all five fold dirs and for up
-    // to 1.5 s more, and only then reads what it listed
+    // foldEvery = 5: batch 4 folds beside its ingest, through the step
+    // every `StoreSink.start` batch runs once its stores are claimed.
+    // Batch 4's ingest lists the parts, waits until the fold has
+    // committed all five fold dirs and for up to 1.5 s more, and only
+    // then reads what it listed
     val folds = Seq("/exact/fold_0_3", "/sigs/fold_0_3", "/sigs/matches_fold_0_3",
       "/decontam/verdicts_fold_0_3", "/manifest_fold_0_3").map(p => new Path(store + p, "_SUCCESS"))
     val input = new Path(s"$store/exact/delta_b0")
@@ -580,18 +633,14 @@ class StoreConcurrencySpec extends SparkSpec {
     val seen = new AtomicReference[Seq[String]]
     var inputsHeld = true
     val retries = StreamDedup.storeReadRetries
-    val tick = MemoryStream[Int]
-    val sink = StoreSink.start(tick.toDF(), tmpDir("graft-foldbeside-sink"), Seq.empty,
-      foldEvery = 5, fold = StreamPrep.fold(_, store, _)) { (_, _, batchId) =>
-      if (batchId == 4) StreamDedup.withStoreRetry {
+    StoreSink.step(spark, StreamPrep.stores(store), foldEvery = 5, batchId = 4) {
+      StreamDedup.withStoreRetry {
         val listed = screen(store)
         assert(await(folds.forall(fs.exists), 60000), "the fold did not commit")
         inputsHeld &&= !await(!fs.exists(input), 1500)
         seen.set(rows(listed))
       }
     }
-    try (0 until 5).foreach { k => tick.addData(k); sink.processAllAvailable() }
-    finally sink.stop()
 
     assert(inputsHeld, "the fold deleted an input its ingest had listed before the ingest returned")
     assert(StreamDedup.storeReadRetries == retries,

@@ -269,9 +269,9 @@ class StreamingSpec extends SparkSpec {
     assert(kept == Set(1L, 2L, 5L, 7L), s"after restart: $kept")
 
     // fold the deltas; the seen-set and the screen must be unchanged
-    assert(StreamDedup.foldDeltas(spark, store) >= 2)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamDedup.store(store))) >= 2)
     assert(kept == Set(1L, 2L, 5L, 7L), s"after fold: $kept")
-    assert(StreamDedup.foldDeltas(spark, store) == 0) // idempotent
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamDedup.store(store))) == 0) // idempotent
     val q3 = StreamDedup.start(docsDf, store, cp)
     in.addData((8L, "d"), (9L, "e"))
     q3.processAllAvailable()
@@ -475,9 +475,9 @@ class StreamingSpec extends SparkSpec {
 
     // fold the sig deltas: screen state unchanged, provenance intact,
     // idempotent, and a post-fold batch still screens against the store
-    assert(StreamNearDup.foldDeltas(spark, store) >= 2)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamNearDup.store(store))) >= 2)
     assert(kept == Set(1L, 2L, 5L), s"after fold: $kept")
-    assert(StreamNearDup.foldDeltas(spark, store) == 0)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamNearDup.store(store))) == 0)
     assert(StreamNearDup.matches(spark, store).count() == 3)
     val q3 = StreamNearDup.start(src, store, cp)
     in.addData((7L, text("gamma")), (8L, text("delta")))
@@ -538,14 +538,14 @@ class StreamingSpec extends SparkSpec {
     in.addData((3L, "c")); q.processAllAvailable()
     q.stop()
     // folds b0+b1; b2 stays out — the newest batch could be uncommitted
-    assert(StreamDedup.foldDeltas(spark, store) == 2)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamDedup.store(store))) == 2)
     // crashed delete: a delta the fold already covers survives on disk
     spark.createDataFrame(Seq((org.apache.spark.sql.functions.md5(
       org.apache.spark.sql.functions.lit("a")).toString, 1L))).toDF("h", "doc_id")
       .limit(0) // content is irrelevant — only its id range matters
       .write.parquet(s"$store/delta_b0")
     // resume deletes the covered leftover; nothing new to fold
-    assert(StreamDedup.foldDeltas(spark, store) == 0)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamDedup.store(store))) == 0)
     val fs = new org.apache.hadoop.fs.Path(store)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$store/delta_b0")))
@@ -1065,7 +1065,7 @@ class StreamingSpec extends SparkSpec {
     assert(markerDocs == b0.select("doc_id").collect().map(_.getLong(0)).toSet,
       "every batch doc_id must carry exactly its tombstone marker")
     // fold compaction + the overlap crash contract hold here too
-    assert(StreamDedup.foldDeltas(spark, store) > 0)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamPostings.store(store))) > 0)
     val afterFold = Retrieval.serveBm25(StreamPostings.served(spark, store),
         Retrieval.statsFromPostings(StreamPostings.served(spark, store)), qterms,
         Retrieval.fixtureQueries.map(_._2).distinct, 10)
@@ -1161,7 +1161,7 @@ class StreamingSpec extends SparkSpec {
       s"phrase '${Seq(t1, t2, t3).mkString(" ")}' missed its own doc: $matched")
     // fold compaction preserves content; a restart with no new data is
     // a no-op (checkpoint idempotence)
-    assert(StreamDedup.foldDeltas(spark, store) > 0)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamPosPostings.store(store))) > 0)
     assert(norm(StreamPosPostings.served(spark, store)) == norm(batchBuilt),
       "fold compaction changed the served positional index")
     val q2 = StreamPosPostings.start(in.toDF().toDF("doc_id", "text"), store, cp)
@@ -1305,14 +1305,14 @@ class StreamingSpec extends SparkSpec {
     val dl = StreamVec.driftLog(spark, store).collect()
     assert(dl.length == 3 && dl.forall(!_.getBoolean(4)),
       s"unexpected drift verdicts: ${dl.toSeq}")
-    // the dedup store's fold machinery compacts this store too — and
-    // BOTH serving paths are unchanged after compaction
+    // the store's own fold compacts it — and BOTH serving paths are
+    // unchanged after compaction
     val preFold = new org.apache.hadoop.fs.Path(s"$store/delta_b0")
     val fsys = preFold.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stash = new org.apache.hadoop.fs.Path(tmpDir("graft-svec-stash"), "delta_b0")
     org.apache.hadoop.fs.FileUtil.copy(fsys, preFold, fsys, stash, false,
       spark.sparkContext.hadoopConfiguration)
-    assert(StreamDedup.foldDeltas(spark, store) > 0)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamVec.store(store))) > 0)
     val folded = StreamVec.codes(spark, store)
     assert(VectorOps.adcSearch(spark, emb, qs10, 5, Some(books), Some(folded))
       .collect().toSeq == oneShotAdc)
@@ -1430,7 +1430,7 @@ class StreamingSpec extends SparkSpec {
     val stash = new org.apache.hadoop.fs.Path(tmpDir("graft-svec-purge-stash"), "delta_b0")
     org.apache.hadoop.fs.FileUtil.copy(fsys, b0p, fsys, stash, false,
       spark.sparkContext.hadoopConfiguration)
-    assert(StreamVec.foldCodes(spark, store) > 0)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamVec.store(store))) > 0)
     // physically erased: X's superseded row gone (one row left, the
     // reissue), Y's CODE row gone (only the key tombstone remains)
     assert(rawStore().filter(col("vec_id") === vx).count() == 1)
@@ -1465,7 +1465,7 @@ class StreamingSpec extends SparkSpec {
     in2.addData((1L, "123 456")); q2.processAllAvailable() // tombstone reissue
     in2.addData((3L, "delta")); q2.processAllAvailable()
     q2.stop()
-    assert(StreamPostings.foldPostings(spark, store2) > 0)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamPostings.store(store2))) > 0)
     val raw2 = {
       val base = new org.apache.hadoop.fs.Path(store2)
       val f2 = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1616,8 +1616,8 @@ class StreamingSpec extends SparkSpec {
     // store interaction — standalone fold semantics are pinned
     // elsewhere): manifest and kept set unchanged, and a post-fold
     // batch still screens against the folded state on both stores
-    assert(graft.streaming.StreamDedup.foldDeltas(spark, s"$store/exact") >= 2)
-    assert(graft.streaming.StreamNearDup.foldDeltas(spark, s"$store/sigs") >= 2)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(graft.streaming.StreamDedup.store(s"$store/exact"))) >= 2)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(graft.streaming.StreamNearDup.store(s"$store/sigs"))) >= 2)
     assert(StreamPrep.manifest(spark, store).count() == 13)
     assert(StreamPrep.keptIds(spark, store).as[Long].collect().toSet ==
       Set(1L, 3L, 6L, 7L, 11L))
@@ -1834,7 +1834,7 @@ class StreamingSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(s"$store/manifest_b0"), fsys, stash, false,
       spark.sparkContext.hadoopConfiguration)
 
-    assert(StreamPrep.fold(spark, store) > 0)
+    assert(graft.streaming.StoreSink.fold(spark, StreamPrep.stores(store)) > 0)
     // per-batch dirs folded away: only the newest of each family remains
     assert(dirNames(store).count(_.matches("manifest_b\\d+")) == 1)
     assert(dirNames(store).count(_.matches("manifest_fold_0_\\d+")) == 1)
@@ -1855,7 +1855,7 @@ class StreamingSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration)
     assert(manifestRows() == m0, "crash overlap leaked duplicate manifest rows")
     // the next fold's resume path reclaims the superseded replay dir
-    assert(StreamDedup.foldSidecars(spark, store, "manifest") == 0)
+    assert(graft.streaming.StoreSink.fold(spark, StreamPrep.stores(store).filter(_.dir == store)) == 0)
     assert(dirNames(store).count(_.matches("manifest_b\\d+")) == 1)
     assert(manifestRows() == m0)
 
@@ -1869,7 +1869,7 @@ class StreamingSpec extends SparkSpec {
     assert(got(8L) == "exact" && got(9L) == "kept", s"post-fold batch: $got")
 
     // drift sidecars: run a small StreamVec ingest over 3 batches, then
-    // foldCodes — which now compacts drift_b* too — and hold driftLog
+    // fold its store — drift_b* included — and hold driftLog
     import graft.operators.VectorOps
     val d = "/root/testdata/sf0.001"
     val emb = graft.sources.Tables.embeddings(spark, d).select("vec_id", "embedding")
@@ -1892,7 +1892,7 @@ class StreamingSpec extends SparkSpec {
     assert(dl0.size == 3)
     val servedPre = graft.streaming.StreamVec.codes(spark, vstore)
       .orderBy("vec_id").collect().toSeq
-    assert(graft.streaming.StreamVec.foldCodes(spark, vstore) > 0)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(graft.streaming.StreamVec.store(vstore))) > 0)
     assert(dirNames(vstore).count(_.matches("drift_b\\d+")) == 1)
     assert(dirNames(vstore).count(_.matches("drift_fold_0_\\d+")) == 1)
     assert(driftRows() == dl0, "driftLog changed across fold")
@@ -2394,7 +2394,7 @@ class StreamingSpec extends SparkSpec {
 
     // fold both families: verdicts and the seen-set must be unchanged,
     // and the post-fold screen still recognizes folded history
-    assert(StreamNovelty.foldSeen(spark, store) >= 2)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamNovelty.store(store))) >= 2)
     assert(logMap == expected, "fold changed the novelty log")
     assert(seenCount == seen.size, "fold changed the seen-set")
     val q3 = StreamNovelty.start(docsDf, store, cp)
@@ -2461,7 +2461,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(logRows == expLog, s"importance log $logRows != recount $expLog")
     // fold: serving and the dial are invariant under compaction
-    assert(StreamImportance.fold(spark, store) >= 2)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamImportance.store(store))) >= 2)
     assert(servedSet == batch, "fold changed the served verdicts")
     assert(logRows == expLog, "fold changed the importance log")
   }
@@ -2552,7 +2552,7 @@ class StreamingSpec extends SparkSpec {
     assert(log == Seq(expLog(rows.take(150), 0L), expLog(rows.slice(150, 300), 1L),
       expLog(rows.drop(300), 2L)), s"per-cohort dial recount wrong: $log")
     // fold: serving and the dial are invariant under compaction
-    assert(StreamPacking.fold(spark, store) >= 2)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamPacking.store(store))) >= 2)
     assert(servedRows == batch, "fold changed the served manifest")
     val log2 = StreamPacking.packingLog(spark, store).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -2599,7 +2599,7 @@ class StreamingSpec extends SparkSpec {
     assert(log == Seq(expLog(rows.take(150), 0L), expLog(rows.slice(150, 300), 1L),
       expLog(rows.drop(300), 2L)), s"per-cohort vocab dial recount wrong: $log")
     // fold: serving and the dial are invariant under compaction
-    assert(StreamVocab.fold(spark, store) >= 2)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamVocab.store(store))) >= 2)
     assert(servedRows == batch, "fold changed the served report")
     val log2 = StreamVocab.vocabLog(spark, store).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -2652,7 +2652,7 @@ class StreamingSpec extends SparkSpec {
 
     // fold both families: keepers and verdicts unchanged; the post-fold
     // screen recognizes folded history
-    assert(StreamPhash.foldKeepers(spark, store) >= 2)
+    assert(graft.streaming.StoreSink.fold(spark, Seq(StreamPhash.store(store))) >= 2)
     assert(keeperSet == Set(1L, 2L, 5L), "fold changed the keeper set")
     assert(logMap == expected ++ Map(3L -> ((1L, 1L, 0L, 1000000L))),
       "fold changed the media log")
@@ -2676,16 +2676,20 @@ class StreamingSpec extends SparkSpec {
     q4.stop()
   }
 
-  /** A fresh checkpoint restarts batch ids at 0, so any run against a
-    * store another checkpoint already wrote must be refused before its
-    * first write. One case per store-backed `start`: ingest one batch
-    * under cp1, then point a fresh cp2 at the same store.
+  /** One store-backed streaming module: its name, the batch-0 dir its
+    * first batch writes, its stores under a store dir, and a one-batch
+    * run (store dir, checkpoint dir).
     */
-  test("every store-backed start refuses a fresh checkpoint over a used store, leaving its b0 dir intact") {
+  private case class StoreModule(name: String, b0: String,
+      stores: String => Seq[graft.streaming.StoreSink.Store],
+      run: (String, String) => org.apache.spark.sql.streaming.StreamingQuery)
+
+  /** Every store-backed `start`, each with one small batch queued. */
+  private def storeModules(): Seq[StoreModule] = {
     import graft.operators.{Multimodal, TextOps, VectorOps}
     import graft.streaming._
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
+    import org.apache.spark.sql.streaming.StreamingQuery
     implicit val sc = spark.sqlContext
     val d = "/root/testdata/sf0.001"
     val text = (1 to 12).map(i => s"word$i of").mkString(" ")
@@ -2708,37 +2712,59 @@ class StreamingSpec extends SparkSpec {
         .select(timestamp_millis(col("ms")).as("ts"), col("event_type"), col("value")))
       in.addData((1000L, "a", 1.5), (2000L, "b", 2.5)); q
     }
-    // (module, the batch-0 dir its first batch writes, one-batch run)
-    val cases: Seq[(String, String, (String, String) => StreamingQuery)] = Seq(
-      ("StreamDedup", "delta_b0", (s, c) => docStream(StreamDedup.start(_, s, c))),
-      ("StreamNearDup", "delta_b0", (s, c) => docStream(StreamNearDup.start(_, s, c))),
-      ("StreamNovelty", "delta_b0", (s, c) => docStream(StreamNovelty.start(_, s, c))),
-      ("StreamPhash", "delta_b0", (s, c) => {
+    def one(store: String => StoreSink.Store): String => Seq[StoreSink.Store] = s => Seq(store(s))
+    Seq(
+      StoreModule("StreamDedup", "delta_b0", one(StreamDedup.store),
+        (s, c) => docStream(StreamDedup.start(_, s, c))),
+      StoreModule("StreamNearDup", "delta_b0", one(StreamNearDup.store),
+        (s, c) => docStream(StreamNearDup.start(_, s, c))),
+      StoreModule("StreamNovelty", "delta_b0", one(StreamNovelty.store),
+        (s, c) => docStream(StreamNovelty.start(_, s, c))),
+      StoreModule("StreamPhash", "delta_b0", one(StreamPhash.store), (s, c) => {
         val in = MemoryStream[(Long, Array[Byte])]
         val q = StreamPhash.start(in.toDF().toDF("doc_id", "media"), s, c)
         in.addData(media: _*); q
       }),
-      ("StreamPostings", "delta_b0", (s, c) => docStream(StreamPostings.start(_, s, c))),
-      ("StreamPosPostings", "delta_b0", (s, c) => docStream(StreamPosPostings.start(_, s, c))),
-      ("StreamPrep", "manifest_b0", (s, c) => docStream(StreamPrep.start(_, bench, s, c))),
-      ("StreamVec", "delta_b0", (s, c) => {
+      StoreModule("StreamPostings", "delta_b0", one(StreamPostings.store),
+        (s, c) => docStream(StreamPostings.start(_, s, c))),
+      StoreModule("StreamPosPostings", "delta_b0", one(StreamPosPostings.store),
+        (s, c) => docStream(StreamPosPostings.start(_, s, c))),
+      StoreModule("StreamPrep", "manifest_b0", StreamPrep.stores,
+        (s, c) => docStream(StreamPrep.start(_, bench, s, c))),
+      StoreModule("StreamVec", "delta_b0", one(StreamVec.store), (s, c) => {
         val in = MemoryStream[(Long, Option[Seq[Float]])]
         val q = StreamVec.start(in.toDF().toDF("vec_id", "embedding"), books, s, c, 1L)
         in.addData(vecs: _*); q
       }),
-      ("StreamVocab", "wc_b0", (s, c) => docStream(StreamVocab.start(_, s, c))),
-      ("StreamPacking", "toks_b0", (s, c) => docStream(StreamPacking.start(_, s, c))),
-      ("StreamImportance", "verdicts_b0", (s, c) => {
+      StoreModule("StreamVocab", "wc_b0", one(StreamVocab.store),
+        (s, c) => docStream(StreamVocab.start(_, s, c))),
+      StoreModule("StreamPacking", "toks_b0", one(StreamPacking.store),
+        (s, c) => docStream(StreamPacking.start(_, s, c))),
+      StoreModule("StreamImportance", "verdicts_b0", one(StreamImportance.store), (s, c) => {
         val in = MemoryStream[(Long, String, String)]
         val q = StreamImportance.start(in.toDF().toDF("doc_id", "source", "text"),
           Array.fill(4096)(1L), s, c)
         in.addData(docs.map { case (id, t) => (id, "web", t) }: _*); q
       }),
-      ("StreamDecontam", "verdicts_b0", (s, c) => docStream(StreamDecontam.start(_, bench, s, c))),
-      ("StreamFreshness", "fresh_b0", (s, c) => eventStream(StreamFreshness.start(_, s, c))),
-      ("StreamProfile", "profile_b0",
+      StoreModule("StreamDecontam", "verdicts_b0", one(StreamDecontam.store),
+        (s, c) => docStream(StreamDecontam.start(_, bench, s, c))),
+      StoreModule("StreamFreshness", "fresh_b0", one(StreamFreshness.store),
+        (s, c) => eventStream(StreamFreshness.start(_, s, c))),
+      StoreModule("StreamProfile", "profile_b0", one(StreamProfile.store),
         (s, c) => eventStream(StreamProfile.start(_, Seq("event_type", "value"), s, c))),
-      ("StreamRollup", "states_b0", (s, c) => eventStream(StreamRollup.start(_, s, c))))
+      StoreModule("StreamRollup", "states_b0", one(StreamRollup.store),
+        (s, c) => eventStream(StreamRollup.start(_, s, c))))
+  }
+
+  /** A fresh checkpoint restarts batch ids at 0, so any run against a
+    * store another checkpoint already wrote must be refused before its
+    * first write. One case per store-backed `start`: ingest one batch
+    * under cp1, then point a fresh cp2 at the same store.
+    */
+  test("every store-backed start refuses a fresh checkpoint over a used store, leaving its b0 dir intact") {
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    // (module, the batch-0 dir its first batch writes, one-batch run)
+    val cases = storeModules().map(m => (m.name, m.b0, m.run))
     assert(cases.size == 15)
 
     for ((module, b0, run) <- cases) {
@@ -2758,6 +2784,74 @@ class StreamingSpec extends SparkSpec {
         s"$module: fresh checkpoint not refused: $ex")
       assert(b0Rows == before, s"$module: the refused run changed $b0")
     }
+  }
+
+  /** A fold (or read) under a declared schema keeps only its columns, so
+    * a declaration that lacks a column the writer writes would drop it
+    * silently. One batch of every store-backed module: each family that
+    * declares a schema must find it, names in order and types, in the
+    * footer of its `_b0` part.
+    */
+  test("every declared family schema matches its writer: the b0 footer has the declared columns, in order, with the declared types") {
+    import graft.streaming.StoreSink
+    import org.apache.spark.sql.types.StructType
+    def cols(t: StructType): Seq[(String, String)] =
+      t.fields.map(f => f.name -> f.dataType.catalogString).toSeq
+    var checked = 0
+    for (m <- storeModules()) {
+      val dir = tmpDir(s"graft-schema-${m.name}") + "/store"
+      val q = m.run(dir, tmpDir(s"graft-schema-${m.name}-cp"))
+      q.processAllAvailable()
+      q.stop()
+      for (store <- m.stores(dir); family <- store.families; schema <- family.schema) {
+        val b0 = StoreSink.parts(spark, store.dir, family).find(p => !p.isFold && p.id == 0)
+        assert(b0.isDefined, s"${m.name}: no committed ${family.batchRe} part 0 under ${store.dir}")
+        val footer = spark.read.parquet(b0.get.path.toString).schema
+        assert(cols(footer) == cols(schema),
+          s"${m.name} ${b0.get.path}: written ${cols(footer)}, declared ${cols(schema)}")
+        checked += 1
+      }
+    }
+    // Dedup 1, NearDup 2, Novelty 2, Phash 2, Postings 1, PosPostings 1,
+    // Vec 2, Decontam 1, Prep 5 (its four stores)
+    assert(checked == 17)
+  }
+
+  test("StreamPrep claims every store it writes: root, exact/, sigs/ and decontam/ carry its marker, and a fresh checkpoint is refused") {
+    import graft.operators.TextOps
+    import graft.streaming.StreamPrep
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    implicit val sc = spark.sqlContext
+    val text = (1 to 12).map(i => s"word$i of").mkString(" ")
+    val bench = TextOps.d7bBenchWindows(
+      Seq((1L, text.split(" ").toSeq)).toDF("bench_id", "bws")).localCheckpoint()
+    val store = tmpDir("graft-prep-claims") + "/store"
+    def run(cp: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      val in = MemoryStream[(Long, String)]
+      val q = StreamPrep.start(in.toDF().toDF("doc_id", "text"), bench, store, cp)
+      in.addData(1L -> text, 2L -> s"$text tail", 3L -> "a short doc"); q
+    }
+    val q1 = run(tmpDir("graft-prep-claims-cp1"))
+    q1.processAllAvailable()
+    q1.stop()
+    val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val subs = Seq("", "/exact", "/sigs", "/decontam")
+    assert(subs.forall(sub => fs.exists(new Path(s"$store$sub/_QUERY_ID"))),
+      s"unclaimed: ${subs.filterNot(sub => fs.exists(new Path(s"$store$sub/_QUERY_ID")))}")
+    val b0s = Seq("manifest_b0", "decontam/verdicts_b0")
+    def b0Rows = b0s.map(b0 =>
+      spark.read.parquet(s"$store/$b0").collect().map(_.toString).sorted.toSeq)
+    val before = b0Rows
+    assert(before.forall(_.nonEmpty), s"batch 0 left an empty part: $before")
+
+    val q2 = run(tmpDir("graft-prep-claims-cp2"))
+    val ex = intercept[StreamingQueryException](q2.processAllAvailable())
+    q2.stop()
+    assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null).take(10)
+      .exists(c => Option(c.getMessage).exists(_.contains("belongs to streaming query"))),
+      s"fresh checkpoint not refused: $ex")
+    assert(b0Rows == before, s"the refused run changed ${b0s.mkString(" or ")}")
   }
 
   test("ownership fallback: a marker-less store holding only a sidecar family refuses a fresh checkpoint") {
