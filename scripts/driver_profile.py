@@ -14,7 +14,7 @@ per driver thread group, how many samples fell in each phase:
       Spark's planning, attributed by the innermost frame that names one
       (an optimizer rule that AQE runs counts as optimizer, a tree string
       built while analyzing counts as plan-string);
-  fold    the rest of a sample with a store fold (`StreamDedup`'s fold
+  fold    the rest of a sample with a store fold (`StoreSink`'s fold
           pass) on its stack;
   writer  the rest of a sample with a file write on its stack;
   other   everything else (job scheduling, listing, the Dataset API).
@@ -25,8 +25,14 @@ batch's concurrent writes, ingest and folds) and `main` (the batch
 workload's queries; the stream workload's generator). A sample is taken
 only while a thread runs Java code, so waiting for a job costs nothing
 here: the counts are driver CPU, one sample per running thread every
-10 ms under the `profile` settings. The recording is kept under `--out`
-(default: a temporary directory, deleted afterwards).
+10 ms under the `profile` settings.
+
+It then prints the recording's `jdk.ProcessStart` events (every OS
+process the JVM started) counted per thread group and command, with
+executor task threads as `executor` and any other thread as `other`: the
+engine's local file system starts none, so a fork that comes back (a
+Hadoop `chmod` or `readlink`, say) shows up here. The recording is kept
+under `--out` (default: a temporary directory, deleted afterwards).
 """
 import argparse
 import collections
@@ -64,7 +70,7 @@ PLANNING = [
                            "org.apache.spark.sql.execution.CollapseCodegenStages",
                            "org.apache.spark.sql.execution.ApplyColumnarRulesAndInsertTransitions")),
 ]
-FOLD = ("graft.streaming.StreamDedup$.fold",)
+FOLD = ("graft.streaming.StoreSink$.fold",)
 WRITER = ("org.apache.spark.sql.execution.datasources.FileFormatWriter",
           "org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand",
           "org.apache.spark.sql.classic.DataFrameWriter")
@@ -92,6 +98,31 @@ def phase(frames):
     if any(f.startswith(WRITER) for f in frames):
         return "writer"
     return "other"
+
+
+def process_group(thread):
+    if thread.startswith("Executor task launch worker"):
+        return "executor"
+    return group(thread) or "other"
+
+
+def process_starts(jfr_file):
+    """(thread name, command) of every process the recording saw start."""
+    out = subprocess.run(["jfr", "print", "--events", "jdk.ProcessStart", "--stack-depth", "1",
+                          jfr_file], capture_output=True, text=True, check=True).stdout
+    thread, command, starts = "", "", []
+    for line in out.splitlines():
+        s = line.strip()
+        if s.startswith("jdk.ProcessStart"):
+            thread, command = "", ""
+        elif s.startswith("eventThread ="):
+            m = re.match(r'eventThread = "(.*)" \(', s)
+            thread = m.group(1) if m else s
+        elif s.startswith("command ="):
+            command = s[len("command = "):].strip('"')
+        elif line.rstrip() == "}":
+            starts.append((thread, command))
+    return starts
 
 
 def samples(jfr_file):
@@ -159,6 +190,11 @@ def main():
                 total = sum(counts[g].values()) or 1
                 row.append(f"{n:>9} {100 * n / total:5.1f}% ")
             print(f"{ph:<18}" + "".join(f"{c:>18}" for c in row))
+        forks = collections.Counter((process_group(t), cmd.split(" ")[0])
+                                    for t, cmd in process_starts(rec))
+        print(f"\nprocesses started: {sum(forks.values())}")
+        for (g, cmd), n in sorted(forks.items()):
+            print(f"{g:<18}{cmd:<30}{n:>9}")
     finally:
         if not a.out:
             shutil.rmtree(out, ignore_errors=True)

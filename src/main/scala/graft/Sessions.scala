@@ -30,11 +30,41 @@ import org.apache.spark.sql.SparkSession
   * would inline as a Java constant, so a steady micro-batch compiles 0
   * classes too; the compiles a micro-batch still shows come from new
   * plan shapes (the first batches, an adaptive re-plan, a fold).
+  *
+  * Local file system: `file:` paths resolve to
+  * [[graft.sinks.NioLocalFileSystem]] and, for FileContext,
+  * [[graft.sinks.NioLocalFs]] ([[LocalFileSystemConf]]). Spark ships
+  * without `libhadoop`, and without it Hadoop 3.4's local file system
+  * starts a `chmod` process for every dir, part file and `.crc` it
+  * creates, and a `readlink` process for every link-status lookup of a
+  * checkpoint's FileContext renames. A 10 s `stream_prep` benchmark run
+  * (seed 1) started 1,127 processes that way (903 `chmod`, 224
+  * `readlink`), and its micro-batches' `walCommit` plus `commitOffsets`
+  * took about 63 ms each, nearly all of it forks. On a 4-core Linux
+  * host (JDK 17), `mkdirs` plus `create` of a 1 KB file with its `.crc`
+  * cost 8.2 ms through Hadoop and 0.17 ms in process, and a FileContext
+  * rename with overwrite 20.7 ms against 0.26 ms. The replacement does
+  * the same operations with the same mode bits and `.crc` sidecars, in
+  * process: the run above then starts 6 processes, all once per JVM
+  * (Hadoop's `setsid` probe, Spark's `getconf PAGESIZE` and its `rm -rf`
+  * of temp dirs at shutdown), and `walCommit` plus `commitOffsets` take
+  * about 4 ms a batch. Like the codegen bound it is fixed engine
+  * behaviour, not a setting, and it must be in the session's conf from
+  * the start: Hadoop caches one `file:` file system per JVM, whatever
+  * the conf of later lookups.
   */
 object Sessions {
 
   /** Bound on Spark's generated-class cache; see the object doc. */
   val CodegenCacheMaxEntries: Int = 2000
+
+  /** The Spark conf entries that resolve `file:` paths to the engine's
+    * local file system, for both the FileSystem and the FileContext
+    * API; see the object doc.
+    */
+  val LocalFileSystemConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.sinks.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.sinks.NioLocalFs].getName)
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
             appName: String = "graft"): SparkSession = {
@@ -47,6 +77,7 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toLong)
+      .config(LocalFileSystemConf)
       // events.parquet carries TIMESTAMP(NANOS), which Spark's parquet
       // reader rejects; read as long and convert in Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

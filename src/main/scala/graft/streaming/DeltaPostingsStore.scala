@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -24,19 +23,16 @@ import org.apache.spark.sql.types.StructType
   */
 private[streaming] object DeltaPostingsStore {
 
-  /** Keep only each doc's max-b rows — the read filter, and the shrink
-    * of the stores' folds: a fold physically drops superseded reissue
-    * postings and, for a tombstoned doc, its old payload rows (the
-    * erasure path: reissue the doc with empty-tokenizing text, then
-    * compact). The marker row survives when it is the doc's newest
-    * input row — required by the crash contract (a leftover input dir
-    * can resurrect old postings; the committed fold's marker must
-    * still beat them at read).
+  /** Keep only each doc's max-b rows ([[StoreSink.lastWriter]]) — the
+    * read filter, and the shrink of the stores' folds: a fold physically
+    * drops superseded reissue postings and, for a tombstoned doc, its
+    * old payload rows (the erasure path: reissue the doc with
+    * empty-tokenizing text, then compact). The marker row survives when
+    * it is the doc's newest input row — required by the crash contract
+    * (a leftover input dir can resurrect old postings; the committed
+    * fold's marker must still beat them at read).
     */
-  private def lastWriterShrink(df: DataFrame): DataFrame =
-    df.withColumn("__bmax", max("b").over(Window.partitionBy("doc_id")))
-      .filter(col("b") === col("__bmax"))
-      .drop("__bmax")
+  private val lastWriterShrink: DataFrame => DataFrame = StoreSink.lastWriter("doc_id")
 
   /** A postings delta family with payload `schema`. */
   def family(schema: StructType): StoreSink.Family = StoreSink.delta(schema, lastWriterShrink)

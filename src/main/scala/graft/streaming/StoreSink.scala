@@ -4,7 +4,8 @@ import java.util.concurrent.CountDownLatch
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, max, udf}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import scala.util.matching.Regex
@@ -70,6 +71,17 @@ import scala.util.matching.Regex
   *    after another under one acquisition of that store's maintenance
   *    lease, and a fold's deletes, held until the ingest has returned,
   *    still happen under that acquisition and before the commit.
+  *  - STATIC PLANS. A batch plans each of its jobs once, with adaptive
+  *    execution off in the batch's session (Spark's per-query clone, so
+  *    the caller's session keeps its setting). AQE has nothing to do on
+  *    these plans: a trigger-sized batch stays in one partition by
+  *    design, with explicit broadcast hints and `repartition(1)` /
+  *    `coalesce(1)`, so there is nothing to coalesce, convert or split,
+  *    and a store's fold is one small shuffle. Yet with AQE on, every
+  *    query stage ran as a job of its own and the rest of the plan (~50
+  *    operators for StreamPrep's per-doc plan) was re-optimized and
+  *    re-planned after it: a steady StreamPrep batch ran 11 jobs and a
+  *    fold batch 21, against 9 and 14 planned statically.
   */
 private[graft] object StoreSink {
 
@@ -81,7 +93,7 @@ private[graft] object StoreSink {
     *
     * `schema`: the rows' declared schema. [[read]] and [[fold]] read
     * under it, with no footer-inference job; a fold under it keeps only
-    * its columns. `None` infers the schema from the parts' footers.
+    * its columns.
     *
     * `shrink`: applied to a fold's rows before it is written — the
     * content-aware compaction the last-writer stores (StreamVec, the
@@ -95,14 +107,23 @@ private[graft] object StoreSink {
     * the fold's own: a replayable batch dir is never an input.
     */
   final case class Family(batchRe: Regex, foldRe: Regex, foldName: Long => String,
-      schema: Option[StructType] = None, shrink: DataFrame => DataFrame = identity)
+      schema: StructType, shrink: DataFrame => DataFrame = identity)
+
+  /** Each `key`'s rows of its newest batch only (the max `b`): the read
+    * filter of the last-writer stores (StreamVec, the postings stores),
+    * and the `shrink` of their folds.
+    */
+  def lastWriter(key: String)(df: DataFrame): DataFrame =
+    df.withColumn("__bmax", max("b").over(Window.partitionBy(key)))
+      .filter(col("b") === col("__bmax"))
+      .drop("__bmax")
 
   /** The main family of a store, `delta_b<id>` / `fold_0_<hi>`. */
   def delta(schema: StructType, shrink: DataFrame => DataFrame = identity): Family =
-    Family("delta_b(\\d+)".r, "fold_0_(\\d+)".r, hi => s"fold_0_$hi", Some(schema), shrink)
+    Family("delta_b(\\d+)".r, "fold_0_(\\d+)".r, hi => s"fold_0_$hi", schema, shrink)
 
   /** A sidecar family, `<prefix>_b<id>` / `<prefix>_fold_0_<hi>`. */
-  def sidecar(prefix: String, schema: Option[StructType] = None): Family = Family(
+  def sidecar(prefix: String, schema: StructType): Family = Family(
     s"${prefix}_b(\\d+)".r, s"${prefix}_fold_0_(\\d+)".r, hi => s"${prefix}_fold_0_$hi", schema)
 
   /** A store: its dir and every family written under it, in fold order. */
@@ -170,9 +191,10 @@ private[graft] object StoreSink {
   }
 
   /** Every family at once — what the ownership fallback must see; it is
-    * only ever listed, never folded.
+    * only ever listed, never read or folded.
     */
-  private val AnyFamily = Family("[a-z]+_b(\\d+)".r, "(?:[a-z]+_)?fold_0_(\\d+)".r, _ => "")
+  private val AnyFamily = Family("[a-z]+_b(\\d+)".r, "(?:[a-z]+_)?fold_0_(\\d+)".r, _ => "",
+    new StructType())
 
   /** A committed part: a batch dir (id = its batch) or a fold (id = the
     * highest batch it covers).
@@ -200,19 +222,17 @@ private[graft] object StoreSink {
 
   /** The committed parts of `family` below `before`, read under the
     * family's declared schema: a column an older part lacks reads as
-    * NULL, and an empty store is an empty-but-typed frame. A family that
-    * declares none is footer-inferred, and an empty store fails loudly.
+    * NULL, and an empty store is an empty-but-typed frame.
     */
   def read(spark: SparkSession, storeDir: String, family: Family,
       before: Long = Long.MaxValue): DataFrame = {
     val dirs = parts(spark, storeDir, family, before).map(_.path)
     if (dirs.nonEmpty) load(spark, family, dirs)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], family.schema.getOrElse(
-      throw new IllegalArgumentException(s"no committed ${family.batchRe} parts under $storeDir")))
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], family.schema)
   }
 
   private def load(spark: SparkSession, family: Family, dirs: Seq[Path]): DataFrame =
-    family.schema.fold(spark.read)(spark.read.schema(_)).parquet(dirs.map(_.toString): _*)
+    spark.read.schema(family.schema).parquet(dirs.map(_.toString): _*)
 
   /** Compact every family of `stores` — the small-files maintenance pass
     * (one dir per family per batch otherwise: ~2,900 a day at a 30 s
@@ -383,6 +403,9 @@ private[graft] object StoreSink {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
+        // the query's own session, not the caller's: one static plan per
+        // batch (see STATIC PLANS in the object doc)
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
         if (!ownershipVerified) {
           stores.foreach(s => verifyStoreOwnership(spark, s.dir, checkpoint, batchId))
           ownershipVerified = true

@@ -28,9 +28,9 @@ import graft.operators.TextOps
   */
 object StreamDecontam {
 
-  private val Verdicts = StoreSink.sidecar("verdicts", Some(StructType(
+  private val Verdicts = StoreSink.sidecar("verdicts", StructType(
     Seq("doc_id", "bench_id", "n_item_windows", "n_present", "overlap_ppm", "b")
-      .map(StructField(_, LongType)))))
+      .map(StructField(_, LongType))))
 
   /** The verdict store under `dir`. */
   def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Verdicts)

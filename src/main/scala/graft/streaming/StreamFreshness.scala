@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming twin of qa5's freshness/completeness audit — the SLA
   * gate run AT INGEST instead of in tomorrow's batch audit: every
@@ -24,7 +25,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamFreshness {
 
-  private val Marks = StoreSink.sidecar("fresh")
+  private val Marks = StoreSink.sidecar("fresh", StructType(Seq(
+    StructField("source", StringType), StructField("n_rows", LongType),
+    StructField("max_ts_ms", LongType), StructField("batch_id", LongType))))
 
   /** The freshness history under `dir`. */
   def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Marks)

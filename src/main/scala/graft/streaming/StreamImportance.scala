@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.CorpusPrep
 
 /** s10's DSIR importance dial AT INGEST — the last admission gate
@@ -41,7 +42,10 @@ import graft.operators.CorpusPrep
   */
 object StreamImportance {
 
-  private val Verdicts = StoreSink.sidecar("verdicts")
+  private val Verdicts = StoreSink.sidecar("verdicts", StructType(Seq(
+    StructField("doc_id", LongType), StructField("source", StringType),
+    StructField("n_bigrams", LongType), StructField("mean_lift_ppm", LongType),
+    StructField("selected", LongType), StructField("b", LongType))))
 
   /** The importance ledger under `dir`. */
   def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Verdicts)

@@ -48,10 +48,10 @@ object StreamNearDup {
     * they fold with the signatures (one per micro-batch forever
     * otherwise — the small-file problem at ingest).
     */
-  private val Matches = StoreSink.sidecar("matches", Some(StructType(Seq(
+  private val Matches = StoreSink.sidecar("matches", StructType(Seq(
     StructField("doc_id", LongType), StructField("matched_id", LongType),
     StructField("est_jaccard", DoubleType), StructField("stage", StringType),
-    StructField("b", LongType)))))
+    StructField("b", LongType))))
 
   /** The signature store under `dir`: sig deltas, then matches. */
   def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Sigs, Matches)

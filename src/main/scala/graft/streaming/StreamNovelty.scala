@@ -45,10 +45,10 @@ object StreamNovelty {
 
   private val Seen = StoreSink.delta(StructType(Seq(StructField("h", LongType))))
 
-  private val Log = StoreSink.sidecar("novelty", Some(StructType(Seq(
+  private val Log = StoreSink.sidecar("novelty", StructType(Seq(
     StructField("b", LongType), StructField("n_docs", LongType),
     StructField("n_windows", LongType), StructField("n_novel", LongType),
-    StructField("novelty_ppm", LongType)))))
+    StructField("novelty_ppm", LongType))))
 
   /** The novelty store under `dir`: seen-hash deltas and verdicts. */
   def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Seen, Log)

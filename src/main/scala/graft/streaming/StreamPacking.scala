@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.operators.CorpusPrep
 
 /** tok11's best-fit packing manifest AT INGEST — the dataloader-shape
@@ -42,7 +43,9 @@ import graft.operators.CorpusPrep
   */
 object StreamPacking {
 
-  private val Toks = StoreSink.sidecar("toks")
+  private val Toks = StoreSink.sidecar("toks", StructType(Seq(
+    StructField("doc_id", LongType), StructField("n_tokens", LongType),
+    StructField("b", LongType))))
 
   /** The token-count ledger under `dir`. */
   def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Toks)

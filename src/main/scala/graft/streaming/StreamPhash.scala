@@ -46,10 +46,10 @@ object StreamPhash {
     StructField("h_hi", LongType), StructField("h_lo", LongType),
     StructField("doc_id", LongType))))
 
-  private val Log = StoreSink.sidecar("media", Some(StructType(Seq(
+  private val Log = StoreSink.sidecar("media", StructType(Seq(
     StructField("b", LongType), StructField("n_docs", LongType),
     StructField("n_unique", LongType), StructField("n_admitted", LongType),
-    StructField("dup_ppm", LongType)))))
+    StructField("dup_ppm", LongType))))
 
   /** The image store under `dir`: keeper deltas and verdicts. */
   def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Keepers, Log)

@@ -78,9 +78,9 @@ import graft.operators.TextOps
   */
 object StreamPrep {
 
-  private val Manifest = StoreSink.sidecar("manifest", Some(StructType(Seq(
+  private val Manifest = StoreSink.sidecar("manifest", StructType(Seq(
     StructField("doc_id", LongType), StructField("stage", StringType),
-    StructField("quality", DoubleType), StructField("b", LongType)))))
+    StructField("quality", DoubleType), StructField("b", LongType))))
 
   /** The chain's four stores under `storeDir`, in fold order. */
   private[graft] def stores(storeDir: String): Seq[StoreSink.Store] = Seq(

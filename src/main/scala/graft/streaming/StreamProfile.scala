@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming data-quality profiling — qa2/qa3 run AT INGEST: every
   * micro-batch is profiled (per column: row count, null count, exact
@@ -21,7 +22,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamProfile {
 
-  private val Profiles = StoreSink.sidecar("profile")
+  private val Profiles = StoreSink.sidecar("profile", StructType(Seq(
+    StructField("col", StringType), StructField("n_rows", LongType),
+    StructField("n_null", LongType), StructField("n_distinct", LongType),
+    StructField("batch_id", LongType))))
 
   /** The profile history under `dir`. */
   def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Profiles)

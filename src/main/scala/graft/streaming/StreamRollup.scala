@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DateType, LongType, StringType, StructField, StructType}
 import graft.operators.Rollup
 
 /** mv1's rollup maintenance run AT INGEST: every micro-batch folds its
@@ -23,7 +24,10 @@ import graft.operators.Rollup
   */
 object StreamRollup {
 
-  private val States = StoreSink.sidecar("states")
+  private val States = StoreSink.sidecar("states", StructType(Seq(
+    StructField("day", DateType), StructField("event_type", StringType),
+    StructField("n", LongType), StructField("s", LongType), StructField("sq", LongType),
+    StructField("mn", LongType), StructField("mx", LongType))))
 
   /** The state history under `dir`. */
   def store(dir: String): StoreSink.Store = StoreSink.Store(dir, States)

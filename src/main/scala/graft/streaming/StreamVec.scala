@@ -207,19 +207,16 @@ object StreamVec {
   private val Codes = StoreSink.delta(StructType(
     (StructField("vec_id", LongType) +:
       (0 until VectorOps.PqM).map(m => StructField(s"c$m", LongType))) ++
-      Seq(StructField("b", LongType), StructField("del", BooleanType))), { df =>
-    df.withColumn("__bmax", max("b").over(Window.partitionBy("vec_id")))
-      .filter(col("b") === col("__bmax"))
-      .drop("__bmax")
-  })
+      Seq(StructField("b", LongType), StructField("del", BooleanType))),
+    StoreSink.lastWriter("vec_id"))
 
   /** The drift gate's per-batch verdicts; their rows carry b, so a
     * fold's distinct can only collapse replay/crash overlap.
     */
-  private val Drift = StoreSink.sidecar("drift", Some(StructType(Seq(
+  private val Drift = StoreSink.sidecar("drift", StructType(Seq(
     StructField("b", LongType), StructField("n_vecs", LongType),
     StructField("mean_err", LongType), StructField("drift_ppm", LongType),
-    StructField("retrain", BooleanType)))))
+    StructField("retrain", BooleanType))))
 
   /** The index store under `dir`: code deltas, then drift verdicts. */
   def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Codes, Drift)
@@ -234,11 +231,9 @@ object StreamVec {
     // distinct is load-bearing: the fold crash contract is "overlap,
     // never loss" — the same deterministic row can sit in two dirs,
     // and a duplicated vec_id would occupy two top-k slots.
-    StoreSink.read(spark, storeDir, Codes).distinct()
-      .withColumn("bmax", max("b").over(Window.partitionBy("vec_id")))
-      .filter(col("b") === col("bmax"))
+    StoreSink.lastWriter("vec_id")(StoreSink.read(spark, storeDir, Codes).distinct())
       .filter(!col("del"))
-      .drop("bmax", "b", "del")
+      .drop("b", "del")
   }
 
   // ---------------------------------------------------------------

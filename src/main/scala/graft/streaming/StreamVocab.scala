@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.CorpusPrep
 
 /** tok12's unigram-LM tokenizer report AT INGEST — the vocabulary kept
@@ -41,7 +42,8 @@ import graft.operators.CorpusPrep
   */
 object StreamVocab {
 
-  private val Counts = StoreSink.sidecar("wc")
+  private val Counts = StoreSink.sidecar("wc", StructType(Seq(
+    StructField("word", StringType), StructField("freq", LongType), StructField("b", LongType))))
 
   /** The word-count ledger under `dir`. */
   def store(dir: String): StoreSink.Store = StoreSink.Store(dir, Counts)

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * The generated-class cache is JVM-wide and sized by the first compile
   * in the JVM, so the suite sets the engine's bound and sizes the cache
   * as `Sessions.local` does — otherwise the forked test JVM would run
-  * with Spark's default of 100.
+  * with Spark's default of 100. It resolves `file:` paths to the
+  * engine's local file system (`Sessions.LocalFileSystemConf`) for the
+  * same reason: Hadoop caches one per JVM.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
@@ -15,6 +17,7 @@ trait SparkSpec extends AnyFunSuite {
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheMaxEntries.toLong)
+      .config(Sessions.LocalFileSystemConf)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

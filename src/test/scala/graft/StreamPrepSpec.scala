@@ -95,17 +95,52 @@ class StreamPrepSpec extends SparkSpec {
     // must still carry the batch id
     assert(listener.unattributed == 0,
       s"${listener.unattributed} jobs of the query carry no batch id")
-    // foldEvery = 2: batches 1 and 3 fold, 0 and 2 only ingest. A steady
-    // ingest batch runs 11 jobs and a steady fold batch 21; batch 0
-    // screens empty stores (2 fewer), and batch 1's fold finds one part
-    // per family, none of them foldable (the newest never is)
-    assert(jobs == Seq(9, 11, 11, 21), s"jobs per batch $jobs, expected 9, 11, 11, 21")
+    // foldEvery = 2: batches 1 and 3 fold, 0 and 2 only ingest. Each
+    // plan runs as one static job (no adaptive stage jobs), so an ingest
+    // batch runs 9 jobs whether its stores are empty or not; batch 1's
+    // fold finds one part per family, none of them foldable (the newest
+    // never is), and batch 3's folds add 5
+    assert(jobs == Seq(9, 9, 9, 14), s"jobs per batch $jobs, expected 9, 9, 9, 14")
     assert(compiled(2) == 0, s"steady ingest batch 2 compiled ${compiled(2)} classes")
     // the fold of batches 1 and 3 runs beside their ingest; its deletes
     // wait for the ingest, so no screen re-lists a store
     assert(StreamDedup.storeReadRetries == retriesBefore,
       s"${StreamDedup.storeReadRetries - retriesBefore} store-read retries")
     assert(StreamPrep.manifest(spark, store).count() == 4 * docs(0).size)
+  }
+
+  test("two StreamPrep batches, one of them folding, start no OS process and leave the caller's session adaptive") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val adaptive = "spark.sql.adaptive.enabled"
+    assert(spark.conf.get(adaptive) == "true")
+    val store = tmpDir("graft-prepforks") + "/store"
+    val cp = tmpDir("graft-prepforks-cp")
+    val bw = benchWindows
+    // Spark's own once-per-JVM fork (`getconf PAGESIZE` for its executor
+    // metrics) happens here, not at whatever batch the first heartbeat hits
+    org.apache.spark.graftshim.ProcfsMetrics.init()
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      val in = MemoryStream[(Long, String)]
+      val q = StreamPrep.start(in.toDF().toDF("doc_id", "text"), bw, store, cp, foldEvery = 2)
+      try (0 until 2).foreach { k => in.addData(docs(k): _*); q.processAllAvailable() }
+      finally q.stop()
+    } finally rec.stop()
+    val file = java.nio.file.Files.createTempFile("graft-prepforks", ".jfr")
+    rec.dump(file)
+    rec.close()
+    val started = RecordingFile.readAllEvents(file).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+    assert(started.size == 0, s"${started.size} processes started, e.g. ${started.take(5)}")
+    assert(StreamPrep.manifest(spark, store).count() == 2 * docs(0).size)
+    // the batches planned statically in the query's own session
+    assert(spark.conf.get(adaptive) == "true", "the run turned AQE off in the caller's session")
   }
 
   test("the run's one analyzed template binds to the same plan and rows as a fresh build") {

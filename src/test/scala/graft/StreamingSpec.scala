@@ -2788,9 +2788,9 @@ class StreamingSpec extends SparkSpec {
 
   /** A fold (or read) under a declared schema keeps only its columns, so
     * a declaration that lacks a column the writer writes would drop it
-    * silently. One batch of every store-backed module: each family that
-    * declares a schema must find it, names in order and types, in the
-    * footer of its `_b0` part.
+    * silently. One batch of every store-backed module: each family must
+    * find its declared schema, names in order and types, in the footer
+    * of its `_b0` part.
     */
   test("every declared family schema matches its writer: the b0 footer has the declared columns, in order, with the declared types") {
     import graft.streaming.StoreSink
@@ -2803,18 +2803,19 @@ class StreamingSpec extends SparkSpec {
       val q = m.run(dir, tmpDir(s"graft-schema-${m.name}-cp"))
       q.processAllAvailable()
       q.stop()
-      for (store <- m.stores(dir); family <- store.families; schema <- family.schema) {
+      for (store <- m.stores(dir); family <- store.families) {
         val b0 = StoreSink.parts(spark, store.dir, family).find(p => !p.isFold && p.id == 0)
         assert(b0.isDefined, s"${m.name}: no committed ${family.batchRe} part 0 under ${store.dir}")
         val footer = spark.read.parquet(b0.get.path.toString).schema
-        assert(cols(footer) == cols(schema),
-          s"${m.name} ${b0.get.path}: written ${cols(footer)}, declared ${cols(schema)}")
+        assert(cols(footer) == cols(family.schema),
+          s"${m.name} ${b0.get.path}: written ${cols(footer)}, declared ${cols(family.schema)}")
         checked += 1
       }
     }
     // Dedup 1, NearDup 2, Novelty 2, Phash 2, Postings 1, PosPostings 1,
-    // Vec 2, Decontam 1, Prep 5 (its four stores)
-    assert(checked == 17)
+    // Vec 2, Decontam 1, Prep 5 (its four stores), and one each for
+    // Vocab, Packing, Importance, Freshness, Profile and Rollup
+    assert(checked == 23)
   }
 
   test("StreamPrep claims every store it writes: root, exact/, sigs/ and decontam/ carry its marker, and a fresh checkpoint is refused") {
@@ -2907,5 +2908,47 @@ class StreamingSpec extends SparkSpec {
     assert(fs.delete(new org.apache.hadoop.fs.Path(s"$store/states_b9/_SUCCESS"), false))
     assert(served == before, "StreamRollup.serve read an uncommitted states dir")
     assert(StreamRollup.history(spark, store).count() == 3)
+  }
+
+  /** Every family declares its schema, so its readers serve a store that
+    * has no committed part yet (a query that has not finished its first
+    * batch) as an empty, typed frame, the same result the batch
+    * operator gives on an empty corpus, instead of failing.
+    */
+  test("store readers over a store with no committed part return what an empty corpus gives") {
+    import graft.operators.{CorpusPrep, Rollup}
+    import graft.streaming._
+    import org.apache.spark.sql.DataFrame
+    val store = tmpDir("graft-empty-readers") + "/store"
+    val docs = Seq.empty[(Long, String, String)].toDF("doc_id", "source", "text")
+    val events = Seq.empty[(java.sql.Timestamp, String, Double)].toDF("ts", "event_type", "value")
+    def result(df: DataFrame) = (df.columns.toSeq, df.collect().map(_.toString).sorted.toSeq)
+    val cases: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
+      ("StreamVocab.serve", () => StreamVocab.serve(spark, store),
+        () => CorpusPrep.unigramReport(CorpusPrep.unigramWordCounts(docs))),
+      ("StreamPacking.serve", () => StreamPacking.serve(spark, store),
+        () => CorpusPrep.bfdPackFrame(Seq.empty[Long].toDF("n"))),
+      ("StreamImportance.serve", () => StreamImportance.serve(spark, store),
+        () => CorpusPrep.dsirScore(docs, Array.fill(4096)(1L))),
+      ("StreamFreshness.history", () => StreamFreshness.history(spark, store),
+        () => StreamFreshness.batchMarks(events).withColumn("batch_id", lit(0L))),
+      ("StreamProfile.history", () => StreamProfile.history(spark, store),
+        () => StreamProfile.profile(events, Seq("event_type", "value"))
+          .withColumn("batch_id", lit(0L)).limit(0)),
+      ("StreamRollup.history", () => StreamRollup.history(spark, store),
+        () => Rollup.states(events)),
+      ("StreamRollup.serve", () => StreamRollup.serve(spark, store),
+        () => Rollup.merge(Rollup.states(events))))
+    val wrong = cases.flatMap { case (reader, read, expected) =>
+      scala.util.Try(result(read())) match {
+        case scala.util.Failure(e) => Some(s"$reader failed: ${e.getMessage}")
+        case scala.util.Success(got) if got != result(expected()) =>
+          Some(s"$reader gave $got, an empty corpus ${result(expected())}")
+        case _ => None
+      }
+    }
+    assert(wrong.isEmpty, wrong.mkString("; "))
+    assert(StreamFreshness.report(spark, store).isEmpty)
+    assert(StreamProfile.drift(spark, store).isEmpty)
   }
 }
