@@ -73,15 +73,21 @@ import scala.util.matching.Regex
   *    still happen under that acquisition and before the commit.
   *  - STATIC PLANS. A batch plans each of its jobs once, with adaptive
   *    execution off in the batch's session (Spark's per-query clone, so
-  *    the caller's session keeps its setting). AQE has nothing to do on
-  *    these plans: a trigger-sized batch stays in one partition by
-  *    design, with explicit broadcast hints and `repartition(1)` /
-  *    `coalesce(1)`, so there is nothing to coalesce, convert or split,
-  *    and a store's fold is one small shuffle. Yet with AQE on, every
-  *    query stage ran as a job of its own and the rest of the plan (~50
-  *    operators for StreamPrep's per-doc plan) was re-optimized and
-  *    re-planned after it: a steady StreamPrep batch ran 11 jobs and a
-  *    fold batch 21, against 9 and 14 planned statically.
+  *    the caller's session keeps its setting). A batch is trigger-sized,
+  *    so every module keeps it in one partition by design and AQE has
+  *    nothing to coalesce, convert or split: StreamPrep, Dedup and
+  *    NearDup screen it with explicit broadcast hints and
+  *    `repartition(1)` / `coalesce(1)`; the other modules coalesce it to
+  *    one partition before they aggregate or window it (Profile, whose
+  *    distinct counts shuffle again after an Expand, plans its shuffles
+  *    at one partition instead); and every part and fold is written as
+  *    one file. A static plan that shuffled a batch would run
+  *    `spark.sql.shuffle.partitions` tasks and write a file for each.
+  *    With AQE on, every query stage ran as a job of its own and the
+  *    rest of the plan (~50 operators for StreamPrep's per-doc plan) was
+  *    re-optimized and re-planned after it: a steady StreamPrep batch
+  *    ran 11 jobs and a fold batch 21, against 9 and 14 planned
+  *    statically.
   */
 private[graft] object StoreSink {
 
@@ -190,12 +196,6 @@ private[graft] object StoreSink {
     }
   }
 
-  /** Every family at once — what the ownership fallback must see; it is
-    * only ever listed, never read or folded.
-    */
-  private val AnyFamily = Family("[a-z]+_b(\\d+)".r, "(?:[a-z]+_)?fold_0_(\\d+)".r, _ => "",
-    new StructType())
-
   /** A committed part: a batch dir (id = its batch) or a fold (id = the
     * highest batch it covers).
     */
@@ -205,14 +205,21 @@ private[graft] object StoreSink {
     * id is below `before`.
     */
   def parts(spark: SparkSession, storeDir: String, family: Family,
-      before: Long = Long.MaxValue): Seq[Part] = {
+      before: Long = Long.MaxValue): Seq[Part] =
+    listParts(spark, storeDir, family.batchRe, family.foldRe, before)
+
+  /** The committed parts under `storeDir` whose names match `batchRe` or
+    * `foldRe` (one group each: the id) and whose id is below `before`.
+    */
+  private def listParts(spark: SparkSession, storeDir: String, batchRe: Regex,
+      foldRe: Regex, before: Long = Long.MaxValue): Seq[Part] = {
     val base = new Path(storeDir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) return Seq.empty
     fs.listStatus(base).toSeq.flatMap { st =>
       val part = st.getPath.getName match {
-        case family.batchRe(id) => Some(Part(st.getPath, id.toLong, isFold = false))
-        case family.foldRe(hi) => Some(Part(st.getPath, hi.toLong, isFold = true))
+        case batchRe(id) => Some(Part(st.getPath, id.toLong, isFold = false))
+        case foldRe(hi) => Some(Part(st.getPath, hi.toLong, isFold = true))
         case _ => None
       }
       part.filter(p => p.id < before && st.isDirectory &&
@@ -373,7 +380,9 @@ private[graft] object StoreSink {
           "store's existing parts. Resume from the original checkpoint, or " +
           "point at a fresh store dir.")
     } else {
-      val maxPart = parts(spark, storeDir, AnyFamily).map(_.id).maxOption
+      // the parts of every family at once
+      val maxPart = listParts(spark, storeDir, "[a-z]+_b(\\d+)".r,
+        "(?:[a-z]+_)?fold_0_(\\d+)".r).map(_.id).maxOption
       if (maxPart.exists(_ > batchId)) throw new IllegalStateException(
         s"store $storeDir has no ownership marker but holds parts up to " +
           s"batch ${maxPart.get} while this query is at batch $batchId — it " +

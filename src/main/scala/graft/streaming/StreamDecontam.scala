@@ -45,7 +45,8 @@ object StreamDecontam {
     val bench = TextOps.d7bBenchWithTotals(benchWindows).localCheckpoint()
     StoreSink.start(source, checkpointDir, Seq(store(storeDir)),
       foldEvery = foldEvery) { (_, batch, batchId) =>
-      val sp = batch.select(col("doc_id"), split(col("text"), " ").as("ws"))
+      // one partition, so no shuffle (STATIC PLANS in StoreSink)
+      val sp = batch.coalesce(1).select(col("doc_id"), split(col("text"), " ").as("ws"))
       verdictRows(TextOps.d7bVerdictsInPlace(sp, lit(true), bench),
           StoreSink.batchIdCol(batchId).as("b"))
         .coalesce(1)

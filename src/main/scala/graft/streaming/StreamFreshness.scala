@@ -40,7 +40,8 @@ object StreamFreshness {
 
   def start(source: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
     StoreSink.start(source, checkpointDir, Seq(store(storeDir))) { (_, batch, batchId) =>
-      batchMarks(batch)
+      // one partition, so no shuffle (STATIC PLANS in StoreSink)
+      batchMarks(batch.coalesce(1))
         .withColumn("batch_id", StoreSink.batchIdCol(batchId))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$storeDir/fresh_b$batchId")

@@ -81,9 +81,11 @@ object StreamNovelty {
       foldEvery: Int = 0): StreamingQuery =
     StoreSink.start(docs, s"$checkpointDir/novelty", Seq(store(storeDir)), trigger,
       foldEvery) { (spark, batch, batchId) =>
-      // one window pass feeds the anti-join and both counters
-      val bh = batchWindowHashes(batch).localCheckpoint()
-      val nDocs = batch.select("doc_id").distinct().count()
+      // one window pass feeds the anti-join and both counters; one
+      // partition, so no shuffle (STATIC PLANS in StoreSink)
+      val one = batch.coalesce(1)
+      val bh = batchWindowHashes(one).localCheckpoint()
+      val nDocs = one.select("doc_id").distinct().count()
       val nWindows = bh.count()
       // the screen READ races a concurrent fold's post-commit input
       // delete — retry with a fresh listing (the fold commits the
@@ -94,7 +96,7 @@ object StreamNovelty {
         val novel = bh.join(seen, Seq("h"), "left_anti").localCheckpoint()
         val nNovel = novel.count()
         val ppm = if (nWindows == 0) 0L else 1000000L * nNovel / nWindows
-        novel.write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
+        novel.coalesce(1).write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
         import spark.implicits._
         Seq((batchId, nDocs, nWindows, nNovel, ppm))
           .toDF("b", "n_docs", "n_windows", "n_novel", "novelty_ppm")

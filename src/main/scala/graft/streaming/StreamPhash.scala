@@ -96,8 +96,9 @@ object StreamPhash {
       // both counters
       val hashes = batchHashes(batch).localCheckpoint()
       val nDocs = hashes.count()
-      // in-batch winner: min doc_id per hash (m5's canonical rule)
-      val winners = hashes
+      // in-batch winner: min doc_id per hash (m5's canonical rule), in
+      // one partition, so no shuffle (STATIC PLANS in StoreSink)
+      val winners = hashes.coalesce(1)
         .withColumn("__rn", row_number().over(
           Window.partitionBy("h_hi", "h_lo").orderBy("doc_id")))
         .filter(col("__rn") === 1).drop("__rn")
@@ -113,7 +114,7 @@ object StreamPhash {
           .select("h_hi", "h_lo", "doc_id").localCheckpoint()
         val nAdmitted = admitted.count()
         val ppm = if (nDocs == 0) 0L else 1000000L * (nDocs - nAdmitted) / nDocs
-        admitted.write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
+        admitted.coalesce(1).write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
         import spark.implicits._
         Seq((batchId, nDocs, nUnique, nAdmitted, ppm))
           .toDF("b", "n_docs", "n_unique", "n_admitted", "dup_ppm")

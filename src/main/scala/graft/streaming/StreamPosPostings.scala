@@ -67,13 +67,16 @@ object StreamPosPostings {
     StoreSink.start(docs, s"$checkpointDir/pospostings", Seq(store(storeDir)), trigger) {
       (_, batch, batchId) =>
         import org.apache.spark.sql.functions._
-        val raw = Retrieval.rawPosPostings(batch.select(col("doc_id"),
+        // one partition, so no shuffle (STATIC PLANS in StoreSink)
+        val one = batch.coalesce(1)
+        val raw = Retrieval.rawPosPostings(one.select(col("doc_id"),
           expr(analyzer).as("toks")))
-        val markers = batch.select(col("doc_id")).distinct()
+        val markers = one.select(col("doc_id")).distinct()
           .select(lit("").as("term"), col("doc_id"),
             expr("CAST(array() AS ARRAY<INT>)").as("ps"))
         raw.unionByName(markers)
           .withColumn("b", StoreSink.batchIdCol(batchId))
+          .coalesce(1)
           .write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
     }
 }

@@ -101,14 +101,17 @@ object StreamPostings {
     StoreSink.start(docs, s"$checkpointDir/postings", Seq(store(storeDir)), trigger) {
       (_, batch, batchId) =>
         import org.apache.spark.sql.functions._
-        val raw = Retrieval.rawPostings(batch.select(col("doc_id"),
+        // one partition, so no shuffle (STATIC PLANS in StoreSink)
+        val one = batch.coalesce(1)
+        val raw = Retrieval.rawPostings(one.select(col("doc_id"),
           expr(analyzer).as("toks")))
         // one marker per incoming doc_id — see the object scaladoc
-        val markers = batch.select(col("doc_id")).distinct()
+        val markers = one.select(col("doc_id")).distinct()
           .select(lit("").as("term"), col("doc_id"),
             lit(0L).as("tf"), lit(0).as("dl"))
         raw.unionByName(markers)
           .withColumn("b", StoreSink.batchIdCol(batchId))
+          .coalesce(1)
           .write.mode("overwrite").parquet(s"$storeDir/delta_b$batchId")
     }
 }

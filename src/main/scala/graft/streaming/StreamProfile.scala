@@ -55,7 +55,12 @@ object StreamProfile {
     */
   def start(source: DataFrame, columns: Seq[String], storeDir: String,
       checkpointDir: String): StreamingQuery =
-    StoreSink.start(source, checkpointDir, Seq(store(storeDir))) { (_, batch, batchId) =>
+    StoreSink.start(source, checkpointDir, Seq(store(storeDir))) { (spark, batch, batchId) =>
+      // the distinct counts shuffle after an Expand, which no input
+      // partitioning satisfies, so the query's own session plans its
+      // shuffles at one partition, a trigger's worth (STATIC PLANS in
+      // StoreSink)
+      spark.conf.set("spark.sql.shuffle.partitions", "1")
       profile(batch, columns)
         .withColumn("batch_id", StoreSink.batchIdCol(batchId))
         .coalesce(1)

@@ -39,7 +39,8 @@ object StreamRollup {
   def start(source: DataFrame, storeDir: String,
       checkpointDir: String): StreamingQuery =
     StoreSink.start(source, checkpointDir, Seq(store(storeDir))) { (_, batch, batchId) =>
-      Rollup.states(batch)
+      // one partition, so no shuffle (STATIC PLANS in StoreSink)
+      Rollup.states(batch.coalesce(1))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$storeDir/states_b$batchId")
     }

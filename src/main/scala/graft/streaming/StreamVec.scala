@@ -457,6 +457,7 @@ object StreamVec {
         val inBatchOrder = col("del").desc +:
           (0 until VectorOps.PqM).map(m => col(s"c$m").desc)
         live.unionByName(tombs)
+          .coalesce(1) // one partition, so no shuffle (STATIC PLANS in StoreSink)
           .withColumn("__rn", row_number().over(
             Window.partitionBy("vec_id").orderBy(inBatchOrder: _*)))
           .filter(col("__rn") === 1).drop("__rn")

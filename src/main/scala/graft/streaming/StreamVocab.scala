@@ -55,7 +55,8 @@ object StreamVocab {
       foldEvery: Int = 0): StreamingQuery =
     StoreSink.start(source, checkpointDir, Seq(store(storeDir)),
       foldEvery = foldEvery) { (_, batch, batchId) =>
-      CorpusPrep.unigramWordCounts(batch)
+      // one partition, so no shuffle (STATIC PLANS in StoreSink)
+      CorpusPrep.unigramWordCounts(batch.coalesce(1))
         .withColumn("b", StoreSink.batchIdCol(batchId))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$storeDir/wc_b$batchId")

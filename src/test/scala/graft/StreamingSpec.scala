@@ -2790,13 +2790,17 @@ class StreamingSpec extends SparkSpec {
     * a declaration that lacks a column the writer writes would drop it
     * silently. One batch of every store-backed module: each family must
     * find its declared schema, names in order and types, in the footer
-    * of its `_b0` part.
+    * of its `_b0` part. Each `_b0` part is also one parquet file: a
+    * batch's parts are small, and a part written straight from a
+    * shuffle would otherwise hold a file per shuffle partition that
+    * every later read of the store opens.
     */
   test("every declared family schema matches its writer: the b0 footer has the declared columns, in order, with the declared types") {
     import graft.streaming.StoreSink
     import org.apache.spark.sql.types.StructType
     def cols(t: StructType): Seq[(String, String)] =
       t.fields.map(f => f.name -> f.dataType.catalogString).toSeq
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     var checked = 0
     for (m <- storeModules()) {
       val dir = tmpDir(s"graft-schema-${m.name}") + "/store"
@@ -2809,6 +2813,8 @@ class StreamingSpec extends SparkSpec {
         val footer = spark.read.parquet(b0.get.path.toString).schema
         assert(cols(footer) == cols(family.schema),
           s"${m.name} ${b0.get.path}: written ${cols(footer)}, declared ${cols(family.schema)}")
+        val files = fs.listStatus(b0.get.path).map(_.getPath.getName).filter(_.endsWith(".parquet"))
+        assert(files.length == 1, s"${m.name} ${b0.get.path}: ${files.length} parquet files")
         checked += 1
       }
     }
