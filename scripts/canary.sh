@@ -3,7 +3,7 @@
 #
 #   scripts/canary.sh [baseline-CANARY.json]
 #
-# Runs the pinned canary set (45 queries since round 16) at sf0.1 in a fresh JVM
+# Runs the pinned canary set (46 queries since round 17) at sf0.1 in a fresh JVM
 # (median-of-5 after one warm-up), writes CANARY.json, and — when a
 # baseline file is given — prints the ±20% gate verdict per query.
 set -euo pipefail

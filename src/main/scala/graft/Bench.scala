@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every registered query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Each query gets one
   * untimed warm-up execution (absorbs JIT + codegen compilation, which
@@ -52,73 +50,6 @@ object Bench {
     val spark = Sessions.local(
       cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), appName = "graft-bench")
 
-    /** One execution: (elapsed sec, build sec inside it, error). On
-      * error, elapsed still covers time-to-failure (for the curious)
-      * but the caller reports the error, not the number.
-      */
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Option[String]) = {
-      val b0 = graft.sinks.VersionedStore.buildCount()
-      val t0 = System.nanoTime()
-      // Minimal JSON-string sanitizer: backslashes FIRST (doubling them
-      // before any escape we might add), quotes become apostrophes (no
-      // escape sequence to get wrong), and every control char < 0x20
-      // (\n, \r, \t, ...) collapses to a space. The message lands inside
-      // a hand-built JSON line, and an unescaped '\' or '\t' in an
-      // exception text would corrupt exactly the failure artifact this
-      // field exists to report.
-      def jsonSafe(s: String): String = s.replace("\\", "\\\\")
-        .replace('"', '\'').map(c => if (c < ' ') ' ' else c)
-      val err =
-        try { fn(spark, sfDir).count(); None }
-        catch { case t: Throwable =>
-          Some(jsonSafe((t.getClass.getSimpleName + ": " +
-            Option(t.getMessage).getOrElse("")).take(200))) }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      val builds = graft.sinks.VersionedStore.buildEvents().drop(b0).map(_._2).sum
-      // r17 measurement hygiene (documented in OPTIMIZATION_r17.md):
-      // every execution builds fresh RDDs, so the finished run's
-      // locally-checkpointed blocks are garbage — but they pin storage
-      // memory until the async ContextCleaner catches up, and across
-      // the 219-query × 4-execution sweep late queries were measuring
-      // under the accumulated pressure of every earlier query (full-run
-      // medians ran up to ~2× the same query's fresh-JVM profile).
-      // Dropping them here is OUTSIDE the timed window and leaves each
-      // timed run computing from the parquet inputs exactly as before;
-      // no module-level DataFrame cache exists that could be harmed
-      // (r18: the former driver-side Long-array memos now live in the
-      // VersionedStore artifact channel, so NO module-level cache of
-      // any kind remains). INVARIANT (r17 advisor): this blanket
-      // unpersist is safe ONLY because Bench/Canary run queries
-      // strictly sequentially — if executions are ever parallelized,
-      // it would unpersist a concurrently-running query's
-      // localCheckpoint, whose truncated lineage cannot be recomputed;
-      // scope the unpersist to RDD ids created since the run's start
-      // before adding any parallelism.
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-      (elapsed, builds, err)
-    }
-
-    final case class QStat(median: Double, medianExBuilds: Double,
-        warm: Double, buildsSec: Double, err: Option[String])
-
-    def benchQuery(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): QStat = {
-      val (warmT, warmB, warmErr) = runOnce(fn)
-      if (warmErr.isDefined) return QStat(-1.0, -1.0, warmT, warmB, warmErr)
-      val runs = Seq(runOnce(fn), runOnce(fn), runOnce(fn))
-      val firstErr = runs.flatMap(_._3).headOption
-      if (firstErr.isDefined)
-        return QStat(-1.0, -1.0, warmT, warmB + runs.map(_._2).sum, firstErr)
-      def med(xs: Seq[Double]) = xs.sorted.apply(1)
-      QStat(
-        median = med(runs.map(_._1)),
-        medianExBuilds = med(runs.map(r => math.max(0.0, r._1 - r._2))),
-        warm = warmT,
-        buildsSec = warmB + runs.map(_._2).sum,
-        err = None)
-    }
-
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 re-times just the named queries in a
     // fresh JVM — the drift-isolation dial: a query that looks slower in
     // the full 118×4-execution run but benches clean here accumulated
@@ -130,9 +61,10 @@ object Bench {
       val unknown = o.diff(SparkEntry.queries.keySet)
       require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) => name -> benchQuery(fn) }
+    // one group per query: its warm-up, then its three timed runs
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+    val results = names.zip(Measure.sample(spark,
+      names.map(n => Seq(Measure.Cell(SparkEntry.queries(n), sfDir))), k = 3).map(_.head))
 
     def j(d: Double): String = if (d.isNaN || d.isInfinite) "-1.0" else d.toString
     val qs = results.map { case (k, v) => "\"" + k + "\":" + j(v.median) }
@@ -140,7 +72,7 @@ object Bench {
     val ok = results.map(_._2).filter(_.err.isEmpty)
     val total = ok.map(_.median).sum
     val totalExBuilds = ok.map(_.medianExBuilds).sum
-    val warmTotal = results.map(_._2.warm).filter(_ >= 0).sum
+    val warmTotal = results.map(_._2.warm.sec).sum
     // Run-level window grade (round 17, the r16 judge's #3 ask): the
     // committed BENCH_r16 landed in a 2.6×-contended host window and
     // nothing IN the artifact could distinguish that from a regression.
@@ -157,15 +89,7 @@ object Bench {
     // baseline grades "no_baseline" rather than failing the bench.
     val grade: String = if (only.nonEmpty) "\"window_grade\":\"subset\"" else {
       try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("CANARY.json")), "UTF-8")
-        // the first "queries" block is flat name→seconds; stop at its
-        // closing brace so the nested gate objects never feed the regex
-        val qStart = txt.indexOf("\"queries\":{")
-        val block = txt.substring(qStart + 11, txt.indexOf("}", qStart))
-        val pair = """"([A-Za-z0-9_]+)"\s*:\s*([0-9.eE+-]+)""".r
-        val base = pair.findAllMatchIn(block)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+        val base = Measure.readQueries("CANARY.json")
         val med = results.collect {
           case (k, v) if v.err.isEmpty && base.contains(k) => k -> v.median }.toMap
         val norm = med.keySet.toSeq.map(base).sum
@@ -204,11 +128,11 @@ object Bench {
         // 2.82 s. Guarded by an absolute 0.5 s gap so sub-second
         // jitter never flags.
         val skewField =
-          if (v.err.isEmpty && v.buildsSec == 0.0 && v.warm > 0 &&
-            v.median > 2.0 * v.warm && v.median - v.warm > 0.5)
+          if (v.err.isEmpty && v.buildSec == 0.0 && v.warm.sec > 0 &&
+            v.median > 2.0 * v.warm.sec && v.median - v.warm.sec > 0.5)
             ""","cold_skew":true"""
           else ""
-        s""""$k":{"median":${j(v.median)},"median_ex_builds":${j(v.medianExBuilds)},"warm":${j(v.warm)},"builds_sec":${j(v.buildsSec)}$skewField$errField}"""
+        s""""$k":{"median":${j(v.median)},"median_ex_builds":${j(v.medianExBuilds)},"warm":${j(v.warm.sec)},"builds_sec":${j(v.buildSec)}$skewField$errField}"""
       }.mkString("{", ",", "}")
       val errors = results.collect { case (k, v) if v.err.isDefined =>
         s""""$k":"${v.err.get}"""" }.mkString("{", ",", "}")

@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Fresh-JVM canary bench — the round-over-round regression gate the
   * full bench cannot be: BENCH_NOTES documents a JVM-state envelope
   * where the full 151-query run inflates untouched queries' medians by
   * 1.2-2.4× depending on what executed before them, wide enough to
   * hide a real single-query regression (the round-9 verdict measured a
   * near-uniform 1.27× swing on byte-identical plans). This main times
-  * a PINNED query subset (45 queries since round 16; see [[queries]])
+  * a PINNED query subset (46 queries since round 17; see [[queries]])
   * in its own JVM — same starting state every
   * round — with one untimed warm-up and the MEDIAN OF FIVE timed runs
   * per query (the full bench's median-of-3, widened because the canary
@@ -218,22 +216,6 @@ object Canary {
       cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), appName = "graft-canary")
     val unknown = queries.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"canary names not registered: ${unknown.mkString(", ")}")
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // r17 measurement hygiene, same fix as Bench.runOnce (see
-      // OPTIMIZATION_r17.md): every execution builds fresh RDDs, so the
-      // finished run's locally-checkpointed blocks are garbage — drop
-      // them OUTSIDE the timed window so a 45-query × 6-pass sweep does
-      // not time late queries under the accumulated storage pressure of
-      // every earlier one. CANARY.json re-anchored with this change.
-      // Safe ONLY while executions are strictly sequential — see the
-      // invariant note in Bench.runOnce before parallelizing anything.
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-      elapsed
-    }
     // Protocol, shaped by measured failure modes of two earlier drafts:
     //  1. SUITE-WIDE warm pass before any clock starts. Draft one
     //     warmed each query immediately before timing it, which timed
@@ -248,69 +230,67 @@ object Canary {
     //     runs of one query all land inside whatever window it drew,
     //     while interleaved passes give every query one sample from
     //     each window and the median discards the slow ones.
-    queries.foreach(name => timeOnce(SparkEntry.queries(name)))
-    val passes = Seq.fill(5)(queries.map(name =>
-      name -> timeOnce(SparkEntry.queries(name))).toMap)
-    val results = queries.map { name =>
-      name -> passes.map(_(name)).sorted.apply(2)
-    }
-    val baseline: Map[String, Double] =
-      sys.env.get("SPARK_GRAFT_CANARY_BASELINE").map { p =>
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(p)), "UTF-8")
-        // parse ONLY the queries object — a gated prior run's file also
-        // carries value/ratio/normalized/run_shift numerics, which a
-        // whole-file grep would sweep into the baseline map
-        val qobj = "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(txt)
-          .map(_.group(1)).getOrElse("")
-        "\"([a-z0-9_]+)\":([0-9.]+)".r.findAllMatchIn(qobj)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }.getOrElse(Map.empty)
-    // Locale.ROOT throughout: the f-interpolator formats with the
-    // default locale, and a comma-decimal locale would emit invalid
-    // JSON that poisons the NEXT round's baseline parse
-    def num(v: Double, decimals: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${decimals}f",
-        Double.box(v))
+    // So the whole set is ONE group of the runner.
+    val samples = queries.zip(Measure.sample(spark,
+      Seq(queries.map(q => Measure.Cell(SparkEntry.queries(q), sfDir))), k = 5).head)
+    // a failed query has no median: fail the run rather than write a
+    // CANARY.json the next round would take as its baseline
+    Measure.exitOnErrors(spark, "canary",
+      samples.flatMap { case (q, s) => s.err.map(q -> _) })
+    val results = samples.map { case (q, s) => q -> s.median }
+    val baseline = sys.env.get("SPARK_GRAFT_CANARY_BASELINE")
+      .map(Measure.readQueries).getOrElse(Map.empty)
     val qs = results.map { case (k, v) => s""""$k":${num(v, 4)}""" }
       .mkString("{", ",", "}")
-    // Gate on the ratio NORMALIZED by the run-level median ratio: the
-    // residual cross-run drift on this host is uniform (a whole run
-    // lands 1.1-1.35× off — hypervisor neighbors), and a uniform shift
-    // is not a regression. Dividing each query's ratio by the run's
-    // median ratio cancels the shift and leaves exactly the
-    // idiosyncratic component the gate exists to catch; the shift
-    // itself is reported as run_shift so a genuine whole-engine
-    // slowdown is still visible rather than silently normalized away.
-    val ratios = results.flatMap { case (k, v) =>
-      baseline.get(k).map(b => (k, v / b)) }
-    val gateJson =
-      if (ratios.isEmpty) "null"
-      else {
-        val shift = ratios.map(_._2).sorted.apply(ratios.length / 2)
-        val current = results.toMap
-        val gate = ratios.map { case (k, r) =>
-          val norm = r / shift
-          val w = gateHalfWidth.getOrElse(k, DefaultHalfWidth)
-          val inBand = norm >= 1.0 - w && norm <= 1.0 + w
-          // shift-adjusted absolute move — see [[AbsoluteFloorSec]]
-          val absMove = math.abs(current(k) - baseline(k) * shift)
-          val floor = math.min(AbsoluteFloorSec, 0.5 * baseline(k) * shift)
-          (k, r, norm, inBand || absMove <= floor)
-        }
-        val per = gate.map { case (k, r, n, ok) =>
-          s""""$k":{"ratio":${num(r, 3)},"normalized":${num(n, 3)},"pass":$ok}""" }
-          .mkString("{", ",", "}")
-        val verdict = if (gate.forall(_._4)) "pass" else "FAIL"
-        s"""{"verdict":"$verdict","run_shift":${num(shift, 3)},"per_query":$per}"""
-      }
     val total = results.map(_._2).sum
     val line =
-      s"""{"metric":"canary","value":$total,"unit":"sec","queries":$qs,"gate":$gateJson,"sf":"$sfDir"}"""
+      s"""{"metric":"canary","value":$total,"unit":"sec","queries":$qs,"gate":${gate(results, baseline)},"sf":"$sfDir"}"""
     println(line)
     try java.nio.file.Files.write(java.nio.file.Paths.get("CANARY.json"),
       (line + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
     spark.stop()
   }
+
+  /** The gate verdict of one run's per-query medians against a baseline
+    * run's, as JSON: `run_shift`, and per query its `ratio`,
+    * `normalized` ratio and `pass`; `null` when no query has a
+    * baseline.
+    *
+    * The gate is on the ratio NORMALIZED by the run-level median ratio:
+    * the residual cross-run drift of a shared host is uniform (a whole
+    * run lands 1.1-1.35× off — hypervisor neighbors), and a uniform shift
+    * is not a regression. Dividing each query's ratio by the run's
+    * median ratio cancels the shift and leaves exactly the
+    * idiosyncratic component the gate exists to catch; the shift
+    * itself is reported as run_shift so a genuine whole-engine
+    * slowdown is still visible rather than silently normalized away.
+    */
+  def gate(medians: Seq[(String, Double)], baseline: Map[String, Double]): String = {
+    val ratios = medians.flatMap { case (k, v) =>
+      baseline.get(k).map(b => (k, v / b)) }
+    if (ratios.isEmpty) return "null"
+    val shift = ratios.map(_._2).sorted.apply(ratios.length / 2)
+    val current = medians.toMap
+    val rows = ratios.map { case (k, r) =>
+      val norm = r / shift
+      val w = gateHalfWidth.getOrElse(k, DefaultHalfWidth)
+      val inBand = norm >= 1.0 - w && norm <= 1.0 + w
+      // shift-adjusted absolute move — see [[AbsoluteFloorSec]]
+      val absMove = math.abs(current(k) - baseline(k) * shift)
+      val floor = math.min(AbsoluteFloorSec, 0.5 * baseline(k) * shift)
+      (k, r, norm, inBand || absMove <= floor)
+    }
+    val per = rows.map { case (k, r, n, ok) =>
+      s""""$k":{"ratio":${num(r, 3)},"normalized":${num(n, 3)},"pass":$ok}""" }
+      .mkString("{", ",", "}")
+    val verdict = if (rows.forall(_._4)) "pass" else "FAIL"
+    s"""{"verdict":"$verdict","run_shift":${num(shift, 3)},"per_query":$per}"""
+  }
+
+  // Locale.ROOT throughout: the f-interpolator formats with the default
+  // locale, and a comma-decimal locale would emit invalid JSON that
+  // poisons the NEXT round's baseline parse
+  private def num(v: Double, decimals: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
 }

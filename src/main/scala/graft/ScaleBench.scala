@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** SCALING.md generator — measures the dedup/ANN family's scaling
@@ -24,8 +24,10 @@ import org.apache.spark.sql.functions._
   * direction-distinct — while original vec_ids (PQ seeds < 8, queries
   * < 10, IVF cells < 16) survive unchanged.
   *
-  * Usage: runMain graft.ScaleBench [sfDir] [workDir] [factor]
-  * (defaults /root/testdata/sf0.1, /tmp/graft_scale, 10).
+  * Usage: runMain graft.ScaleBench [sfDir] [workDir] [factor] [spotFactor]
+  * (defaults: the sf0.1 testbed, /tmp/graft_scale, 10, 30): spotFactor
+  * is the corpus blowup of the third-point spot-check (see
+  * [[SpotQueries]]).
   */
 object ScaleBench {
 
@@ -412,29 +414,23 @@ object ScaleBench {
     generate(spark, sfDir, bigDir, factor)
 
     // Per query: warm BOTH corpora, then three interleaved (small, big)
-    // timed pairs, median per side. The quantity this bench defends is
-    // the RATIO, and host drift on this machine arrives in multi-minute
-    // uniform windows (BENCH_NOTES round 10 — an un-interleaved run
-    // measured a 30× corpus "faster" than its 10×, which is pure
-    // drift): pairing the two sides back-to-back inside each pass puts
-    // them in the same window, so the ratio stays valid even when
-    // absolute times wander.
-    def medianPair(fn: (SparkSession, String) => DataFrame,
-        dA: String, dB: String): (Double, Double) = {
-      def once(d: String): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, d).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once(dA); once(dB) // warm-ups: JIT + codegen + artifact builds
-      val pairs = Seq.fill(3)((once(dA), once(dB)))
-      (pairs.map(_._1).sorted.apply(1), pairs.map(_._2).sorted.apply(1))
+    // timed pairs, median per side — one runner group per query. The
+    // quantity this bench defends is the RATIO, and host drift arrives
+    // in multi-minute uniform windows (BENCH_NOTES
+    // round 10 — an un-interleaved run measured a 30× corpus "faster"
+    // than its 10×, which is pure drift): pairing the two sides
+    // back-to-back inside each pass puts them in the same window, so
+    // the ratio stays valid even when absolute times wander. A failed
+    // query has no ratio: the run fails before SCALING.md is written.
+    def medianPairs(qs: Seq[String], dA: String, dB: String): Map[String, (Double, Double)] = {
+      val samples = Measure.sample(spark,
+        qs.map(q => Seq(dA, dB).map(Measure.Cell(SparkEntry.queries(q), _))), k = 3)
+      Measure.exitOnErrors(spark, "scale", qs.zip(samples).flatMap { case (q, ss) =>
+        Seq(dA, dB).zip(ss).flatMap { case (d, s) => s.err.map(e => s"$q on $d" -> e) } })
+      qs.zip(samples.map(ss => (ss(0).median, ss(1).median))).toMap
     }
 
-    val both = ScaleQueries.map(q =>
-      q -> medianPair(SparkEntry.queries(q), sfDir, bigDir))
-    val t1 = both.map { case (q, (a, _)) => q -> a }
-    val tF = both.map { case (q, (_, b)) => q -> b }
+    val both = medianPairs(ScaleQueries, sfDir, bigDir)
 
     // third point at SPOT× for the least-conclusive ratios — the
     // FACTOR× side is re-timed here, interleaved with SPOT×, so the
@@ -442,12 +438,10 @@ object ScaleBench {
     val spotFactor = args.lift(3).map(_.toInt).getOrElse(30)
     val spotDir = s"$workDir/x$spotFactor"
     generate(spark, sfDir, spotDir, spotFactor)
-    val spotBoth = SpotQueries.map(q =>
-      q -> medianPair(SparkEntry.queries(q), bigDir, spotDir))
-    val tFspot = spotBoth.map { case (q, (a, _)) => q -> a }
-    val tS = spotBoth.map { case (q, (_, b)) => q -> b }
+    val spot = medianPairs(SpotQueries, bigDir, spotDir)
 
-    val rows = t1.zip(tF).map { case ((q, a), (_, b)) =>
+    val rows = ScaleQueries.map { q =>
+      val (a, b) = both(q)
       val ratio = b / a
       val verdict = if (ratio <= factor * 1.2) "sub-linear-or-linear" else "SUPER-LINEAR"
       (q, a, b, ratio, verdict)
@@ -460,7 +454,7 @@ object ScaleBench {
     val spotRows = SpotQueries.map { q =>
       // the FACTOR× time here is the spot phase's own drift-paired
       // re-timing, so r = c / b compares two same-window medians
-      val a = t1.toMap.apply(q); val b = tFspot.toMap.apply(q); val c = tS.toMap.apply(q)
+      val a = both(q)._1; val (b, c) = spot(q)
       val lin = spotFactor.toDouble / factor
       val r = c / b
       val p = math.log(r) / math.log(lin)
@@ -536,7 +530,8 @@ object ScaleBench {
          |  top-V broadcast stays 1000 rows — the ratio shows the agg
          |  absorbing that, not an idealized corpus.
          |
-         |Regenerate: `sbt "runMain graft.ScaleBench"` (~5 min).
+         |Regenerate: `sbt "runMain graft.ScaleBench [sfDir] [workDir] [factor] [spotFactor]"`
+         |(defaults: the sf0.1 testbed, `/tmp/graft_scale`, 10 and 30; ~5 min).
          |""".stripMargin
     java.nio.file.Files.write(java.nio.file.Paths.get("SCALING.md"),
       md.getBytes("UTF-8"))

@@ -14,21 +14,33 @@ object Tables {
     * schema-inference job BEFORE the actual scan, and the bench
     * re-builds each query's frame 4 times — r18 profiles showed these
     * footer jobs (~25-45 ms + driver gap each) on virtually every
-    * query. The testbed tables are immutable input for the life of a
-    * process, so the schema is catalog METADATA (what a production
+    * query. The schema is catalog METADATA (what a production
     * deployment keeps in its metastore/manifest, and the same class
     * as Spark's own filesourcePartitionFileCache) — cached per path,
-    * inferred once. Row data is still read from parquet on every
-    * scan; nothing derived from row content is stored. Bounded driver
-    * state: one StructType per distinct table path touched.
+    * inferred once per version of the table. Row data is still read
+    * from parquet on every scan; nothing derived from row content is
+    * stored.
+    *
+    * Each entry is keyed on the table's length and mtime, read with
+    * one file-status lookup per [[table]] call, and replaced when they
+    * change: a table regenerated at the same path in one process is
+    * read with its new schema, where a stale one would reconcile the
+    * new columns by name to nulls. Bounded driver state: one entry
+    * per distinct table path touched.
     */
   private val schemaCatalog = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.types.StructType]
+    .empty[String, ((Long, Long), org.apache.spark.sql.types.StructType)]
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val schema =
-      schemaCatalog.getOrElseUpdate(path, spark.read.parquet(path).schema)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val stamp = (st.getLen, st.getModificationTime)
+    val schema = schemaCatalog.get(path).collect { case (`stamp`, s) => s }.getOrElse {
+      val s = spark.read.parquet(path).schema
+      schemaCatalog.put(path, (stamp, s))
+      s
+    }
     spark.read.schema(schema).parquet(path)
   }
 

@@ -889,6 +889,19 @@ class OpsSpec extends SparkSpec {
     assert(csv.columns.toSeq == Seq("id", "name"))
   }
 
+  test("a table regenerated at the same path is read with its new schema, not the cached one") {
+    import graft.sources.Tables
+    val dir = tmpDir("graft-tables")
+    Seq((1L, "x"), (2L, "y")).toDF("id", "a")
+      .write.parquet(s"$dir/documents.parquet")
+    assert(Tables.documents(spark, dir).columns.toSeq == Seq("id", "a"))
+    Seq((1L, "p"), (2L, "q")).toDF("id", "b")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val again = Tables.documents(spark, dir)
+    assert(again.columns.toSeq == Seq("id", "b"))
+    assert(again.orderBy("id").select("b").as[String].collect().toSeq == Seq("p", "q"))
+  }
+
   test("salted join produces identical results to the plain join") {
     import graft.operators.SkewJoin
     val left = (1 to 1000).map(i => (if (i % 10 == 0) 1L else i.toLong, s"l$i"))

@@ -554,13 +554,14 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("enrich-DAG throughput stays above the smoke floor (CI gate for BENCH_STREAM regressions)") {
-    // BenchStream's 20k rows/s is unguarded by CI; this is its bounded
-    // smoke twin — 5 batches x 5k rows through the same enrich DAG into
-    // a checkpointed parquet sink must sustain >=5k rows/s of ACTIVE
-    // throughput (rows / summed triggerExecution time, immune to a
-    // loaded test box stalling between triggers). ~4x headroom vs the
-    // bench; a real enrich-DAG regression (a UDF slipping in, codegen
-    // falling out) cuts throughput by far more than that.
+    // The CI floor for the enrich DAG's streaming throughput: 5 batches
+    // x 5k rows through the DAG into a checkpointed parquet sink must
+    // sustain >=5k rows/s of ACTIVE throughput (rows / summed
+    // triggerExecution time, immune to a loaded test box stalling
+    // between triggers). ~4x headroom vs the ~20k rows/s the DAG
+    // sustains at 20k-row batches; a real enrich-DAG regression (a UDF
+    // slipping in, codegen falling out) cuts throughput by far more
+    // than that.
     implicit val sc = spark.sqlContext
     val dir = tmpDir("graft-stream-throughput")
     val in = MemoryStream[String]
