@@ -66,41 +66,15 @@ object Bench {
     val results = names.zip(Measure.sample(spark,
       names.map(n => Seq(Measure.Cell(SparkEntry.queries(n), sfDir))), k = 3).map(_.head))
 
-    def j(d: Double): String = if (d.isNaN || d.isInfinite) "-1.0" else d.toString
     val qs = results.map { case (k, v) => "\"" + k + "\":" + j(v.median) }
       .mkString("{", ",", "}")
     val ok = results.map(_._2).filter(_.err.isEmpty)
     val total = ok.map(_.median).sum
     val totalExBuilds = ok.map(_.medianExBuilds).sum
     val warmTotal = results.map(_._2.warm.sec).sum
-    // Run-level window grade (round 17, the r16 judge's #3 ask): the
-    // committed BENCH_r16 landed in a 2.6×-contended host window and
-    // nothing IN the artifact could distinguish that from a regression.
-    // Now every run re-prices the canary's settled query set (the
-    // instrument built for window adjudication) against the committed
-    // settled-pair baseline in CANARY.json and grades ITSELF:
-    // `canary_now` (this run's medians over the shared set) vs
-    // `canary_norm` (the settled baseline over the same set),
-    // `window_ratio` their quotient, `window_grade` "settled" (≤1.5×,
-    // cross-round deltas are like-for-like) or "contended" (re-run and
-    // ship the better-attributed run per BENCH_NOTES.md; if both runs
-    // grade contended, the grade itself is the run's attribution).
-    // Subset (BENCH_ONLY) runs grade "subset"; a missing/unparsable
-    // baseline grades "no_baseline" rather than failing the bench.
-    val grade: String = if (only.nonEmpty) "\"window_grade\":\"subset\"" else {
-      try {
-        val base = Measure.readQueries("CANARY.json")
-        val med = results.collect {
-          case (k, v) if v.err.isEmpty && base.contains(k) => k -> v.median }.toMap
-        val norm = med.keySet.toSeq.map(base).sum
-        val now = med.values.sum
-        if (med.isEmpty || norm <= 0) "\"window_grade\":\"no_baseline\""
-        else {
-          val label = if (now / norm <= 1.5) "settled" else "contended"
-          s""""canary_norm":${j(norm)},"canary_now":${j(now)},"window_ratio":${j(now / norm)},"window_grade":"$label""""
-        }
-      } catch { case _: Throwable => "\"window_grade\":\"no_baseline\"" }
-    }
+    val grade: String = if (only.nonEmpty) "\"window_grade\":\"subset\"" else
+      windowGrade(results.collect { case (k, v) if v.err.isEmpty => k -> v.median }.toMap,
+        "CANARY.json", sfDir)
     // Driver-facing line: historical shape (queries = name→median)
     // plus the two run-level attribution scalars — small, always fits.
     val full =
@@ -148,4 +122,45 @@ object Bench {
     spark.stop()
     println(s"""{"metric":"total","value":$total,"unit":"sec","total_ex_builds":$totalExBuilds,$grade,"sf":"$sfDir"}""")
   }
+
+  /** Run-level window grade (round 17, the r16 judge's #3 ask): the
+    * committed BENCH_r16 landed in a 2.6×-contended host window and
+    * nothing IN the artifact could distinguish that from a regression.
+    * So every full run re-prices the canary's settled query set (the
+    * instrument built for window adjudication) against the committed
+    * settled-pair baseline in `canaryPath` and grades ITSELF:
+    * `canary_now` (this run's medians over the shared set) vs
+    * `canary_norm` (the baseline over the same set), `window_ratio`
+    * their quotient, `window_grade` "settled" (≤1.5×, cross-round deltas
+    * are like-for-like) or "contended" (re-run and ship the
+    * better-attributed run per BENCH_NOTES.md; if both runs grade
+    * contended, the grade itself is the run's attribution). Returns
+    * those JSON fields.
+    *
+    * The grade is "no_baseline", rather than a failed bench, when the
+    * baseline is missing or unparsable, shares no query with the run,
+    * or was taken on another sf dir than `sfDir`: a ratio of medians
+    * across scale factors grades nothing (an sf0.01 run graded itself
+    * "settled" at 0.47 against the sf0.1 baseline).
+    */
+  def windowGrade(medians: Map[String, Double], canaryPath: String, sfDir: String): String = {
+    val noBaseline = "\"window_grade\":\"no_baseline\""
+    def dir(d: String) = java.nio.file.Paths.get(d).toAbsolutePath.normalize
+    try {
+      val txt = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(canaryPath)), "UTF-8")
+      val baseSf = """"sf"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
+      val base = Measure.readQueries(canaryPath)
+      val med = medians.filter { case (k, _) => base.contains(k) }
+      val norm = med.keySet.toSeq.map(base).sum
+      val now = med.values.sum
+      if (!baseSf.exists(b => dir(b) == dir(sfDir)) || med.isEmpty || norm <= 0) noBaseline
+      else {
+        val label = if (now / norm <= 1.5) "settled" else "contended"
+        s""""canary_norm":${j(norm)},"canary_now":${j(now)},"window_ratio":${j(now / norm)},"window_grade":"$label""""
+      }
+    } catch { case _: Throwable => noBaseline }
+  }
+
+  private def j(d: Double): String = if (d.isNaN || d.isInfinite) "-1.0" else d.toString
 }

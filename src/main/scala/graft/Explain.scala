@@ -2,18 +2,38 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.graftshim.StageShim
 
 /** Plan and stage inspector for registered queries on
   * SPARK_GRAFT_SF_DIR. Per query: print the formatted physical plan,
   * run the query once to warm (JIT, codegen, artifact builds) and once
-  * measured through [[Measure.once]], then print the measured run's
-  * stages — wall ms, tasks, input/shuffle/spill MB — recorded by a
-  * SparkListener: the engine's sessions run with Spark's UI off, so
-  * this is its Stages tab in text form.
+  * measured through [[Measure.once]], each a full-result write
+  * ([[Measure.materialize]]) of the plan printed, then print the
+  * measured run's stages — wall ms, tasks, input/shuffle/spill MB —
+  * recorded by a SparkListener: the engine's sessions run with Spark's
+  * UI off, so this is its Stages tab in text form. Each stage is named
+  * by [[label]].
   * Usage: runMain graft.Explain <query> [query ...]
   */
 object Explain {
+  /** A stage's name in the table: its kind, `map` (it writes shuffle
+    * output) or `result` (its tasks return to the driver), and the
+    * operation scopes of its RDDs (`map: Scan parquet >
+    * WholeStageCodegen (1) > Exchange`), or Spark's stage name when no
+    * RDD carries a scope. Spark names a stage after the call site that
+    * submitted its job, and AQE submits shuffle-map, broadcast and
+    * subquery jobs from its own threads, so that name is mostly a
+    * `CompletableFuture.java` frame that says nothing of the stage. A range
+    * exchange's sampling job is the `result` stage whose scopes end in
+    * `Exchange`.
+    */
+  def label(info: StageInfo): String = {
+    val scopes = StageShim.scopeNames(info)
+    val kind = if (StageShim.isShuffleMap(info)) "map" else "result"
+    s"$kind: " + (if (scopes.isEmpty) info.name.takeWhile(_ != '\n') else scopes.mkString(" > "))
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Explain <query> [query ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -34,7 +54,7 @@ object Explain {
           val m = i.taskMetrics
           val ms = (for (c <- i.completionTime; s <- i.submissionTime) yield c - s).getOrElse(-1L)
           stages += St(stageToJob.getOrElse(i.stageId, -1), i.stageId,
-            i.name.takeWhile(_ != '\n').take(90), ms, i.numTasks,
+            label(i), ms, i.numTasks,
             m.inputMetrics.bytesRead / 1e6,
             m.shuffleReadMetrics.totalBytesRead / 1e6,
             m.shuffleWriteMetrics.bytesWritten / 1e6,
@@ -46,10 +66,10 @@ object Explain {
     args.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
       fn(spark, sfDir).explain("formatted")
-      Measure.once(spark, fn, sfDir)
+      Measure.once(spark, fn, sfDir, Measure.materialize)
       stages.clear(); stageToJob.clear()
       enabled = true
-      val run = Measure.once(spark, fn, sfDir)
+      val run = Measure.once(spark, fn, sfDir, Measure.materialize)
       enabled = false
       // listener bus is async; give stage-completed events time to land
       Thread.sleep(500)

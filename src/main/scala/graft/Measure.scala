@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sinks.VersionedStore
 
 /** The one timing loop of the engine's measurement mains (Bench,
-  * Canary, ScaleBench, Explain). A run times `fn(spark, sfDir).count()`;
+  * Canary, ScaleBench, Explain). A run times `fn(spark, sfDir).count()`
+  * (Explain: a full-result write, [[materialize]]);
   * a sample warms every cell of a group once, then times k passes over
   * the group in order and reports each cell's median.
   *
@@ -46,15 +47,16 @@ object Measure {
       if (err.isDefined) -1.0 else xs.sorted.apply(xs.size / 2)
   }
 
-  /** One timed `fn(spark, sfDir).count()`. Every error is caught, an
-    * OOM included, so a failing query is reported rather than ending
-    * the sweep.
+  /** One timed `act(fn(spark, sfDir))`, by default `count()`. Every
+    * error is caught, an OOM included, so a failing query is reported
+    * rather than ending the sweep.
     */
-  def once(spark: SparkSession, fn: Query, sfDir: String): Run = {
+  def once(spark: SparkSession, fn: Query, sfDir: String,
+      act: DataFrame => Unit = df => { df.count(); () }): Run = {
     val b0 = VersionedStore.buildCount()
     val t0 = System.nanoTime()
     val err =
-      try { fn(spark, sfDir).count(); None }
+      try { act(fn(spark, sfDir)); None }
       catch { case t: Throwable =>
         Some(jsonSafe((t.getClass.getSimpleName + ": " +
           Option(t.getMessage).getOrElse("")).take(200))) }
@@ -71,6 +73,13 @@ object Measure {
       .foreach(_.unpersist(blocking = false))
     Run(sec, buildSec, err)
   }
+
+  /** A full-result write of `df` to Spark's `noop` sink: every column,
+    * UDF and the final sort run, as in the plan `Verify` writes, where
+    * `count()` lets Catalyst prune them.
+    */
+  def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
   /** Per group: one warm-up run of each cell in order, then k passes
     * over the group's cells in order. Pairing a group's cells inside

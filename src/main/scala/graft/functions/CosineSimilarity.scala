@@ -271,17 +271,20 @@ object NativeFunctions {
 /** Production registration path: `spark.sql.extensions=graft.functions.
   * GraftExtensions` injects the engine's native expressions into every
   * session built from that config (plain SQL users get `cosine_sim` /
-  * `cosine_sim_q` with no Scala call). This is the ONLY extension point
-  * the engine needs — no custom Rule/Strategy (COVERAGE.md §2.11).
+  * `cosine_sim_q` with no Scala call), and one planner rule: [[SmallSort]],
+  * a query-stage preparation rule that sorts a small result in one
+  * partition instead of sampling range bounds (COVERAGE.md §2.11).
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(getClass.getName, name), builder))
     }
+    ext.injectQueryStagePrepRule(SmallSort)
+  }
 }
 
 object GraftExtensions {

@@ -156,4 +156,20 @@ class MeasureSpec extends SparkSpec {
     java.nio.file.Files.write(f, "{}".getBytes("UTF-8"))
     assert(Measure.readQueries(f.toString).isEmpty)
   }
+
+  test("bench window grade: a baseline taken on another sf dir grades no_baseline") {
+    val f = java.nio.file.Files.createTempFile("graft-canary", ".json")
+    java.nio.file.Files.write(f, canaryLine(Seq("a3_grouped_stats" -> 1.0, "w3_running_sum" -> 3.0))
+      .replace("\"sf\":\"x\"", "\"sf\":\"/data/sf0.1\"").getBytes("UTF-8"))
+    val run = Map("a3_grouped_stats" -> 2.0, "w3_running_sum" -> 4.0, "d13_edit_distance" -> 9.0)
+    assert(Bench.windowGrade(run, f.toString, "/data/sf0.1/") ==
+      "\"canary_norm\":4.0,\"canary_now\":6.0,\"window_ratio\":1.5,\"window_grade\":\"settled\"")
+    assert(Bench.windowGrade(run.map { case (k, v) => k -> 2 * v }, f.toString, "/data/sf0.1")
+      .endsWith("\"window_grade\":\"contended\""))
+    assert(Bench.windowGrade(run, f.toString, "/data/sf0.01") == "\"window_grade\":\"no_baseline\"")
+    assert(Bench.windowGrade(Map("d13_edit_distance" -> 9.0), f.toString, "/data/sf0.1") ==
+      "\"window_grade\":\"no_baseline\"")
+    java.nio.file.Files.delete(f)
+    assert(Bench.windowGrade(run, f.toString, "/data/sf0.1") == "\"window_grade\":\"no_baseline\"")
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.{col, sum}
@@ -216,6 +217,91 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }
     assert(exchanges.length <= 1, s"enrichment should be map-only, found ${exchanges.length} exchanges")
+  }
+
+  /** `body` with `listener` on the bus, returning once every event
+    * posted so far has reached it.
+    */
+  private def listening[T](listener: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      org.apache.spark.graftshim.ListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The jobs of one full-result write of `df` to the `noop` sink, as
+    * the benchmark times it, counted by a listener on a local property
+    * set around that write only (Spark copies local properties to the
+    * jobs AQE runs on its own threads).
+    */
+  private def resultWriteJobs(df: DataFrame): Int = {
+    val sc = spark.sparkContext
+    val (key, id) = ("graft.plan.write", java.util.UUID.randomUUID.toString)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == id)) jobs.incrementAndGet()
+    }) {
+      sc.setLocalProperty(key, id)
+      try Measure.materialize(df) finally sc.setLocalProperty(key, null)
+    }
+    jobs.get
+  }
+
+  private def exchanges(df: DataFrame): Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec] =
+    collectWithSubqueries(df.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+
+  test("small results sort in their input's stage: parity_enrich and w3 plan no range exchange") {
+    // functions.SmallSort: an input that already runs as one partition
+    // (parity's one-file scan, w3's window stage once AQE coalesced its
+    // shuffle read) is sorted where it is, with no exchange
+    val parity = SparkEntry.queries("parity_enrich")(spark, sf)
+    parity.collect()
+    assert(exchanges(parity).isEmpty, exchanges(parity).map(_.outputPartitioning))
+    val w3 = SparkEntry.queries("w3_running_sum")(spark, sf)
+    w3.collect()
+    assert(exchanges(w3).map(_.outputPartitioning.getClass.getSimpleName) ==
+      Seq("HashPartitioning"), s"only the window's hash exchange:\n${planString(w3)}")
+  }
+
+  test("the full-result write runs no sampling job: 1 job for parity_enrich, 2 for w3") {
+    // with a range exchange, parity ran 3 (sampling, map, result) and
+    // w3 4 (the window's map job first)
+    assert(resultWriteJobs(SparkEntry.queries("parity_enrich")(spark, sf)) == 1)
+    assert(resultWriteJobs(SparkEntry.queries("w3_running_sum")(spark, sf)) == 2)
+  }
+
+  test("Explain names every stage by its operators, none by AQE's thread frame") {
+    val infos = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    listening(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = infos.add(e.stageInfo)
+    }) {
+      for (q <- Seq("a3_grouped_stats", "r2_hybrid_rrf"))
+        Measure.materialize(SparkEntry.queries(q)(spark, sf))
+    }
+    val all = infos.toArray(Array.empty[StageInfo]).toSeq
+    // Spark names a stage after the call site that submitted its job:
+    // for jobs AQE submits from its own threads, a CompletableFuture frame
+    assert(all.exists(_.name.contains("CompletableFuture")), all.map(_.name))
+    val frames = all.map(Explain.label).filter(_.contains("CompletableFuture"))
+    assert(frames.isEmpty, frames)
+  }
+
+  test("a sort whose input is above the broadcast threshold keeps its range exchange") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "1024") // w3's sf0.001 input is far above 1 KB
+    try {
+      val w3 = SparkEntry.queries("w3_running_sum")(spark, sf)
+      w3.collect()
+      assert(exchanges(w3).count(_.outputPartitioning.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.physical.RangePartitioning]) == 1, planString(w3))
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("v7 pq: code assignment is map-only — one exchange (final sort), no aggregate, native dot_q") {
@@ -902,13 +988,14 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
             if s.relation.location.rootPaths.exists(_.toString.contains("documents")) => s
       }.nonEmpty
     assert(hasDocScan(plan), "expected a documents scan in the serving plan")
-    // the final ORDER BY range-partitions the queries×k RESULT rows
-    // (bounded); what must never appear is a hash shuffle of the
-    // corpus-sized doc side for the join
+    // the final ORDER BY moves the queries×k RESULT rows (bounded): a
+    // range exchange, or one partition when the result is small
+    // (functions.SmallSort); what must never appear is a hash shuffle
+    // of the corpus-sized doc side for the join
     val shuffledDocs = collect(plan) {
       case e: ShuffleExchangeExec
-          if !e.outputPartitioning.isInstanceOf[
-            org.apache.spark.sql.catalyst.plans.physical.RangePartitioning] &&
+          if e.outputPartitioning.isInstanceOf[
+            org.apache.spark.sql.catalyst.plans.physical.HashPartitioning] &&
             hasDocScan(e) => e
     }
     assert(shuffledDocs.isEmpty,
@@ -916,18 +1003,19 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(plan.toString.contains("BroadcastHashJoin"), plan.toString.take(800))
   }
 
-  test("r2 and v18: only the result's ORDER BY range-partitions — the ranked channels reach the union unsorted") {
-    // a global sort under the union or the fusion aggregate is a range
-    // exchange whose order the plan above throws away
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+  test("r2 and v18: only the result's ORDER BY sorts globally — the ranked channels reach the union unsorted") {
+    // a global sort under the union or the fusion aggregate moves rows
+    // into an order the plan above throws away; the result's own sort
+    // range-partitions or, for a small result, runs in one partition
+    // (functions.SmallSort), so count the global sorts, not range exchanges
+    import org.apache.spark.sql.execution.SortExec
     for (q <- Seq("r2_hybrid_rrf", "v18_filtered_ann")) {
       val df = SparkEntry.queries(q)(spark, sf)
       df.collect()
-      val ranges = collectWithSubqueries(df.queryExecution.executedPlan) {
-        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      val sorts = collectWithSubqueries(df.queryExecution.executedPlan) {
+        case s: SortExec if s.global => s
       }
-      assert(ranges.size == 1, s"$q: ${ranges.size} range exchanges")
+      assert(sorts.size == 1, s"$q: ${sorts.size} global sorts")
     }
   }
 
@@ -964,12 +1052,15 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     df.collect()
     val plan = stripAQEPlan(df.queryExecution.executedPlan)
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-    // the final ORDER BY range-partitions the RESULT for presentation
-    // (exempt); the work itself must be a single hash deal by shard
+    import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+    // the final ORDER BY moves the RESULT for presentation (exempt): a
+    // range exchange, or one partition when the result is small
+    // (functions.SmallSort); the work itself must be a single hash
+    // deal by shard
     val hashExchanges = collect(plan) {
       case e: ShuffleExchangeExec
-          if !e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+          if !e.outputPartitioning.isInstanceOf[RangePartitioning] &&
+            e.outputPartitioning != SinglePartition => e
     }
     assert(hashExchanges.length == 1,
       s"expected exactly one shard-deal exchange, got ${hashExchanges.length}:\n${plan.toString.take(1000)}")

@@ -9,12 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * as `Sessions.local` does — otherwise the forked test JVM would run
   * with Spark's default of 100. It resolves `file:` paths to the
   * engine's local file system (`Sessions.LocalFileSystemConf`) for the
-  * same reason: Hadoop caches one per JVM.
+  * same reason: Hadoop caches one per JVM. It builds the session with
+  * the engine's extensions, as `Sessions.local` does, so the suite
+  * plans with the engine's planner rule (`functions.SmallSort`); they
+  * apply only to a session built with them.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.codegen.cache.maxEntries", Sessions.CodegenCacheMaxEntries.toLong)
       .config(Sessions.LocalFileSystemConf)
